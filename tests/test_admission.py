@@ -467,14 +467,13 @@ def test_admission_refuses_pending_takedown(spark, tmp_path, monkeypatch):
 
     # crash a takedown of doc 12 INSIDE the dedup store's delete —
     # the durable intent stays behind
-    real = dedup_store._run_recorded_delete
     monkeypatch.setattr(
-        dedup_store, "_run_recorded_delete",
+        dedup_store.DEDUP, "_run_recorded_delete",
         lambda *a: (_ for _ in ()).throw(RuntimeError("injected")),
     )
     with pytest.raises(RuntimeError, match="injected"):
         dedup_store.delete_from_dedup_store(spark, [12], dpath)
-    monkeypatch.setattr(dedup_store, "_run_recorded_delete", real)
+    monkeypatch.undo()
 
     # a wave RE-ADMITTING the pending victim: refused, overlap named
     w_re = spark.createDataFrame([(12, "w", T3, _E_NOVEL)], _SCHEMA)

@@ -536,7 +536,7 @@ def test_compact_preserves_content_and_cuts_files(spark, tmp_path):
         return len(glob.glob(f"{path}/{sub}/**/*.parquet", recursive=True))
 
     sig_before, bands_before = nfiles("signatures"), nfiles("bands")
-    dedup_store.compact_dedup_store(spark, path, sig_files=2)
+    dedup_store.compact_dedup_store(spark, path, row_files=2)
     assert nfiles("signatures") < sig_before
     # at this scale the append rewrite already leaves one file per
     # touched partition, so compaction must not GROW the count; the
@@ -655,7 +655,7 @@ def test_ingest_loop_with_midstream_compaction(spark, tmp_path):
         dedup_store.write_dedup_store(spark, seed, path)
         r1 = dedup_store.ingest_wave(spark, wave1, path).collect()
         if path == compacted:
-            dedup_store.compact_dedup_store(spark, path, sig_files=1)
+            dedup_store.compact_dedup_store(spark, path, row_files=1)
         r2 = dedup_store.ingest_wave(spark, wave2, path).collect()
         reports[path] = (sorted(map(tuple, r1)), sorted(map(tuple, r2)))
 
@@ -690,7 +690,7 @@ def test_compact_repairs_half_swapped_store(spark, tmp_path):
     # stale tmp from a dead build beside a live dir → cleared, then a
     # fresh compaction succeeds (the old code wedged on errorifexists)
     os.makedirs(f"{path}/signatures_compact_tmp/garbage")
-    dedup_store.compact_dedup_store(spark, path, sig_files=1)
+    dedup_store.compact_dedup_store(spark, path, row_files=1)
     assert not os.path.exists(f"{path}/signatures_compact_tmp")
     assert before == sorted(
         map(tuple, dedup_store.probe_dedup_store(spark, probe, path).collect())

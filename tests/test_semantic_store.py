@@ -472,7 +472,7 @@ def test_compact_midstream_and_crash_repair(spark, tmp_path):
         S.write_semantic_store(spark, seed, path)
         r1 = S.semantic_ingest_wave(spark, wave1, path).collect()
         if path == compacted:
-            S.compact_semantic_store(spark, path, vec_files=1)
+            S.compact_semantic_store(spark, path, row_files=1)
         r2 = S.semantic_ingest_wave(spark, wave2, path).collect()
         reports[path] = (sorted(map(tuple, r1)), sorted(map(tuple, r2)))
     assert reports[compacted] == reports[plain]
@@ -486,7 +486,7 @@ def test_compact_midstream_and_crash_repair(spark, tmp_path):
 
     # one file per surviving (band_idx, bucket) partition after a
     # fresh compaction
-    S.compact_semantic_store(spark, compacted, vec_files=1)
+    S.compact_semantic_store(spark, compacted, row_files=1)
     for d in glob.glob(f"{compacted}/bands/band_idx=*/bucket=*"):
         parts = [f for f in os.listdir(d) if f.endswith(".parquet")]
         assert len(parts) == 1, d
@@ -497,7 +497,7 @@ def test_compact_midstream_and_crash_repair(spark, tmp_path):
         map(tuple, S.probe_semantic_store(spark, probe, compacted).collect())
     )
     os.makedirs(f"{compacted}/vectors_compact_tmp/garbage")
-    S.compact_semantic_store(spark, compacted, vec_files=1)
+    S.compact_semantic_store(spark, compacted, row_files=1)
     assert not os.path.exists(f"{compacted}/vectors_compact_tmp")
     shutil.copytree(
         f"{compacted}/vectors", f"{compacted}/vectors_compact_tmp"

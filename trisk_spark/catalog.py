@@ -1,4 +1,4 @@
-"""Table catalog: load the driver's parquet tables and register views.
+"""Table catalog: load the driver's parquet tables.
 
 Tables (TESTDATA.md): region nation customer supplier part orders
 lineitem events documents embeddings — one parquet file per table under
@@ -80,15 +80,7 @@ def spread_narrow_scan(df: DataFrame) -> DataFrame:
     Round-robin is deterministic under retry (sort-before-repartition,
     SPARK-23207) and every caller is row-order-free, so results are
     unchanged. Streaming inputs don't expose a partition count and are
-    returned untouched.
-
-    ``TRISK_DISABLE_SPREAD=1`` is a measurement escape hatch: it turns
-    every call into the identity so the spread's net effect can be
-    A/B-measured with one full-bench toggle instead of per-site edits."""
-    import os
-
-    if os.environ.get("TRISK_DISABLE_SPREAD"):
-        return df
+    returned untouched."""
     try:
         n = df.rdd.getNumPartitions()
         cores = df.sparkSession.sparkContext.defaultParallelism
@@ -161,18 +153,3 @@ def local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
     return spark.createDataFrame(
         spark.sparkContext.parallelize(rows, 1), schema
     )
-
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every base table as a temp view for spark.sql() use."""
-    for name in TABLES:
-        table(spark, sf_dir, name).createOrReplaceTempView(name)
-
-
-def ckpt_eager() -> bool:
-    """Measurement escape hatch for the r17 lazy-checkpoint batch:
-    ``TRISK_EAGER_CKPT=1`` flips every converted site back to eager so
-    the lazy/eager delta can be A/B-measured with one toggle."""
-    import os
-
-    return os.environ.get("TRISK_EAGER_CKPT", "") == "1"

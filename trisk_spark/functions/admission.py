@@ -42,7 +42,7 @@ import shutil
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from trisk_spark.catalog import ckpt_eager, table
+from trisk_spark.catalog import table
 from trisk_spark.functions import storefs
 from trisk_spark.registry import register
 from trisk_spark.functions.dedup import (
@@ -63,9 +63,9 @@ from trisk_spark.functions.dedup_store import (
     corpus_store_path as _dedup_corpus_store_path,
 )
 from trisk_spark.functions.semantic_store import (
+    SEMANTIC,
     _normed as _sem_normed,
     append_semantic_store,
-    probe_semantic_store,
 )
 from trisk_spark.functions.semantic_store import (
     corpus_store_path as _sem_corpus_store_path,
@@ -242,7 +242,7 @@ def _admission_verdicts(
     from trisk_spark.functions.text import quality_expr
 
     keyed = batch.where(F.col("doc_id").isNotNull()).localCheckpoint(
-        eager=ckpt_eager()
+        eager=False
     )
     invalid = keyed.where(F.col("text").isNull()).select(
         "doc_id", F.lit("invalid").alias("stage"),
@@ -262,7 +262,7 @@ def _admission_verdicts(
             )
         ).alias("q_ok"),
     )
-    s0 = q.where(F.col("q_ok")).localCheckpoint(eager=ckpt_eager())
+    s0 = q.where(F.col("q_ok")).localCheckpoint(eager=False)
     quality_rej = q.where(~F.col("q_ok")).select(
         "doc_id", F.lit("quality").alias("stage"),
         F.lit(None).cast("bigint").alias("dup_of"),
@@ -298,11 +298,11 @@ def _admission_verdicts(
     try:
         rep_t = probe_dedup_store(
             spark, s0.select("doc_id", "text"), dedup_path
-        ).localCheckpoint(eager=ckpt_eager())
+        ).localCheckpoint(eager=False)
         flagged_t = rep_t.where(F.col("is_dup")).select("doc_id", "dup_of")
         s1 = s0.join(
             F.broadcast(flagged_t.select("doc_id")), "doc_id", "left_anti"
-        ).localCheckpoint(eager=ckpt_eager())
+        ).localCheckpoint(eager=False)
     finally:
         _t.join()
     if "err" in _norm_box:
@@ -314,18 +314,17 @@ def _admission_verdicts(
         "vec_id",
         "left_anti",
     )
-    rep_s = probe_semantic_store(
-        spark,
-        s1.select(F.col("doc_id").alias("vec_id"), "embedding"),
-        sem_path,
-        pre_normed=sem_wave,
-    ).localCheckpoint(eager=ckpt_eager())
+    # the wave is already in the store's row layout (normed above,
+    # filtered to the text survivors): probe past the rows hook
+    rep_s = SEMANTIC.probe_rows(spark, sem_wave, sem_path).localCheckpoint(
+        eager=False
+    )
     flagged_s = rep_s.where(F.col("is_dup")).select(
         F.col("vec_id").alias("doc_id"), "dup_of"
     )
     s2 = s1.join(
         F.broadcast(flagged_s.select("doc_id")), "doc_id", "left_anti"
-    ).localCheckpoint(eager=ckpt_eager())
+    ).localCheckpoint(eager=False)
 
     report = (
         invalid
@@ -999,18 +998,17 @@ def takedown_wave(
         delete_from_semantic_store,
     )
 
-    from trisk_spark.functions.dedup_store import MAX_DELETE_IDS
-
     ids = sorted({int(i) for i in doc_ids})
     if not ids:
         return
-    if len(ids) > MAX_DELETE_IDS:
+    if len(ids) > storefs.MAX_DELETE_IDS:
         # preflight BEFORE any store mutates: the per-store deletes
         # enforce the same ceiling, but only after earlier stores in
         # the compose order have already been modified
         raise ValueError(
-            f"takedown wave of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
+            f"takedown wave of {len(ids)} ids exceeds "
+            f"{storefs.MAX_DELETE_IDS} — split it; the id set is a "
+            "driver-held literal by design"
         )
     # WAVE-LEVEL durable marker (r17 review): the per-store intents
     # vanish as each store completes, so a crash BETWEEN stores left

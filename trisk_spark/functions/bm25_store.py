@@ -31,7 +31,7 @@ Python md5 ≡ Spark md5 ≡ DuckDB md5 on the same bytes), so the routed
 band stores' one-job routing collect. The pruned postings read is
 additionally term-filtered (predicate pushdown inside the routed
 buckets), the hits are materialized once (hits-sized, with a
-fail-loud ceiling — the ``MAX_DEDUP_PROBE_ROWS`` class), and the
+fail-loud ceiling — the band stores' ``MAX_PROBE_ROWS`` class), and the
 scoring is the exact-rational BM25 arithmetic shared with
 ``bm25_top_docs`` (text.py's float-determinism contract: both factors
 of every contribution are functions of exact BIGINTs; the house
@@ -67,7 +67,7 @@ import hashlib
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from trisk_spark.catalog import ckpt_eager, local_rows, table
+from trisk_spark.catalog import local_rows, table
 from trisk_spark.functions import storefs
 from trisk_spark.registry import register
 from trisk_spark.functions.text import (
@@ -84,7 +84,7 @@ N_BM25_BUCKETS = 64
 #: ceiling on one probe's materialized hits (postings rows for the
 #: query's terms) — a stopword-ish term with corpus-scale postings
 #: makes the probe honest-but-huge work; fail loud instead of paging
-#: through it silently (the MAX_DEDUP_PROBE_ROWS class)
+#: through it silently (the band stores' MAX_PROBE_ROWS class)
 MAX_BM25_PROBE_POSTINGS = 2_000_000
 
 #: deterministic corpus split for the self-contained library row —
@@ -102,21 +102,14 @@ def _bucket_of(term: str) -> int:
 
 
 def _bucket_col(col=None):
-    """Spark twin of `_bucket_of` (the dedup_store `_bucket` pattern)."""
-    c = F.col("term") if col is None else col
-    return (
-        F.pmod(
-            F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint"),
-            F.lit(N_BM25_BUCKETS),
-        )
-        .cast("int")
-        .alias("bucket")
+    """Spark twin of `_bucket_of` (``storefs.md5_bucket``)."""
+    return storefs.md5_bucket(
+        F.col("term") if col is None else col, N_BM25_BUCKETS
     )
 
 
 def _write_tasks(spark: SparkSession) -> int:
-    conf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(1, min(conf, N_BM25_BUCKETS))
+    return storefs.writer_tasks(spark, N_BM25_BUCKETS)
 
 
 def _wave_postings_doclens(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
@@ -228,7 +221,7 @@ def probe_bm25_store(
     # job per probe (r17)
     hits = hits.where(F.col("term").isin(terms)).select(
         "term", "doc_id", "tf", "dl"
-    ).localCheckpoint(eager=ckpt_eager())
+    ).localCheckpoint(eager=False)
     n_hits = hits.count()
     if n_hits > max_postings:
         raise ValueError(
@@ -309,7 +302,7 @@ def append_bm25_store(
     # append) and each consumption replays the wave tokenize; the
     # checkpoint materializes the wave-sized (doc_id, dl) rows once at
     # the guard aggregate (r18).
-    doclens = doclens.localCheckpoint(eager=ckpt_eager())
+    doclens = doclens.localCheckpoint(eager=False)
     _append_wave(spark, postings, doclens, path)
 
 
@@ -415,7 +408,7 @@ def bm25_probe_stream(
 def repair_bm25_store(path: str) -> None:
     """``storefs.repair_store`` over this store's three tables — see
     that docstring for the crash states and repairs."""
-    storefs.repair_store(path, ("postings", "doclens", "stats"))
+    storefs.repair_store(path, _TABLES)
 
 
 def repair_replayed_append(spark: SparkSession, path: str) -> None:
@@ -585,9 +578,7 @@ def bm25_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------------------ takedown (r14) -----
 
-#: fail-loud ceiling on a single takedown batch (the dedup store's
-#: MAX_DELETE_IDS contract)
-MAX_DELETE_IDS = 100_000
+_TABLES = ("postings", "doclens", "stats")
 
 
 def delete_from_bm25_store(spark: SparkSession, doc_ids, path: str) -> None:
@@ -599,96 +590,46 @@ def delete_from_bm25_store(spark: SparkSession, doc_ids, path: str) -> None:
     loner buckets are correctly emptied (directory cleared), doclens
     and the 1-row stats recompute through the crash-safe swap, and
     every crash window resumes to completion from the durable
-    ``_delete_intent`` (``resume_pending_delete``). Because the kept
-    postings have no other durable source (unlike the band stores,
-    which re-derive from the signatures/vectors table swapped last),
-    they are STAGED durably via the ``storefs`` staged-partition
-    protocol before any live bucket directory is cleared — a crash
-    between the clear and the swap replays from the committed staging,
-    never from driver memory. Cost: one pushdown scan of the
-    victims' postings (routing — postings are bucketed by TERM, so
-    this is the one per-store scan a takedown pays), a rewrite of only
-    the touched bucket directories, a doclens rewrite (narrow
-    2-int-per-doc table), and a 1-row stats recompute."""
-    import os
-
-    storefs.require_rename_fs(path, "delete_from_bm25_store")
-    repair_bm25_store(path)
-    resume_pending_delete(spark, path)
-    ids = sorted({int(i) for i in doc_ids})
-    if len(ids) > MAX_DELETE_IDS:
-        raise ValueError(
-            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
-        )
-    if not ids:
-        return
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    tmp = ipath + "_tmp"
-    local_rows(spark, [(i,) for i in ids], "doc_id bigint").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(tmp, ipath)
-    _run_recorded_delete(spark, ids, path)
+    ``_delete_intent`` (``resume_pending_delete``; the frame is
+    ``storefs.recorded_delete``). Because the kept postings have no
+    other durable source (unlike the band stores, which re-derive from
+    the signatures/vectors table swapped last), they are STAGED durably
+    via the ``storefs`` staged-partition protocol before any live
+    bucket directory is cleared — a crash between the clear and the
+    swap replays from the committed staging, never from driver memory.
+    Cost: one pushdown scan of the victims' postings (routing —
+    postings are bucketed by TERM, so this is the one per-store scan a
+    takedown pays), a rewrite of only the touched bucket directories,
+    a doclens rewrite (narrow 2-int-per-doc table), and a 1-row stats
+    recompute."""
+    storefs.recorded_delete(
+        spark, path, doc_ids, "delete_from_bm25_store", "doc_id",
+        _run_recorded_delete, _TABLES,
+    )
 
 
 def resume_pending_delete(spark: SparkSession, path: str) -> bool:
     """Finish a takedown a crash interrupted (idempotent at every
-    crash point — the ``dedup_store`` contract). Self-sufficient at
-    every crash point: repairs any half-swapped doclens/stats FIRST
-    (a crash inside ``swap_in_compacted`` leaves the live table renamed
-    to ``_old`` — a standalone resume must not fail reading it), then
+    crash point): repairs any half-swapped doclens/stats first, then
     re-runs the recorded delete, whose own first step consumes any
     committed postings staging. Returns True if there was one to
     finish."""
-    import os
-
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    if not os.path.exists(ipath):
-        return False
-    repair_bm25_store(path)
-    ids = sorted(int(r.doc_id) for r in spark.read.parquet(ipath).collect())
-    _run_recorded_delete(spark, ids, path)
-    return True
+    return storefs.resume_recorded_delete(
+        spark, path, "doc_id", _run_recorded_delete, _TABLES
+    )
 
 
 def _run_recorded_delete(spark: SparkSession, ids: list, path: str) -> None:
-    """The recorded-delete state machine, re-runnable from the durable
-    ``_delete_intent`` at every crash point. Postings go through the
-    ``storefs`` staged-partition protocol: kept rows of the touched
-    buckets are written DURABLY (staged dir committed by rename) before
-    any live bucket directory is destroyed, so a crash anywhere between
-    the clear and the swap resumes from the staging, never from memory
-    (the r14 hole: a localCheckpoint'ed kept frame is gone on crash,
-    and with the victims' rows already rmtree'd the re-run could no
-    longer identify the damaged buckets)."""
-    import shutil
-
+    """The bm25 deletion, re-runnable from the durable
+    ``_delete_intent`` at every crash point: postings go through the
+    staged-partition core (``storefs.delete_staged_rows`` — kept rows
+    of the touched buckets are committed durably before any live
+    bucket directory is destroyed), then doclens swaps and the stats
+    row is recomputed."""
     base = storefs.strip_file_scheme(path)
-    # finish any committed-but-unswapped staging a prior crash left —
-    # AFTER this the live postings hold no half-cleared buckets
-    storefs.complete_staged_partition_swap(path, "postings", "bucket")
-    postings = spark.read.parquet(f"{path}/postings")
-    buckets = sorted(
-        int(r["bucket"])
-        for r in postings.where(F.col("doc_id").isin(ids))
-        .select("bucket")
-        .distinct()
-        .collect()
+    storefs.delete_staged_rows(
+        spark, path, ids, "postings", "bucket", "doc_id", _write_tasks(spark)
     )
-    if buckets:
-        kept = (
-            postings.where(F.col("bucket").isin(buckets))
-            .where(~F.col("doc_id").isin(ids))
-            .select("term", "doc_id", "tf", "dl", "bucket")
-        )
-        storefs.stage_partition_delete(
-            spark, path, "postings", "bucket", buckets, kept,
-            write_tasks=_write_tasks(spark),
-        )
-        storefs.complete_staged_partition_swap(path, "postings", "bucket")
     doclens = spark.read.parquet(f"{path}/doclens")
     if doclens.where(F.col("doc_id").isin(ids)).limit(1).count() > 0:
         keep_dl = doclens.where(~F.col("doc_id").isin(ids)).localCheckpoint()
@@ -699,12 +640,4 @@ def _run_recorded_delete(spark: SparkSession, ids: list, path: str) -> None:
     # stats recompute is unconditional while the intent exists: after
     # the doclens swap a replay can no longer see the victims, but the
     # stats row may still carry them
-    new_stats = spark.read.parquet(f"{path}/doclens").agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        F.coalesce(F.sum("dl"), F.lit(0)).cast("bigint").alias("total_len"),
-    )
-    new_stats.coalesce(1).write.mode("overwrite").parquet(
-        f"{base}/stats_compact_tmp"
-    )
-    storefs.swap_in_compacted(path, ("stats",))
-    shutil.rmtree(f"{base}/_delete_intent", ignore_errors=True)
+    repair_stats(spark, path)

@@ -51,7 +51,7 @@ import threading
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from trisk_spark.catalog import cached_cols, ckpt_eager, local_rows, table
+from trisk_spark.catalog import cached_cols, local_rows, table
 from trisk_spark.registry import register
 
 N_BPE_MERGES = 20
@@ -271,7 +271,7 @@ def bpe_train(
         # min_label_components' loop finding applied here)
         words = words.select(
             _merge_fold(F.col("syms"), left, right).alias("syms"), "cnt"
-        ).localCheckpoint(eager=ckpt_eager())
+        ).localCheckpoint(eager=False)
     return merges
 
 

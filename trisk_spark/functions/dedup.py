@@ -22,7 +22,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from trisk_spark.catalog import (
     cached_cols,
-    ckpt_eager,
     spread_narrow_scan,
     table,
 )
@@ -950,7 +949,7 @@ def _label_loop(edges: DataFrame) -> DataFrame:
                     != F.col("old_component")
                 ).alias("changed"),
             )
-            .localCheckpoint(eager=ckpt_eager())
+            .localCheckpoint(eager=False)
         )
         changed = new_full.where(F.col("changed")).count()
         labels = new_full.select("doc_id", "component")

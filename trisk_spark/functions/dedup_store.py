@@ -4,70 +4,31 @@ plan and ``minhash_flag_stream`` approximates with a session-persisted
 frame ("at 100 TB a bucketed table, here a static frame" — THIS is
 that bucketed table).
 
-The 100 TB deployment pattern: the corpus's LSH band index and
-signature table are WRITTEN ONCE (``write_dedup_store``), and every
-ingest wave — a daily batch or a streaming micro-batch — is checked
-for near-duplicates against the existing corpus by reading ONLY the
-band buckets the arriving documents route to (``probe_dedup_store``):
-
-  * ``<path>/bands``: (doc_id, bh) parquet partitioned by (band_idx,
-    bucket) where bucket = md5(bh) mod N_STORE_BUCKETS — the partition
-    column is a refinement of band-hash equality (equal bh ⇒ equal
-    bucket), so pruning never changes semantics, only bytes read.
-    Bucket membership is HARD-CAPPED at the batch kernel's BUCKET_CAP
-    (smallest doc_ids, the ``_pairs_from_signatures`` rule) AT WRITE
-    TIME, so a degenerate mega-bucket corpus can never fan a probe out
-    quadratically — the cap is baked into the artifact.
-  * ``<path>/signatures``: the full (doc_id, h0..h{N_PERMS-1}) MinHash
-    signature table — the verification asset: band collision only
-    nominates; the probe VERIFIES every candidate pair by signature
-    agreement (``minhash_jaccard_estimate``'s exact-integer estimator)
-    before flagging.
+This module is the MinHash binding of the shared band-store engine
+(``band_store.BandStore`` — layout, lifecycle verbs and durability
+model are documented there): the row table is ``signatures`` (doc_id,
+h0..h{N_PERMS-1}), the band value is ``bh``, bucket membership is
+capped at the batch kernel's BUCKET_CAP, and a candidate pair verifies
+by signature agreement (``minhash_jaccard_estimate``'s exact-integer
+estimator: n_agree/N_PERMS ≥ 1/2 flags ``is_dup``).
 
 Arriving documents compute signatures with the explode+agg form
 (``minhash_signatures`` — one wave-sized grouped MIN under whole-stage
 codegen; ``foreachBatch`` hands the engine a plain DataFrame, so the
 shuffle is legal on the streaming path too, and the in-row form's 12
-interpreted array transforms per doc measured 2× the whole probe —
-the decision note inside ``probe_dedup_store``). The probe's only
-distributed work beyond that is the pruned band read, one broadcast
-equi-join against the (bounded) arriving band rows, and a
-candidate-sized signature join. The routing decision crosses the
-driver as ≤ N_BANDS × N_STORE_BUCKETS (band_idx, bucket) pairs — a
-fixed-size routing collect no matter how large the batch or corpus
-(the ``ivf_store`` routed-lists class), with the probe-size ceiling
-folded into the same single job (the ``_routed_lists_checked``
-pattern).
-
-DURABILITY MODEL (single-maintainer, local/HDFS-rename filesystems):
-maintenance that swaps directories (``compact_dedup_store``) and the
-ingest watermark rely on atomic rename — true on POSIX and HDFS, NOT
-on S3-style object stores, where a deployment would put the swap
-behind a manifest table / conditional put. The constraint is enforced
-loudly: both entry points refuse ``scheme://`` paths other than
-``file:``. Crash windows that remain (append is two parquet writes;
-watermark lands after the append) each have CODE for detection and
-repair: a crash between the two append writes shows as
-``dedup_store_stats``'s ``n_unsigned_band_docs`` > 0 (repair = re-run
-the wave's append — band re-cap deduplicates, so the repair is
-idempotent); a replay past a missed watermark write shows as
-``n_dup_signature_ids`` > 0 (repair = ``repair_replayed_append``).
+interpreted array transforms per doc measured 2× the whole probe; the
+two forms are value-identical, pytest-pinned in test_streaming_extras).
 
 Reference: the reference has no dedup store (beyond-reference mandate,
-SURVEY.md §7 step 7); the layout is the ``ivf_store``/``sax_store``
-partitioned-parquet store pattern applied to the shared MinHash
-kernels.
+SURVEY.md §7 step 7).
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import or_
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-
-from trisk_spark.catalog import ckpt_eager, local_rows, table
 from trisk_spark.functions import storefs
+from trisk_spark.functions.band_store import BandStore
 from trisk_spark.registry import register
 from trisk_spark.functions.dedup import (
     BUCKET_CAP,
@@ -81,21 +42,11 @@ from trisk_spark.functions.dedup import (
     minhash_signatures,
 )
 
-#: LEGACY bands-table partition fan per band (directories = N_BANDS ×
-#: this) — the read-side default for stores written before fans were
-#: derived. New stores persist a corpus-derived fan at write time
-#: (``storefs.derived_fan`` — next pow2 of n_docs/4096, clamped
-#: [4, 65536]) in ``_n_buckets`` beside the store: 64 was oversized at
-#: small corpora (192 near-empty directories; the partitioned-write
-#: commit and every probe's listing pay per directory) and a constant
-#: at 100 TB, where pruning wants more buckets.
+#: LEGACY bands-table partition fan per band — the read-side default
+#: for stores written before fans were derived (new stores persist a
+#: corpus-derived fan in ``_n_buckets``; 64 was oversized at small
+#: corpora and a constant at 100 TB, where pruning wants more buckets)
 N_STORE_BUCKETS = 64
-
-#: ceiling on a single probe batch (the ivf_store MAX_PROBE_BATCH_ROWS
-#: class): arriving band rows are BROADCAST into the candidate join,
-#: so an unbounded flooded batch would silently grow the broadcast
-#: build; the check is folded into the routing collect (one job)
-MAX_DEDUP_PROBE_ROWS = 100_000
 
 #: signature-agreement floor for is_dup: n_agree/N_PERMS ≥ 1/2 — the
 #: estimator's E[agree] = J, so this flags estimated Jaccard ≥ 0.5
@@ -105,193 +56,24 @@ DUP_MIN_AGREE = N_PERMS // 2
 #: doc_id % MOD == 0 is the "arriving" wave (20%), the rest "existing"
 DEDUP_ARRIVING_MOD = 5
 
-_PROBE_SCHEMA = (
-    "doc_id bigint, dup_of bigint, n_agree bigint, "
-    "est_jaccard double, is_dup boolean"
-)
+#: deterministic victim slice for the self-contained takedown row:
+#: EXISTING docs with doc_id % TAKEDOWN_VICTIM_MOD == 1 get deleted
+TAKEDOWN_VICTIM_MOD = 17
+
+MAX_DELETE_IDS = storefs.MAX_DELETE_IDS
 
 
-def _bucket(col=None, n_buckets: int = N_STORE_BUCKETS):
-    """Partition bucket of a band hash: md5(bh) reduced to the store's
-    bucket fan. Purely a refinement of bh equality — semantics never
-    see it, only the directory pruner — so the oracle SQL needs no
-    mirror. ``n_buckets`` is the STORE'S recorded fan (``_store_fan``);
-    the default serves legacy stores and fan-free kernel twins."""
-    c = F.col("bh") if col is None else col
-    return (
-        F.pmod(
-            F.conv(F.substring(F.md5(c), 1, 15), 16, 10).cast("bigint"),
-            F.lit(n_buckets),
-        )
-        .cast("int")
-        .alias("bucket")
-    )
+def _signatures(docs: DataFrame) -> DataFrame:
+    return minhash_signatures(docs.where(F.col("doc_id").isNotNull()))
 
 
-def _store_fan(path: str) -> int:
-    """The store's persisted bucket fan, falling back to the legacy
-    constant for stores written before fans were derived."""
-    return storefs.read_store_fan(path, N_STORE_BUCKETS)
-
-
-def _write_tasks(spark: SparkSession, n_buckets: int = N_STORE_BUCKETS) -> int:
-    """Writer parallelism for the (band_idx, bucket)-partitioned band
-    table: the session's shuffle parallelism, capped at one task per
-    partition directory (a task per directory is the maximum useful —
-    beyond it extra tasks would sit empty, below it a writer commits
-    several directories serially)."""
-    conf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(1, min(conf, N_BANDS * n_buckets))
-
-
-def write_dedup_store(spark: SparkSession, docs: DataFrame, path: str) -> None:
-    """Persist the dedup store for a (doc_id, text) corpus frame:
-    ``<path>/signatures`` (full MinHash table, the verify asset) and
-    ``<path>/bands`` (bucket-capped band rows, partitioned by
-    (band_idx, bucket) — the probe-prunable nomination asset).
-
-    The signature aggregate runs ONCE: it is written first and the
-    bands derive from the written parquet (the store write IS the
-    barrier — no cache, no second shingle pass). The write-time
-    BUCKET_CAP (≤ CAP smallest doc_ids per (band_idx, bh), the exact
-    ``_pairs_from_signatures``/oracle rule) bounds every future
-    probe's per-band fan-out forever; byte-identical floods beyond the
-    cap are dedup_exact's cheap path, same trade as the batch kernel."""
-    sig = minhash_signatures(docs.where(F.col("doc_id").isNotNull()))
-    sig.write.mode("overwrite").parquet(f"{path}/signatures")
-    sig_stored = spark.read.parquet(f"{path}/signatures")
-    # Derive the bucket fan from the corpus size (parquet-metadata
-    # count over the just-written table — no data scan) and persist it
-    # beside the store BEFORE any bucketed bytes exist; every later
-    # verb reads it back instead of trusting a module constant.
-    fan = storefs.derived_fan(sig_stored.count())
-    storefs.write_store_fan(path, fan)
-    w = Window.partitionBy("band_idx", "bh").orderBy("doc_id")
-    bands = (
-        minhash_bands(sig_stored)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= BUCKET_CAP)
-        .select(
-            "doc_id", "bh", F.col("band_idx").cast("int"),
-            _bucket(n_buckets=fan),
-        )
-    )
-    # Repartition BY THE WRITE'S PARTITION COLUMNS with an explicit
-    # task count (explicit so AQE cannot coalesce the post-window
-    # shuffle to one task — measured 3-4x on the write: a single task
-    # committing all N_BANDS x N_STORE_BUCKETS directories
-    # sequentially vs one parallel writer per directory). Each
-    # (band_idx, bucket) hashes to exactly one task, so every
-    # directory still gets exactly ONE file — the compact layout the
-    # probe's pruned read wants — and parallelism self-caps at the
-    # directory count however large the cluster conf is.
-    bands.repartition(
-        _write_tasks(spark, fan), "band_idx", "bucket"
-    ).write.mode("overwrite").partitionBy("band_idx", "bucket").parquet(
-        f"{path}/bands"
-    )
-
-
-def _routed_buckets_checked(
-    bands_new: DataFrame, max_probe_rows: int
-) -> list[tuple[int, int]]:
-    """ONE job over the arriving band rows: the routed (band_idx,
-    bucket) pairs AND the probe-size guard (the ivf_store
-    ``_routed_lists_checked`` fold). The collected set is ≤ N_BANDS ×
-    N_STORE_BUCKETS pairs regardless of batch or corpus size."""
-    row = bands_new.agg(
-        F.count("*").alias("n_rows"),
-        F.collect_set(F.struct("band_idx", "bucket")).alias("routes"),
-    ).collect()[0]
-    if row["n_rows"] > max_probe_rows * N_BANDS:
-        raise ValueError(
-            f"dedup probe batch exceeds {max_probe_rows} rows "
-            f"({row['n_rows']} band rows > {max_probe_rows} docs x "
-            f"{N_BANDS} bands) — refusing to broadcast it; split the "
-            "probe stream or raise max_probe_rows"
-        )
-    return sorted((r["band_idx"], r["bucket"]) for r in (row["routes"] or []))
-
-
-def probe_dedup_store(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    path: str,
-    max_probe_rows: int = MAX_DEDUP_PROBE_ROWS,
-) -> DataFrame:
-    """Check an ARRIVING (doc_id, text) wave against the persisted
-    corpus store: per arriving document with at least one band
-    collision, its BEST verified match — (doc_id, dup_of, n_agree,
-    est_jaccard, is_dup) where dup_of is the highest-agreement
-    existing document (ties to the smallest doc_id, the house struct
-    argmax) and is_dup flags estimated Jaccard ≥ 1/2. Within-wave
-    pairs are NOT generated — the contract is dedup against the
-    EXISTING corpus; run the wave through the batch kernel (or admit
-    it and let the next wave probe it) for intra-wave dups.
-
-    Plan: arriving signatures + bands in-row (zero shuffle, streaming
-    safe) → one fixed-size routing collect (guard folded in) → the
-    bands read PRUNED to the routed (band_idx, bucket) directories
-    (partition filters pinned in tests) → one equi-join on (band_idx,
-    bucket, bh) with the bounded arriving side explicitly BROADCAST →
-    id-distinct candidate pairs → signature verify: the corpus
-    signature table joins the candidate ids (AQE decides — candidates
-    can be CAP-fanned, so no forced broadcast; the curation_funnel
-    posture) and the bounded arriving signatures broadcast → one
-    struct-MAX argmax per arriving doc (partial-aggregatable, no
-    per-doc sort). Nothing corpus-sized moves except the pruned
-    bucket read."""
-    # The EXPLODE+agg signature form, not the in-row one: foreachBatch
-    # hands the engine a plain DataFrame, so the shuffle is legal even
-    # on the streaming path, and the grouped MIN runs under whole-stage
-    # codegen while the in-row form pays 12 INTERPRETED array
-    # transforms per doc (measured 2x the whole probe at a 10k-doc
-    # wave; the two forms are value-identical, pytest-pinned in
-    # test_streaming_extras). localCheckpoint then materializes the wave's
-    # signatures ONCE for the three consumers (routing collect,
-    # candidate broadcast, verify broadcast) — wave-sized narrow rows
-    # (13 ints/doc), and without it each consumer replays the
-    # shingle explode (44 s vs 13 s at the 10k wave, PERF_NOTES r12).
-    # LAZY: the routing collect is the wave's first action and
-    # materializes the signatures for all three consumers (r17)
-    fan = _store_fan(path)
-    sig_new = minhash_signatures(
-        new_docs.where(F.col("doc_id").isNotNull())
-    ).localCheckpoint(eager=ckpt_eager())
-    bands_new = minhash_bands(sig_new).select(
-        F.col("doc_id").alias("new_id"),
-        F.col("band_idx").cast("int").alias("band_idx"),
-        "bh",
-        _bucket(n_buckets=fan),
-    )
-    routes = _routed_buckets_checked(bands_new, max_probe_rows)
-    if not routes:
-        return spark.createDataFrame([], _PROBE_SCHEMA)
-    store_bands = spark.read.parquet(f"{path}/bands")
-    # A big wave routes to EVERY (band_idx, bucket) — the disjunction
-    # is then a tautology and only costs planner time (measured ~0.5 s
-    # of per-partition predicate evaluation at 192 dirs), so prune
-    # only when pruning can drop something.
-    if len(routes) < N_BANDS * fan:
-        pred = reduce(
-            or_,
-            [
-                (F.col("band_idx") == b) & (F.col("bucket") == k)
-                for b, k in routes
-            ],
-        )
-        store_bands = store_bands.where(pred)
-    pairs = (
-        store_bands.join(F.broadcast(bands_new), ["band_idx", "bucket", "bh"])
-        .where(F.col("doc_id") != F.col("new_id"))
-        .select("new_id", F.col("doc_id").alias("dup_of"))
-        .distinct()
-    )
-    sig_store = spark.read.parquet(f"{path}/signatures").select(
+def _agreement(stored: DataFrame, wave: DataFrame):
+    """Verify score: the number of agreeing signature positions."""
+    ref = stored.select(
         F.col("doc_id").alias("dup_of"),
         *[F.col(f"h{i}").alias(f"b{i}") for i in range(N_PERMS)],
     )
-    sn = sig_new.select(
+    new = wave.select(
         F.col("doc_id").alias("new_id"),
         *[F.col(f"h{i}").alias(f"a{i}") for i in range(N_PERMS)],
     )
@@ -299,364 +81,66 @@ def probe_dedup_store(
         F.when(F.col(f"a{i}") == F.col(f"b{i}"), 1).otherwise(0)
         for i in range(N_PERMS)
     )
-    scored = (
-        pairs.join(sig_store, "dup_of")
-        .join(F.broadcast(sn), "new_id")
-        .select("new_id", "dup_of", agree.cast("bigint").alias("n_agree"))
-    )
-    # struct max = (n_agree DESC, dup_of ASC): lexicographic max picks
-    # the strongest match, then the LARGEST -dup_of = smallest id on
-    # ties (the canonical_by_quality argmax — partial-aggregatable)
-    best = scored.groupBy("new_id").agg(
-        F.max(
-            F.struct(F.col("n_agree"), (-F.col("dup_of")).alias("nid"))
-        ).alias("b")
-    )
-    return best.select(
-        F.col("new_id").alias("doc_id"),
-        (-F.col("b.nid")).alias("dup_of"),
-        F.col("b.n_agree").alias("n_agree"),
-        F.round(F.col("b.n_agree").cast("double") / N_PERMS, 4).alias(
-            "est_jaccard"
-        ),
-        (F.col("b.n_agree") >= DUP_MIN_AGREE).alias("is_dup"),
-    )
+    return ref, new, agree.cast("bigint")
 
 
-def append_dedup_store(
-    spark: SparkSession, new_docs: DataFrame, path: str
-) -> None:
-    """ADMIT an arriving wave into the persisted store — the write
-    half of the ingest loop (probe → keep non-dups → append them so
-    the NEXT wave dedups against today's): append the wave's
-    signatures, and rewrite ONLY the band buckets the wave touches
-    with the bucket cap re-applied over old ∪ new members.
-
-    Equality contract (pytest-pinned): append(existing store, wave) ≡
-    ``write_dedup_store`` over existing ∪ wave, table-for-table — the
-    cap rule (BUCKET_CAP smallest doc_ids per (band_idx, bh)) is
-    order-free, so incremental admission and a from-scratch rebuild
-    produce byte-identical artifacts. Caller contract: the wave's
-    doc_ids are disjoint from the store's (admit each document once —
-    the probe step's job to ensure).
-
-    Plan: ONE signature aggregate over the wave (localCheckpoint — the
-    append write and the band derivation both consume it); the
-    touched-bucket set crosses the driver as ≤ N_BANDS ×
-    N_STORE_BUCKETS pairs (the routing-collect class); the rewrite
-    reads ONLY the touched partitions (pruned), unions the wave's band
-    rows, deduplicates on (band_idx, bh, doc_id) — so re-running a
-    wave's append is IDEMPOTENT for bands: a replayed wave can never
-    stack duplicate rows against BUCKET_CAP and evict distinct members
-    a rebuild would keep — re-caps per (band_idx, bh), and writes back
-    under DYNAMIC partition overwrite; untouched buckets (the
-    overwhelming majority of a 100 TB store under a daily wave) are
-    never read or written.
-
-    Crash ordering: BANDS ARE WRITTEN FIRST, signatures second. A
-    failure between the two writes leaves band rows whose doc_ids have
-    no signature row — an ALWAYS-detectable state
-    (``dedup_store_stats``'s ``n_unsigned_band_docs`` > 0; the reverse
-    order would be indistinguishable from legitimate cap eviction).
-    Repair: re-run the wave's append — the band re-cap deduplicates
-    (above) and the signature append then lands once. Signature-side
-    replay (re-running a FULLY-landed wave) is what duplicates
-    signature rows; the ingest watermark (``dedup_ingest_stream``)
-    exists to prevent exactly that."""
-    # LAZY: the routing distinct-collect below is the first action
-    # and materializes the wave's signatures for the band merge and
-    # the final signature append (r17)
-    fan = _store_fan(path)
-    sig_new = minhash_signatures(
-        new_docs.where(F.col("doc_id").isNotNull())
-    ).localCheckpoint(eager=ckpt_eager())
-    bands_new = minhash_bands(sig_new).select(
-        "doc_id", "bh", F.col("band_idx").cast("int").alias("band_idx"),
-        _bucket(n_buckets=fan),
-    )
-    routes = sorted(
-        (r["band_idx"], r["bucket"])
-        for r in bands_new.select("band_idx", "bucket").distinct().collect()
-    )
-    if not routes:
-        # band-less wave (all-null shingles can't happen — every doc
-        # has ≥1 band) ⇒ empty wave: nothing to write on either table
-        return
-    old = spark.read.parquet(f"{path}/bands")
-    # tautology skip (the probe_dedup_store rule): a wave touching
-    # every (band_idx, bucket) makes the disjunction pure planner cost
-    if len(routes) < N_BANDS * fan:
-        pred = reduce(
-            or_,
-            [
-                (F.col("band_idx") == b) & (F.col("bucket") == k)
-                for b, k in routes
-            ],
-        )
-        old = old.where(pred)
-    w = Window.partitionBy("band_idx", "bh").orderBy("doc_id")
-    merged = (
-        old.select("doc_id", "bh", "band_idx", "bucket")
-        .unionByName(bands_new)
-        .dropDuplicates(["band_idx", "bh", "doc_id"])
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= BUCKET_CAP)
-        .select("doc_id", "bh", "band_idx", "bucket")
-        # one writer task per touched directory (the write_dedup_store
-        # layout rule — explicit count so AQE can't serialize the
-        # rewrite into one task committing every touched bucket)
-        .repartition(_write_tasks(spark, fan), "band_idx", "bucket")
-        # the rewrite READS the path it overwrites: materialize the
-        # merged buckets (touched-partition sized) BEFORE the write or
-        # Spark would plan a self-overwriting scan
-        .localCheckpoint()
-    )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("band_idx", "bucket").parquet(
-            f"{path}/bands"
-        )
-    finally:
-        spark.conf.set(key, prev)
-    sig_new.write.mode("append").parquet(f"{path}/signatures")
+def _report():
+    n = F.col("b.n_agree")
+    return [
+        n.alias("n_agree"),
+        F.round(n.cast("double") / N_PERMS, 4).alias("est_jaccard"),
+        (n >= DUP_MIN_AGREE).alias("is_dup"),
+    ]
 
 
-def ingest_wave(
-    spark: SparkSession,
-    new_docs: DataFrame,
-    path: str,
-    max_probe_rows: int = MAX_DEDUP_PROBE_ROWS,
-) -> DataFrame:
-    """The full ingest loop in one call: PROBE the wave against the
-    store, ADMIT every document not flagged ``is_dup`` (append its
-    signatures + band rows so the NEXT wave dedups against it), and
-    return the probe report (materialized BEFORE the append — the
-    report describes the store the wave was judged against, not the
-    store it changed). Within-wave near-dups are admitted together
-    this wave and collide from the next wave on — the documented
-    batch-boundary semantics of every ingest-time gate here
-    (``cluster_cap_stream``'s arrival-order contract)."""
-    report = probe_dedup_store(
-        spark, new_docs, path, max_probe_rows
-    ).localCheckpoint()
-    flagged = report.where(F.col("is_dup")).select("doc_id")
-    admitted = new_docs.where(F.col("doc_id").isNotNull()).join(
-        F.broadcast(flagged), "doc_id", "left_anti"
-    )
-    append_dedup_store(spark, admitted, path)
-    return report
+DEDUP = BandStore(
+    label="dedup",
+    id_col="doc_id",
+    rows_table="signatures",
+    band_col="bh",
+    n_bands=N_BANDS,
+    cap=BUCKET_CAP,
+    legacy_fan=N_STORE_BUCKETS,
+    rows=_signatures,
+    bands=minhash_bands,
+    verify=_agreement,
+    score_col="n_agree",
+    report=_report,
+    probe_schema=(
+        "doc_id bigint, dup_of bigint, n_agree bigint, "
+        "est_jaccard double, is_dup boolean"
+    ),
+    stats_names=("n_docs", "n_dup_signature_ids", "n_unsigned_band_docs"),
+    stats_order=(
+        "n_docs", "n_band_rows", "n_buckets", "min_bucket", "max_bucket",
+        "avg_bucket", "saturated_buckets", "n_unsigned_band_docs",
+        "n_dup_signature_ids",
+    ),
+    avg_digits=6,
+    table="documents",
+    arriving_mod=DEDUP_ARRIVING_MOD,
+    victim_mod=TAKEDOWN_VICTIM_MOD,
+    cache_prefixes=("trisk_dedup_store_", "trisk_takedown_store_"),
+)
 
-
-# Durability machinery shared with semantic_store — extracted to
-# storefs.py (one implementation of the fail-loud FS gate, the atomic
-# watermark, and the swap/repair state machine); these aliases keep
-# this module's public surface and its tests unchanged.
-_require_rename_fs = storefs.require_rename_fs
-_strip_file_scheme = storefs.strip_file_scheme
+write_dedup_store = DEDUP.write
+probe_dedup_store = DEDUP.probe
+append_dedup_store = DEDUP.append
+ingest_wave = DEDUP.ingest_wave
+dedup_ingest_stream = DEDUP.ingest_stream
+dedup_probe_stream = DEDUP.probe_stream
+repair_dedup_store = DEDUP.repair
+repair_replayed_append = DEDUP.repair_replayed_append
+compact_dedup_store = DEDUP.compact
+dedup_store_stats = DEDUP.stats
+delete_from_dedup_store = DEDUP.delete
+resume_pending_delete = DEDUP.resume
+corpus_store_path = DEDUP.corpus_store_path
+takedown_store_path = DEDUP.takedown_store_path
+_bucket = DEDUP.bucket
+_store_fan = DEDUP.fan
+_routed_buckets_checked = DEDUP._routes
 read_ingest_watermark = storefs.read_ingest_watermark
-_write_ingest_watermark = storefs.write_ingest_watermark
-
-
-def dedup_ingest_stream(
-    spark: SparkSession, docs_stream: DataFrame, path: str, sink
-):
-    """The CONTINUOUS admission pipeline — ``ingest_wave`` per
-    micro-batch: each arriving batch is probed against the store,
-    its non-duplicates are ADMITTED (signatures appended, touched
-    buckets re-capped), and the probe report goes to ``sink``; batch
-    N+1 therefore dedups against everything admitted through batch N —
-    the exactly-once ingest-dedup loop a 100 TB deployment runs on the
-    document firehose. Within-batch near-dups are admitted together
-    and collide from the next batch on (the documented batch-boundary
-    semantics). Sink contract as ``dedup_probe_stream``; the report is
-    localCheckpoint-materialized by ``ingest_wave`` before the append,
-    so the sink may consume it lazily AFTER the store has moved.
-
-    REPLAY GUARD (admission writes to the store, so checkpoint replay
-    must not re-append): the last fully-admitted batch id is persisted
-    ATOMICALLY beside the store (``_last_admitted_batch_id``, the
-    foreachBatch batch-id de-dup pattern from the Structured Streaming
-    guide) immediately after the wave's append; a replayed batch with
-    ``batch_id`` ≤ the watermark is SKIPPED ENTIRELY — no probe, no
-    append, no sink call (the sink already saw, or chose to drop, that
-    batch id; sinks needing redelivery on replay keep their own
-    batch-id ledger — they receive ``batch_id`` for exactly that).
-    Forced-replay pytest pins zero duplicate signature rows. Remaining
-    crash window: a crash BETWEEN the append and the watermark write
-    replays one wave's signature append (bands re-cap idempotently);
-    detection = ``dedup_store_stats``'s ``n_dup_signature_ids`` > 0,
-    repair = ``repair_replayed_append`` (both code, forced-crash
-    pytest-pinned) — or run the store behind a transactional table
-    format at deployment scale."""
-    _require_rename_fs(path, "dedup_ingest_stream")
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        wm = read_ingest_watermark(path)
-        if wm is not None and batch_id <= wm:
-            return
-        batch_df = batch_df.persist()
-        try:
-            report = ingest_wave(spark, batch_df, path)
-            _write_ingest_watermark(path, batch_id)
-            sink(report, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return docs_stream.writeStream.outputMode("append").foreachBatch(fb)
-
-
-def dedup_probe_stream(spark: SparkSession, docs_stream: DataFrame, path: str, sink):
-    """Streaming ingest-dedup over the PERSISTED store — the scale
-    path ``minhash_flag_stream`` documents: each micro-batch of
-    arriving documents probes the written band buckets with its OWN
-    static partition filter (``foreachBatch`` turns the batch into a
-    plain DataFrame, so the per-batch pruned read is exactly
-    ``probe_dedup_store`` — the ``probe_index_stream`` stream-static
-    pattern; a declarative stream-static join could not express the
-    data-dependent partition filter). Arriving docs are independent
-    rows, so the union of per-batch results equals the one-batch image
-    (stream≡batch pytest-pinned).
-
-    ``sink(result_df, batch_id)`` receives each batch's probe frame.
-    SINK CONTRACT (the probe_index_stream contract): the sink must
-    fully MATERIALIZE the result inside the call — the micro-batch
-    cache is dropped when the call returns. Returns the
-    ``DataStreamWriter`` ready to ``.start()``."""
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        # persist: the routing collect and the verify join both
-        # consume the arriving batch (the probe_index_stream rule)
-        batch_df = batch_df.persist()
-        try:
-            sink(probe_dedup_store(spark, batch_df, path), batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return docs_stream.writeStream.outputMode("append").foreachBatch(fb)
-
-
-def repair_dedup_store(path: str) -> None:
-    """Bring a store back to a consistent layout after a compaction
-    crash — ``storefs.repair_store`` over this store's two tables; see
-    that docstring for the three observable crash states and their
-    repairs. Called automatically on ``compact_dedup_store`` entry,
-    and callable standalone before reopening a store whose maintainer
-    died."""
-    storefs.repair_store(path, ("signatures", "bands"))
-
-
-def repair_replayed_append(spark: SparkSession, path: str) -> None:
-    """Repair the ingest stream's documented watermark crash window: a
-    crash BETWEEN a wave's append and its watermark write replays the
-    wave's signature append once (bands re-cap idempotently —
-    ``append_dedup_store``'s dropDuplicates rule — so only signatures
-    duplicate). Detection: ``dedup_store_stats``'s
-    ``n_dup_signature_ids`` > 0. Repair: dropDuplicates-by-doc_id
-    rewrite of ``signatures`` through the crash-safe swap protocol
-    (``storefs.repair_replayed_append``); replayed rows are
-    byte-identical per doc_id, so keeping any one is exact. Probe ≡
-    never-crashed twin pytest-pinned (test_dedup_store's forced-crash
-    replay)."""
-    storefs.repair_replayed_append(spark, path, "signatures", "doc_id")
-
-
-def compact_dedup_store(
-    spark: SparkSession, path: str, sig_files: int = 8
-) -> None:
-    """Post-ingest maintenance: every ``append_dedup_store`` /
-    ``dedup_ingest_stream`` micro-batch leaves one small parquet file
-    in ``signatures`` and in each touched band bucket — after N waves
-    a probe pays N file opens per routed bucket. Rewrite both tables
-    compacted (signatures into ``sig_files`` files; bands into ONE
-    file per (band_idx, bucket) partition via a partition-key
-    repartition) into fresh directories and SWAP them in — readers
-    started after the swap see the compacted store; the contract is
-    single-maintainer, no probe in flight during the swap (the
-    standard compaction discipline every LSM-ish store has). Store
-    CONTENT is untouched: probe ≡ pre-compact pytest-pinned, including
-    with the compaction mid-stream between two ingest waves.
-
-    Crash safety (local/HDFS-rename filesystems ONLY — fail-loud
-    ``_require_rename_fs`` guard; see the module DURABILITY MODEL):
-    entry first repairs any half-swapped state from a previous crash
-    and clears stale tmp dirs (``repair_dedup_store``), tmp builds
-    write under ``mode("overwrite")`` so a dead build can never wedge
-    the next run, and the per-table swap follows a recovery order —
-    live → ``_old``, tmp → live, drop ``_old`` — whose every
-    intermediate state ``repair_dedup_store`` can finish or roll
-    back (``storefs.swap_in_compacted``)."""
-    _require_rename_fs(path, "compact_dedup_store")
-    repair_dedup_store(path)
-    sig = spark.read.parquet(f"{path}/signatures").coalesce(max(1, sig_files))
-    sig.write.mode("overwrite").parquet(f"{path}/signatures_compact_tmp")
-    bands = spark.read.parquet(f"{path}/bands").repartition(
-        _write_tasks(spark, _store_fan(path)), "band_idx", "bucket"
-    )
-    bands.write.mode("overwrite").partitionBy("band_idx", "bucket").parquet(
-        f"{path}/bands_compact_tmp"
-    )
-    storefs.swap_in_compacted(path, ("signatures", "bands"))
-
-
-def dedup_store_stats(spark: SparkSession, path: str) -> DataFrame:
-    """Store health table — the ``ivf_store.index_stats`` image for
-    the dedup store: one row with (n_docs, n_band_rows, n_buckets,
-    min_bucket, max_bucket, avg_bucket, saturated_buckets,
-    n_unsigned_band_docs) where a saturated bucket sits AT the
-    write-time cap. The operational signals: saturated buckets mean
-    the corpus holds ≥ BUCKET_CAP near-identical documents per
-    collision group there — probes against those buckets pay the max
-    fan-out, and a rising saturated count says run the batch
-    ``dedup_exact``/cluster sweep rather than relying on ingest-time
-    gating alone. ``n_unsigned_band_docs`` counts distinct band
-    doc_ids with NO signature row — 0 in every consistent store; > 0
-    is the signature of an append that crashed between its band
-    rewrite and its signature write (``append_dedup_store``'s
-    documented crash window; repair = re-run the wave's append).
-    ``n_dup_signature_ids`` counts signature rows beyond the first per
-    doc_id — 0 in every consistent store; > 0 is the signature of a
-    wave's append REPLAYED past a missed watermark write
-    (``dedup_ingest_stream``'s documented crash window; repair =
-    ``repair_replayed_append``).
-    One partial-agg pass over the (already partition-local) band rows
-    plus a distinct-ids anti-join against the signature ids —
-    id-column reads only, both sides column-pruned."""
-    sigs = spark.read.parquet(f"{path}/signatures")
-    docs = sigs.agg(
-        F.count("*").cast("bigint").alias("n_docs"),
-        (F.count("*") - F.count_distinct(F.col("doc_id")))
-        .cast("bigint")
-        .alias("n_dup_signature_ids"),
-    )
-    band_rows = spark.read.parquet(f"{path}/bands")
-    unsigned = (
-        band_rows.select("doc_id")
-        .distinct()
-        .join(sigs.select("doc_id"), "doc_id", "left_anti")
-        .agg(F.count("*").cast("bigint").alias("n_unsigned_band_docs"))
-    )
-    per = band_rows.groupBy("band_idx", "bh").agg(F.count("*").alias("n"))
-    agg = per.agg(
-        F.sum("n").cast("bigint").alias("n_band_rows"),
-        F.count("*").cast("bigint").alias("n_buckets"),
-        F.min("n").cast("bigint").alias("min_bucket"),
-        F.max("n").cast("bigint").alias("max_bucket"),
-        F.round(F.avg("n"), 6).alias("avg_bucket"),
-        F.sum(F.when(F.col("n") >= BUCKET_CAP, 1).otherwise(0))
-        .cast("bigint")
-        .alias("saturated_buckets"),
-    )
-    return (
-        agg.crossJoin(F.broadcast(docs))
-        .crossJoin(F.broadcast(unsigned))
-        .select(
-            "n_docs", "n_band_rows", "n_buckets", "min_bucket",
-            "max_bucket", "avg_bucket", "saturated_buckets",
-            "n_unsigned_band_docs", "n_dup_signature_ids",
-        )
-    )
 
 
 # ------------------------------------------- registered-query image --
@@ -721,215 +205,7 @@ FROM best WHERE rn = 1
 """
 
 
-#: one dedup-store scratch dir per (session, corpus) — the shared
-#: ``storefs.ScratchStoreCache`` (r17 review consolidated the eight
-#: pasted copies of the lock/evict/setdefault/atexit pattern)
-_DEDUP_STORES = storefs.ScratchStoreCache("trisk_dedup_store_")
-
-
-@register("dedup_incremental", oracle=_dedup_incremental_sql())
-def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ingest dedup over the persisted store, self-
-    contained for the driver gate: split the corpus deterministically
-    (doc_id % {MOD} == 0 is the "arriving" wave, the rest the
-    "existing" corpus), build the store over the existing slice ONCE
-    per (session, corpus) into a scratch path (the plan-store
-    memoization — repeat calls probe the artifacts, the store
-    economics), and probe the arriving wave against it. The oracle
-    (``_dedup_incremental_sql``) derives both sides from the corpus
-    directly, so the row puts write→prune→probe→verify — the whole
-    store path — under independent value-hash evidence. Registered r13
-    (the r12 VERDICT's lead seat candidate — the store-probe kernel
-    has no registered sibling, so this row is the persisted store's
-    only possible driver-hash evidence)."""
-    docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
-    arriving = docs.where(
-        F.pmod(F.col("doc_id"), F.lit(DEDUP_ARRIVING_MOD)) == 0
-    )
-    return probe_dedup_store(
-        spark, arriving, corpus_store_path(spark, sf_dir)
-    )
-
-
-def corpus_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the session-memoized scratch dedup store over the
-    corpus's EXISTING slice (doc_id % MOD != 0) — built once per
-    (session, corpus), the plan-store cache pattern (stale sessions
-    evicted + rmtree'd, ties resolved setdefault-under-lock, atexit
-    sweep). Shared by ``dedup_incremental`` and the composed
-    ``admission_report`` so the library parity pass builds the store
-    once, not per-op."""
-
-    def build(path: str) -> None:
-        docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
-        existing = docs.where(
-            F.pmod(F.col("doc_id"), F.lit(DEDUP_ARRIVING_MOD)) != 0
-        )
-        write_dedup_store(spark, existing, path)
-
-    return _DEDUP_STORES.get_or_build(spark, sf_dir, build)
-
-
-dedup_incremental.__doc__ = dedup_incremental.__doc__.replace(
-    "{MOD}", str(DEDUP_ARRIVING_MOD)
-)
-
 DEDUP_INCREMENTAL_SQL = _dedup_incremental_sql()
-
-
-# ------------------------------------------------ takedown (r14) -----
-
-#: fail-loud ceiling on a single takedown batch: the id set travels as
-#: a driver-held literal (the broadcast-model class) and the routing
-#: collect is <= ids x N_BANDS pairs
-MAX_DELETE_IDS = 100_000
-
-
-def delete_from_dedup_store(spark: SparkSession, doc_ids, path: str) -> None:
-    """TAKEDOWN — the store family's third verb (write/append/DELETE):
-    remove documents from the persisted store so no future probe can
-    match against them. Semantics contract (pytest-pinned): delete ≡
-    ``write_dedup_store`` over the corpus WITHOUT the victims,
-    table-for-table — INCLUDING cap re-entrants: a bucket that was AT
-    BUCKET_CAP re-admits the members the victims had evicted, because
-    the touched buckets are RE-DERIVED from the kept signatures, not
-    merely filtered (filtering alone would silently under-fill capped
-    buckets vs a rebuild and shrink future candidate recall).
-
-    Cost model (the honest takedown economics at 100 TB): one
-    pushdown-pruned scan of the victims' signature rows (routing), one
-    full signature-table scan to re-derive ONLY the touched buckets'
-    membership (signatures are ~N_PERMS ints/doc — the narrow table,
-    never the corpus text), a rewrite of only the touched band
-    directories, and one signature rewrite through the crash-safe
-    ``storefs`` swap. Takedown waves are rare and id-sized; the
-    ceiling (MAX_DELETE_IDS) keeps the literal/route sets in the
-    broadcast class.
-
-    Crash safety: a durable ``_delete_intent`` lands first (tmp +
-    rename, the admission-stream protocol); the touched directories
-    are then cleared and rewritten from the kept signatures (a bucket
-    whose only members were victims stays correctly EMPTY — a dynamic
-    partition overwrite could not express that), the signature table
-    swaps last, and the intent drops. EVERY intermediate state re-runs
-    to completion from the recorded ids (``resume_pending_delete``,
-    called on entry here and by ``repair_dedup_store`` users): before
-    the signature swap the victims' signatures still exist so routing
-    recomputes; after it, routing finds no victims and the re-run just
-    clears the intent. Single-maintainer discipline, like compaction:
-    no probe in flight during the swap."""
-    import os
-
-    _require_rename_fs(path, "delete_from_dedup_store")
-    repair_dedup_store(path)
-    resume_pending_delete(spark, path)
-    ids = sorted({int(i) for i in doc_ids})
-    if len(ids) > MAX_DELETE_IDS:
-        raise ValueError(
-            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
-        )
-    if not ids:
-        return
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    tmp = ipath + "_tmp"
-    local_rows(spark, [(i,) for i in ids], "doc_id bigint").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(tmp, ipath)
-    _run_recorded_delete(spark, ids, path)
-
-
-def resume_pending_delete(spark: SparkSession, path: str) -> bool:
-    """Finish a takedown a crash interrupted: re-run the deletion from
-    the durable ``_delete_intent`` ids (idempotent at every crash
-    point — see ``delete_from_dedup_store``). Self-sufficient: repairs
-    any half-swapped signature table FIRST (a crash inside
-    ``swap_in_compacted`` leaves the live table renamed to ``_old``,
-    and a standalone resume must not fail reading it — previously only
-    the delete entry point ran the repair). Returns True if there was
-    one to finish."""
-    import os
-
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    if not os.path.exists(ipath):
-        return False
-    repair_dedup_store(path)
-    ids = sorted(int(r.doc_id) for r in spark.read.parquet(ipath).collect())
-    _run_recorded_delete(spark, ids, path)
-    return True
-
-
-def _run_recorded_delete(spark: SparkSession, ids: list, path: str) -> None:
-    import os
-    import shutil
-
-    base = storefs.strip_file_scheme(path)
-    fan = _store_fan(path)
-    sig = spark.read.parquet(f"{path}/signatures")
-    victims = sig.where(F.col("doc_id").isin(ids))
-    routes = sorted(
-        (r["band_idx"], r["bucket"])
-        for r in minhash_bands(victims)
-        .select(
-            F.col("band_idx").cast("int").alias("band_idx"),
-            _bucket(n_buckets=fan),
-        )
-        .select("band_idx", "bucket")
-        .distinct()
-        .collect()
-    )
-    if routes:
-        keep_sig = sig.where(~F.col("doc_id").isin(ids))
-        if len(routes) < N_BANDS * fan:
-            pred = reduce(
-                or_,
-                [
-                    (F.col("band_idx") == b) & (F.col("bucket") == k)
-                    for b, k in routes
-                ],
-            )
-        else:
-            pred = F.lit(True)
-        w = Window.partitionBy("band_idx", "bh").orderBy("doc_id")
-        rebuilt = (
-            minhash_bands(keep_sig)
-            .select(
-                "doc_id", "bh",
-                F.col("band_idx").cast("int").alias("band_idx"),
-                _bucket(n_buckets=fan),
-            )
-            .where(pred)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= BUCKET_CAP)
-            .select("doc_id", "bh", "band_idx", "bucket")
-            .repartition(_write_tasks(spark, fan), "band_idx", "bucket")
-            # materialize BEFORE clearing the directories it reads
-            # nothing from (source = signatures) but AFTER which the
-            # write must not replan against a half-cleared table
-            .localCheckpoint()
-        )
-        for b, k in routes:
-            shutil.rmtree(
-                f"{base}/bands/band_idx={b}/bucket={k}", ignore_errors=True
-            )
-        rebuilt.write.mode("append").partitionBy("band_idx", "bucket").parquet(
-            f"{path}/bands"
-        )
-    if victims.limit(1).count() > 0:
-        keep = sig.where(~F.col("doc_id").isin(ids))
-        keep.write.mode("overwrite").parquet(
-            f"{base}/signatures_compact_tmp"
-        )
-        storefs.swap_in_compacted(path, ("signatures",))
-    shutil.rmtree(f"{base}/_delete_intent", ignore_errors=True)
-
-
-#: deterministic victim slice for the self-contained takedown row:
-#: EXISTING docs with doc_id % TAKEDOWN_VICTIM_MOD == 1 get deleted
-TAKEDOWN_VICTIM_MOD = 17
 
 DEDUP_TAKEDOWN_SQL = _dedup_incremental_sql(
     exist_extra=(
@@ -938,32 +214,21 @@ DEDUP_TAKEDOWN_SQL = _dedup_incremental_sql(
     )
 )
 
-_TAKEDOWN_STORES = storefs.ScratchStoreCache("trisk_takedown_store_")
 
-
-def takedown_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the session-memoized POST-TAKEDOWN scratch store: built
-    over the existing slice (doc_id % DEDUP_ARRIVING_MOD != 0), then
-    ``delete_from_dedup_store`` removes the deterministic victim slice
-    (doc_id % TAKEDOWN_VICTIM_MOD == 1) — its OWN cache, never the
-    ``corpus_store_path`` store other library rows share (mutating the
-    shared artifact would corrupt their memoized probes)."""
-
-    def build(path: str) -> None:
-        docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
-        existing = docs.where(
-            F.pmod(F.col("doc_id"), F.lit(DEDUP_ARRIVING_MOD)) != 0
-        )
-        victims = sorted(
-            int(r.doc_id)
-            for r in existing.where(
-                F.pmod(F.col("doc_id"), F.lit(TAKEDOWN_VICTIM_MOD)) == 1
-            ).select("doc_id").collect()
-        )
-        write_dedup_store(spark, existing.select("doc_id", "text"), path)
-        delete_from_dedup_store(spark, victims, path)
-
-    return _TAKEDOWN_STORES.get_or_build(spark, sf_dir, build)
+@register("dedup_incremental", oracle=DEDUP_INCREMENTAL_SQL)
+def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental ingest dedup over the persisted store, self-
+    contained for the driver gate: split the corpus deterministically
+    (doc_id % DEDUP_ARRIVING_MOD == 0 is the "arriving" wave, the rest
+    the "existing" corpus), build the store over the existing slice
+    ONCE per (session, corpus) into a scratch path (the plan-store
+    memoization — repeat calls probe the artifacts, the store
+    economics), and probe the arriving wave against it. The oracle
+    (``_dedup_incremental_sql``) derives both sides from the corpus
+    directly, so the row puts write→prune→probe→verify — the whole
+    store path — under independent value-hash evidence. Shares the
+    corpus store with the composed ``admission_report``."""
+    return DEDUP.probe_arriving(spark, sf_dir, corpus_store_path(spark, sf_dir))
 
 
 def dedup_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -976,13 +241,5 @@ def dedup_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     with the victims EXCLUDED from the existing side — it matches iff
     delete ≡ rebuild holds on the artifacts the probe actually reads,
     so the takedown verb itself sits under the DuckDB hash gate, not
-    just pytest equality. LIBRARY op; R16/R17 seat queue."""
-    docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
-    arriving = docs.where(
-        F.pmod(F.col("doc_id"), F.lit(DEDUP_ARRIVING_MOD)) == 0
-    )
-    return probe_dedup_store(
-        spark,
-        arriving.select("doc_id", "text"),
-        takedown_store_path(spark, sf_dir),
-    )
+    just pytest equality. LIBRARY op."""
+    return DEDUP.probe_arriving(spark, sf_dir, takedown_store_path(spark, sf_dir))

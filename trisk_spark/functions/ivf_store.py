@@ -35,6 +35,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, functions as F
 
 from trisk_spark.catalog import local_rows, table
+from trisk_spark.functions import storefs
 from trisk_spark.functions.pq import (
     _adc_candidates,
     _pq_codebook,
@@ -413,8 +414,6 @@ def repair_ivf_index(path: str) -> None:
     ``_old``, tmp not yet in). Delete crash states are separate
     machinery: ``resume_pending_delete`` finishes them from the
     durable ``_delete_intent`` + committed staging."""
-    from trisk_spark.functions import storefs
-
     storefs.repair_store(path, ("index", "centroids"))
 
 
@@ -429,28 +428,22 @@ def compact_ivf_index(spark: SparkSession, path: str) -> None:
     recovery-ordered swap). The centroid model is K rows in one file,
     written once — never compacted. Probe ≡ pre-compact
     pytest-pinned. Local/HDFS-rename filesystems only (fail-loud)."""
-    from trisk_spark.functions import storefs
-
     storefs.require_rename_fs(path, "compact_ivf_index")
     repair_ivf_index(path)
     resume_pending_delete(spark, path)
     from trisk_spark.functions.similarity import N_CENTROIDS
 
-    conf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     index = spark.read.parquet(f"{path}/index")
-    # one writer task per list directory (the dedup_store layout rule —
-    # explicit count so AQE can't serialize the 64-directory write)
-    index.repartition(max(1, min(conf, N_CENTROIDS)), "list_id").write.mode(
-        "overwrite"
-    ).partitionBy("list_id").parquet(f"{path}/index_compact_tmp")
+    # one writer task per list directory (``storefs.writer_tasks``)
+    index.repartition(
+        storefs.writer_tasks(spark, N_CENTROIDS), "list_id"
+    ).write.mode("overwrite").partitionBy("list_id").parquet(
+        f"{path}/index_compact_tmp"
+    )
     storefs.swap_in_compacted(path, ("index",))
 
 
 # ------------------------------------------------ takedown (r14) -----
-
-#: fail-loud ceiling on a single takedown batch (the dedup store's
-#: MAX_DELETE_IDS contract)
-MAX_DELETE_IDS = 100_000
 
 
 def delete_from_index(spark: SparkSession, vec_ids, path: str) -> None:
@@ -462,11 +455,12 @@ def delete_from_index(spark: SparkSession, vec_ids, path: str) -> None:
     bm25-store case: no caps, filtering IS rebuilding); a list whose
     only members were victims is correctly emptied (directory
     cleared). Crash-safe via the store-family durable
-    ``_delete_intent`` (``resume_pending_delete`` finishes any
-    interrupted state) PLUS the ``storefs`` staged-partition protocol:
-    the kept rows of the touched lists have no other durable source
-    (the index IS the row table — there is no narrow sibling swapped
-    last to re-derive from), so they are staged durably (committed by
+    ``_delete_intent`` (``storefs.recorded_delete``;
+    ``resume_pending_delete`` finishes any interrupted state) PLUS the
+    ``storefs`` staged-partition core (``delete_staged_rows``): the
+    kept rows of the touched lists have no other durable source (the
+    index IS the row table — there is no narrow sibling swapped last
+    to re-derive from), so they are staged durably (committed by
     rename) BEFORE any live list directory is cleared, and a crash
     anywhere between the clear and the swap resumes from the staging.
     Cost: one pushdown scan of the index for the victims' list ids
@@ -474,76 +468,20 @@ def delete_from_index(spark: SparkSession, vec_ids, path: str) -> None:
     only the touched list directories. The centroid model is NEVER
     touched — it is the index's coordinate system, not per-document
     state."""
-    import os
-
-    from trisk_spark.functions import storefs
-
-    storefs.require_rename_fs(path, "delete_from_index")
-    resume_pending_delete(spark, path)
-    ids = sorted({int(i) for i in vec_ids})
-    if len(ids) > MAX_DELETE_IDS:
-        raise ValueError(
-            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
-        )
-    if not ids:
-        return
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    tmp = ipath + "_tmp"
-    local_rows(spark, [(i,) for i in ids], "vec_id bigint").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(tmp, ipath)
-    _run_recorded_delete(spark, ids, path)
+    storefs.recorded_delete(
+        spark, path, vec_ids, "delete_from_index", "vec_id",
+        _run_recorded_delete,
+    )
 
 
 def resume_pending_delete(spark: SparkSession, path: str) -> bool:
     """Finish a takedown a crash interrupted (idempotent at every
-    crash point — the ``dedup_store`` contract). Returns True if there
+    crash point — the store-family contract). Returns True if there
     was one to finish."""
-    import os
-
-    from trisk_spark.functions import storefs
-
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    if not os.path.exists(ipath):
-        return False
-    ids = sorted(int(r.vec_id) for r in spark.read.parquet(ipath).collect())
-    _run_recorded_delete(spark, ids, path)
-    return True
+    return storefs.resume_recorded_delete(
+        spark, path, "vec_id", _run_recorded_delete
+    )
 
 
 def _run_recorded_delete(spark: SparkSession, ids: list, path: str) -> None:
-    """Re-runnable from the durable ``_delete_intent`` at every crash
-    point: kept rows of the touched lists are staged durably (the
-    ``storefs`` staged-partition protocol, committed by rename) BEFORE
-    any live ``list_id=`` directory is cleared, and the swap is driven
-    purely by staged-directory presence — so a crash mid-clear or
-    mid-swap replays from the staging, never from driver memory (the
-    r14 hole: a localCheckpoint'ed kept frame vanished on crash after
-    the live directories were already gone)."""
-    import shutil
-
-    from trisk_spark.functions import storefs
-
-    base = storefs.strip_file_scheme(path)
-    storefs.complete_staged_partition_swap(path, "index", "list_id")
-    index = spark.read.parquet(f"{path}/index")
-    lists = sorted(
-        int(r["list_id"])
-        for r in index.where(F.col("vec_id").isin(ids))
-        .select("list_id")
-        .distinct()
-        .collect()
-    )
-    if lists:
-        kept = index.where(F.col("list_id").isin(lists)).where(
-            ~F.col("vec_id").isin(ids)
-        )
-        storefs.stage_partition_delete(
-            spark, path, "index", "list_id", lists, kept
-        )
-        storefs.complete_staged_partition_swap(path, "index", "list_id")
-    shutil.rmtree(f"{base}/_delete_intent", ignore_errors=True)
+    storefs.delete_staged_rows(spark, path, ids, "index", "list_id", "vec_id")

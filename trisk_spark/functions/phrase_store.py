@@ -73,7 +73,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
-from trisk_spark.catalog import ckpt_eager, local_rows, table
+from trisk_spark.catalog import local_rows, table
 from trisk_spark.functions import storefs
 from trisk_spark.functions.bm25_store import (
     N_BM25_BUCKETS,
@@ -106,10 +106,6 @@ MAX_PHRASE_PROBE_POSTINGS = 2_000_000
 #: deterministic corpus split for the self-contained library row —
 #: the store-family shared split (dedup/semantic/bm25 use the same)
 PHRASE_ARRIVING_MOD = 5
-
-#: fail-loud ceiling on a single takedown batch (the store-family
-#: MAX_DELETE_IDS contract)
-MAX_DELETE_IDS = 100_000
 
 
 def _wave_postings(docs: DataFrame) -> DataFrame:
@@ -216,7 +212,7 @@ def probe_phrase_store(
     # materializes the pruned hits once (the bm25_store probe rule, r17)
     hits = hits.where(F.col("term").isin(terms)).select(
         "term", "doc_id", "positions"
-    ).localCheckpoint(eager=ckpt_eager())
+    ).localCheckpoint(eager=False)
     n_hits = hits.count()
     if n_hits > max_postings:
         raise ValueError(
@@ -427,36 +423,20 @@ def delete_from_phrase_store(
     future phrase probe can retrieve them. Positions are uncapped
     per-doc facts (the bm25-postings class), so delete ≡ rebuild-
     without-victims is a plain filter per touched bucket — staged
-    DURABLY via the ``storefs`` staged-partition protocol before any
-    live bucket directory is cleared (kept rows have no other durable
-    source), with loner buckets correctly emptied (directory cleared
-    through the empty-marker mechanism). Every crash window resumes to
-    completion from the durable ``_delete_intent``
-    (``resume_pending_delete``). Cost: one pushdown scan of the
-    victims' postings for routing + a rewrite of only the touched
-    bucket directories — exactly ``bm25_store._run_recorded_delete``'s
-    shape minus the doclens/stats tail (this store has neither)."""
-    import os
-
-    storefs.require_rename_fs(path, "delete_from_phrase_store")
-    repair_phrase_store(path)
-    resume_pending_delete(spark, path)
-    ids = sorted({int(i) for i in doc_ids})
-    if len(ids) > MAX_DELETE_IDS:
-        raise ValueError(
-            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
-        )
-    if not ids:
-        return
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    tmp = ipath + "_tmp"
-    local_rows(spark, [(i,) for i in ids], "doc_id bigint").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(tmp, ipath)
-    _run_recorded_delete(spark, ids, path)
+    DURABLY via the ``storefs`` staged-partition core
+    (``storefs.delete_staged_rows``) before any live bucket directory
+    is cleared (kept rows have no other durable source), with loner
+    buckets correctly emptied (directory cleared through the
+    empty-marker mechanism). Every crash window resumes to completion
+    from the durable ``_delete_intent`` (``resume_pending_delete``;
+    the frame is ``storefs.recorded_delete``). Cost: one pushdown scan
+    of the victims' postings for routing + a rewrite of only the
+    touched bucket directories — ``bm25_store``'s deletion minus the
+    doclens/stats tail (this store has neither)."""
+    storefs.recorded_delete(
+        spark, path, doc_ids, "delete_from_phrase_store", "doc_id",
+        _run_recorded_delete, ("postings",),
+    )
 
 
 def resume_pending_delete(spark: SparkSession, path: str) -> bool:
@@ -465,49 +445,15 @@ def resume_pending_delete(spark: SparkSession, path: str) -> bool:
     postings table first, then re-runs the recorded delete, whose own
     first step consumes any committed staging. Returns True if there
     was one to finish."""
-    import os
-
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    if not os.path.exists(ipath):
-        return False
-    repair_phrase_store(path)
-    ids = sorted(int(r.doc_id) for r in spark.read.parquet(ipath).collect())
-    _run_recorded_delete(spark, ids, path)
-    return True
+    return storefs.resume_recorded_delete(
+        spark, path, "doc_id", _run_recorded_delete, ("postings",)
+    )
 
 
 def _run_recorded_delete(spark: SparkSession, ids: list, path: str) -> None:
-    """The recorded-delete state machine, re-runnable from the durable
-    ``_delete_intent`` at every crash point — the bm25 postings
-    protocol verbatim: finish any committed staging first (after which
-    the live table holds no half-cleared buckets), route the victims'
-    touched buckets from the live table, stage the kept rows durably,
-    swap, drop the intent."""
-    import shutil
-
-    base = storefs.strip_file_scheme(path)
-    storefs.complete_staged_partition_swap(path, "postings", "bucket")
-    postings = spark.read.parquet(f"{path}/postings")
-    buckets = sorted(
-        int(r["bucket"])
-        for r in postings.where(F.col("doc_id").isin(ids))
-        .select("bucket")
-        .distinct()
-        .collect()
+    storefs.delete_staged_rows(
+        spark, path, ids, "postings", "bucket", "doc_id", _write_tasks(spark)
     )
-    if buckets:
-        kept = (
-            postings.where(F.col("bucket").isin(buckets))
-            .where(~F.col("doc_id").isin(ids))
-            .select("term", "doc_id", "positions", "bucket")
-        )
-        storefs.stage_partition_delete(
-            spark, path, "postings", "bucket", buckets, kept,
-            write_tasks=_write_tasks(spark),
-        )
-        storefs.complete_staged_partition_swap(path, "postings", "bucket")
-    shutil.rmtree(f"{base}/_delete_intent", ignore_errors=True)
 
 
 # ------------------------------------------- self-contained library --

@@ -42,12 +42,10 @@ the published formulas cited above.
 
 from __future__ import annotations
 
-import atexit
-import threading
-
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from trisk_spark.catalog import local_rows, spread_narrow_scan, table
+from trisk_spark.functions import storefs
 from trisk_spark.registry import register
 from trisk_spark.functions.similarity import (
     N_PROBES,
@@ -316,23 +314,9 @@ hybrid_retrieval = register("hybrid_retrieval", oracle=HYBRID_RETRIEVAL_SQL)(
 # ------------------- hybrid probe over the persisted stores ----------
 
 # Session-memoized scratch pair of indexes over the FULL corpus — the
-# dedup_incremental cache pattern (build once per (session, corpus);
-# repeat calls probe the artifacts: the store economics).
-_HYB_STORE_CACHE: dict[tuple[int, str], tuple[SparkSession, str]] = {}
-_HYB_STORE_LOCK = threading.Lock()
-
-
-def _cleanup_hyb_stores() -> None:
-    import shutil
-
-    with _HYB_STORE_LOCK:
-        paths = [p for (_s, p) in _HYB_STORE_CACHE.values()]
-        _HYB_STORE_CACHE.clear()
-    for p in paths:
-        shutil.rmtree(p, ignore_errors=True)
-
-
-atexit.register(_cleanup_hyb_stores)
+# shared ``storefs.ScratchStoreCache`` (build once per (session,
+# corpus); repeat calls probe the artifacts: the store economics).
+_HYB_STORES = storefs.ScratchStoreCache("trisk_hyb_store_")
 
 
 def corpus_stores_path(spark: SparkSession, sf_dir: str) -> str:
@@ -340,35 +324,16 @@ def corpus_stores_path(spark: SparkSession, sf_dir: str) -> str:
     over the corpus: ``<path>/bm25`` (the inverted-postings store) and
     ``<path>/ivf`` (the int8 IVF index) — both over the FULL corpus,
     built once per (session, corpus)."""
-    import shutil
-    import tempfile
-
-    from trisk_spark.catalog import spread_narrow_scan, table
     from trisk_spark.functions import bm25_store, ivf_store
-    from trisk_spark.functions.sampling import _bpe_session_stopped
 
-    stale = []
-    with _HYB_STORE_LOCK:
-        for k, (sess, p) in list(_HYB_STORE_CACHE.items()):
-            if _bpe_session_stopped(sess):
-                _HYB_STORE_CACHE.pop(k)
-                stale.append(p)
-        hit = _HYB_STORE_CACHE.get((id(spark), sf_dir))
-    for p in stale:
-        shutil.rmtree(p, ignore_errors=True)
-    if hit is not None:
-        return hit[1]
-    path = tempfile.mkdtemp(prefix="trisk_hyb_store_")
-    docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
-    bm25_store.write_bm25_store(spark, docs.select("doc_id", "text"), f"{path}/bm25")
-    ivf_store.write_index(spark, sf_dir, f"{path}/ivf")
-    with _HYB_STORE_LOCK:
-        _sess, path_won = _HYB_STORE_CACHE.setdefault(
-            (id(spark), sf_dir), (spark, path)
+    def build(path: str) -> None:
+        docs = table(spark, sf_dir, "documents").where(F.col("doc_id").isNotNull())
+        bm25_store.write_bm25_store(
+            spark, docs.select("doc_id", "text"), f"{path}/bm25"
         )
-    if path_won != path:
-        shutil.rmtree(path, ignore_errors=True)
-    return path_won
+        ivf_store.write_index(spark, sf_dir, f"{path}/ivf")
+
+    return _HYB_STORES.get_or_build(spark, sf_dir, build)
 
 
 def hybrid_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:

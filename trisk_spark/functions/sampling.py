@@ -22,7 +22,7 @@ import threading
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
-from trisk_spark.catalog import ckpt_eager, local_rows, table
+from trisk_spark.catalog import local_rows, table
 from trisk_spark.functions import storefs
 from trisk_spark.functions.text import quality_expr, quality_sql
 from trisk_spark.registry import register
@@ -1076,7 +1076,7 @@ def _epoch_plan(m2: DataFrame, materialize: bool = True) -> DataFrame:
     the SRP-pair + label-propagation + k-means chain. ``materialize=
     False`` only to expose the full lineage to plan tests."""
     if materialize:
-        m2 = m2.localCheckpoint(eager=ckpt_eager())
+        m2 = m2.localCheckpoint(eager=False)
     s = (
         m2.where(F.col("split") == "train")
         .groupBy("source")
@@ -2054,7 +2054,7 @@ def _dsir_buckets(spark: SparkSession, sf_dir: str, materialize: bool = True):
     from trisk_spark.functions.text import LM_REF_MOD, _lm_bigrams
 
     B = DSIR_BUCKETS
-    from trisk_spark.catalog import ckpt_eager, spread_narrow_scan
+    from trisk_spark.catalog import spread_narrow_scan
 
     bi = _lm_bigrams(spread_narrow_scan(_docs(spark, sf_dir)))
     bk = bi.select(
@@ -2071,7 +2071,7 @@ def _dsir_buckets(spark: SparkSession, sf_dir: str, materialize: bool = True):
         F.count("*").cast("bigint").alias("c")
     )
     if materialize:
-        g = g.localCheckpoint(eager=ckpt_eager())
+        g = g.localCheckpoint(eager=False)
     m = g.groupBy("b").agg(
         F.sum(F.when(F.col("is_target"), F.col("c")).otherwise(0))
         .cast("bigint")

@@ -1,71 +1,31 @@
 """Persisted SRP-LSH semantic store: the write-once/incremental-probe
 half of the SEMANTIC near-dup story — the embedding-space mirror of
-``dedup_store`` (which persists the MinHash text index). The batch
-clusterer is ``dedup_semantic``; the ingest-time gate is
-``semantic_flag_stream``, which documents its corpus index as "at
-100 TB a bucketed table, here a persisted frame" — THIS is that
-bucketed table, closing the semantic half of the ingest lifecycle the
-same way r12's dedup store closed the MinHash half.
+``dedup_store``. The batch clusterer is ``dedup_semantic``; the
+ingest-time gate is ``semantic_flag_stream``, which documents its
+corpus index as "at 100 TB a bucketed table, here a persisted frame" —
+THIS is that bucketed table.
 
-The 100 TB deployment pattern: the corpus's SRP band index and
-scaled-vector table are WRITTEN ONCE (``write_semantic_store``), and
-every ingest wave is checked for semantic near-duplicates against the
-existing corpus by reading ONLY the band buckets the arriving
-embeddings route to (``probe_semantic_store``):
-
-  * ``<path>/bands``: (vec_id, bv) parquet partitioned by (band_idx,
-    bucket) where bucket = md5(bv) mod N_SEM_STORE_BUCKETS — the
-    partition column is a refinement of band-value equality (equal bv
-    ⇒ equal bucket), so pruning never changes semantics, only bytes
-    read. Bucket membership is HARD-CAPPED at the batch kernel's
-    VEC_BUCKET_CAP (smallest vec_ids, the ``cosine_lsh_pairs`` rule)
-    AT WRITE TIME, so a degenerate sign-pattern corpus can never fan
-    a probe out quadratically — the cap is baked into the artifact.
-  * ``<path>/vectors``: the full (vec_id, vec, norm) scaled-integer
-    table — the verification asset: band collision only nominates;
-    the probe VERIFIES every candidate pair with the exact integer
-    dot + cosine test (the ``semantic_flag_stream`` in-row verify)
-    before flagging.
-
-Arriving embeddings scale, norm and band ENTIRELY IN-ROW (the shared
-``srp_band_val`` sign bits — zero shuffle, streaming-legal); the
-probe's only distributed work beyond that is the pruned band read,
-one broadcast equi-join against the (bounded) arriving band rows, and
-a candidate-sized vector join. The routing decision crosses the
-driver as ≤ COS_NB_BANDS × N_SEM_STORE_BUCKETS (band_idx, bucket)
-pairs — a fixed-size routing collect no matter how large the batch or
-corpus, with the probe-size ceiling folded into the same single job
-(the ``dedup_store``/``ivf_store`` routed-buckets class).
-
-DURABILITY MODEL: identical to ``dedup_store`` — the shared
-``storefs`` machinery (fail-loud rename-FS gate, atomic ingest
-watermark, crash-safe compaction swap with repair-on-entry); crash
-windows are detectable (``semantic_store_stats``'s
-``n_unvectored_band_ids``) and the append's band re-cap deduplicates,
-so re-running a wave's append is idempotent for bands.
+This module is the SRP binding of the shared band-store engine
+(``band_store.BandStore`` — layout, lifecycle verbs and durability
+model are documented there): the row table is ``vectors`` (vec_id,
+scaled-int vec, exact integer norm), the band value is ``bv`` (the
+shared ``srp_band_val`` sign bits — arriving embeddings scale, norm and
+band IN-ROW, zero shuffle), bucket membership is capped at the batch
+kernel's VEC_BUCKET_CAP, and a candidate pair verifies by the exact
+integer dot + cosine test (bit-identical on both engines, the
+``_gemm_block_pairs`` exactness argument): cosine ≥ NEAR_DUP_COS,
+applied to the UNROUNDED cosine, flags ``is_dup``.
 
 Reference: the reference has no semantic store (beyond-reference
-mandate, SURVEY.md §7 step 7); the layout is the repo's own
-``dedup_store`` partitioned-parquet pattern applied to the shared SRP
-kernels (``similarity.srp_band_val`` / ``_srp_bands`` / ``_dot``).
+mandate, SURVEY.md §7 step 7).
 """
 
 from __future__ import annotations
 
-from functools import reduce
-from operator import or_
+from pyspark.sql import DataFrame, SparkSession, functions as F
 
-from pyspark.sql import DataFrame, SparkSession, Window, functions as F
-from pyspark.sql.types import (
-    BooleanType,
-    DoubleType,
-    LongType,
-    StructField,
-    StructType,
-)
-
-from trisk_spark.catalog import ckpt_eager, local_rows, table
 from trisk_spark.functions import storefs
+from trisk_spark.functions.band_store import BandStore
 from trisk_spark.registry import register
 from trisk_spark.functions.similarity import (
     _COS_BAND_SQL,
@@ -80,68 +40,21 @@ from trisk_spark.functions.similarity import (
     _srp_bands,
     _valid_embeddings,
 )
-#: Directory fan-out per band: 8 bands x 16 buckets = 128 partition
-#: directories. bv is only COS_BAND_DIMS sign bits (≤256 values), so
-#: 16 buckets already give the probe sub-band pruning; more would
-#: multiply directory count without adding selectivity on a skewed
-#: sign distribution (a hot bv is a hot bucket under ANY hash — the
-#: write-time VEC_BUCKET_CAP is the real degenerate-corpus guard).
-#: (LEGACY read-side default — new stores persist a corpus-derived fan
-#: at write time, ``storefs.derived_fan`` with the same [4, 65536]
-#: clamp, in ``_n_buckets`` beside the store; see dedup_store.)
-N_SEM_STORE_BUCKETS = 16
 
-#: Probe-size ceiling: the arriving side of the band join BROADCASTS,
-#: so a wave is bounded the same way dedup_store bounds its waves.
-MAX_SEM_PROBE_ROWS = 100_000
+#: LEGACY directory fan-out per band — the read-side default for stores
+#: written before fans were derived (new stores persist a
+#: corpus-derived fan in ``_n_buckets``). bv is only COS_BAND_DIMS sign
+#: bits, and a hot bv is a hot bucket under ANY hash — the write-time
+#: VEC_BUCKET_CAP is the real degenerate-corpus guard.
+N_SEM_STORE_BUCKETS = 16
 
 #: The deterministic existing/arriving split for the self-contained
 #: oracle row (``semantic_incremental``): vec_id % 5 == 0 arrives.
 SEM_ARRIVING_MOD = 5
 
-_PROBE_SCHEMA = StructType(
-    [
-        StructField("vec_id", LongType()),
-        StructField("dup_of", LongType()),
-        StructField("cosine_sim", DoubleType()),
-        StructField("is_dup", BooleanType()),
-    ]
-)
-
-
-def _vbucket(col=None, n_buckets: int = N_SEM_STORE_BUCKETS):
-    """Partition bucket of a band value: md5(bv) reduced to the store's
-    bucket fan. Purely a refinement of bv equality — semantics never
-    see it, only the directory pruner — so the oracle SQL needs no
-    mirror (the ``dedup_store._bucket`` rule). ``n_buckets`` is the
-    store's recorded fan; the default serves legacy stores."""
-    c = F.col("bv") if col is None else col
-    return (
-        F.pmod(
-            F.conv(
-                F.substring(F.md5(c.cast("string")), 1, 15), 16, 10
-            ).cast("bigint"),
-            F.lit(n_buckets),
-        )
-        .cast("int")
-        .alias("bucket")
-    )
-
-
-def _store_fan(path: str) -> int:
-    """The store's persisted bucket fan, falling back to the legacy
-    constant for stores written before fans were derived."""
-    return storefs.read_store_fan(path, N_SEM_STORE_BUCKETS)
-
-
-def _write_tasks(
-    spark: SparkSession, n_buckets: int = N_SEM_STORE_BUCKETS
-) -> int:
-    """Writer parallelism for the (band_idx, bucket)-partitioned band
-    table — the ``dedup_store._write_tasks`` rule: the session's
-    shuffle parallelism, capped at one task per partition directory."""
-    conf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    return max(1, min(conf, COS_NB_BANDS * n_buckets))
+#: deterministic victim slice for the self-contained takedown row
+#: (the ``dedup_store.TAKEDOWN_VICTIM_MOD`` contract)
+TAKEDOWN_VICTIM_MOD = 17
 
 
 def _normed(emb: DataFrame) -> DataFrame:
@@ -156,409 +69,78 @@ def _normed(emb: DataFrame) -> DataFrame:
     )
 
 
-def write_semantic_store(spark: SparkSession, emb: DataFrame, path: str) -> None:
-    """Persist the semantic store for a (vec_id, embedding) corpus
-    frame: ``<path>/vectors`` (scaled-int vectors + exact integer
-    norms, the verify asset) and ``<path>/bands`` (bucket-capped SRP
-    band rows, partitioned by (band_idx, bucket) — the probe-prunable
-    nomination asset).
-
-    The scale/norm pass runs ONCE: vectors are written first and the
-    bands derive from the written parquet (the store write IS the
-    barrier — no cache, no second scan of the raw embeddings). The
-    write-time VEC_BUCKET_CAP (≤ CAP smallest vec_ids per (band_idx,
-    bv), the exact ``cosine_lsh_pairs``/oracle rule) bounds every
-    future probe's per-band fan-out forever."""
-    vecs = _normed(emb)
-    vecs.write.mode("overwrite").parquet(f"{path}/vectors")
-    stored = spark.read.parquet(f"{path}/vectors")
-    # Derive the bucket fan from the corpus size (parquet-metadata
-    # count — no data scan) and persist it beside the store BEFORE any
-    # bucketed bytes exist (the write_dedup_store rule).
-    fan = storefs.derived_fan(stored.count())
-    storefs.write_store_fan(path, fan)
-    w = Window.partitionBy("band_idx", "bv").orderBy("vec_id")
-    bands = (
-        _srp_bands(stored.select("vec_id", "vec"))
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= VEC_BUCKET_CAP)
-        .select(
-            "vec_id", "bv", F.col("band_idx").cast("int"),
-            _vbucket(n_buckets=fan),
-        )
-    )
-    # one writer task per partition directory (the dedup_store layout
-    # rule — explicit count so AQE can't serialize the write)
-    bands.repartition(
-        _write_tasks(spark, fan), "band_idx", "bucket"
-    ).write.mode("overwrite").partitionBy("band_idx", "bucket").parquet(
-        f"{path}/bands"
-    )
+def _bands(rows: DataFrame) -> DataFrame:
+    return _srp_bands(rows.select("vec_id", "vec"))
 
 
-def _routed_buckets_checked(
-    bands_new: DataFrame, max_probe_rows: int
-) -> list[tuple[int, int]]:
-    """ONE job over the arriving band rows: the routed (band_idx,
-    bucket) pairs AND the probe-size guard (the ``dedup_store``
-    routed-buckets fold). The collected set is ≤ COS_NB_BANDS ×
-    N_SEM_STORE_BUCKETS pairs regardless of batch or corpus size."""
-    row = bands_new.agg(
-        F.count("*").alias("n_rows"),
-        F.collect_set(F.struct("band_idx", "bucket")).alias("routes"),
-    ).collect()[0]
-    if row["n_rows"] > max_probe_rows * COS_NB_BANDS:
-        raise ValueError(
-            f"semantic probe batch exceeds {max_probe_rows} rows "
-            f"({row['n_rows']} band rows > {max_probe_rows} vectors x "
-            f"{COS_NB_BANDS} bands) — refusing to broadcast it; split "
-            "the probe stream or raise max_probe_rows"
-        )
-    return sorted((r["band_idx"], r["bucket"]) for r in (row["routes"] or []))
-
-
-def probe_semantic_store(
-    spark: SparkSession,
-    new_emb: DataFrame,
-    path: str,
-    max_probe_rows: int = MAX_SEM_PROBE_ROWS,
-    pre_normed: DataFrame | None = None,
-) -> DataFrame:
-    """Check an ARRIVING (vec_id, embedding) wave against the
-    persisted corpus store: per arriving vector with at least one band
-    collision, its BEST verified match — (vec_id, dup_of, cosine_sim,
-    is_dup) where dup_of is the highest-cosine existing vector (ties
-    to the smallest vec_id, the house struct argmax) and is_dup flags
-    cosine ≥ NEAR_DUP_COS (the batch kernel's threshold, applied to
-    the UNROUNDED cosine exactly like ``cosine_near_dup_lsh``).
-    Within-wave pairs are NOT generated — the contract is dedup
-    against the EXISTING corpus (the ``probe_dedup_store`` contract).
-
-    Plan: arriving vectors scale/norm/band IN-ROW (zero shuffle,
-    streaming safe; localCheckpoint materializes the wave once for
-    its three consumers — routing collect, band broadcast, verify
-    broadcast) → one fixed-size routing collect (guard folded in) →
-    the bands read PRUNED to the routed (band_idx, bucket)
-    directories (with the tautology skip when a wave routes
-    everywhere) → one equi-join on (band_idx, bucket, bv) with the
-    bounded arriving side explicitly BROADCAST → id-distinct
-    candidate pairs → verify: the corpus vector table joins the
-    candidate ids (AQE decides — candidates can be CAP-fanned, so no
-    forced broadcast) and the bounded arriving vectors broadcast;
-    cosine = exact integer dot over IEEE doubles (bit-identical on
-    both engines, the ``_gemm_block_pairs`` exactness argument) → one
-    struct-MAX argmax per arriving vector. Nothing corpus-sized moves
-    except the pruned bucket read."""
-    fan = _store_fan(path)
-    # LAZY: the routing collect right after is the wave's first
-    # action and materializes the normed wave for every consumer (r17).
-    # ``pre_normed`` (r18, the admission overlap): a caller that
-    # already holds the wave in ``_normed`` layout — e.g. the
-    # admission funnel, which norms the pre-text-probe superset
-    # CONCURRENTLY with the text probe and filters it to the
-    # survivors — skips the norm pass; the layout contract is exactly
-    # ``_normed``'s (vec_id, vec scaled-int, norm > 0).
-    if pre_normed is not None:
-        arr = pre_normed.localCheckpoint(eager=ckpt_eager())
-    else:
-        arr = _normed(new_emb).localCheckpoint(eager=ckpt_eager())
-    bands_new = _srp_bands(arr.select("vec_id", "vec")).select(
-        F.col("vec_id").alias("new_id"),
-        F.col("band_idx").cast("int").alias("band_idx"),
-        "bv",
-        _vbucket(n_buckets=fan),
-    )
-    routes = _routed_buckets_checked(bands_new, max_probe_rows)
-    if not routes:
-        return spark.createDataFrame([], _PROBE_SCHEMA)
-    store_bands = spark.read.parquet(f"{path}/bands")
-    # tautology skip (the dedup_store rule): a wave touching every
-    # (band_idx, bucket) makes the disjunction pure planner cost
-    if len(routes) < COS_NB_BANDS * fan:
-        pred = reduce(
-            or_,
-            [
-                (F.col("band_idx") == b) & (F.col("bucket") == k)
-                for b, k in routes
-            ],
-        )
-        store_bands = store_bands.where(pred)
-    pairs = (
-        store_bands.join(F.broadcast(bands_new), ["band_idx", "bucket", "bv"])
-        .where(F.col("vec_id") != F.col("new_id"))
-        .select("new_id", F.col("vec_id").alias("ref_id"))
-        .distinct()
-    )
-    ref = spark.read.parquet(f"{path}/vectors").select(
-        F.col("vec_id").alias("ref_id"),
+def _cosine(stored: DataFrame, wave: DataFrame):
+    """Verify score: exact integer dot over IEEE doubles / norms."""
+    ref = stored.select(
+        F.col("vec_id").alias("dup_of"),
         F.col("vec").alias("ref_vec"),
         F.col("norm").alias("ref_norm"),
     )
-    arrv = arr.select(
-        F.col("vec_id").alias("new_id"), "vec", "norm"
-    )
+    new = wave.select(F.col("vec_id").alias("new_id"), "vec", "norm")
     cos = _dot("vec", "ref_vec").cast("double") / (
         F.sqrt(F.col("norm").cast("double"))
         * F.sqrt(F.col("ref_norm").cast("double"))
     )
-    scored = (
-        pairs.join(ref, "ref_id")
-        .join(F.broadcast(arrv), "new_id")
-        .select("new_id", "ref_id", cos.alias("cos"))
-    )
-    # struct max = (cos DESC, ref_id ASC): lexicographic max picks the
-    # strongest match, then the LARGEST -ref_id = smallest id on ties
-    # (the probe_dedup_store argmax — partial-aggregatable)
-    best = scored.groupBy("new_id").agg(
-        F.max(
-            F.struct(F.col("cos"), (-F.col("ref_id")).alias("nid"))
-        ).alias("b")
-    )
-    return best.select(
-        F.col("new_id").alias("vec_id"),
-        (-F.col("b.nid")).alias("dup_of"),
+    return ref, new, cos
+
+
+def _report():
+    return [
         F.round(F.col("b.cos"), 6).alias("cosine_sim"),
         (F.col("b.cos") >= NEAR_DUP_COS).alias("is_dup"),
-    )
+    ]
 
 
-def append_semantic_store(
-    spark: SparkSession, new_emb: DataFrame, path: str
-) -> None:
-    """ADMIT an arriving wave into the persisted store — the write
-    half of the semantic ingest loop: rewrite ONLY the band buckets
-    the wave touches with the bucket cap re-applied over old ∪ new
-    members, then append the wave's vectors.
+SEMANTIC = BandStore(
+    label="semantic",
+    id_col="vec_id",
+    rows_table="vectors",
+    band_col="bv",
+    n_bands=COS_NB_BANDS,
+    cap=VEC_BUCKET_CAP,
+    legacy_fan=N_SEM_STORE_BUCKETS,
+    rows=_normed,
+    bands=_bands,
+    verify=_cosine,
+    score_col="cos",
+    report=_report,
+    probe_schema=(
+        "vec_id bigint, dup_of bigint, cosine_sim double, is_dup boolean"
+    ),
+    stats_names=("n_vecs", "n_dup_vector_ids", "n_unvectored_band_ids"),
+    stats_order=(
+        "n_vecs", "n_dup_vector_ids", "n_band_rows", "n_buckets",
+        "min_bucket", "max_bucket", "avg_bucket", "saturated_buckets",
+        "n_unvectored_band_ids",
+    ),
+    avg_digits=2,
+    table="embeddings",
+    arriving_mod=SEM_ARRIVING_MOD,
+    victim_mod=TAKEDOWN_VICTIM_MOD,
+    cache_prefixes=("trisk_sem_store_", "trisk_sem_takedown_store_"),
+)
 
-    Equality contract (pytest-pinned): append(existing store, wave) ≡
-    ``write_semantic_store`` over existing ∪ wave, table-for-table —
-    the cap rule (VEC_BUCKET_CAP smallest vec_ids per (band_idx, bv))
-    is order-free. Caller contract: the wave's vec_ids are disjoint
-    from the store's (admit each vector once — the probe step's job).
-
-    Crash ordering (the ``append_dedup_store`` rule): BANDS ARE
-    WRITTEN FIRST, vectors second. A failure between the two writes
-    leaves band rows whose vec_ids have no vector row — an
-    ALWAYS-detectable state (``semantic_store_stats``'s
-    ``n_unvectored_band_ids`` > 0). Repair: re-run the wave's append —
-    the band re-cap deduplicates on (band_idx, bv, vec_id), so the
-    repair is idempotent for bands and the vector append then lands
-    once (under the ingest watermark's replay guard)."""
-    fan = _store_fan(path)
-    # LAZY: the routing collect right after is the wave's first
-    # action and materializes the normed wave for every consumer (r17)
-    arr = _normed(new_emb).localCheckpoint(eager=ckpt_eager())
-    bands_new = _srp_bands(arr.select("vec_id", "vec")).select(
-        "vec_id", "bv", F.col("band_idx").cast("int").alias("band_idx"),
-        _vbucket(n_buckets=fan),
-    )
-    routes = sorted(
-        (r["band_idx"], r["bucket"])
-        for r in bands_new.select("band_idx", "bucket").distinct().collect()
-    )
-    if not routes:
-        # empty wave (no valid nonzero-norm vectors): nothing to write
-        return
-    old = spark.read.parquet(f"{path}/bands")
-    if len(routes) < COS_NB_BANDS * fan:
-        pred = reduce(
-            or_,
-            [
-                (F.col("band_idx") == b) & (F.col("bucket") == k)
-                for b, k in routes
-            ],
-        )
-        old = old.where(pred)
-    w = Window.partitionBy("band_idx", "bv").orderBy("vec_id")
-    merged = (
-        old.select("vec_id", "bv", "band_idx", "bucket")
-        .unionByName(bands_new)
-        .dropDuplicates(["band_idx", "bv", "vec_id"])
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= VEC_BUCKET_CAP)
-        .select("vec_id", "bv", "band_idx", "bucket")
-        .repartition(_write_tasks(spark, fan), "band_idx", "bucket")
-        # the rewrite READS the path it overwrites: materialize the
-        # merged buckets BEFORE the write (the append_dedup_store rule)
-        .localCheckpoint()
-    )
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, "static")
-    spark.conf.set(key, "dynamic")
-    try:
-        merged.write.mode("overwrite").partitionBy("band_idx", "bucket").parquet(
-            f"{path}/bands"
-        )
-    finally:
-        spark.conf.set(key, prev)
-    arr.write.mode("append").parquet(f"{path}/vectors")
-
-
-def semantic_ingest_wave(
-    spark: SparkSession,
-    new_emb: DataFrame,
-    path: str,
-    max_probe_rows: int = MAX_SEM_PROBE_ROWS,
-) -> DataFrame:
-    """The full semantic ingest loop in one call — the
-    ``dedup_store.ingest_wave`` image: PROBE the wave against the
-    store, ADMIT every vector not flagged ``is_dup`` (append its
-    vector + band rows so the NEXT wave dedups against it), and
-    return the probe report (materialized BEFORE the append — the
-    report describes the store the wave was judged against). Arriving
-    vectors with NO probe row (no band collision at all) are
-    semantically novel by construction and are admitted. Within-wave
-    near-dups are admitted together this wave and collide from the
-    next wave on — the documented batch-boundary semantics."""
-    report = probe_semantic_store(
-        spark, new_emb, path, max_probe_rows
-    ).localCheckpoint()
-    flagged = report.where(F.col("is_dup")).select("vec_id")
-    admitted = new_emb.where(F.col("vec_id").isNotNull()).join(
-        F.broadcast(flagged), "vec_id", "left_anti"
-    )
-    append_semantic_store(spark, admitted, path)
-    return report
-
-
-def semantic_ingest_stream(
-    spark: SparkSession, emb_stream: DataFrame, path: str, sink
-):
-    """The CONTINUOUS semantic admission pipeline —
-    ``semantic_ingest_wave`` per micro-batch, with the SAME replay
-    guard as ``dedup_ingest_stream``: the last fully-admitted batch id
-    is persisted ATOMICALLY beside the store and a replayed batch with
-    ``batch_id`` ≤ the watermark is SKIPPED ENTIRELY — no probe, no
-    append, no sink call. Batch N+1 dedups against everything admitted
-    through batch N. Sink contract (the ``probe_index_stream``
-    contract): the sink must fully MATERIALIZE the result inside the
-    call. Returns the ``DataStreamWriter`` ready to ``.start()``.
-    Remaining crash window: a crash BETWEEN the append and the
-    watermark write replays one wave's vector append (bands re-cap
-    idempotently); detection = ``semantic_store_stats``'s
-    ``n_dup_vector_ids`` > 0, repair = ``repair_replayed_append``
-    (both code, forced-crash pytest-pinned)."""
-    storefs.require_rename_fs(path, "semantic_ingest_stream")
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        wm = storefs.read_ingest_watermark(path)
-        if wm is not None and batch_id <= wm:
-            return
-        batch_df = batch_df.persist()
-        try:
-            report = semantic_ingest_wave(spark, batch_df, path)
-            storefs.write_ingest_watermark(path, batch_id)
-            sink(report, batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return emb_stream.writeStream.outputMode("append").foreachBatch(fb)
-
-
-def semantic_probe_stream(
-    spark: SparkSession, emb_stream: DataFrame, path: str, sink
-):
-    """Read-only streaming probe — ``probe_semantic_store`` per
-    micro-batch against a store someone else maintains (the
-    ``dedup_probe_stream`` image). Sink contract as
-    ``semantic_ingest_stream``."""
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            sink(probe_semantic_store(spark, batch_df, path), batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return emb_stream.writeStream.outputMode("append").foreachBatch(fb)
-
-
-def repair_semantic_store(path: str) -> None:
-    """``storefs.repair_store`` over this store's two tables — see
-    that docstring for the crash states and repairs."""
-    storefs.repair_store(path, ("vectors", "bands"))
-
-
-def repair_replayed_append(spark: SparkSession, path: str) -> None:
-    """Repair the ingest stream's documented watermark crash window: a
-    crash BETWEEN a wave's append and its watermark write replays the
-    wave's vector append once (bands re-cap idempotently, so only
-    vectors duplicate). Detection: ``semantic_store_stats``'s
-    ``n_dup_vector_ids`` > 0. Repair: dropDuplicates-by-vec_id rewrite
-    of ``vectors`` through the crash-safe swap protocol
-    (``storefs.repair_replayed_append``); replayed rows are
-    byte-identical per vec_id, so keeping any one is exact. Probe ≡
-    never-crashed twin pytest-pinned (test_semantic_store's
-    forced-crash replay)."""
-    storefs.repair_replayed_append(spark, path, "vectors", "vec_id")
-
-
-def compact_semantic_store(
-    spark: SparkSession, path: str, vec_files: int = 8
-) -> None:
-    """Post-ingest maintenance — the ``compact_dedup_store`` image:
-    rewrite vectors into ``vec_files`` files and bands into one file
-    per (band_idx, bucket) partition, then SWAP them in via the shared
-    crash-safe protocol (repair-on-entry, overwrite-mode tmp builds,
-    recovery-ordered per-table swap). Store CONTENT is untouched:
-    probe ≡ pre-compact pytest-pinned. Local/HDFS-rename filesystems
-    ONLY (fail-loud gate)."""
-    storefs.require_rename_fs(path, "compact_semantic_store")
-    repair_semantic_store(path)
-    vecs = spark.read.parquet(f"{path}/vectors").coalesce(max(1, vec_files))
-    vecs.write.mode("overwrite").parquet(f"{path}/vectors_compact_tmp")
-    bands = spark.read.parquet(f"{path}/bands").repartition(
-        _write_tasks(spark, _store_fan(path)), "band_idx", "bucket"
-    )
-    bands.write.mode("overwrite").partitionBy("band_idx", "bucket").parquet(
-        f"{path}/bands_compact_tmp"
-    )
-    storefs.swap_in_compacted(path, ("vectors", "bands"))
-
-
-def semantic_store_stats(spark: SparkSession, path: str) -> DataFrame:
-    """Store health table — the ``dedup_store_stats`` image: one row
-    with (n_vecs, n_band_rows, n_buckets, min_bucket, max_bucket,
-    avg_bucket, saturated_buckets, n_unvectored_band_ids,
-    n_dup_vector_ids) where a saturated bucket sits AT the write-time
-    cap. ``n_unvectored_band_ids`` counts distinct band vec_ids with
-    NO vector row — 0 in every consistent store; > 0 is the signature
-    of an append that crashed between its band rewrite and its vector
-    write. ``n_dup_vector_ids`` counts vector rows beyond the first
-    per vec_id — 0 in every consistent store; > 0 is the signature of
-    a wave's append REPLAYED past a missed watermark write
-    (``semantic_ingest_stream``'s documented crash window; repair =
-    ``repair_replayed_append``). One partial-agg pass over the band
-    rows plus a distinct-ids anti-join against the vector ids —
-    id-column reads only, both sides column-pruned."""
-    vecs = spark.read.parquet(f"{path}/vectors")
-    n_vecs = vecs.agg(
-        F.count("*").cast("bigint").alias("n_vecs"),
-        (F.count("*") - F.count_distinct(F.col("vec_id")))
-        .cast("bigint")
-        .alias("n_dup_vector_ids"),
-    )
-    band_rows = spark.read.parquet(f"{path}/bands")
-    unvectored = (
-        band_rows.select("vec_id")
-        .distinct()
-        .join(vecs.select("vec_id"), "vec_id", "left_anti")
-        .agg(F.count("*").cast("bigint").alias("n_unvectored_band_ids"))
-    )
-    per = band_rows.groupBy("band_idx", "bv").agg(F.count("*").alias("n"))
-    agg = per.agg(
-        F.sum("n").cast("bigint").alias("n_band_rows"),
-        F.count("*").cast("bigint").alias("n_buckets"),
-        F.min("n").cast("bigint").alias("min_bucket"),
-        F.max("n").cast("bigint").alias("max_bucket"),
-        F.round(F.avg("n"), 2).alias("avg_bucket"),
-        F.sum(
-            F.when(F.col("n") >= VEC_BUCKET_CAP, 1).otherwise(0)
-        ).cast("bigint").alias("saturated_buckets"),
-    )
-    return n_vecs.crossJoin(F.broadcast(agg)).crossJoin(
-        F.broadcast(unvectored)
-    )
+write_semantic_store = SEMANTIC.write
+probe_semantic_store = SEMANTIC.probe
+append_semantic_store = SEMANTIC.append
+semantic_ingest_wave = SEMANTIC.ingest_wave
+semantic_ingest_stream = SEMANTIC.ingest_stream
+semantic_probe_stream = SEMANTIC.probe_stream
+repair_semantic_store = SEMANTIC.repair
+repair_replayed_append = SEMANTIC.repair_replayed_append
+compact_semantic_store = SEMANTIC.compact
+semantic_store_stats = SEMANTIC.stats
+delete_from_semantic_store = SEMANTIC.delete
+resume_pending_delete = SEMANTIC.resume
+corpus_store_path = SEMANTIC.corpus_store_path
+takedown_store_path = SEMANTIC.takedown_store_path
+_vbucket = SEMANTIC.bucket
+_store_fan = SEMANTIC.fan
+_routed_buckets_checked = SEMANTIC._routes
 
 
 # ------------------------------------------- self-contained oracle --
@@ -632,187 +214,6 @@ FROM best WHERE rk = 1
 
 SEMANTIC_INCREMENTAL_SQL = _semantic_incremental_sql()
 
-# Session-memoized scratch stores for the self-contained library row —
-# the dedup_incremental cache pattern (build once per (session,
-# corpus); repeat calls probe the artifacts, the store economics).
-_SEM_STORES = storefs.ScratchStoreCache("trisk_sem_store_")
-
-
-@register("semantic_incremental", oracle=SEMANTIC_INCREMENTAL_SQL)
-def semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental semantic ingest dedup over the persisted SRP store,
-    self-contained for a driver gate: split the embedding corpus
-    deterministically (vec_id % {MOD} == 0 is the "arriving" wave,
-    the rest the "existing" corpus), build the store over the
-    existing slice ONCE per (session, corpus) into a scratch path
-    (the ``dedup_incremental`` memoization), and probe the arriving
-    wave against it. The oracle (``_semantic_incremental_sql``)
-    derives both sides from the embeddings table directly, so the row
-    puts write→prune→probe→verify — the whole semantic store path —
-    under independent value-hash evidence. SEATED r15 (the executed
-    R15 trade — the r13/r14 verdicts' lead candidate: the semantic
-    store-probe kernel has no registered sibling, exactly the
-    position ``dedup_incremental`` held in r12)."""
-    emb = table(spark, sf_dir, "embeddings")
-    arriving = emb.where(
-        F.pmod(F.col("vec_id"), F.lit(SEM_ARRIVING_MOD)) == 0
-    )
-    return probe_semantic_store(
-        spark, arriving, corpus_store_path(spark, sf_dir)
-    )
-
-
-def corpus_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the session-memoized scratch semantic store over the
-    embedding corpus's EXISTING slice (vec_id % MOD != 0) — built once
-    per (session, corpus), the ``dedup_store.corpus_store_path``
-    pattern. Shared by ``semantic_incremental`` and the composed
-    ``admission_report``."""
-
-    def build(path: str) -> None:
-        emb = table(spark, sf_dir, "embeddings")
-        existing = emb.where(
-            F.pmod(F.col("vec_id"), F.lit(SEM_ARRIVING_MOD)) != 0
-        )
-        write_semantic_store(spark, existing, path)
-
-    return _SEM_STORES.get_or_build(spark, sf_dir, build)
-
-
-semantic_incremental.__doc__ = semantic_incremental.__doc__.replace(
-    "{MOD}", str(SEM_ARRIVING_MOD)
-)
-
-
-# ------------------------------------------------ takedown (r14) -----
-
-#: fail-loud ceiling on a single takedown batch (the dedup store's
-#: MAX_DELETE_IDS contract)
-MAX_DELETE_IDS = 100_000
-
-
-def delete_from_semantic_store(spark: SparkSession, vec_ids, path: str) -> None:
-    """TAKEDOWN — remove vectors from the persisted semantic store so
-    no future probe can match against them; the embedding-space mirror
-    of ``dedup_store.delete_from_dedup_store`` with the identical
-    contract: delete ≡ ``write_semantic_store`` over the corpus
-    WITHOUT the victims, table-for-table, INCLUDING cap re-entrants
-    (touched (band_idx, bucket) directories are RE-DERIVED from the
-    kept vectors and re-capped, never merely filtered), loner buckets
-    correctly emptied (directory cleared), every crash window resumed
-    to completion from the durable ``_delete_intent``
-    (``resume_pending_delete``). Cost: one pushdown scan of the
-    victims' vector rows (routing), one vectors-table scan to re-band
-    the touched buckets (the narrow scaled-int table), a rewrite of
-    only the touched directories, one vectors rewrite through the
-    crash-safe swap."""
-    import os
-
-    storefs.require_rename_fs(path, "delete_from_semantic_store")
-    repair_semantic_store(path)
-    resume_pending_delete(spark, path)
-    ids = sorted({int(i) for i in vec_ids})
-    if len(ids) > MAX_DELETE_IDS:
-        raise ValueError(
-            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
-            "split it; the id set is a driver-held literal by design"
-        )
-    if not ids:
-        return
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    tmp = ipath + "_tmp"
-    local_rows(spark, [(i,) for i in ids], "vec_id bigint").write.mode(
-        "overwrite"
-    ).parquet(tmp)
-    os.rename(tmp, ipath)
-    _run_recorded_delete(spark, ids, path)
-
-
-def resume_pending_delete(spark: SparkSession, path: str) -> bool:
-    """Finish a takedown a crash interrupted (idempotent at every
-    crash point — the ``dedup_store`` contract). Self-sufficient:
-    repairs any half-swapped vectors table FIRST (a crash inside
-    ``swap_in_compacted`` leaves the live table renamed to ``_old``,
-    and a standalone resume must not fail reading it). Returns True if
-    there was one to finish."""
-    import os
-
-    base = storefs.strip_file_scheme(path)
-    ipath = f"{base}/_delete_intent"
-    if not os.path.exists(ipath):
-        return False
-    repair_semantic_store(path)
-    ids = sorted(int(r.vec_id) for r in spark.read.parquet(ipath).collect())
-    _run_recorded_delete(spark, ids, path)
-    return True
-
-
-def _run_recorded_delete(spark: SparkSession, ids: list, path: str) -> None:
-    import shutil
-
-    base = storefs.strip_file_scheme(path)
-    fan = _store_fan(path)
-    vecs = spark.read.parquet(f"{path}/vectors")
-    victims = vecs.where(F.col("vec_id").isin(ids))
-    routes = sorted(
-        (r["band_idx"], r["bucket"])
-        for r in _srp_bands(victims.select("vec_id", "vec"))
-        .select(
-            F.col("band_idx").cast("int").alias("band_idx"),
-            _vbucket(n_buckets=fan),
-        )
-        .select("band_idx", "bucket")
-        .distinct()
-        .collect()
-    )
-    if routes:
-        keep = vecs.where(~F.col("vec_id").isin(ids))
-        if len(routes) < COS_NB_BANDS * fan:
-            pred = reduce(
-                or_,
-                [
-                    (F.col("band_idx") == b) & (F.col("bucket") == k)
-                    for b, k in routes
-                ],
-            )
-        else:
-            pred = F.lit(True)
-        w = Window.partitionBy("band_idx", "bv").orderBy("vec_id")
-        rebuilt = (
-            _srp_bands(keep.select("vec_id", "vec"))
-            .select(
-                "vec_id", "bv",
-                F.col("band_idx").cast("int").alias("band_idx"),
-                _vbucket(n_buckets=fan),
-            )
-            .where(pred)
-            .withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= VEC_BUCKET_CAP)
-            .select("vec_id", "bv", "band_idx", "bucket")
-            .repartition(_write_tasks(spark, fan), "band_idx", "bucket")
-            .localCheckpoint()
-        )
-        for b, k in routes:
-            shutil.rmtree(
-                f"{base}/bands/band_idx={b}/bucket={k}", ignore_errors=True
-            )
-        rebuilt.write.mode("append").partitionBy("band_idx", "bucket").parquet(
-            f"{path}/bands"
-        )
-    if victims.limit(1).count() > 0:
-        keep_v = vecs.where(~F.col("vec_id").isin(ids))
-        keep_v.write.mode("overwrite").parquet(
-            f"{base}/vectors_compact_tmp"
-        )
-        storefs.swap_in_compacted(path, ("vectors",))
-    shutil.rmtree(f"{base}/_delete_intent", ignore_errors=True)
-
-
-#: deterministic victim slice for the self-contained takedown row
-#: (the ``dedup_store.TAKEDOWN_VICTIM_MOD`` contract)
-TAKEDOWN_VICTIM_MOD = 17
-
 SEMANTIC_TAKEDOWN_SQL = _semantic_incremental_sql(
     exist_extra=(
         f" AND ((vec_id % {TAKEDOWN_VICTIM_MOD}) + {TAKEDOWN_VICTIM_MOD})"
@@ -820,33 +221,20 @@ SEMANTIC_TAKEDOWN_SQL = _semantic_incremental_sql(
     )
 )
 
-_SEM_TAKEDOWN_STORES = storefs.ScratchStoreCache(
-    "trisk_sem_takedown_store_"
-)
 
-
-def takedown_store_path(spark: SparkSession, sf_dir: str) -> str:
-    """Path of the session-memoized POST-TAKEDOWN scratch semantic
-    store: built over the existing slice, then
-    ``delete_from_semantic_store`` removes the deterministic victim
-    slice — its OWN cache, never the shared ``corpus_store_path``
-    store (the ``dedup_store.takedown_store_path`` rule)."""
-
-    def build(path: str) -> None:
-        emb = table(spark, sf_dir, "embeddings")
-        existing = emb.where(
-            F.pmod(F.col("vec_id"), F.lit(SEM_ARRIVING_MOD)) != 0
-        )
-        victims = sorted(
-            int(r.vec_id)
-            for r in existing.where(
-                F.pmod(F.col("vec_id"), F.lit(TAKEDOWN_VICTIM_MOD)) == 1
-            ).select("vec_id").collect()
-        )
-        write_semantic_store(spark, existing, path)
-        delete_from_semantic_store(spark, victims, path)
-
-    return _SEM_TAKEDOWN_STORES.get_or_build(spark, sf_dir, build)
+@register("semantic_incremental", oracle=SEMANTIC_INCREMENTAL_SQL)
+def semantic_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Incremental semantic ingest dedup over the persisted SRP store,
+    self-contained for a driver gate: split the embedding corpus
+    deterministically (vec_id % SEM_ARRIVING_MOD == 0 is the
+    "arriving" wave, the rest the "existing" corpus), build the store
+    over the existing slice ONCE per (session, corpus) into a scratch
+    path (the ``dedup_incremental`` memoization), and probe the
+    arriving wave against it. The oracle (``_semantic_incremental_sql``)
+    derives both sides from the embeddings table directly, so the row
+    puts write→prune→probe→verify — the whole semantic store path —
+    under independent value-hash evidence."""
+    return SEMANTIC.probe_arriving(spark, sf_dir, corpus_store_path(spark, sf_dir))
 
 
 def semantic_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -858,12 +246,7 @@ def semantic_takedown(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe the arriving slice against the post-delete store. The oracle
     (``SEMANTIC_TAKEDOWN_SQL``) derives the same answer with the
     victims excluded from the existing side — it matches iff delete ≡
-    rebuild holds on the probed artifacts. LIBRARY op; R16/R17 seat
-    queue."""
-    emb = table(spark, sf_dir, "embeddings")
-    arriving = emb.where(
-        F.pmod(F.col("vec_id"), F.lit(SEM_ARRIVING_MOD)) == 0
-    )
-    return probe_semantic_store(
-        spark, arriving, takedown_store_path(spark, sf_dir)
+    rebuild holds on the probed artifacts. LIBRARY op."""
+    return SEMANTIC.probe_arriving(
+        spark, sf_dir, takedown_store_path(spark, sf_dir)
     )

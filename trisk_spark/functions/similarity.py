@@ -21,7 +21,6 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from trisk_spark.catalog import (
     cached_cols,
-    ckpt_eager,
     local_rows,
     spread_narrow_scan,
     table,
@@ -1358,7 +1357,7 @@ def _lloyd_loop_body(
             # is the step's one real job and materializes this K-row
             # table as a side effect — eager added a second scheduled
             # job per Lloyd step (r17, the components-loop finding)
-        ).localCheckpoint(eager=ckpt_eager())
+        ).localCheckpoint(eager=False)
         if eps is not None:
             mv = new_cents.agg(F.max("movement").alias("m")).first()["m"]
             if mv is not None and mv < eps:
@@ -2837,7 +2836,7 @@ def margin_mine_frame(
     # and materializes the forward top-k once for its three consumers
     # (collect, qh, scored) — eager paid one extra scheduled job (r17)
     fwd = _gemm_topk(spark, probes, side_b, MARGIN_K).localCheckpoint(
-        eager=ckpt_eager()
+        eager=False
     )
     cand_ids = sorted(
         int(r.neighbor_id)

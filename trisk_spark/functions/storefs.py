@@ -1,10 +1,27 @@
-"""Shared durability machinery for the persisted-store family
-(``dedup_store``'s MinHash band store, ``semantic_store``'s SRP band
-store): the fail-loud filesystem gate, the atomic ingest watermark,
-the crash-safe compaction swap/repair protocol, and the
-replayed-append repair rewrite. Extracted from
-``dedup_store`` (r12/r13) when the semantic store arrived — ONE
-implementation of the swap state machine, table names parameterized.
+"""Shared machinery for the persisted-store family: every piece that
+more than one store needs has exactly one implementation here, and the
+stores call it with their own table and column names.
+
+  * the fail-loud rename-filesystem gate, the atomic small-text records
+    beside a store (ingest watermark ``_last_admitted_batch_id``,
+    bucket fan ``_n_buckets``) and the corpus-derived fan rule;
+  * the md5-prefix ``bucket`` partition column and the writer-task rule
+    (one task per partition directory, capped at the session's shuffle
+    parallelism);
+  * the crash-safe compaction swap and its repair, and the
+    replayed-append repair rewrite;
+  * the recorded-delete protocol every id-list takedown runs
+    (``recorded_delete`` / ``resume_recorded_delete``): gate, repair,
+    finish a pending delete, check the id ceiling, commit the
+    ``_delete_intent`` by tmp-then-rename, run the store's deletion,
+    drop the intent. ``gram_store`` keeps its own negated-block intent;
+  * the staged "delete ids from a partitioned table" core the postings
+    and IVF stores run inside that protocol (``delete_staged_rows``);
+  * the session-memoized scratch-store cache of the self-contained
+    registered rows.
+
+The MinHash and SRP band stores share one engine on top of this
+(``band_store``).
 
 DURABILITY MODEL (single-maintainer, local/HDFS-rename filesystems):
 maintenance that swaps directories and the ingest watermark rely on
@@ -20,9 +37,18 @@ mandate, SURVEY.md §7 step 7); this is repo-local machinery.
 from __future__ import annotations
 
 import atexit
+import glob
 import os
 import shutil
 import threading
+
+from pyspark.sql import functions as F
+
+from trisk_spark.catalog import local_rows
+
+#: fail-loud ceiling on one takedown batch: the id set travels as a
+#: driver-held literal (the broadcast-model class)
+MAX_DELETE_IDS = 100_000
 
 
 def require_rename_fs(path: str, op: str) -> None:
@@ -118,6 +144,34 @@ def write_store_fan(path: str, n_buckets: int) -> None:
     write_small_text(path, "_n_buckets", str(int(n_buckets)))
 
 
+def md5_bucket(col, n_buckets: int):
+    """Partition bucket of a key column: the first 15 hex digits of
+    md5(key as string) as an integer, mod the store's fan. A pure
+    refinement of key equality (equal key ⇒ equal bucket), so pruning
+    on it never changes results, and the driver can route with
+    Python's md5 on the same bytes (``bm25_store._bucket_of``)."""
+    return (
+        F.pmod(
+            F.conv(
+                F.substring(F.md5(col.cast("string")), 1, 15), 16, 10
+            ).cast("bigint"),
+            F.lit(n_buckets),
+        )
+        .cast("int")
+        .alias("bucket")
+    )
+
+
+def writer_tasks(spark, n_dirs: int) -> int:
+    """Writer parallelism for a partitioned store table: the session's
+    shuffle parallelism, capped at one task per partition directory. A
+    task per directory is the most that helps; below it a writer
+    commits several directories serially. The count is explicit so AQE
+    cannot coalesce the write into one task."""
+    conf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
+    return max(1, min(conf, n_dirs))
+
+
 def repair_store(path: str, tables: tuple[str, ...]) -> None:
     """Bring a store back to a consistent layout after a compaction
     crash — called automatically on compaction entry, and callable
@@ -182,15 +236,14 @@ def repair_replayed_append(
     require_rename_fs(path, "repair_replayed_append")
     repair_store(path, (table,))
     keys = [id_col] if isinstance(id_col, str) else list(id_col)
-    rows = spark.read.parquet(
-        f"{strip_file_scheme(path)}/{table}"
-    ).dropDuplicates(keys)
-    tmp = f"{strip_file_scheme(path)}/{table}_compact_tmp"
+    live = f"{strip_file_scheme(path)}/{table}"
+    rows = spark.read.parquet(live).dropDuplicates(keys)
+    tmp = f"{live}_compact_tmp"
     if partition_by:
-        conf = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-        rows.repartition(max(1, conf), *partition_by).write.mode(
-            "overwrite"
-        ).partitionBy(*partition_by).parquet(tmp)
+        dirs = glob.glob(f"{live}/" + "/".join(f"{c}=*" for c in partition_by))
+        rows.repartition(
+            writer_tasks(spark, len(dirs)), *partition_by
+        ).write.mode("overwrite").partitionBy(*partition_by).parquet(tmp)
     else:
         rows.coalesce(max(1, files)).write.mode("overwrite").parquet(tmp)
     swap_in_compacted(path, (table,))
@@ -271,6 +324,97 @@ def complete_staged_partition_swap(path: str, table: str, part_col: str) -> None
         else:
             os.rmdir(staged)
     shutil.rmtree(staged_root, ignore_errors=True)
+
+
+def delete_staged_rows(
+    spark,
+    path: str,
+    ids: list[int],
+    table: str,
+    part_col: str,
+    id_col: str,
+    write_tasks: int | None = None,
+) -> None:
+    """Delete ``ids`` from a partitioned table whose kept rows have no
+    other durable source (bm25 and phrase postings, the IVF index):
+    finish any staging a previous crash committed (after which the live
+    table holds no half-cleared partition), route the victims to their
+    partitions with one distinct collect, stage the kept rows of those
+    partitions durably (``stage_partition_delete``), then swap them in.
+    Re-runnable at every crash point from the recorded ids."""
+    complete_staged_partition_swap(path, table, part_col)
+    live = spark.read.parquet(f"{path}/{table}")
+    parts = sorted(
+        int(r[part_col])
+        for r in live.where(F.col(id_col).isin(ids))
+        .select(part_col)
+        .distinct()
+        .collect()
+    )
+    if parts:
+        kept = live.where(F.col(part_col).isin(parts)).where(
+            ~F.col(id_col).isin(ids)
+        )
+        stage_partition_delete(
+            spark, path, table, part_col, parts, kept, write_tasks
+        )
+        complete_staged_partition_swap(path, table, part_col)
+
+
+def recorded_delete(
+    spark,
+    path: str,
+    ids,
+    op: str,
+    id_col: str,
+    run,
+    repair_tables: tuple[str, ...] = (),
+) -> None:
+    """The takedown frame every id-list store delete runs. In order:
+    fail loud on a non-rename filesystem; repair half-swapped
+    ``repair_tables``; finish a pending delete (``resume_recorded_delete``);
+    dedupe the ids and enforce ``MAX_DELETE_IDS``; commit the ids as
+    ``<path>/_delete_intent`` (parquet written to a tmp dir, then
+    renamed — the commit point); ``run(spark, ids, path)``; drop the
+    intent. ``run`` must be re-runnable from the recorded ids at every
+    crash point, so a crash anywhere after the commit is finished by
+    the next delete or resume on the store."""
+    require_rename_fs(path, op)
+    repair_store(path, repair_tables)
+    resume_recorded_delete(spark, path, id_col, run, repair_tables)
+    ids = sorted({int(i) for i in ids})
+    if len(ids) > MAX_DELETE_IDS:
+        raise ValueError(
+            f"takedown batch of {len(ids)} ids exceeds {MAX_DELETE_IDS} — "
+            "split it; the id set is a driver-held literal by design"
+        )
+    if not ids:
+        return
+    ipath = f"{strip_file_scheme(path)}/_delete_intent"
+    local_rows(spark, [(i,) for i in ids], f"{id_col} bigint").write.mode(
+        "overwrite"
+    ).parquet(ipath + "_tmp")
+    os.rename(ipath + "_tmp", ipath)
+    run(spark, ids, path)
+    shutil.rmtree(ipath, ignore_errors=True)
+
+
+def resume_recorded_delete(
+    spark, path: str, id_col: str, run, repair_tables: tuple[str, ...] = ()
+) -> bool:
+    """Finish a takedown a crash interrupted: repair half-swapped
+    ``repair_tables`` first (a crash inside ``swap_in_compacted`` leaves
+    a live table renamed to ``_old``, and the run must not fail reading
+    it), re-run ``run`` from the recorded ids, drop the intent. Returns
+    True if there was one to finish."""
+    ipath = f"{strip_file_scheme(path)}/_delete_intent"
+    if not os.path.exists(ipath):
+        return False
+    repair_store(path, repair_tables)
+    ids = sorted(int(r[id_col]) for r in spark.read.parquet(ipath).collect())
+    run(spark, ids, path)
+    shutil.rmtree(ipath, ignore_errors=True)
+    return True
 
 
 def swap_in_compacted(path: str, tables: tuple[str, ...]) -> None:

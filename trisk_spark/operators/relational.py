@@ -31,13 +31,6 @@ def dsum(col: Column, scale: int = 2) -> Column:
     return F.round(F.sum(col.cast("decimal(18,4)")), scale).cast("double")
 
 
-def davg(col: Column, scale: int = 4) -> Column:
-    """Deterministic average: exact decimal sum → double division → round."""
-    return F.round(
-        F.sum(col.cast("decimal(18,4)")).cast("double") / F.count(col), scale
-    ).cast("double")
-
-
 _REVENUE = "CAST(l_extendedprice * (1 - l_discount) AS DECIMAL(18,6))"
 
 # ------------------------------------------------------------ TPC-H Q1 --

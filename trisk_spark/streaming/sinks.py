@@ -6,8 +6,9 @@ Reference surface: addSink/print/writeAsText/Kafka producer/DummySink
 (SingleOutputStreamOperator.java:399); sideOutputLateData
 (WindowedStream.java:177).
 
-Spark image: writeStream format sinks for the simple cases; one
-foreachBatch fan-out for side outputs (each batch routed to N sinks by
+Spark image: print, DummySink and the Kafka producer are plain
+``writeStream.format("console"|"noop"|"kafka")`` calls and need no
+wrapper; the file sink is ``to_files``; one foreachBatch fan-out for side outputs (each batch routed to N sinks by
 predicate — the split/select pattern); late rows captured by an
 anti-join against the watermark *before* Spark drops them (Spark has no
 native late-data side output — documented divergence, closed here)."""
@@ -17,24 +18,6 @@ from __future__ import annotations
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
-
-
-def to_noop(df: DataFrame, checkpoint: str, mode: str = "append"):
-    """DummySink (Nexmark/sinks/DummySink.java): compute and discard."""
-    return (
-        df.writeStream.outputMode(mode)
-        .format("noop")
-        .option("checkpointLocation", checkpoint)
-    )
-
-
-def to_console(df: DataFrame, checkpoint: str, mode: str = "append"):
-    """print() sink (DataStream.java:1001)."""
-    return (
-        df.writeStream.outputMode(mode)
-        .format("console")
-        .option("checkpointLocation", checkpoint)
-    )
 
 
 def to_files(
@@ -61,19 +44,6 @@ def to_files(
     if partition_by is not None:
         w = w.partitionBy(partition_by)
     return w
-
-
-def to_kafka(df: DataFrame, brokers: str, topic: str, checkpoint: str):
-    """FlinkKafkaProducer011 (StatefulStockExchange.java:61-63); value
-    must be a 'value' string/binary column. Config surface only in this
-    environment (no broker)."""
-    return (
-        df.selectExpr("CAST(value AS STRING) AS value")
-        .writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", brokers)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-    )
 
 
 def side_output_fanout(
