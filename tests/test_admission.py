@@ -119,6 +119,36 @@ def test_admission_wave_funnel_and_loop(spark, tmp_path):
     assert row.n_unsigned_band_docs == 0
 
 
+def test_overlapped_norm_job_runs_in_callers_job_group(
+    spark, tmp_path, monkeypatch
+):
+    """The wave-norm job the funnel overlaps with the text probe runs on
+    a driver thread; it must still land in the caller's job group."""
+    dpath, spath = _seed_stores(spark, tmp_path)
+    sc = spark.sparkContext
+    norm_groups = []
+    normed = admission._sem_normed
+
+    def recording_normed(df):
+        norm_groups.append(sc.getLocalProperty("spark.jobGroup.id"))
+        return normed(df)
+
+    monkeypatch.setattr(admission, "_sem_normed", recording_normed)
+    wave = spark.createDataFrame(_WAVE1, _SCHEMA)
+    tracker = sc.statusTracker()
+    ungrouped = set(tracker.getJobIdsForGroup(None))
+    sc.setJobGroup("admission-wave", "admission wave")
+    try:
+        admission.admission_wave(spark, wave, dpath, spath).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    assert norm_groups == ["admission-wave"]
+    assert tracker.getJobIdsForGroup("admission-wave")
+    assert set(tracker.getJobIdsForGroup(None)) == ungrouped, (
+        "a job of the wave ran outside the caller's job group"
+    )
+
+
 @pytest.mark.slow
 def test_admission_stream_equals_waves_and_replay_guard(spark, tmp_path):
     """The stream form must emit exactly the per-wave images (same

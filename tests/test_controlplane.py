@@ -117,6 +117,43 @@ def test_stateless_rescale_resumes_same_checkpoint_no_duplicates(spark):
     assert got == want  # exactly-once across the rescale
 
 
+def _offset_log_partitions(checkpoint: str) -> set[str]:
+    """``spark.sql.shuffle.partitions`` as recorded in every batch of a
+    stream checkpoint's offset log."""
+    import json
+    import os
+
+    offsets = os.path.join(checkpoint, "offsets")
+    out = set()
+    for name in os.listdir(offsets):
+        if name.isdigit():
+            with open(os.path.join(offsets, name)) as f:
+                meta = json.loads(f.read().splitlines()[1])
+            out.add(meta["conf"]["spark.sql.shuffle.partitions"])
+    return out
+
+
+def test_rescale_records_new_parallelism_and_leaves_callers_conf(spark):
+    events = table(spark, SF, "events")
+    staged = StagedReplay(events, "ts", n_chunks=4)
+
+    def build(sp, plan):
+        return staged.stream(sp).groupBy("event_type").agg(F.count("*").alias("cnt"))
+
+    callers = spark.conf.get("spark.sql.shuffle.partitions")
+    mq = ManagedQuery(spark, "rescale-conf", build, stateful=True, parallelism=2)
+    staged.stage(2)
+    mq.run_available()
+    assert _offset_log_partitions(mq.checkpoint) == {"2"}
+    plan = mq.get_plan_copy()
+    plan.assign_workload("main", round_robin(3))
+    assert mq.apply(plan)["state_replayed"]
+    staged.stage(4)
+    mq.run_available()
+    assert _offset_log_partitions(mq.checkpoint) == {"3"}
+    assert spark.conf.get("spark.sql.shuffle.partitions") == callers
+
+
 def test_rules_hot_swap_takes_effect_next_batch_without_restart(spark):
     events = table(spark, SF, "events")
     staged = StagedReplay(events, "ts", n_chunks=2)

@@ -1,8 +1,8 @@
-"""Round-start probes for the two environment-blocked surfaces
-(VERDICT r8 #8): keep the guards describing reality. If the sandbox
-ever gains a Kafka broker or google.protobuf, these stop skipping and
-fail loudly — the signal to light up the real paths that round instead
-of letting the guarded code rot.
+"""Round-start probe for the environment-blocked Kafka surface
+(VERDICT r8 #8): keep the guard describing reality. If the sandbox
+ever gains a Kafka broker, this stops skipping and fails loudly — the
+signal to light up the real path that round instead of letting the
+guarded code rot.
 """
 
 from __future__ import annotations
@@ -40,38 +40,3 @@ def test_kafka_broker_now_available(spark):
         "Kafka broker reachable — promote the builders to a tested "
         "end-to-end produce/consume path this round"
     )
-
-
-def _has_protobuf() -> bool:
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-@pytest.mark.skipif(
-    not _has_protobuf(),
-    reason="google.protobuf absent — transformWithStateInPandas "
-    "substrate stays guarded (streaming/state_tws.py); GroupState "
-    "twins carry all tested semantics",
-)
-def test_tws_substrate_now_available(spark):
-    # protobuf appeared: the TWS twins must now run for real.
-    from trisk_spark.streaming import state_tws
-
-    assert state_tws.HAS_PROTOBUF
-    pytest.fail(
-        "google.protobuf importable — run the transformWithStateInPandas "
-        "twins against the GroupState suite this round"
-    )
-
-
-def test_guards_match_probes():
-    """The import-guard flags must agree with the live probes — a
-    drifted guard (e.g. protobuf installed but HAS_PROTOBUF stuck
-    False) would silently keep the real path dark."""
-    from trisk_spark.streaming import state_tws
-
-    assert state_tws.HAS_PROTOBUF == _has_protobuf()

@@ -52,6 +52,23 @@ def _write_events(tmp_path, rows):
     return con
 
 
+def test_time_evictor_hour_bound_is_sub_second(spark, tmp_path):
+    # an event 3600.3 s back is outside the trailing hour: a frame over
+    # whole seconds (unix_timestamp) counted it as inside
+    qd = QUERIES["time_evictor_window"]
+    con = _write_events(
+        tmp_path,
+        [
+            (1, 0, 7, "view", 1.0),
+            (2, 3600.3 / 60, 7, "view", 2.0),
+            (3, 7200.2 / 60, 7, "view", 4.0),
+        ],
+    )
+    got = sorted(tuple(r) for r in qd.fn(spark, str(tmp_path)).collect())
+    assert got == [(7, 1, 1, 1.0), (7, 2, 1, 2.0), (7, 3, 2, 6.0)]
+    assert_matches_oracle(qd.fn(spark, str(tmp_path)), con, qd.oracle)
+
+
 def test_delta_trigger_half_cent_rounding(spark, tmp_path):
     # value*100 landing exactly on .5 (e.g. 0.125 -> 12.5): pandas
     # .round() is half-to-even, DuckDB/Spark ROUND half-away-from-zero —

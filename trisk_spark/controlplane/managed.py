@@ -35,6 +35,7 @@ from trisk_spark.controlplane.plan import (
     UDF,
     ExecutionPlan,
 )
+from trisk_spark.session import sibling_session
 from trisk_spark.streaming.sources import checkpoint_dir
 
 
@@ -84,7 +85,9 @@ class StagedReplay:
 class ManagedQuery:
     """A streaming query under control-plane management.
 
-    ``build(spark, plan)`` returns the streaming DataFrame; output goes
+    ``build(spark, plan)`` returns the streaming DataFrame, built on the
+    incarnation's sibling session (the plan's parallelism as its shuffle
+    partitions; the caller's session is never written); output goes
     through foreachBatch into ``self.emitted`` as
     ``(incarnation, batch_id, Row)`` so tests can check invariants across
     reconfigurations (the reference checks per-key monotonic counters in
@@ -133,8 +136,14 @@ class ManagedQuery:
         """One availableNow incarnation: drain whatever the source has,
         then stop at the batch boundary (quiesced)."""
         op = self.plan.operators[self.operator]
-        self.spark.conf.set("spark.sql.shuffle.partitions", str(op.parallelism))
-        df = self.build(self.spark, self.plan)
+        # the incarnation's own session carries the plan's parallelism;
+        # the caller's streaming listeners still see the query
+        sp = sibling_session(
+            self.spark, {"spark.sql.shuffle.partitions": str(op.parallelism)}
+        )
+        for listener in self.spark._jsparkSession.streams().listListeners():
+            sp._jsparkSession.streams().addListener(listener)
+        df = self.build(sp, self.plan)
         self.query = (
             df.writeStream.outputMode(self.mode)
             .foreachBatch(self._sink)

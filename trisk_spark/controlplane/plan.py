@@ -10,7 +10,9 @@ and applies (AbstractCoordinator.java:95-160).
 Spark mapping: "task" = shuffle partition of the stateful stage;
 "key group" = one of MAX_PARALLELISM hash buckets (the reference
 hard-codes 128 — KeyGroupRangeAssignment.java:31); parallelism =
-spark.sql.shuffle.partitions for the managed query. The distribution
+spark.sql.shuffle.partitions of the sibling session each managed-query
+incarnation is built on (the caller's session keeps its own value), and
+the stream's offset log records it at first run. The distribution
 map is intent: Spark's HashPartitioning realizes it, and a *custom*
 distribution (non-uniform deal) is realized by restarting with the new
 partition count and letting the replayed state land on the new layout.

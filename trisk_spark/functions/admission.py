@@ -279,8 +279,10 @@ def _admission_verdicts(
     # Both concurrent jobs consume the LAZY s0 checkpoint; Spark's
     # checkpoint state transitions are synchronized, so the worst case
     # is the cheap quality-gate lineage computed once per job, never
-    # corruption. The pre-append report barrier below stays EAGER.
-    import threading
+    # corruption. The pre-append report barrier below stays EAGER. An
+    # InheritableThread carries the caller's job group and description
+    # over to the overlapped job.
+    from pyspark import InheritableThread
 
     _norm_box: dict = {}
 
@@ -293,7 +295,7 @@ def _admission_verdicts(
         except BaseException as e:  # noqa: BLE001 — re-raised at join
             _norm_box["err"] = e
 
-    _t = threading.Thread(target=_norm_superset, daemon=True)
+    _t = InheritableThread(_norm_superset, daemon=True)
     _t.start()
     try:
         rep_t = probe_dedup_store(

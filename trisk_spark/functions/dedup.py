@@ -26,6 +26,7 @@ from trisk_spark.catalog import (
     table,
 )
 from trisk_spark.registry import register
+from trisk_spark.session import loop_session, rebind
 
 # ------------------------------------------------------- exact dedup --
 
@@ -858,42 +859,18 @@ def min_label_components(
     edges = raw.unionByName(
         raw.select(F.col("b").alias("a"), F.col("a").alias("b"))
     ).localCheckpoint()  # materialize: the loop re-reads this every round
-    # The loop body runs with AQE OFF and the shuffle fan SIZED FROM
-    # THE EDGE COUNT (r17, guide §2.3 "make partitioning scale-adaptive
-    # — derive from input size"): the loop's frames are id-sized, and
-    # under AQE every one of its ~6 exchanges per round becomes a
-    # separately SCHEDULED stage-job, so an 11-round convergence paid
-    # ~70 job floors of pure scheduling over near-empty shuffles
-    # (profiled: ~92 AQE stage-jobs, ~55 ms wall each, task time ~0).
-    # With the fan pre-sized to the data (~500k edge rows — 8-16 MB —
-    # per partition, the coalesce target AQE would aim for anyway) a
-    # round is ONE job; measured 3.7 -> 2.9 s warm on the 11-round
-    # semantic graph, labels row-identical. A 100 TB edge list lands
-    # thousands of partitions from the same rule, so nothing here is
-    # local-mode tuning; the pairs kernel UPSTREAM (the corpus-sized
-    # work) keeps AQE — only the bounded label loop opts out.
+    # the loop runs on an AQE-off sibling session, fan sized from the
+    # edge count (~500k edge rows per partition), so a round is one job
     spark = pairs.sparkSession
     n_edges = 2 * n_pairs  # the symmetrized count, known without a job
-    loop_parts = max(1, min(n_edges // 500_000 + 1, 2048))
-    _loop_confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(loop_parts),
-    }
-    _saved = {k: spark.conf.get(k) for k in _loop_confs}
-    for k, v in _loop_confs.items():
-        spark.conf.set(k, v)
-    try:
-        labels = _label_loop(edges)
-    finally:
-        for k, v in _saved.items():
-            spark.conf.set(k, v)
-    return labels
+    loop = loop_session(spark, max(1, min(n_edges // 500_000 + 1, 2048)))
+    return rebind(_label_loop(rebind(edges, loop)), spark)
 
 
 def _label_loop(edges: DataFrame) -> DataFrame:
     """The seeded pointer-jumped min-label loop over a materialized
-    symmetric edge list (see ``min_label_components`` for semantics
-    and the execution-shape rationale)."""
+    symmetric edge list (see ``min_label_components`` for semantics;
+    it runs on a ``session.loop_session``)."""
     # Seed with round 1's result directly: component₀ = min(own id,
     # min neighbor) is ONE grouped aggregate over the edge list —
     # the identity-seeded first neighbor-min join would compute

@@ -66,6 +66,7 @@ from trisk_spark.functions.similarity import (
     _valid_embeddings,
 )
 from trisk_spark.registry import register
+from trisk_spark.session import loop_session, partial_agg_fan, rebind
 
 PQ_M = 8       # subspaces
 PQ_DSUB = DIM // PQ_M   # dims per subspace
@@ -611,53 +612,31 @@ def _lloyd_refine(spark: SparkSession, emb: DataFrame, cb, iters: int):
 
     cb = cb.copy()
     errors = []
-    # The training loop's one exchange per step aggregates MODEL-SIZED
-    # partials (≤ PQ_M·ksub·PQ_DSUB rows per upstream partition after
-    # the kernel's own combine), so AQE only adds a scheduled stage-job
-    # per step; the fan scales with the map-task count (r18, the
-    # ivf_refine_iterative job-floor discipline). Each step COLLECTS,
-    # so the window genuinely covers every loop job; the final encode
-    # runs at the caller, outside the window, map-only.
-    try:
-        in_parts = emb.rdd.getNumPartitions()
-    except Exception:
-        in_parts = spark.sparkContext.defaultParallelism
-    # per-map-task combined block ≤ PQ_M × PQ_KSUB × PQ_DSUB rows
-    fan = max(
-        1,
-        min(2048, in_parts * PQ_M * PQ_KSUB * PQ_DSUB // 2_000_000 + 1),
-    )
-    _confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(fan),
-    }
-    _saved = {k: spark.conf.get(k) for k in _confs}
-    for k, v in _confs.items():
-        spark.conf.set(k, v)
-    try:
-        for _ in range(iters):
-            parts = (
-                _pq_partials_gemm(spark, emb, cb)
-                .groupBy("s", "code")
-                .agg(
-                    F.sum("pcnt").alias("cnt"),
-                    F.sum("perr").alias("err"),
-                    *[
-                        F.sum(F.expr(f"IF(dim = {d}, psum, 0)")).alias(f"m{d}")
-                        for d in range(PQ_DSUB)
-                    ],
-                )
-                .collect()
+    # each step's one exchange aggregates model-sized partials; every
+    # step collects, so the loop session governs every loop job and the
+    # final encode runs at the caller, map-only
+    loop = loop_session(spark, partial_agg_fan(emb, PQ_M * PQ_KSUB * PQ_DSUB))
+    emb = rebind(emb, loop)
+    for _ in range(iters):
+        parts = (
+            _pq_partials_gemm(loop, emb, cb)
+            .groupBy("s", "code")
+            .agg(
+                F.sum("pcnt").alias("cnt"),
+                F.sum("perr").alias("err"),
+                *[
+                    F.sum(F.expr(f"IF(dim = {d}, psum, 0)")).alias(f"m{d}")
+                    for d in range(PQ_DSUB)
+                ],
             )
-            errors.append(sum(r.err for r in parts))
-            for r in parts:
-                if r.cnt > 0:
-                    cb[r.s][r.code] = np.array(
-                        [r[f"m{d}"] for d in range(PQ_DSUB)], dtype=np.int64
-                    ) // r.cnt
-    finally:
-        for k, v in _saved.items():
-            spark.conf.set(k, v)
+            .collect()
+        )
+        errors.append(sum(r.err for r in parts))
+        for r in parts:
+            if r.cnt > 0:
+                cb[r.s][r.code] = np.array(
+                    [r[f"m{d}"] for d in range(PQ_DSUB)], dtype=np.int64
+                ) // r.cnt
     return cb, errors
 
 

@@ -26,6 +26,7 @@ from trisk_spark.catalog import (
     table,
 )
 from trisk_spark.registry import register
+from trisk_spark.session import loop_session, partial_agg_fan, rebind
 
 N_PROBES = 5  # query set: vec_id < N_PROBES
 TOP_K = 10
@@ -1283,46 +1284,17 @@ def ivf_refine_iterative(
         .withColumn("norm", _dot("vec", "vec"))
         .where(F.col("norm") > 0)
     )
-    # The WHOLE loop (and its final K-row result) runs with AQE off and
-    # the shuffle fan derived from the input (r18, guide §2.3 "make
-    # partitioning scale-adaptive" — the label-loop/Lloyd job-floor
-    # discipline): every loop exchange carries MODEL-SIZED partials
-    # (≤ K×DIM rows per upstream partition after map-side combine), so
-    # under AQE each of the ~2 exchanges per step becomes a separately
-    # scheduled stage-job — measured 19 scheduled jobs for 3 steps at
-    # sf0.1, task time ≈ 0 — while the reduce side never needs skew or
-    # coalescing help at ANY corpus size. The fan scales with the
-    # map-task count (each map task emits one combined K×DIM block),
-    # so a 100 TB scan still fans its partial-agg reduce out; the
-    # corpus-sized work itself is map-side (GEMM + partial agg) and
-    # unaffected. The result is materialized INSIDE the window (K-row
-    # table) so the confs actually govern the loop's execution — the
-    # lazy per-step checkpoints would otherwise all materialize at the
-    # caller's action, outside any conf scope.
-    try:
-        in_parts = n.rdd.getNumPartitions()
-    except Exception:
-        in_parts = spark.sparkContext.defaultParallelism
-    fan = max(1, min(2048, in_parts * N_CENTROIDS * DIM // 2_000_000 + 1))
-    _confs = {
-        "spark.sql.adaptive.enabled": "false",
-        "spark.sql.shuffle.partitions": str(fan),
-    }
-    _saved = {k: spark.conf.get(k) for k in _confs}
-    for k, v in _confs.items():
-        spark.conf.set(k, v)
-    try:
-        return _lloyd_loop_body(spark, n, iters, eps)
-    finally:
-        for k, v in _saved.items():
-            spark.conf.set(k, v)
+    # each step's exchanges carry model-sized partials (≤ K×DIM rows per
+    # map task); the K-row result comes back to the caller's session
+    loop = loop_session(spark, partial_agg_fan(n, N_CENTROIDS * DIM))
+    return rebind(_lloyd_loop_body(loop, rebind(n, loop), iters, eps), spark)
 
 
 def _lloyd_loop_body(
     spark: SparkSession, n: DataFrame, iters: int, eps: float | None
 ) -> DataFrame:
     """The Lloyd loop proper — see ``ivf_refine_iterative`` (which runs
-    it under the AQE-off/model-fan conf window)."""
+    it on a loop session)."""
     cents = (
         n.orderBy("vec_id").limit(N_CENTROIDS)
         .select(
@@ -1365,9 +1337,9 @@ def _lloyd_loop_body(
         cents = new_cents.drop("movement")
         assign = _assign_gemm(spark, n, cents).select("vec_id", "vec", "list_id")
         means = _list_means(assign)
-    # EAGER: the K-row result materializes here, inside the caller's
-    # conf window, so the whole lazy checkpoint chain executes under
-    # the loop confs; the returned frame is a bounded local scan.
+    # EAGER: the K-row result materializes here, in the loop session,
+    # so the whole lazy checkpoint chain executes under its confs; the
+    # returned frame is a bounded local scan.
     return (
         means.join(F.broadcast(cents.select("c_id", "c_vec", "c_norm")),
                    means.list_id == F.col("c_id"))

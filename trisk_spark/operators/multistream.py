@@ -317,8 +317,8 @@ def time_evictor_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = table(spark, sf_dir, "events").where(F.col("ts").isNotNull())
     w = (
         Window.partitionBy("user_id")
-        .orderBy(F.unix_timestamp("ts"))
-        .rangeBetween(-3600, 0)
+        .orderBy(F.unix_micros("ts"))
+        .rangeBetween(-3_600_000_000, 0)
     )
     cents = F.round(F.col("value") * 100).cast("bigint")
     return ev.select(

@@ -6,6 +6,10 @@ Two paths:
     did not build (the driver passes its own session into
     ``__spark_entry__.entry``/``queries``).
 
+Library code that needs other settings for a bounded piece of work runs
+it on a ``sibling_session`` instead of writing the caller's conf, and
+hands its frames back with ``rebind``.
+
 Scale notes (100 TB / 1000 executors): every conf here is also valid on a
 real cluster; the only local-mode-specific bits are master and driver
 memory. Shuffle partitions default to the core count locally but should
@@ -17,7 +21,7 @@ from __future__ import annotations
 
 import os
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 #: Confs that can be changed on a live session (runtime-settable).
 RUNTIME_CONFS: dict[str, str] = {
@@ -82,6 +86,65 @@ def prepare(spark: SparkSession) -> SparkSession:
             pass  # non-settable on this build; defaults are acceptable
     _ship_package(spark)
     return spark
+
+
+def sibling_session(spark: SparkSession, overrides: dict[str, str]) -> SparkSession:
+    """A session that shares ``spark``'s SparkContext (and so its
+    executors, cache and shipped package) but owns its SQLConf: every
+    modifiable conf of ``spark`` copied, then ``overrides`` applied.
+    ``newSession()`` alone inherits none of the ``prepare`` confs, which
+    would silently change plans. The caller's session is never written,
+    so queries planned meanwhile on other driver threads, streams or
+    ``foreachBatch`` keep its settings — the Structured Streaming model
+    of one cloned session per query.
+
+    The iterative loops (components labels, PQ Lloyd, IVF refinement)
+    run here with AQE off and a fan derived from their input
+    (``loop_session``): their frames are id- or model-sized, and AQE
+    turns every loop exchange into a separately scheduled stage-job
+    over a near-empty shuffle, so a round pays several job floors
+    instead of one. The corpus-sized work feeding a loop keeps the
+    caller's AQE."""
+    sib = spark.newSession()
+    for k, v in spark.conf.getAll.items():
+        if spark.conf.isModifiable(k):
+            sib.conf.set(k, v)
+    for k, v in overrides.items():
+        sib.conf.set(k, v)
+    return sib
+
+
+def loop_session(spark: SparkSession, fan: int) -> SparkSession:
+    """The sibling an iterative loop runs in: AQE off, ``fan`` shuffle
+    partitions (see ``sibling_session``)."""
+    return sibling_session(
+        spark,
+        {
+            "spark.sql.adaptive.enabled": "false",
+            "spark.sql.shuffle.partitions": str(fan),
+        },
+    )
+
+
+def partial_agg_fan(df: DataFrame, block_rows: int) -> int:
+    """Reduce fan for a loop whose exchanges aggregate map-side
+    combined blocks of at most ``block_rows`` rows per input partition:
+    ~2M rows per reduce partition, in [1, 2048], so a large scan still
+    fans its partial-agg reduce out."""
+    parts = df.rdd.getNumPartitions()
+    return max(1, min(2048, parts * block_rows // 2_000_000 + 1))
+
+
+def rebind(df: DataFrame, spark: SparkSession) -> DataFrame:
+    """``df``'s analyzed plan as a frame of ``spark``: no job runs, and
+    the plan (statistics of checkpointed inputs included) is planned
+    and executed under ``spark``'s conf. Moves loop inputs into a
+    sibling session and loop results back to the caller's."""
+    jvm = spark.sparkContext._jvm
+    jdf = jvm.org.apache.spark.sql.classic.Dataset.ofRows(
+        spark._jsparkSession, df._jdf.queryExecution().analyzed()
+    )
+    return DataFrame(jdf, spark)
 
 
 def get_spark(app_name: str = "trisk-spark") -> SparkSession:

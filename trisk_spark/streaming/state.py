@@ -5,13 +5,11 @@ reference's state primitives (SURVEY.md §2A "Stateful processing"):
   MapState (order books)   → array<struct> state fields (the book)
   buffered ListState       → array<struct> state field
 
-Primary implementation: ``applyInPandasWithState`` (GroupState) — the
-Spark 3.4+ Arrow-batched keyed-state API. Spark 4's successor,
-``transformWithStateInPandas`` (StatefulProcessor), is the preferred
-API at scale (RocksDB-backed value/list/map state, timers, TTL) but its
-Python protocol needs ``google.protobuf``, absent from this container —
-the TWS variants live in ``state_tws.py`` behind an import guard and
-are drop-in replacements where protobuf exists.
+Implementation: ``applyInPandasWithState`` (GroupState) — the Spark
+3.4+ Arrow-batched keyed-state API. Spark 4's successor,
+``transformWithStateInPandas`` (StatefulProcessor), needs
+``google.protobuf`` for its Python protocol, which this environment
+lacks, so no operator here uses it.
 
 All processors are deterministic given per-key seq order; bounded-replay
 equivalence against the batch operators is tested in
