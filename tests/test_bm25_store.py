@@ -376,14 +376,14 @@ def test_append_refuses_pending_delete(spark, tmp_path, monkeypatch):
     live = str(tmp_path / "live")
     B.write_bm25_store(spark, docs, live)
 
-    real = B._run_recorded_delete
+    real = B.BM25._run_recorded_delete
     monkeypatch.setattr(
-        B, "_run_recorded_delete",
+        B.BM25, "_run_recorded_delete",
         lambda *a: (_ for _ in ()).throw(RuntimeError("injected")),
     )
     with pytest.raises(RuntimeError, match="injected"):
         B.delete_from_bm25_store(spark, [0, 1], live)
-    monkeypatch.setattr(B, "_run_recorded_delete", real)
+    monkeypatch.setattr(B.BM25, "_run_recorded_delete", real)
 
     wave = spark.createDataFrame(
         [(100, "common ground fresh wave words")],

@@ -581,14 +581,14 @@ def test_append_and_ingest_refuse_pending_delete(
     live = str(tmp_path / "live")
     P.write_phrase_store(spark, docs, live)
 
-    real = P._run_recorded_delete
+    real = P.PHRASE._run_recorded_delete
     monkeypatch.setattr(
-        P, "_run_recorded_delete",
+        P.PHRASE, "_run_recorded_delete",
         lambda *a: (_ for _ in ()).throw(RuntimeError("injected")),
     )
     with pytest.raises(RuntimeError, match="injected"):
         P.delete_from_phrase_store(spark, [0, 1], live)
-    monkeypatch.setattr(P, "_run_recorded_delete", real)
+    monkeypatch.setattr(P.PHRASE, "_run_recorded_delete", real)
 
     wave = spark.createDataFrame(
         [(100, "common ground fresh wave words")],

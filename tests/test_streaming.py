@@ -98,6 +98,19 @@ def test_q11_stream_sessions_equal_batch(spark, events_stream):
     assert len(got) >= 0.9 * len(batch_map)
 
 
+def test_tumbling_agg_stream_equals_batch(spark, events_stream):
+    """Update-mode daily count+sum per event_type: the final value per
+    (window_start, event_type) must equal the registered
+    ``tumbling_window_agg``."""
+    emitted = sq.run_bounded(
+        sq.tumbling_agg_stream(events_stream()), checkpoint_dir("tumble"), mode="update"
+    )
+    final = _final(emitted, ["window_start", "event_type"])
+    batch = _rows(QUERIES["tumbling_window_agg"].fn(spark, SF_DIR))
+    assert len(batch) > 0
+    assert final == batch
+
+
 def test_wordcount_stream_running_counts(spark):
     docs = replay_stream(spark, SF_DIR, "documents", n_chunks=4, order_col="doc_id")
     emitted = sq.run_bounded(

@@ -87,7 +87,8 @@ def test_queryable_state_exposes_matchmaker_books(spark):
     equal the pure-Python fold's books for every sec_code."""
     from trisk_spark.sources.stock import stock_orders
     from trisk_spark.streaming.queryable import lookup_key, read_keyed_state
-    from trisk_spark.streaming.state import _replay_into_books, matchmaker_stream
+    from trisk_spark.operators.stateful import match_orders
+    from trisk_spark.streaming.state import _book_rows, matchmaker_stream
 
     stream = replay_stream(spark, SF, "events", n_chunks=2)
     orders = stock_orders(stream.select("event_id", "user_id", "ts", "value"))
@@ -116,7 +117,8 @@ def test_queryable_state_exposes_matchmaker_books(spark):
     want: dict[str, tuple] = {}
     for sec, records in by_key.items():
         buys, sells = [], []
-        b_out, s_out = _replay_into_books(sec, records, buys, sells, [])
+        list(match_orders(records, buys, sells))
+        b_out, s_out = _book_rows(buys, sells)
         want[sec] = (sorted(b_out), sorted(s_out))
 
     st = read_keyed_state(spark, ckpt)

@@ -486,10 +486,7 @@ class BandStore:
                 )
             self._write_bands(rebuilt, f"{path}/bands", "append")
         if victims.limit(1).count() > 0:
-            keep.write.mode("overwrite").parquet(
-                f"{base}/{self.rows_table}_compact_tmp"
-            )
-            storefs.swap_in_compacted(path, (self.rows_table,))
+            storefs.swap_table(path, self.rows_table, keep)
 
     # ------------------------------------- self-contained registered rows --
 

@@ -336,6 +336,20 @@ def corpus_stores_path(spark: SparkSession, sf_dir: str) -> str:
     return _HYB_STORES.get_or_build(spark, sf_dir, build)
 
 
+def _store_lex_ranks(spark: SparkSession, bm25_path: str, queries) -> DataFrame:
+    """The lexical side served from the BM25 store: (query_id, doc_id,
+    lex_rank), more-like-this (a probe never retrieves itself)."""
+    from trisk_spark.functions.bm25_store import probe_bm25_store
+
+    return probe_bm25_store(
+        spark, bm25_path, queries, top_k=LEX_SIDE_K, exclude_self=True
+    ).select(
+        F.col("query_id").cast("bigint").alias("query_id"),
+        "doc_id",
+        F.col("rank").alias("lex_rank"),
+    )
+
+
 def hybrid_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hybrid more-like-this SERVED FROM THE PERSISTED INDEXES — the
     deployment path: the same probe documents and fusion as
@@ -352,7 +366,6 @@ def hybrid_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserts); the dense side's oracle is the routed int8-IVF mirror
     (``ann_ivf_int8``'s CTEs — approximate search, exactly derived).
     LIBRARY op; R16 seat queue."""
-    from trisk_spark.functions.bm25_store import probe_bm25_store
     from trisk_spark.functions.ivf_store import probe_index
 
     path = corpus_stores_path(spark, sf_dir)
@@ -362,13 +375,7 @@ def hybrid_store_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
         per_probe.setdefault(int(r.doc_id), []).append(r.tok)
     queries = {qid: tuple(sorted(ts)) for qid, ts in per_probe.items()}
 
-    lex = probe_bm25_store(
-        spark, f"{path}/bm25", queries, top_k=LEX_SIDE_K, exclude_self=True
-    ).select(
-        F.col("query_id").cast("bigint").alias("query_id"),
-        "doc_id",
-        F.col("rank").alias("lex_rank"),
-    )
+    lex = _store_lex_ranks(spark, f"{path}/bm25", queries)
     sem = probe_index(spark, sf_dir, f"{path}/ivf").select(
         "query_id",
         F.col("neighbor_id").alias("doc_id"),
@@ -486,7 +493,6 @@ def hybrid_probe_stream(
     writes either store (pair with ``admission_stream(bm25_path=...)``
     / ``ivf_store.append_index`` on the maintainer side). Sink
     contract: fully materialize inside the call."""
-    from trisk_spark.functions.bm25_store import probe_bm25_store
     from trisk_spark.functions.ivf_store import probe_frame
     from trisk_spark.functions.similarity import _valid_embeddings
 
@@ -504,17 +510,7 @@ def hybrid_probe_stream(
             ):
                 per.setdefault(int(r.doc_id), []).append(r.tok)
             queries = {q: tuple(sorted(ts)) for q, ts in per.items()}
-            lex = probe_bm25_store(
-                spark,
-                f"{path}/bm25",
-                queries,
-                top_k=LEX_SIDE_K,
-                exclude_self=True,
-            ).select(
-                F.col("query_id").cast("bigint").alias("query_id"),
-                "doc_id",
-                F.col("rank").alias("lex_rank"),
-            )
+            lex = _store_lex_ranks(spark, f"{path}/bm25", queries)
             sem = probe_frame(
                 spark,
                 batch_df.select(

@@ -21,7 +21,8 @@ stores call it with their own table and column names.
     registered rows.
 
 The MinHash and SRP band stores share one engine on top of this
-(``band_store``).
+(``band_store``), and so do the BM25 and phrase postings stores
+(``postings_store``).
 
 DURABILITY MODEL (single-maintainer, local/HDFS-rename filesystems):
 maintenance that swaps directories and the ingest watermark rely on
@@ -149,7 +150,7 @@ def md5_bucket(col, n_buckets: int):
     md5(key as string) as an integer, mod the store's fan. A pure
     refinement of key equality (equal key ⇒ equal bucket), so pruning
     on it never changes results, and the driver can route with
-    Python's md5 on the same bytes (``bm25_store._bucket_of``)."""
+    Python's md5 on the same bytes (``postings_store._bucket_of``)."""
     return (
         F.pmod(
             F.conv(
@@ -415,6 +416,13 @@ def resume_recorded_delete(
     run(spark, ids, path)
     shutil.rmtree(ipath, ignore_errors=True)
     return True
+
+
+def swap_table(path: str, table: str, rows) -> None:
+    """Replace ``table`` with ``rows`` crash-safely: write them as
+    ``<table>_compact_tmp``, then ``swap_in_compacted``."""
+    rows.write.mode("overwrite").parquet(f"{strip_file_scheme(path)}/{table}_compact_tmp")
+    swap_in_compacted(path, (table,))
 
 
 def swap_in_compacted(path: str, tables: tuple[str, ...]) -> None:

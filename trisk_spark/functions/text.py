@@ -9,7 +9,7 @@ except where grouped output is requested.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from trisk_spark.catalog import (
     cached_cols,
@@ -1054,8 +1054,6 @@ def keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is BROADCAST (vocabulary-sized); the final per-doc rank
     re-uses the doc_id hash partitioning. At 100 TB the df/idf table is
     a write-once broadcast asset, like the bigram LM."""
-    from pyspark.sql import Window
-
     docs = table(spark, sf_dir, "documents")
     tf, df, n = _kw_tf_df_n(docs)
     scored = (
@@ -1439,23 +1437,10 @@ def bm25_top_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k ranks a pair-sized table over a BM25_QUERIES-sized key space.
     Registered r12 under the driver's hash gate (the R12 registration
     plan) with its full DuckDB oracle (``BM25_TOP_DOCS_SQL``)."""
-    from pyspark.sql import Window
-
     docs = spread_narrow_scan(
         table(spark, sf_dir, "documents")
     ).where(F.col("doc_id").isNotNull())
-    pair = bm25_pair_scores(spark, docs)
-    w = Window.partitionBy("query_id").orderBy(F.desc("s"), "doc_id")
-    return (
-        pair.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= BM25_TOP_K)
-        .select(
-            F.col("query_id").cast("int").alias("query_id"),
-            "doc_id", "n_terms",
-            F.col("s").cast("double").alias("score"),
-            F.col("rank").cast("int").alias("rank"),
-        )
-    )
+    return bm25_rank(bm25_pair_scores(spark, docs))
 
 
 def _bm25_stats_tf_df(docs: DataFrame, seed_terms: list[str] | None = None):
@@ -1498,7 +1483,8 @@ def bm25_pair_scores(
     qterms: DataFrame | None = None,
     seed_terms: list[str] | None = None,
 ) -> DataFrame:
-    """The relational BM25 scoring stage over any (doc_id, text) frame:
+    """BM25 over any (doc_id, text) frame — the corpus passes
+    (``_bm25_stats_tf_df``) fed to the ``bm25_score`` stage:
     (query_id, doc_id, n_terms, s DECIMAL) for every document holding
     at least one seed term — ``bm25_top_docs`` ranks this;
     ``streaming.queries.bm25_score_stream``'s in-row kernel is
@@ -1512,30 +1498,67 @@ def bm25_pair_scores(
             "query_id int, term string",
         )
     stats, tf, df = _bm25_stats_tf_df(docs, seed_terms)
+    return bm25_score(tf, df, qterms, stats)
 
-    n, t_len, tfc, dfc, dl = (
-        F.col("n_docs"), F.col("total_len"),
-        F.col("tf"), F.col("df"), F.col("dl").cast("bigint"),
-    )
+
+def bm25_contrib(
+    tf: Column, df: Column, dl: Column, n_docs: Column, total_len: Column
+) -> Column:
+    """One (term, doc) BM25 contribution, ROUND(·, 6) → DECIMAL(18,6):
+    the exact-BIGINT idf and saturation arrangement above (k1 = 6/5,
+    b = 3/4). Every operand must be a BIGINT Column, so 2·N and
+    44·tf·T never overflow. The DuckDB oracles keep their own copy as
+    the reference."""
     idf = F.log(
-        (F.lit(2) * n + F.lit(2)).cast("double")
-        / (F.lit(2) * dfc + F.lit(1)).cast("double")
+        (F.lit(2) * n_docs + F.lit(2)).cast("double")
+        / (F.lit(2) * df + F.lit(1)).cast("double")
     )
-    sat = (F.lit(44) * tfc * t_len).cast("double") / (
-        F.lit(20) * tfc * t_len + F.lit(6) * t_len + F.lit(18) * dl * n
+    sat = (F.lit(44) * tf * total_len).cast("double") / (
+        F.lit(20) * tf * total_len + F.lit(6) * total_len + F.lit(18) * dl * n_docs
     ).cast("double")
+    return F.round(idf * sat, 6).cast("decimal(18,6)")
+
+
+def bm25_score(
+    tf: DataFrame, df: DataFrame, qterms: DataFrame, stats: DataFrame
+) -> DataFrame:
+    """The BM25 scoring stage shared by the corpus kernel and the
+    persisted store's probe: term hits (term, doc_id, tf, dl) joined to
+    the document frequencies (term, df), the query expansion
+    (query_id, term) and the 1-row corpus stats (n_docs, total_len),
+    all three BROADCAST, then summed per (query_id, doc_id) →
+    (query_id, doc_id, n_terms, s DECIMAL)."""
     scored = (
         tf.join(F.broadcast(df), "term")
         .join(F.broadcast(qterms), "term")
         .crossJoin(F.broadcast(stats))
         .select(
             "query_id", "doc_id",
-            F.round(idf * sat, 6).cast("decimal(18,6)").alias("contrib"),
+            bm25_contrib(
+                F.col("tf"), F.col("df"), F.col("dl").cast("bigint"),
+                F.col("n_docs"), F.col("total_len"),
+            ).alias("contrib"),
         )
     )
     return scored.groupBy("query_id", "doc_id").agg(
         F.count("*").cast("bigint").alias("n_terms"),
         F.sum("contrib").alias("s"),
+    )
+
+
+def bm25_rank(pair: DataFrame, top_k: int = BM25_TOP_K) -> DataFrame:
+    """Per-query top-k of ``bm25_score`` pairs — score DESC, doc_id
+    ASC — in the (query_id, doc_id, n_terms, score, rank) output shape."""
+    w = Window.partitionBy("query_id").orderBy(F.desc("s"), "doc_id")
+    return (
+        pair.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= top_k)
+        .select(
+            F.col("query_id").cast("int").alias("query_id"),
+            "doc_id", "n_terms",
+            F.col("s").cast("double").alias("score"),
+            F.col("rank").cast("int").alias("rank"),
+        )
     )
 
 
@@ -1750,17 +1773,22 @@ def phrase_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle (``PHRASE_SEARCH_SQL`` re-derives probes, both counts, and
     the ranking from the raw table under one value-hash); all-integer
     output."""
-    from pyspark.sql import Window
-
     probes = _phrase_probes(spark, sf_dir)
     docs = table(spark, sf_dir, "documents")
-    res = phrase_search_frame(spark, docs, probes)
+    return phrase_rank(phrase_search_frame(spark, docs, probes))
+
+
+def phrase_rank(hits: DataFrame, top_k: int = PHRASE_TOP_K) -> DataFrame:
+    """Per-query top-k of (query_id, doc_id, phrase, n_exact, n_prox)
+    hits — n_exact DESC, n_prox DESC, doc_id ASC — with the INT rank
+    appended; shared by ``phrase_search`` and the persisted phrase
+    store's probe."""
     w = Window.partitionBy("query_id").orderBy(
         F.desc("n_exact"), F.desc("n_prox"), "doc_id"
     )
     return (
-        res.withColumn("rank", F.row_number().over(w).cast("int"))
-        .where(F.col("rank") <= PHRASE_TOP_K)
+        hits.withColumn("rank", F.row_number().over(w).cast("int"))
+        .where(F.col("rank") <= top_k)
         .select("query_id", "doc_id", "phrase", "n_exact", "n_prox", "rank")
     )
 
@@ -1854,8 +1882,6 @@ def quality_calibrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     (calibrated) keep verdict, and the flip flag where they disagree.
     LIBRARY op: full DuckDB oracle (``QUALITY_CALIBRATE_SQL``);
     all-integer output except the source name."""
-    from pyspark.sql import Window
-
     docs = table(spark, sf_dir, "documents").where(
         F.col("doc_id").isNotNull() & F.col("text").isNotNull()
     )

@@ -52,9 +52,12 @@ def match_orders(
 ) -> Iterator[dict]:
     """Pure-Python order-book fold for ONE sec_code, in seq order.
     Pass ``buy_book``/``sell_book`` to carry open books across chunks
-    of the same key (the bounded-memory batch path and the streaming
-    state operator both do); with the defaults the fold is
-    self-contained.
+    of the same key: the streaming matchmaker
+    (``streaming.state._matchmaker_fn``) seeds them from its keyed
+    state every micro-batch and writes them back. With the defaults
+    the fold is self-contained. The bounded-memory batch path
+    (``_match_partition``) inlines this fold columnar; tests hold the
+    two equal.
 
     Semantics per StatefulStockExchange.java:125-215 /
     InAppStatefulStockExchange.java:76-122:

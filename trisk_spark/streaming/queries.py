@@ -8,7 +8,6 @@ Output-mode mapping (SURVEY.md §7 step 3):
     watermark close
   * running keyed aggs (WC, reduce)    → update (ReducingState emits on
     every update — StatefulWordCount.java:102-135)
-  * windowed stream-stream join (Q8)   → append with two-sided watermark
 
 Each function takes the *stream* DataFrame (same schema as the batch
 derived view) so stream≡batch equivalence is testable by construction.
@@ -18,7 +17,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from trisk_spark.sources.nexmark import auctions, bids, persons
+from trisk_spark.sources.nexmark import bids
 
 
 def q1_stream(events: DataFrame) -> DataFrame:
@@ -54,35 +53,6 @@ def q5_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
         )
         .agg(F.count("*").alias("bid_count"))
         .select(F.col("w.start").alias("window_start"), "auction", "bid_count")
-    )
-
-
-def q8_stream(events: DataFrame, watermark: str = "1 day") -> DataFrame:
-    """Nexmark Q8 streaming: tumbling-window stream-stream equi-join of
-    new persons and their auctions (append; both sides watermarked —
-    Spark's state cleanup needs the join window bound)."""
-    ev = events.withWatermark("ts", watermark)
-    a = auctions(ev).select(
-        "seller", F.date_trunc("day", "date_time").alias("window_start")
-    )
-    # Streaming persons: signup events (no global MIN aggregation in the
-    # stream path — first-signup dedup is the emit-once state op).
-    p = (
-        ev.where(F.col("event_type") == "signup")
-        .select(
-            F.col("user_id").alias("id"),
-            F.concat(F.lit("name_"), F.col("user_id").cast("string")).alias("name"),
-            F.date_trunc("day", "ts").alias("p_window"),
-        )
-        .dropDuplicatesWithinWatermark(["id", "p_window"])
-    )
-    return (
-        a.join(
-            p,
-            (F.col("seller") == F.col("id"))
-            & (F.col("window_start") == F.col("p_window")),
-        )
-        .select("id", "name", "window_start")
     )
 
 
@@ -1066,11 +1036,10 @@ def bm25_score_stream(
     per query inside the row — the seed-term and query sets are
     compile-time constants, df and (N, T) are literals baked into the
     expression, so scoring is stateless, append-mode, ZERO shuffle and
-    no join at all. Contribution arithmetic is the batch expression
-    verbatim (same exact-BIGINT idf/saturation operands, same
-    ROUND(·,6) → DECIMAL) so stream≡batch holds document-for-document
-    on a same-corpus replay (pytest-pinned against
-    ``bm25_pair_scores``). The global per-query top-k RANK is
+    no join at all. Each contribution is the batch stage's own
+    ``text.bm25_contrib`` over BIGINT literals, so stream≡batch holds
+    document-for-document on a same-corpus replay (pytest-pinned
+    against ``bm25_pair_scores``). The global per-query top-k RANK is
     batch-only by design — a stream never holds the full corpus; the
     deployment pairs this scorer with a downstream windowed top-k or
     threshold gate. A seed term the reference corpus never saw has no
@@ -1080,11 +1049,14 @@ def bm25_score_stream(
     its groupBy — stream≡batch therefore assumes id-unique input, the
     ingest invariant ``dedup_exact_stream`` enforces upstream (same
     contract as every id-keyed op, cf. ``_bigram_lm_sql``'s note)."""
-    from trisk_spark.functions.text import BM25_QUERIES, bm25_model
+    from trisk_spark.functions.text import BM25_QUERIES, bm25_contrib, bm25_model
 
     if model is None:
         model = bm25_model(spark, ref_sf_dir)
     dfd, n_docs, total_len = model
+
+    def big(v: int):
+        return F.lit(v).cast("bigint")
 
     d = docs.where(F.col("doc_id").isNotNull())
     toks = F.filter(
@@ -1106,20 +1078,12 @@ def bm25_score_stream(
                 return lambda w: w == F.lit(t)
 
             tf = F.size(F.filter(toks, _eq(term))).cast("bigint")
-            idf = F.log(
-                F.lit(2 * n_docs + 2).cast("double")
-                / F.lit(2 * dfd[term] + 1).cast("double")
-            )
-            sat = (F.lit(44) * tf * F.lit(total_len)).cast("double") / (
-                F.lit(20) * tf * F.lit(total_len)
-                + F.lit(6) * F.lit(total_len)
-                + F.lit(18) * dl * F.lit(n_docs)
-            ).cast("double")
+            contrib = bm25_contrib(tf, big(dfd[term]), dl, big(n_docs), big(total_len))
             hit = tf > 0
             n_terms = n_terms + F.when(hit, F.lit(1)).otherwise(F.lit(0))
-            score = score + F.when(
-                hit, F.round(idf * sat, 6).cast("decimal(18,6)")
-            ).otherwise(F.lit(0).cast("decimal(18,6)"))
+            score = score + F.when(hit, contrib).otherwise(
+                F.lit(0).cast("decimal(18,6)")
+            )
         return F.struct(
             F.lit(qid).cast("int").alias("query_id"),
             n_terms.cast("bigint").alias("n_terms"),

@@ -34,7 +34,7 @@ from pyspark.sql.types import (
 )
 
 from trisk_spark.numeric import cents as _cents
-from trisk_spark.operators.stateful import TRADE_SCHEMA
+from trisk_spark.operators.stateful import TRADE_SCHEMA, match_orders
 
 _BOOK_ENTRY = StructType(
     [
@@ -54,57 +54,12 @@ MATCH_STATE = StructType(
 )
 
 
-def _replay_into_books(sec_code, records, buy_book, sell_book, trades):
-    """Order-matching fold with pre-seeded heaps (StatefulStockExchange
-    .java:125-215 semantics; see operators/stateful.py for the rules).
-    Mutates the heaps; appends emitted trades. Returns book rows for
-    state write-back."""
-    import heapq
-
-    for r in records:
-        if r["tran_maint_code"] in ("D", "X", ""):
-            continue
-        price, vol, seq, no = (
-            int(r["price_cents"]),
-            int(r["order_vol"]),
-            int(r["seq"]),
-            int(r["order_no"]),
-        )
-        if r["trade_dir"] == "B":
-            while vol > 0 and sell_book and sell_book[0][0] <= price:
-                s_price, s_seq, s_rest = sell_book[0]
-                t = min(vol, s_rest[0])
-                trades.append(
-                    dict(
-                        sec_code=sec_code, buy_no=no, sell_no=s_rest[1],
-                        trade_price=s_price, trade_vol=t, match_seq=seq,
-                    )
-                )
-                vol -= t
-                s_rest[0] -= t
-                if s_rest[0] == 0:
-                    heapq.heappop(sell_book)
-            if vol > 0:
-                heapq.heappush(buy_book, (-price, seq, [vol, no]))
-        else:
-            while vol > 0 and buy_book and -buy_book[0][0] >= price:
-                b_neg, b_seq, b_rest = buy_book[0]
-                t = min(vol, b_rest[0])
-                trades.append(
-                    dict(
-                        sec_code=sec_code, buy_no=b_rest[1], sell_no=no,
-                        trade_price=-b_neg, trade_vol=t, match_seq=seq,
-                    )
-                )
-                vol -= t
-                b_rest[0] -= t
-                if b_rest[0] == 0:
-                    heapq.heappop(buy_book)
-            if vol > 0:
-                heapq.heappush(sell_book, (price, seq, [vol, no]))
-    buys_out = [(-np, s, r[0], r[1]) for np, s, r in buy_book]
-    sells_out = [(p, s, r[0], r[1]) for p, s, r in sell_book]
-    return buys_out, sells_out
+def _book_rows(buy_book: list, sell_book: list) -> tuple[list, list]:
+    """``match_orders`` heaps → (buys, sells) state rows of (price, seq,
+    vol, order_no)."""
+    buys = [(-np, s, r[0], r[1]) for np, s, r in buy_book]
+    sells = [(p, s, r[0], r[1]) for p, s, r in sell_book]
+    return buys, sells
 
 
 def _matchmaker_fn(
@@ -122,11 +77,8 @@ def _matchmaker_fn(
     heapq.heapify(sell_book)
 
     batch = pd.concat(list(pdfs)).sort_values("seq")
-    trades: list[dict] = []
-    b_out, s_out = _replay_into_books(
-        key[0], batch.to_dict("records"), buy_book, sell_book, trades
-    )
-    state.update((b_out, s_out))
+    trades = list(match_orders(batch.to_dict("records"), buy_book, sell_book))
+    state.update(_book_rows(buy_book, sell_book))
     if trades:
         yield pd.DataFrame(trades)
 
