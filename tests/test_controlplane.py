@@ -5,20 +5,25 @@ errors; we assert the outputs).
 
 Scenarios mirror SURVEY.md §2C:
   * StockController schedule (rebalance/scale-out/scale-out/scale-in)
-    over a stateful running wordcount — final counts must equal batch.
+    over a stateful running wordcount — final counts must equal batch
+    (Spark-owned aggregation state: replayed).
+  * The same schedule over the keyed-state matchmaker — state migrates
+    by key: trades equal batch exactly once, and each resume reads the
+    seed, not the history.
   * Stateless rescale resumes from the SAME checkpoint — no replay, no
     duplicate emission.
   * Rules change-of-logic hot-swap — new rules next batch, no restart.
   * Plan primitives: tags, diff kinds, key-group dealing.
   * StreamSwitch policy decisions from synthetic progress.
+
+The longer reconfiguration-under-load drives are in the slow lane.
 """
 
 from __future__ import annotations
 
-import pytest as _pytest
-
-# nightly lane: reconfiguration-under-load sweeps
-pytestmark = _pytest.mark.slow
+import json
+import os
+from collections import Counter
 
 import pytest
 from pyspark.sql import functions as F
@@ -43,6 +48,9 @@ from trisk_spark.controlplane.plan import (
 )
 from trisk_spark.controlplane.metrics import Progress
 from trisk_spark.operators.fraud import Rule, evaluate_rules, transactions
+from trisk_spark.registry import load_all
+from trisk_spark.sources.stock import stock_orders
+from trisk_spark.streaming.state import matchmaker_stream
 
 SF = "/root/testdata/sf0.001"
 
@@ -54,6 +62,7 @@ def _final_counts(emitted) -> dict[str, int]:
     return latest
 
 
+@pytest.mark.slow
 def test_stock_controller_schedule_preserves_results(spark):
     docs = table(spark, SF, "documents")
     staged = StagedReplay(docs, "doc_id", n_chunks=10)
@@ -88,6 +97,7 @@ def test_stock_controller_schedule_preserves_results(spark):
     assert all(e["state_replayed"] for e in mq.reconfig_log)
 
 
+@pytest.mark.slow
 def test_stateless_rescale_resumes_same_checkpoint_no_duplicates(spark):
     events = table(spark, SF, "events")
     staged = StagedReplay(events, "ts", n_chunks=4)
@@ -120,9 +130,6 @@ def test_stateless_rescale_resumes_same_checkpoint_no_duplicates(spark):
 def _offset_log_partitions(checkpoint: str) -> set[str]:
     """``spark.sql.shuffle.partitions`` as recorded in every batch of a
     stream checkpoint's offset log."""
-    import json
-    import os
-
     offsets = os.path.join(checkpoint, "offsets")
     out = set()
     for name in os.listdir(offsets):
@@ -154,6 +161,173 @@ def test_rescale_records_new_parallelism_and_leaves_callers_conf(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == callers
 
 
+def _matchmaker_query(spark, staged, name: str) -> ManagedQuery:
+    def build(sp, plan):
+        return matchmaker_stream(stock_orders(staged.stream(sp)))
+
+    return ManagedQuery(spark, name, build, mode="append", parallelism=2)
+
+
+def _staged_keys(spark, staged) -> int:
+    """Order books among the chunks staged so far."""
+    paths = [os.path.join(staged.pantry, c) for c in staged.chunks[: staged.staged]]
+    return stock_orders(spark.read.parquet(*paths)).select("sec_code").distinct().count()
+
+
+def _trades(emitted) -> Counter:
+    return Counter(tuple(r) for _inc, _bid, r in emitted)
+
+
+def test_matchmaker_rescale_migrates_keyed_state(spark):
+    """StockController over the keyed-state matchmaker, drained and
+    resumed stage by stage: each reconfiguration moves the books by key
+    (no replay), each resume reads only the seed, and the trades equal
+    batch ``stock_matchmaker`` as a multiset — nothing re-emitted."""
+    staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=5)
+    mq = _matchmaker_query(spark, staged, "mm-migrate")
+    controller = StockController()
+    keys = []
+    for stage in range(1, 6):
+        staged.stage(stage)
+        mq.run_available()
+        plan = mq.get_plan_copy()
+        if controller.on_stage(stage, plan, mq.operator):
+            keys.append(_staged_keys(spark, staged))
+            mq.apply(plan)
+            mq.run_available()  # resume, nothing new staged
+
+    batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
+    assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
+    assert len(mq.reconfig_log) == 4
+    for entry, n_keys in zip(mq.reconfig_log, keys):
+        assert entry["mode"] == "migrate" and not entry["state_replayed"]
+        assert entry["state_rows"] == n_keys
+        assert entry["input_rows"] <= entry["state_rows"]
+    assert _offset_log_partitions(mq.checkpoint) == {"3"}  # 2, 2, 3, 4, 3
+
+
+def test_back_to_back_applies_carry_the_pending_seed(spark):
+    """Two reconfigurations with no batch between them: the second
+    carries the first's seed and cut forward, so every key keeps its
+    books."""
+    staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=3)
+    mq = _matchmaker_query(spark, staged, "mm-carry")
+    staged.stage(1)
+    mq.run_available()
+    for p in (3, 4):
+        plan = mq.get_plan_copy()
+        plan.assign_workload("main", round_robin(p))
+        mq.apply(plan)
+    first, second = mq.reconfig_log
+    assert first["mode"] == second["mode"] == "migrate"
+    assert second["state_rows"] == first["state_rows"] == _staged_keys(spark, staged)
+    staged.stage(3)
+    mq.run_available()
+
+    assert _offset_log_partitions(mq.checkpoint) == {"4"}
+    batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
+    assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
+
+
+def test_keyed_state_folds_the_seed_once_before_input(spark, tmp_path):
+    """``keyed_state`` under a seed: a key's seed is its state before its
+    first input row; a seed-only key is stored without calling ``fn``;
+    seed and input keep their int64 values exact past 2**53."""
+    import pandas as pd
+
+    from trisk_spark.session import sibling_session
+    from trisk_spark.streaming.queryable import read_keyed_state
+    from trisk_spark.streaming.sources import checkpoint_dir
+    from trisk_spark.streaming.state import SEED_CONF, keyed_state, seed_rows
+
+    big = 2**60 + 1
+    spark.createDataFrame([(1, big), (2, 5)], "k long, v long").write.parquet(
+        str(tmp_path / "in")
+    )
+    seed_rows(
+        spark.createDataFrame(
+            [((1,), ((big, 1),)), ((3,), ((7, 2),))],
+            "key struct<k: long>, value struct<groupState: struct<total: long, n: long>>",
+        )
+    ).write.parquet(str(tmp_path / "seed"))
+
+    def fn(key, pdfs, state):
+        total, n = state.get if state.exists else (0, 0)
+        for pdf in pdfs:
+            assert list(pdf.columns) == ["k", "v"] and str(pdf["v"].dtype) == "int64"
+            total, n = total + sum(int(v) for v in pdf["v"]), n + len(pdf)
+        state.update((total, n))
+        yield pd.DataFrame({"k": [key[0]], "total": [total], "n": [n]})
+
+    sp = sibling_session(spark, {SEED_CONF: str(tmp_path / "seed")})
+    stream = sp.readStream.schema("k long, v long").parquet(str(tmp_path / "in"))
+    ckpt = checkpoint_dir("seed-fold")
+    rows = []
+    keyed_state(
+        stream, "k", fn, "k long, total long, n long", "total long, n long", "update"
+    ).writeStream.outputMode("update").foreachBatch(
+        lambda b, _i: rows.extend(b.collect())
+    ).option("checkpointLocation", ckpt).trigger(availableNow=True).start().awaitTermination()
+
+    assert sorted(tuple(r) for r in rows) == [(1, 2 * big, 2), (2, 5, 1)]
+    state = read_keyed_state(spark, ckpt).select("key.k", "value.groupState.*")
+    assert sorted(tuple(r) for r in state.collect()) == [(1, 2 * big, 2), (2, 5, 1), (3, 7, 2)]
+
+
+def test_keyed_state_outside_the_helper_falls_back_to_replay(spark):
+    """A build that calls applyInPandasWithState itself never reads the
+    seed; the resume notices before it starts and replays instead."""
+    from trisk_spark.streaming.state import _WC_OUT, _WC_STATE, _running_count_fn
+
+    events = table(spark, SF, "events")
+    staged = StagedReplay(events, "ts", n_chunks=2)
+
+    def build(sp, plan):
+        words = staged.stream(sp).select(F.col("event_type").alias("word"))
+        return words.groupBy("word").applyInPandasWithState(
+            _running_count_fn, _WC_OUT, _WC_STATE, "update", "NoTimeout"
+        )
+
+    mq = ManagedQuery(spark, "raw-keyed", build, parallelism=2)
+    staged.stage(1)
+    mq.run_available()
+    plan = mq.get_plan_copy()
+    plan.assign_workload("main", round_robin(3))
+    assert mq.apply(plan)["mode"] == "migrate"  # the checkpoint's verdict
+    staged.stage(2)
+    mq.run_available()
+    assert mq.reconfig_log[-1]["mode"] == "replay"
+    assert mq.reconfig_log[-1]["state_replayed"]
+    want = {
+        r.event_type: r.cnt
+        for r in events.groupBy("event_type").agg(F.count("*").alias("cnt")).collect()
+    }
+    assert _final_counts(mq.emitted) == want
+
+
+def test_keyed_state_with_timeouts_replays(spark):
+    """The migrated row would not carry the event-time timer, so keyed
+    state with timeouts re-shards by replay."""
+    from trisk_spark.streaming.state import event_time_sessions_stream
+
+    staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=2)
+    mq = ManagedQuery(
+        spark,
+        "timeout-keyed",
+        lambda sp, plan: event_time_sessions_stream(staged.stream(sp)),
+        mode="append",
+        parallelism=2,
+    )
+    staged.stage(1)
+    mq.run_available()
+    plan = mq.get_plan_copy()
+    plan.assign_workload("main", round_robin(3))
+    entry = mq.apply(plan)
+    assert entry["mode"] == "replay" and entry["state_replayed"]
+    assert mq.seed is None and mq.cut == []
+
+
+@pytest.mark.slow
 def test_rules_hot_swap_takes_effect_next_batch_without_restart(spark):
     events = table(spark, SF, "events")
     staged = StagedReplay(events, "ts", n_chunks=2)
@@ -268,6 +442,7 @@ def test_streamswitch_policy(durations, parallelism, expect):
         assert got is not None and got < parallelism
 
 
+@pytest.mark.slow
 def test_state_size_sweep_invariant_results_and_timing(spark):
     """SD microbench (StatefulDemoLongRun.java:54-160): per-key payload
     state swept over sizes; results must be payload-invariant and every
@@ -287,15 +462,18 @@ def test_state_size_sweep_invariant_results_and_timing(spark):
         assert rec["final_counts"] == want, (
             f"{rec['per_key_bytes']}B payload changed results"
         )
-        # exactly one rescale, state re-sharded, timing fields recorded
+        # exactly one rescale; the keyed payload state migrated by key
+        # (every user has state by the barrier); timing fields recorded
         assert len(rec["reconfig_log"]) == 1
         entry = rec["reconfig_log"][0]
-        assert entry["state_replayed"]
-        assert {"sync_s", "update_s", "kinds"} <= set(entry)
+        assert entry["mode"] == "migrate"
+        assert entry["state_rows"] == len(want)
+        assert {"sync_s", "update_s", "kinds", "resume_s", "input_rows"} <= set(entry)
         assert rec["drive_s"] > 0
     assert [r["per_key_bytes"] for r in records] == list(sizes)
 
 
+@pytest.mark.slow
 def test_dynamic_controller_submission_over_http(spark):
     """StreamManager.registerNewController (REST + in-memory compile,
     StreamManager.java:1037-1059 / ByteClassLoader.java:111-124): submit
@@ -363,6 +541,7 @@ def test_dynamic_controller_submission_over_http(spark):
         srv.shutdown()
 
 
+@pytest.mark.slow
 def test_progress_monitor_attaches(spark):
     mon = ProgressMonitor()
     spark.streams.addListener(mon)

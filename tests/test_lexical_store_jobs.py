@@ -41,7 +41,7 @@ def _cold_jobs(spark, name):
     "name, jobs",
     [
         ("bm25_incremental", (19, 26)),
-        ("phrase_incremental", (15, 19)),
+        ("phrase_incremental", (14, 18)),
         ("phrase_takedown", (16, 20)),
         ("hybrid_store_probe", (34, 51)),
     ],

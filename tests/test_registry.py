@@ -259,3 +259,24 @@ def test_readme_op_table_names_are_registered():
         if c not in reg and c not in known_non_queries
     }
     assert not missing, f"README cites unregistered queries: {sorted(missing)}"
+    # module-qualified citations (`text.bm25_rank`) must name a real
+    # attribute of a trisk_spark module of that name
+    qualified = set(re.findall(r"`([a-z0-9_]+(?:\.[a-z0-9_]+)+)`", section))
+    unresolved = {q for q in qualified if not _resolves(q)}
+    assert not unresolved, f"README cites missing module attributes: {sorted(unresolved)}"
+
+
+def _resolves(qualified: str) -> bool:
+    """``mod.attr`` (or ``pkg.mod.attr``) names an attribute of some
+    ``trisk_spark`` module whose dotted name ends with ``mod``."""
+    import importlib
+    import pkgutil
+
+    import trisk_spark
+
+    mod, attr = qualified.rsplit(".", 1)
+    for info in pkgutil.walk_packages(trisk_spark.__path__, "trisk_spark."):
+        if info.name == f"trisk_spark.{mod}" or info.name.endswith(f".{mod}"):
+            if hasattr(importlib.import_module(info.name), attr):
+                return True
+    return False

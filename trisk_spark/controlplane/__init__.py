@@ -12,8 +12,11 @@ boundary is a consistent quiesce point. The mapping (SURVEY.md §3.2):
 
 | Trisk primitive            | here                                     |
 |----------------------------|------------------------------------------|
-| assignWorkload (key remap) | shuffle-partition change + state re-shard |
-|                            | via checkpointed-source replay            |
+| assignWorkload (key remap) | shuffle-partition change; keyed state     |
+|                            | migrates by key (barrier snapshot seeds   |
+|                            | the new checkpoint, the source is cut at  |
+|                            | what the old one committed); Spark-owned  |
+|                            | state re-shards by checkpointed replay    |
 | assignExecutionLogic       | rules re-read per micro-batch (no restart)|
 |                            | or stop→rebuild→resume for real UDF swaps |
 | assignResources (placement)| documented no-op (Spark scheduler's job)  |

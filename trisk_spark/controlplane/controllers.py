@@ -90,7 +90,8 @@ def run_scripted(
         plan = mq.get_plan_copy()
         if controller.on_stage(stage + 1, plan, mq.operator):
             mq.apply(plan)
-    # A trailing reconfig that re-sharded state needs one more drain to
-    # re-emit under the final layout (resume half of the protocol).
-    if mq.reconfig_log and mq.reconfig_log[-1]["state_replayed"]:
+    # A trailing reconfig that moved state needs one more incarnation on
+    # the new layout (the resume half of the protocol; a replay
+    # re-emits there).
+    if mq.reconfig_log and mq.reconfig_log[-1]["mode"] != "resume":
         mq.run_available()

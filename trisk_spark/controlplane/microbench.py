@@ -14,11 +14,14 @@ drain time are the measurements; the counter doubles as the correctness
 invariant (final counts must equal the batch groupBy regardless of
 payload size — state volume must never change results).
 
-At 100 TB the interesting number is exactly this curve: re-sharding is
-a full checkpoint-source replay in this engine (state-store partition
-count is pinned at first run — SURVEY §7.6), so migration cost is
-O(state read back), linear in per-key payload — same asymptotic as the
-reference's state redistribution, without the custom migration RPC.
+At 100 TB the interesting number is exactly this curve. The payload
+op keeps its state through ``keyed_state``, so the rescale migrates it
+by key: the barrier snapshot is read from the state store, written as
+seed rows under the new checkpoint and folded in by the first batch of
+the new incarnation, which reads no history (ManagedQuery, mode
+``migrate``). Migration cost therefore follows the state moved —
+linear in keys × per-key payload, not in the events drained — the
+reference's state redistribution without its custom migration RPC.
 """
 
 from __future__ import annotations
@@ -29,7 +32,7 @@ from typing import Any
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+from pyspark.sql.streaming.state import GroupState
 from pyspark.sql.types import (
     BinaryType,
     LongType,
@@ -41,6 +44,7 @@ from trisk_spark.catalog import table
 from trisk_spark.controlplane.controllers import run_scripted
 from trisk_spark.controlplane.managed import ManagedQuery, StagedReplay
 from trisk_spark.controlplane.plan import ExecutionPlan, round_robin
+from trisk_spark.streaming.state import keyed_state
 
 _PAYLOAD_OUT = StructType(
     [StructField("user_id", LongType()), StructField("cnt", LongType())]
@@ -70,12 +74,13 @@ def payload_state_fn(per_key_bytes: int):
 
 
 def payload_state_stream(events: DataFrame, per_key_bytes: int) -> DataFrame:
-    return events.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        events,
+        "user_id",
         payload_state_fn(per_key_bytes),
-        outputStructType=_PAYLOAD_OUT,
-        stateStructType=_PAYLOAD_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _PAYLOAD_OUT,
+        _PAYLOAD_STATE,
+        "update",
     )
 
 
@@ -101,8 +106,8 @@ def state_size_sweep(
     """Run the SD job once per payload size; each run rescales mid-drive.
 
     Returns one record per size: final per-key counts (the invariant),
-    the reconfig timing log, and the total drive wall time (which
-    includes the post-reconfig state re-shard replay — the cost that
+    the reconfig log (mode, seed rows, timings) and the total drive
+    wall time (which includes the migrated resume — the cost that
     scales with per-key state)."""
     events = table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     out: list[dict[str, Any]] = []

@@ -15,7 +15,9 @@ incarnation is built on (the caller's session keeps its own value), and
 the stream's offset log records it at first run. The distribution
 map is intent: Spark's HashPartitioning realizes it, and a *custom*
 distribution (non-uniform deal) is realized by restarting with the new
-partition count and letting the replayed state land on the new layout.
+partition count and letting the state land on the new layout — keyed
+state as migrated seed rows, Spark-owned state by replay
+(controlplane/managed.py).
 """
 
 from __future__ import annotations

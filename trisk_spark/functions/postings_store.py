@@ -136,8 +136,10 @@ class PostingsStore:
     def _wave(self, docs: DataFrame) -> tuple[DataFrame, DataFrame]:
         """ONE derivation of a wave: (postings, ledger). The ledger is
         what the append tail checks and what the ingest sink receives;
-        here it is the postings themselves, materialized once."""
-        wave = self.postings(docs).localCheckpoint()
+        here it is the postings themselves, materialized once — by the
+        append tail's emptiness count, which computes the lazy
+        checkpoint."""
+        wave = self.postings(docs).localCheckpoint(eager=False)
         return wave, wave
 
     def _append_wave(

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, functions as F
 
 from trisk_spark.sources.nexmark import bids
+from trisk_spark.streaming.state import keyed_state
 
 
 def q1_stream(events: DataFrame) -> DataFrame:
@@ -787,7 +788,7 @@ def cluster_cap_stream(
     is ≤ N_CENTROIDS ints; the only stream-side exchange routes
     id-sized (vec_id, list_id, md5) triples to their list's counter."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     from trisk_spark.catalog import table
     from trisk_spark.functions.sampling import CLUSTER_CAP
@@ -837,12 +838,13 @@ def cluster_cap_stream(
                 }
             )
 
-    return assigned.groupBy("list_id").applyInPandasWithState(
+    return keyed_state(
+        assigned,
+        "list_id",
         admit,
-        outputStructType="vec_id long, list_id long, rank int",
-        stateStructType="n int",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "vec_id long, list_id long, rank int",
+        "n int",
+        "append",
     )
 
 
@@ -867,7 +869,7 @@ def shuffle_shards_stream(docs: DataFrame, n_shards: int | None = None) -> DataF
     100 TB: zero stream-side model; the only exchange routes id-sized
     (doc_id, shard, md5) triples to their shard's counter."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     from trisk_spark.functions.sampling import N_SHUFFLE_SHARDS
 
@@ -905,12 +907,13 @@ def shuffle_shards_stream(docs: DataFrame, n_shards: int | None = None) -> DataF
         else:
             state.update((n,))
 
-    return d.groupBy("shard").applyInPandasWithState(
+    return keyed_state(
+        d,
+        "shard",
         assign,
-        outputStructType="doc_id long, shard int, pos long",
-        stateStructType="n long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "doc_id long, shard int, pos long",
+        "n long",
+        "append",
     )
 
 
@@ -1202,7 +1205,7 @@ def funnel_stream(events: DataFrame) -> DataFrame:
     triples to their user's state; all stage logic inside the state op
     is vectorized column mins, no per-row Python."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     from trisk_spark.functions.funnel import FUNNEL_STAGES
 
@@ -1261,15 +1264,16 @@ def funnel_stream(events: DataFrame) -> DataFrame:
         # key would otherwise persist the all-null row the pre-filter
         # comment promises never enters the store)
 
-    return e.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        e,
+        "user_id",
         step,
-        outputStructType=(
+        (
             "user_id long, stage string, stage_idx int, us long, "
             "wait_us long"
         ),
-        stateStructType="t1 long, t2 long, t3 long",
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "t1 long, t2 long, t3 long",
+        "append",
     )
 
 
@@ -1299,7 +1303,7 @@ def ts_acf_stream(events: DataFrame) -> DataFrame:
     deliberately exact-Python-int generator loops (no int64 overflow
     cliff on products), O(rows) per touched user per batch."""
     import pandas as pd
-    from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
+    from pyspark.sql.streaming.state import GroupState
 
     from trisk_spark.functions.timeseries import TS_ACF_LAGS, events_cents
 
@@ -1356,13 +1360,14 @@ def ts_acf_stream(events: DataFrame) -> DataFrame:
         # no chunks: nothing changed — skip the state write (update
         # would mark the key dirty and re-persist an identical row)
 
-    return e.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        e,
+        "user_id",
         step,
-        outputStructType="user_id long, lag int, acf double, n long",
-        stateStructType=(
+        "user_id long, lag int, acf double, n long",
+        (
             "n long, s long, q long, c1 long, c2 long, c3 long, "
             "c4 long, first array<long>, last array<long>"
         ),
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        "update",
     )

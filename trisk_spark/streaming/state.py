@@ -6,7 +6,9 @@ reference's state primitives (SURVEY.md §2A "Stateful processing"):
   buffered ListState       → array<struct> state field
 
 Implementation: ``applyInPandasWithState`` (GroupState) — the Spark
-3.4+ Arrow-batched keyed-state API. Spark 4's successor,
+3.4+ Arrow-batched keyed-state API, reached only through
+``keyed_state``, which also folds in keyed state migrated by a rescale
+(controlplane/managed.py). Spark 4's successor,
 ``transformWithStateInPandas`` (StatefulProcessor), needs
 ``google.protobuf`` for its Python protocol, which this environment
 lacks, so no operator here uses it.
@@ -20,13 +22,17 @@ from __future__ import annotations
 
 from collections.abc import Iterator
 
+import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Row, functions as F
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 from pyspark.sql.types import (
     ArrayType,
+    BooleanType,
+    DataType,
     DoubleType,
     IntegerType,
+    IntegralType,
     LongType,
     StringType,
     StructField,
@@ -35,6 +41,105 @@ from pyspark.sql.types import (
 
 from trisk_spark.numeric import cents as _cents
 from trisk_spark.operators.stateful import TRADE_SCHEMA, match_orders
+
+#: Session conf naming a parquet directory of ``seed_rows``: migrated
+#: keyed state. ManagedQuery sets it on the sibling session it builds an
+#: incarnation on; a caller's session never carries it.
+SEED_CONF = "trisk.keyedState.seed"
+_SEED_COL = "__trisk_seed"
+
+
+def seed_rows(store: DataFrame) -> DataFrame:
+    """A state-store read of keyed state (``queryable.read_keyed_state``)
+    as the rows ``keyed_state`` folds in: the key columns plus the state
+    value as a one-element array. Arrow converts a struct column's
+    fields over a whole chunk, so the input rows' nulls would turn the
+    seed's integral fields into floats; an array's elements convert on
+    their own."""
+    return store.select("key.*", F.array(F.col("value.groupState")).alias(_SEED_COL))
+
+
+def keyed_state(
+    df: DataFrame,
+    keys: str | list[str],
+    fn,
+    out: StructType | str,
+    state: StructType | str,
+    mode: str,
+    timeout: str = GroupStateTimeout.NoTimeout,
+) -> DataFrame:
+    """``df.groupBy(*keys).applyInPandasWithState(fn, ...)``: the one way
+    the library keeps keyed state.
+
+    When the session carries a migrated snapshot (``SEED_CONF``), its
+    rows stream in unioned with the input in front of the operator;
+    each key's seed is folded into its state exactly once, in the first
+    batch of the new incarnation, before any of that key's input. A key
+    with only a seed row is folded and not passed to ``fn``."""
+    keys = [keys] if isinstance(keys, str) else list(keys)
+    spark = df.sparkSession
+    seed = spark.conf.get(SEED_CONF, None)
+    if seed:
+        state_type = state if isinstance(state, StructType) else StructType.fromDDL(state)
+        seed_schema = StructType(
+            [df.schema[k] for k in keys] + [StructField(_SEED_COL, ArrayType(state_type))]
+        )
+        # Arrow hands pandas an integral or boolean column that holds a
+        # null as float64/object (exact only below 2**53): seed rows carry
+        # zeros there, so the input chunks they share keep their dtypes
+        zeros = [
+            F.lit(0).cast(f.dataType).alias(f.name)  # false for a boolean
+            for f in df.schema
+            if f.name not in keys and isinstance(f.dataType, (IntegralType, BooleanType))
+        ]
+        seeds = spark.readStream.schema(seed_schema).parquet(seed).select("*", *zeros)
+        df = df.unionByName(seeds, allowMissingColumns=True)
+        fn = _seeded(fn, state_type)
+    return df.groupBy(*keys).applyInPandasWithState(
+        fn,
+        outputStructType=out,
+        stateStructType=state,
+        outputMode=mode,
+        timeoutConf=timeout,
+    )
+
+
+def _seeded(fn, state_type: StructType):
+    """``fn`` behind the seed fold: a key's seed row becomes its state,
+    then ``fn`` sees the key's input chunks as it would without seeds."""
+
+    def run(key, pdfs: Iterator[pd.DataFrame], state: GroupState) -> Iterator[pd.DataFrame]:
+        chunks = []
+        for pdf in pdfs:
+            seed = pdf[_SEED_COL].notna()
+            if seed.any():
+                value = pdf[_SEED_COL][seed].iloc[0][0]
+                state.update(tuple(_state_value(value[f.name], f.dataType) for f in state_type))
+                pdf = pdf[~seed].reset_index(drop=True)
+            if len(pdf):
+                chunks.append(pdf.drop(columns=_SEED_COL))
+        if chunks:
+            yield from fn(key, iter(chunks), state)
+
+    return run
+
+
+def _state_value(v, t: DataType):
+    """A seed value as Arrow hands it to pandas (structs as dicts, arrays
+    as ndarrays, numpy scalars, nulls as None) → the value a GroupState
+    read of the same state holds (Rows, lists, Python scalars). Integral
+    fields of array elements come as floats where a sibling element
+    holds a null there; they are ints again."""
+    if v is None:
+        return None
+    if isinstance(t, StructType):
+        return Row(**{f.name: _state_value(v[f.name], f.dataType) for f in t})
+    if isinstance(t, ArrayType):
+        return [_state_value(x, t.elementType) for x in v]
+    if isinstance(t, IntegralType):
+        return int(v)
+    return v.item() if isinstance(v, np.generic) else v
+
 
 _BOOK_ENTRY = StructType(
     [
@@ -110,19 +215,15 @@ def matchmaker_stream(orders: DataFrame, state_ttl_ms: int | None = None) -> Dat
     books for keys idle longer than the TTL are evicted — without it,
     inactive securities would pin their open books forever."""
     if state_ttl_ms is None:
-        return orders.groupBy("sec_code").applyInPandasWithState(
-            _matchmaker_fn,
-            outputStructType=TRADE_SCHEMA,
-            stateStructType=MATCH_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.NoTimeout,
-        )
-    return orders.groupBy("sec_code").applyInPandasWithState(
+        return keyed_state(orders, "sec_code", _matchmaker_fn, TRADE_SCHEMA, MATCH_STATE, "append")
+    return keyed_state(
+        orders,
+        "sec_code",
         _matchmaker_ttl_fn(state_ttl_ms),
-        outputStructType=TRADE_SCHEMA,
-        stateStructType=MATCH_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        TRADE_SCHEMA,
+        MATCH_STATE,
+        "append",
+        GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
@@ -146,13 +247,7 @@ def _running_count_fn(
 def running_wordcount_stream(words: DataFrame) -> DataFrame:
     """ReducingState word count (StatefulWordCount.java:102-135): one
     counter per word, emit the running total on every update."""
-    return words.groupBy("word").applyInPandasWithState(
-        _running_count_fn,
-        outputStructType=_WC_OUT,
-        stateStructType=_WC_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(words, "word", _running_count_fn, _WC_OUT, _WC_STATE, "update")
 
 
 # ------------------------------------------------- emit-once join ----
@@ -210,13 +305,7 @@ def emit_once_join_stream(tagged: DataFrame) -> DataFrame:
     """`tagged`: streaming DF (key, side, auction_id, seq) — the
     union-tagged two-input stream (ConnectedStreams/CoFlatMap
     equivalent, SURVEY §2A 'connect')."""
-    return tagged.groupBy("key").applyInPandasWithState(
-        _emit_once_fn,
-        outputStructType=_EMIT_OUT,
-        stateStructType=_EMIT_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(tagged, "key", _emit_once_fn, _EMIT_OUT, _EMIT_STATE, "append")
 
 
 def stateful_session_confs(spark) -> None:
@@ -277,12 +366,13 @@ def count_window_stream(events: DataFrame) -> DataFrame:
     """Per-key count windows over an events stream; fires exactly when
     the N-th event arrives (count trigger), append output. Batch
     equivalent: operators/multistream.count_window."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        events,
+        "user_id",
         _count_window_fn,
-        outputStructType=_CW_OUT,
-        stateStructType=_CW_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _CW_OUT,
+        _CW_STATE,
+        "append",
     )
 
 
@@ -324,12 +414,13 @@ def _sliding_count_fn(
 def sliding_count_avg_stream(events: DataFrame) -> DataFrame:
     """Streaming count-evictor window; batch equivalent:
     operators/multistream.sliding_count_window."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        events,
+        "user_id",
         _sliding_count_fn,
-        outputStructType=_SLIDE_OUT,
-        stateStructType=_SLIDE_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _SLIDE_OUT,
+        _SLIDE_STATE,
+        "append",
     )
 
 
@@ -373,12 +464,13 @@ def _delta_trigger_stream_fn(
 def delta_trigger_stream(events: DataFrame) -> DataFrame:
     """Streaming delta trigger; batch equivalent:
     operators/multistream.delta_trigger."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        events,
+        "user_id",
         _delta_trigger_stream_fn,
-        outputStructType=_DELTA_OUT,
-        stateStructType=_DELTA_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _DELTA_OUT,
+        _DELTA_STATE,
+        "append",
     )
 
 
@@ -432,12 +524,14 @@ def _inactivity_fn(
 
 def inactivity_sessions_stream(events: DataFrame) -> DataFrame:
     """Per-key inactivity sessions closed by processing-time timers."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        events,
+        "user_id",
         _inactivity_fn,
-        outputStructType=_SESS_OUT,
-        stateStructType=_SESS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
+        _SESS_OUT,
+        _SESS_STATE,
+        "append",
+        GroupStateTimeout.ProcessingTimeTimeout,
     )
 
 
@@ -518,16 +612,14 @@ def event_time_sessions_stream(
     """Event-time session windows closed by per-key event-time timers —
     the watermark, not the wall clock, drives the callbacks. Input needs
     ``ts`` (timestamp), ``event_id``, ``user_id``, ``value``."""
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _event_session_fn,
-            outputStructType=_ET_SESS_OUT,
-            stateStructType=_ET_SESS_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_state(
+        events.withWatermark("ts", watermark_delay),
+        "user_id",
+        _event_session_fn,
+        _ET_SESS_OUT,
+        _ET_SESS_STATE,
+        "append",
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -584,12 +676,13 @@ def _delta_evictor_fn(
 def delta_evictor_stream(events: DataFrame) -> DataFrame:
     """Streaming DeltaEvictor count window; batch equivalent:
     operators/multistream.delta_evictor_window."""
-    return events.groupBy("user_id").applyInPandasWithState(
+    return keyed_state(
+        events,
+        "user_id",
         _delta_evictor_fn,
-        outputStructType=_DE_OUT,
-        stateStructType=_DE_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _DE_OUT,
+        _DE_STATE,
+        "append",
     )
 
 
@@ -723,16 +816,14 @@ def continuous_trigger_stream(
     """Streaming ContinuousEventTimeTrigger; batch equivalent:
     operators/multistream.continuous_trigger. Input needs ``ts``,
     ``user_id``, ``value``."""
-    return (
-        events.withWatermark("ts", watermark_delay)
-        .groupBy("user_id")
-        .applyInPandasWithState(
-            _continuous_trigger_fn,
-            outputStructType=_CT_OUT,
-            stateStructType=_CT_STATE,
-            outputMode="append",
-            timeoutConf=GroupStateTimeout.EventTimeTimeout,
-        )
+    return keyed_state(
+        events.withWatermark("ts", watermark_delay),
+        "user_id",
+        _continuous_trigger_fn,
+        _CT_OUT,
+        _CT_STATE,
+        "append",
+        GroupStateTimeout.EventTimeTimeout,
     )
 
 
@@ -817,12 +908,13 @@ def simhash_near_dup_stream(docs: DataFrame) -> DataFrame:
             )
         ).alias("band"),
     ).select("doc_id", "fp", "band.band_idx", "band.bv")
-    return bands.groupBy("band_idx", "bv").applyInPandasWithState(
+    return keyed_state(
+        bands,
+        ["band_idx", "bv"],
         _near_dup_fn,
-        outputStructType=_ND_OUT,
-        stateStructType=_ND_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _ND_OUT,
+        _ND_STATE,
+        "append",
     )
 
 
@@ -864,12 +956,13 @@ def ttl_wordcount_fn(ttl_ms: int):
 def ttl_running_wordcount_stream(words: DataFrame, ttl_ms: int) -> DataFrame:
     """ReducingState word count + state TTL: counts restart when a key
     is idle beyond the TTL. Input needs ``word`` and ``ts``."""
-    return words.groupBy("word").applyInPandasWithState(
+    return keyed_state(
+        words,
+        "word",
         ttl_wordcount_fn(ttl_ms),
-        outputStructType=_TTL_WC_OUT,
-        stateStructType=_TTL_WC_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _TTL_WC_OUT,
+        _TTL_WC_STATE,
+        "update",
     )
 
 
@@ -950,13 +1043,7 @@ def asof_stream(events: DataFrame) -> DataFrame:
         "event_id",
         "value",
     )
-    return tagged.groupBy("user_id").applyInPandasWithState(
-        _asof_fn,
-        outputStructType=_ASOF_OUT,
-        stateStructType=_ASOF_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(tagged, "user_id", _asof_fn, _ASOF_OUT, _ASOF_STATE, "append")
 
 
 # --------------------------------- streaming sequence packing -------
@@ -1022,13 +1109,7 @@ def sequence_pack_stream(docs: DataFrame) -> DataFrame:
     d = docs.where(F.col("doc_id").isNotNull()).select(
         "doc_id", "source", toks.alias("n_tokens")
     )
-    return d.groupBy("source").applyInPandasWithState(
-        _pack_fn,
-        outputStructType=_PACK_OUT,
-        stateStructType=_PACK_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(d, "source", _pack_fn, _PACK_OUT, _PACK_STATE, "append")
 
 
 # ----------------------------- time-series pattern alerts (r8) -------
@@ -1126,14 +1207,13 @@ def ts_pattern_alert_stream(
     completed window is scored with the exact batch arithmetic and
     matches under the threshold emit append-only alerts
     (stream≡batch pytest-pinned)."""
-    return events.where(F.col("user_id").isNotNull()).groupBy(
-        "user_id"
-    ).applyInPandasWithState(
+    return keyed_state(
+        events.where(F.col("user_id").isNotNull()),
+        "user_id",
         ts_pattern_alert_fn(probes, max_dist2),
-        outputStructType=_TS_OUT,
-        stateStructType=_TS_STATE,
-        outputMode="append",
-        timeoutConf=GroupStateTimeout.NoTimeout,
+        _TS_OUT,
+        _TS_STATE,
+        "append",
     )
 
 
@@ -1204,10 +1284,4 @@ def running_topk_stream(scored: DataFrame, k: int = TOPK_K) -> DataFrame:
     columns gets the same leaderboard."""
     if k != TOPK_K:  # the state schema is fixed; k rides the constant
         raise ValueError("running_topk_stream is pinned to TOPK_K")
-    return scored.groupBy("query_id").applyInPandasWithState(
-        _topk_fn,
-        outputStructType=_TOPK_OUT,
-        stateStructType=_TOPK_STATE,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
+    return keyed_state(scored, "query_id", _topk_fn, _TOPK_OUT, _TOPK_STATE, "update")
