@@ -22,7 +22,9 @@ from trisk_spark.registry import load_all
 from trisk_spark.session import get_spark
 
 #: Representative mix: scans, broadcast joins, shuffles, windows,
-#: window functions, Arrow-batched stateful, dedup/similarity.
+#: window functions, Arrow-batched stateful, dedup/similarity. A query
+#: retired to library-only leaves the bench with its registry seat; its
+#: baseline entry stays for the record.
 HEADLINE = [
     "nexmark_q1",
     "nexmark_q2",
@@ -30,16 +32,7 @@ HEADLINE = [
     "nexmark_q8",
     "nexmark_q11",
     "tpch_q1",
-    # tpch_q3 retired to library-only in r15 (kernels covered by
-    # q5/q18/top_orders_per_customer; full oracle still runs every
-    # round in test_oracle_parity's library pass) — dropped from the
-    # bench with its registry seat; its baseline entry stays for the
-    # record, as tpch_q10's did in r13
     "tpch_q5",
-    # tpch_q10 retired to library-only in r13 (kernels covered by
-    # q3/q5/q7/q18; full oracle still runs every round in
-    # test_oracle_parity's library pass) — dropped from the bench with
-    # its registry seat; its baseline entry stays for the record
     "tpch_q18",
     "keyed_agg",
     "time_evictor_window",
@@ -50,10 +43,6 @@ HEADLINE = [
     "dedup_simhash",
     "dedup_substring",
     "ngram_jaccard",
-    # knn_bruteforce retired to library-only in r15 (exact-GEMM kernel
-    # covered by cosine_near_dup_exact/knn_label_vote; ann_recall still
-    # drives it verbatim inside its own benched time) — dropped with
-    # its seat; baseline entry stays for the record
     "ann_ivf",
     "cosine_near_dup_lsh",
     "interval_join",
@@ -113,14 +102,7 @@ HEADLINE = [
     # steady state is the smaller number in PERF_NOTES).
     "dedup_incremental",
     "ann_recall",
-    # minhash_jaccard_estimate retired to library-only in r17 (kernels
-    # covered by dedup_minhash_lsh + cross_split_leakage; full oracle
-    # still runs every round in test_oracle_parity's library pass) —
-    # dropped from the bench with its registry seat; its baseline
-    # entry stays for the record, as tpch_q10's did in r13
     "embedding_health",
-    # gopher_rules retired to library-only in r17 likewise (map-only
-    # doc-stats class covered by source_quality_rollup)
     # r14-new registrations (the R14 seat trade; baselines keyed from
     # BENCH_r14 in r15 per the new-op policy):
     "cross_split_leakage",

@@ -11,7 +11,8 @@ Scenarios mirror SURVEY.md §2C:
     by key: trades equal batch exactly once, and each resume reads the
     seed, not the history.
   * Stateless rescale resumes from the SAME checkpoint — no replay, no
-    duplicate emission.
+    duplicate emission (decided from the checkpoint: no state listed).
+  * Keyed state with processing-time timeouts still drains and returns.
   * Rules change-of-logic hot-swap — new rules next batch, no restart.
   * Plan primitives: tags, diff kinds, key-group dealing.
   * StreamSwitch policy decisions from synthetic progress.
@@ -76,7 +77,7 @@ def test_stock_controller_schedule_preserves_results(spark):
             .agg(F.count("*").alias("cnt"))
         )
 
-    mq = ManagedQuery(spark, "wc-stock", build, stateful=True, parallelism=4)
+    mq = ManagedQuery(spark, "wc-stock", build, parallelism=4)
     run_scripted(mq, staged, StockController(), chunks_per_stage=2)
 
     want = {
@@ -107,7 +108,7 @@ def test_stateless_rescale_resumes_same_checkpoint_no_duplicates(spark):
         return s.where(F.col("event_type") == "click").select("event_id", "user_id")
 
     mq = ManagedQuery(
-        spark, "stateless-rescale", build, mode="append", stateful=False, parallelism=2
+        spark, "stateless-rescale", build, mode="append", parallelism=2
     )
     staged.stage(2)
     mq.run_available()
@@ -148,7 +149,7 @@ def test_rescale_records_new_parallelism_and_leaves_callers_conf(spark):
         return staged.stream(sp).groupBy("event_type").agg(F.count("*").alias("cnt"))
 
     callers = spark.conf.get("spark.sql.shuffle.partitions")
-    mq = ManagedQuery(spark, "rescale-conf", build, stateful=True, parallelism=2)
+    mq = ManagedQuery(spark, "rescale-conf", build, parallelism=2)
     staged.stage(2)
     mq.run_available()
     assert _offset_log_partitions(mq.checkpoint) == {"2"}
@@ -327,6 +328,52 @@ def test_keyed_state_with_timeouts_replays(spark):
     assert mq.seed is None and mq.cut == []
 
 
+def test_matchmaker_with_processing_time_timeouts_drains(spark):
+    """Processing-time timeouts make Spark plan an empty batch after
+    every batch, so an availableNow incarnation never ends by itself:
+    ``run_available`` still returns once the staged input is drained,
+    and the trades equal batch ``stock_matchmaker``."""
+    staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=2)
+
+    def build(sp, plan):
+        return matchmaker_stream(
+            stock_orders(staged.stream(sp)), state_ttl_ms=3_600_000
+        )
+
+    mq = ManagedQuery(spark, "mm-ttl", build, mode="append", parallelism=2)
+    for stage in (1, 2):
+        staged.stage(stage)
+        mq.run_available()
+    batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
+    assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
+
+
+def test_stateless_build_rescale_resumes_without_duplicates(spark):
+    """A projection-only build left at the ManagedQuery defaults: its
+    checkpoint holds no state, so a rescale resumes the same checkpoint
+    — every row arrives exactly once."""
+    events = table(spark, SF, "events")
+    staged = StagedReplay(events, "ts", n_chunks=2)
+    mq = ManagedQuery(
+        spark,
+        "projection-rescale",
+        lambda sp, plan: staged.stream(sp).select("event_id"),
+        mode="append",
+        parallelism=2,
+    )
+    staged.stage(1)
+    mq.run_available()
+    ckpt = mq.checkpoint
+    plan = mq.get_plan_copy()
+    plan.assign_workload("main", round_robin(3))
+    assert mq.apply(plan)["mode"] == "resume"
+    assert mq.checkpoint == ckpt
+    staged.stage(2)
+    mq.run_available()
+    got = Counter(r.event_id for _i, _b, r in mq.emitted)
+    assert got == Counter(r.event_id for r in events.select("event_id").collect())
+
+
 @pytest.mark.slow
 def test_rules_hot_swap_takes_effect_next_batch_without_restart(spark):
     events = table(spark, SF, "events")
@@ -343,7 +390,7 @@ def test_rules_hot_swap_takes_effect_next_batch_without_restart(spark):
         return evaluate_rules(batch_df, rules).select("rule_id", "grouping_key")
 
     mq = RulesManagedQuery(
-        spark, "fd-rules", build, evaluate=evaluate, mode="append", stateful=False
+        spark, "fd-rules", build, evaluate=evaluate, mode="append"
     )
     v1 = [Rule(1, "payee_id", "COUNT", "1 day", ">", 0)]
     v2 = [Rule(9, "beneficiary_id", "COUNT", "1 day", ">", 0)]
@@ -523,7 +570,7 @@ def test_dynamic_controller_submission_over_http(spark):
                 .agg(F.count("*").alias("cnt"))
             )
 
-        mq = ManagedQuery(spark, "sub-ctl", build, stateful=True, parallelism=2)
+        mq = ManagedQuery(spark, "sub-ctl", build, parallelism=2)
         run_scripted(mq, staged, ctl, chunks_per_stage=2)
         assert mq.plan.operators["main"].parallelism == 4  # 2 + 2
         assert len(mq.reconfig_log) == 1
@@ -553,7 +600,7 @@ def test_progress_monitor_attaches(spark):
         def build(sp, plan):
             return staged.stream(sp).select("event_id")
 
-        mq = ManagedQuery(spark, "mon", build, mode="append", stateful=False)
+        mq = ManagedQuery(spark, "mon", build, mode="append")
         mq.run_available()
         deadline = __import__("time").time() + 15
         while not mon.history and __import__("time").time() < deadline:

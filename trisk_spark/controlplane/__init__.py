@@ -16,7 +16,8 @@ boundary is a consistent quiesce point. The mapping (SURVEY.md §3.2):
 |                            | migrates by key (barrier snapshot seeds   |
 |                            | the new checkpoint, the source is cut at  |
 |                            | what the old one committed); Spark-owned  |
-|                            | state re-shards by checkpointed replay    |
+|                            | state re-shards by checkpointed replay;   |
+|                            | a stateless query resumes in place        |
 | assignExecutionLogic       | rules re-read per micro-batch (no restart)|
 |                            | or stop→rebuild→resume for real UDF swaps |
 | assignResources (placement)| documented no-op (Spark scheduler's job)  |

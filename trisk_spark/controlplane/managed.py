@@ -8,7 +8,8 @@ Spark image: every micro-batch boundary is the barrier. "Pause" =
 stop the StreamingQuery (Spark quiesces at the batch edge). Structured
 Streaming pins the state-store partition count at a checkpoint's first
 run, so a layout change on a stateful query starts a fresh checkpoint,
-and ``apply`` picks how the state reaches it (the entry's ``mode``):
+and ``apply`` picks how the state reaches it (the entry's ``mode``)
+from the operators the old checkpoint's ``state-metadata`` lists:
 
 * ``migrate`` — the query's only stateful operator is the library's
   keyed state (``streaming.state.keyed_state``, no timeouts): the
@@ -23,7 +24,8 @@ and ``apply`` picks how the state reaches it (the entry's ``mode``):
   state-shaping UDF swaps: the new checkpoint replays the source from
   its start; the deterministic replayable source makes that
   exactly-once correct (SURVEY.md §7.6).
-* ``resume`` — nothing stateful changes layout: the same checkpoint.
+* ``resume`` — the checkpoint holds no state (a stateless query), or
+  nothing stateful changes layout: the same checkpoint.
 
 "Resume" = the next ``run_available``, which fills in the entry's
 ``resume_s`` and ``input_rows``.
@@ -134,6 +136,28 @@ def _committed_files(checkpoint: str, last: int) -> set[str]:
     return out
 
 
+def _await_drained(query) -> None:
+    """Wait for an availableNow incarnation to end. Keyed state with
+    processing-time timeouts makes Spark plan an empty batch after
+    every batch (an idle key may time out), so such an incarnation never
+    ends by itself: it is stopped once a batch that read nothing has
+    completed with the same event-time watermark as the batch before
+    it — every source is drained and nothing but the clock can change.
+    A failed batch still raises here. The stop may interrupt the next
+    empty batch; it is not committed, so the next incarnation runs it
+    again."""
+    while not query.awaitTermination(0.5):
+        last = query.recentProgress[-2:]
+        if (
+            len(last) == 2
+            and last[1]["numInputRows"] == 0
+            and all(s["startOffset"] == s["endOffset"] for s in last[1]["sources"])
+            and last[0]["eventTime"].get("watermark")
+            == last[1]["eventTime"].get("watermark")
+        ):
+            query.stop()
+
+
 class ManagedQuery:
     """A streaming query under control-plane management.
 
@@ -155,7 +179,6 @@ class ManagedQuery:
         *,
         operator: str = "main",
         mode: str = "update",
-        stateful: bool = True,
         parallelism: int = 4,
     ):
         self.spark = spark
@@ -164,7 +187,6 @@ class ManagedQuery:
         self.build = build
         self.operator = operator
         self.mode = mode
-        self.stateful = stateful
         self.plan = ExecutionPlan.single(operator, parallelism)
         self.checkpoint = checkpoint_dir(name)
         # what the current checkpoint starts from: a seed dir of migrated
@@ -212,7 +234,7 @@ class ManagedQuery:
             .trigger(availableNow=True)
             .start()
         )
-        self.query.awaitTermination()
+        _await_drained(self.query)
         entry = self.reconfig_log[-1] if self.reconfig_log else {}
         if entry and "resume_s" not in entry:
             entry["resume_s"] = round(time.time() - t0, 4)
@@ -256,12 +278,19 @@ class ManagedQuery:
         mode, state_rows = "resume", 0
         relayout = bool(kinds & {KEY_STATE_ALLOCATION, KEY_MAPPING})
         reshape = UDF in kinds and self._logic_changes_state_shape(new_plan)
-        if self.stateful and (relayout or reshape):
-            old, self.checkpoint = self.checkpoint, checkpoint_dir(self.name)
-            if not reshape and self._migrate(old):
-                mode, state_rows = "migrate", self.state_rows
-            else:
-                mode, self.seed, self.cut = "replay", None, []
+        if relayout or reshape:
+            # the stateful operators the old checkpoint lists; none (a
+            # stateless query): resume the same checkpoint
+            last, ops = _last_commit(self.checkpoint), None
+            if last is not None:
+                meta = self.session.read.format("state-metadata").load(self.checkpoint)
+                ops = [op.operatorName for op in meta.collect()]
+            if ops != []:
+                old, self.checkpoint = self.checkpoint, checkpoint_dir(self.name)
+                if not reshape and self._migrate(old, last, ops):
+                    mode, state_rows = "migrate", self.state_rows
+                else:
+                    mode, self.seed, self.cut = "replay", None, []
         self.plan = new_plan
         self.incarnation += 1
         entry = {
@@ -276,17 +305,16 @@ class ManagedQuery:
         self.reconfig_log.append(entry)
         return entry
 
-    def _migrate(self, old: str) -> bool:
-        """Seed the new checkpoint with ``old``'s keyed state and cut the
-        source at what ``old`` committed. False: the state cannot move
-        by key, so the caller replays."""
-        last = _last_commit(old)
+    def _migrate(self, old: str, last: int | None, ops: list[str] | None) -> bool:
+        """Seed the new checkpoint with ``old``'s keyed state (``ops``,
+        as of its ``last`` committed batch) and cut the source at what
+        ``old`` committed. False: the state cannot move by key, so the
+        caller replays."""
         if last is None:
             # ``old`` never committed a batch: its pending seed and cut
             # (if any) carry forward unchanged
             return self.seed is not None
-        ops = self.session.read.format("state-metadata").load(old).collect()
-        if [op.operatorName for op in ops] != ["applyInPandasWithState"]:
+        if ops != ["applyInPandasWithState"]:
             return False
         state = read_keyed_state(self.session, old, batch_id=last)
         if state.schema["value"].dataType.fieldNames() != ["groupState"]:

@@ -122,7 +122,6 @@ def state_size_sweep(
             f"sd-{size}",
             build,
             mode="update",
-            stateful=True,
             parallelism=parallelism,
         )
         t0 = time.time()

@@ -45,6 +45,7 @@ from pyspark.sql import DataFrame, SparkSession, functions as F
 from trisk_spark.catalog import table
 from trisk_spark.functions import storefs
 from trisk_spark.registry import register
+from trisk_spark.streaming.sinks import per_batch
 from trisk_spark.functions.dedup import (
     _BAND_COLS_SQL,
     _SIG_COLS_SQL,
@@ -425,103 +426,100 @@ def admission_stream(
     if bm25_path is not None:
         storefs.require_rename_fs(bm25_path, "admission_stream")
 
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        wm = storefs.read_ingest_watermark(dedup_path)
-        if wm is not None and batch_id <= wm:
-            return
-        batch_df = batch_df.persist()
-        try:
-            # the admission-side takedown guard covers the stream's
-            # own append paths too (fresh AND replay re-drive): a
-            # crashed takedown must be finished before any admission
-            # append touches its store (one exists() per store per
-            # batch when nothing is pending)
-            stores = [(dedup_path, "dedup"), (sem_path, "semantic")]
-            if bm25_path is not None:
-                stores.append((bm25_path, "bm25"))
-            _require_no_pending_takedown(spark, batch_df, stores)
-            ipath = _intent_path(dedup_path, batch_id)
-            if os.path.exists(ipath):
-                # replay past a recorded intent: re-drive the appends
-                # from the first attempt's verdicts — never re-probe a
-                # store some of the wave already landed in
-                report = spark.read.parquet(ipath).localCheckpoint()
-                admitted = report.where(
-                    F.col("stage") == "admitted"
-                ).select("doc_id")
-                s2 = (
-                    batch_df.where(
-                        F.col("doc_id").isNotNull()
-                        & F.col("text").isNotNull()
-                    )
-                    .join(F.broadcast(admitted), "doc_id", "left_semi")
-                    .localCheckpoint()
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        # the admission-side takedown guard covers the stream's
+        # own append paths too (fresh AND replay re-drive): a
+        # crashed takedown must be finished before any admission
+        # append touches its store (one exists() per store per
+        # batch when nothing is pending)
+        stores = [(dedup_path, "dedup"), (sem_path, "semantic")]
+        if bm25_path is not None:
+            stores.append((bm25_path, "bm25"))
+        _require_no_pending_takedown(spark, batch_df, stores)
+        ipath = _intent_path(dedup_path, batch_id)
+        if os.path.exists(ipath):
+            # replay past a recorded intent: re-drive the appends
+            # from the first attempt's verdicts — never re-probe a
+            # store some of the wave already landed in
+            report = spark.read.parquet(ipath).localCheckpoint()
+            admitted = report.where(
+                F.col("stage") == "admitted"
+            ).select("doc_id")
+            s2 = (
+                batch_df.where(
+                    F.col("doc_id").isNotNull()
+                    & F.col("text").isNotNull()
                 )
-                sig_ids = spark.read.parquet(
-                    f"{dedup_path}/signatures"
+                .join(F.broadcast(admitted), "doc_id", "left_semi")
+                .localCheckpoint()
+            )
+            sig_ids = spark.read.parquet(
+                f"{dedup_path}/signatures"
+            ).select("doc_id")
+            append_dedup_store(
+                spark,
+                s2.select("doc_id", "text").join(
+                    sig_ids, "doc_id", "left_anti"
+                ),
+                dedup_path,
+            )
+            vec_ids = spark.read.parquet(
+                f"{sem_path}/vectors"
+            ).select("vec_id")
+            append_semantic_store(
+                spark,
+                s2.select(
+                    F.col("doc_id").alias("vec_id"), "embedding"
+                ).join(vec_ids, "vec_id", "left_anti"),
+                sem_path,
+            )
+            if bm25_path is not None:
+                from trisk_spark.functions.bm25_store import (
+                    append_bm25_store,
+                )
+
+                indexed = spark.read.parquet(
+                    f"{bm25_path}/doclens"
                 ).select("doc_id")
-                append_dedup_store(
+                append_bm25_store(
                     spark,
                     s2.select("doc_id", "text").join(
-                        sig_ids, "doc_id", "left_anti"
+                        indexed, "doc_id", "left_anti"
                     ),
-                    dedup_path,
+                    bm25_path,
                 )
-                vec_ids = spark.read.parquet(
-                    f"{sem_path}/vectors"
-                ).select("vec_id")
-                append_semantic_store(
-                    spark,
-                    s2.select(
-                        F.col("doc_id").alias("vec_id"), "embedding"
-                    ).join(vec_ids, "vec_id", "left_anti"),
-                    sem_path,
+        else:
+            report, s2 = _admission_verdicts(
+                spark, batch_df, dedup_path, sem_path
+            )
+            tmp = ipath + "_tmp"
+            report.write.mode("overwrite").parquet(tmp)
+            os.rename(tmp, ipath)
+            append_dedup_store(
+                spark, s2.select("doc_id", "text"), dedup_path
+            )
+            append_semantic_store(
+                spark,
+                s2.select(F.col("doc_id").alias("vec_id"), "embedding"),
+                sem_path,
+            )
+            if bm25_path is not None:
+                from trisk_spark.functions.bm25_store import (
+                    append_bm25_store,
                 )
-                if bm25_path is not None:
-                    from trisk_spark.functions.bm25_store import (
-                        append_bm25_store,
-                    )
 
-                    indexed = spark.read.parquet(
-                        f"{bm25_path}/doclens"
-                    ).select("doc_id")
-                    append_bm25_store(
-                        spark,
-                        s2.select("doc_id", "text").join(
-                            indexed, "doc_id", "left_anti"
-                        ),
-                        bm25_path,
-                    )
-            else:
-                report, s2 = _admission_verdicts(
-                    spark, batch_df, dedup_path, sem_path
+                append_bm25_store(
+                    spark, s2.select("doc_id", "text"), bm25_path
                 )
-                tmp = ipath + "_tmp"
-                report.write.mode("overwrite").parquet(tmp)
-                os.rename(tmp, ipath)
-                append_dedup_store(
-                    spark, s2.select("doc_id", "text"), dedup_path
-                )
-                append_semantic_store(
-                    spark,
-                    s2.select(F.col("doc_id").alias("vec_id"), "embedding"),
-                    sem_path,
-                )
-                if bm25_path is not None:
-                    from trisk_spark.functions.bm25_store import (
-                        append_bm25_store,
-                    )
+        return report
 
-                    append_bm25_store(
-                        spark, s2.select("doc_id", "text"), bm25_path
-                    )
-            storefs.write_ingest_watermark(dedup_path, batch_id)
-            shutil.rmtree(ipath, ignore_errors=True)
-            sink(report, batch_id)
-        finally:
-            batch_df.unpersist()
+    def done(report: DataFrame, batch_id: int) -> None:
+        # after the watermark and before the sink: the intent is only
+        # dropped once a replay would skip the batch entirely
+        shutil.rmtree(_intent_path(dedup_path, batch_id), ignore_errors=True)
+        sink(report, batch_id)
 
-    return docs_stream.writeStream.outputMode("append").foreachBatch(fb)
+    return per_batch(docs_stream, stage, done, watermark=dedup_path)
 
 
 # ------------------------------------------- self-contained oracle --

@@ -57,6 +57,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window, functions as F
 
 from trisk_spark.catalog import table
 from trisk_spark.functions import storefs
+from trisk_spark.streaming.sinks import per_batch
 
 #: ceiling on one probe wave (the ivf_store MAX_PROBE_BATCH_ROWS class):
 #: arriving band rows are BROADCAST into the candidate join, so an
@@ -338,20 +339,12 @@ class BandStore:
         the report lazily (it is materialized before the append).
         Returns the ``DataStreamWriter`` ready to ``.start()``."""
         storefs.require_rename_fs(path, f"{self.label}_ingest_stream")
-
-        def fb(batch_df: DataFrame, batch_id: int) -> None:
-            wm = storefs.read_ingest_watermark(path)
-            if wm is not None and batch_id <= wm:
-                return
-            batch_df = batch_df.persist()
-            try:
-                report = self.ingest_wave(spark, batch_df, path)
-                storefs.write_ingest_watermark(path, batch_id)
-                sink(report, batch_id)
-            finally:
-                batch_df.unpersist()
-
-        return stream.writeStream.outputMode("append").foreachBatch(fb)
+        return per_batch(
+            stream,
+            lambda batch_df, _: self.ingest_wave(spark, batch_df, path),
+            sink,
+            watermark=path,
+        )
 
     def probe_stream(self, spark: SparkSession, stream: DataFrame, path: str, sink):
         """Read-only ``probe`` per micro-batch (``foreachBatch`` makes
@@ -359,15 +352,9 @@ class BandStore:
         read). ``sink(result_df, batch_id)`` must fully MATERIALIZE the
         result inside the call — the batch cache is dropped when it
         returns."""
-
-        def fb(batch_df: DataFrame, batch_id: int) -> None:
-            batch_df = batch_df.persist()
-            try:
-                sink(self.probe(spark, batch_df, path), batch_id)
-            finally:
-                batch_df.unpersist()
-
-        return stream.writeStream.outputMode("append").foreachBatch(fb)
+        return per_batch(
+            stream, lambda batch_df, _: self.probe(spark, batch_df, path), sink
+        )
 
     def repair(self, path: str) -> None:
         """``storefs.repair_store`` over the two tables: finish or roll

@@ -40,6 +40,7 @@ from trisk_spark.functions.similarity import (
     embedding_gram_frame,
     pca_from_gram_rows,
 )
+from trisk_spark.streaming.sinks import per_batch
 
 #: wave_id of the base block written by ``write_gram_store`` (stream
 #: batches use their non-negative batch_id; the base sits below them)
@@ -155,15 +156,11 @@ def gram_ingest_stream(
     pytest-pinned)."""
     storefs.require_rename_fs(path, "gram_ingest_stream")
 
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        wm = storefs.read_ingest_watermark(path)
-        if wm is not None and batch_id <= wm:
-            return
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
         append_gram_store(spark, batch_df, path, batch_id)
-        storefs.write_ingest_watermark(path, batch_id)
-        sink(gram_store_moments(spark, path), batch_id)
+        return gram_store_moments(spark, path)
 
-    return emb_stream.writeStream.outputMode("append").foreachBatch(fb)
+    return per_batch(emb_stream, stage, sink, watermark=path)
 
 
 def outlier_score_stream(
@@ -184,15 +181,12 @@ def outlier_score_stream(
     call."""
     from trisk_spark.functions.similarity import outlier_score_frame
 
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            rows = gram_store_moments(spark, path).collect()
-            sink(outlier_score_frame(batch_df, rows), batch_id)
-        finally:
-            batch_df.unpersist()
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return outlier_score_frame(
+            batch_df, gram_store_moments(spark, path).collect()
+        )
 
-    return emb_stream.writeStream.outputMode("append").foreachBatch(fb)
+    return per_batch(emb_stream, stage, sink)
 
 
 def repair_replayed_append(spark: SparkSession, path: str) -> None:

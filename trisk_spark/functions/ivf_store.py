@@ -49,6 +49,7 @@ from trisk_spark.functions.similarity import (
     _route_probe_frame,
     _valid_embeddings,
 )
+from trisk_spark.streaming.sinks import per_batch
 
 
 #: Ceiling on a single probe batch through the store probe paths (the
@@ -307,23 +308,14 @@ def probe_index_stream(
     contract."""
     corpus = _valid_embeddings(table(spark, ref_sf_dir, "embeddings"))
     engine = probe_frame_adc if adc else probe_frame
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        # Persist the arriving batch for the duration of the probe:
-        # the routing collect (guard folded in, r11 VERDICT #3) and
-        # the candidate/re-rank job both consume the probe frame, and
-        # without the cache each consumer re-executes the batch's
-        # upstream lineage (r10 ADVICE — one extra full lineage
-        # execution per micro-batch when the probe stream has
-        # expensive transforms). The sink materializes the result
-        # inside this call, so the unpersist is safe.
-        batch_df = batch_df.persist()
-        try:
-            sink(engine(spark, batch_df, corpus, path), batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return probes_stream.writeStream.outputMode("append").foreachBatch(fb)
+    # the runner's batch cache matters here: the routing collect (guard
+    # folded in) and the candidate/re-rank job both consume the probe
+    # frame, and uncached each would re-execute the batch's lineage
+    return per_batch(
+        probes_stream,
+        lambda batch_df, _: engine(spark, batch_df, corpus, path),
+        sink,
+    )
 
 
 def index_stats(spark: SparkSession, path: str) -> DataFrame:
@@ -377,35 +369,29 @@ def drift_report_stream(
         drift_from_counts,
     )
 
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            cents_rows = spark.read.parquet(f"{path}/centroids").collect()
-            cq, cn, cids = _stored_model(cents_rows)
-            arriving = (
-                _quantize_assign_gemm(
-                    spark, _valid_embeddings(batch_df), cq, cn, cids
-                )
-                .groupBy("list_id")
-                .agg(F.count("*").cast("bigint").alias("n_arriving"))
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        cents_rows = spark.read.parquet(f"{path}/centroids").collect()
+        cq, cn, cids = _stored_model(cents_rows)
+        arriving = (
+            _quantize_assign_gemm(
+                spark, _valid_embeddings(batch_df), cq, cn, cids
             )
-            resident = (
-                spark.read.parquet(f"{path}/index")
-                .groupBy("list_id")
-                .agg(F.count("*").cast("bigint").alias("n_resident"))
-            )
-            counts = (
-                resident.join(arriving, "list_id", "full_outer")
-                .na.fill({"n_resident": 0, "n_arriving": 0})
-            )
-            spine = local_rows(
-                spark, [(int(c),) for c in cids], "list_id bigint"
-            )
-            sink(drift_from_counts(spine, counts, len(cids)), batch_id)
-        finally:
-            batch_df.unpersist()
+            .groupBy("list_id")
+            .agg(F.count("*").cast("bigint").alias("n_arriving"))
+        )
+        resident = (
+            spark.read.parquet(f"{path}/index")
+            .groupBy("list_id")
+            .agg(F.count("*").cast("bigint").alias("n_resident"))
+        )
+        counts = (
+            resident.join(arriving, "list_id", "full_outer")
+            .na.fill({"n_resident": 0, "n_arriving": 0})
+        )
+        spine = local_rows(spark, [(int(c),) for c in cids], "list_id bigint")
+        return drift_from_counts(spine, counts, len(cids))
 
-    return emb_stream.writeStream.outputMode("append").foreachBatch(fb)
+    return per_batch(emb_stream, stage, sink)
 
 
 def repair_ivf_index(path: str) -> None:

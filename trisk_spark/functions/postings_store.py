@@ -64,6 +64,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 from trisk_spark.catalog import table
 from trisk_spark.functions import storefs
+from trisk_spark.streaming.sinks import per_batch
 
 #: postings partition fan: directories = this; a probe prunes to ≤ its
 #: own query terms' buckets
@@ -202,23 +203,15 @@ class PostingsStore:
         op = f"{self.label}_ingest_stream"
         storefs.require_rename_fs(path, op)
 
-        def fb(batch_df: DataFrame, batch_id: int) -> None:
-            wm = storefs.read_ingest_watermark(path)
-            if wm is not None and batch_id <= wm:
-                return
+        def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
             storefs.require_no_pending_delete(path, op, self.label)
-            batch_df = batch_df.persist()
-            try:
-                # ONE wave derivation per batch: it feeds both the
-                # append and the sink
-                postings, ledger = self._wave(batch_df)
-                self._append_wave(spark, postings, ledger, path)
-                storefs.write_ingest_watermark(path, batch_id)
-                sink(ledger, batch_id)
-            finally:
-                batch_df.unpersist()
+            # ONE wave derivation per batch: it feeds both the append
+            # and the sink
+            postings, ledger = self._wave(batch_df)
+            self._append_wave(spark, postings, ledger, path)
+            return ledger
 
-        return stream.writeStream.outputMode("append").foreachBatch(fb)
+        return per_batch(stream, stage, sink, watermark=path)
 
     def probe_stream(self, spark: SparkSession, stream: DataFrame, path: str, sink):
         """Streaming retrieval over the written index: each micro-batch
@@ -228,12 +221,11 @@ class PostingsStore:
         one-batch image. Sink contract: fully materialize inside the
         call."""
 
-        def fb(batch_df: DataFrame, batch_id: int) -> None:
+        def stage(batch_df: DataFrame, batch_id: int) -> DataFrame | None:
             queries = self.queries(batch_df.collect())  # human-scale
-            if queries:
-                sink(self.probe(spark, path, queries), batch_id)
+            return self.probe(spark, path, queries) if queries else None
 
-        return stream.writeStream.outputMode("append").foreachBatch(fb)
+        return per_batch(stream, stage, sink)
 
     def repair(self, path: str) -> None:
         """``storefs.repair_store`` over the store's tables: finish or

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 from trisk_spark.catalog import local_rows, spread_narrow_scan, table
 from trisk_spark.functions import storefs
 from trisk_spark.registry import register
+from trisk_spark.streaming.sinks import per_batch
 from trisk_spark.functions.similarity import (
     N_PROBES,
     TOP_K,
@@ -501,30 +502,24 @@ def hybrid_probe_stream(
     )
     corpus_emb = _valid_embeddings(table(spark, ref_sf_dir, "embeddings"))
 
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            per: dict[int, list] = {}
-            for r in batch_probe_keywords(
-                spark, batch_df.select("doc_id", "text"), ref_docs
-            ):
-                per.setdefault(int(r.doc_id), []).append(r.tok)
-            queries = {q: tuple(sorted(ts)) for q, ts in per.items()}
-            lex = _store_lex_ranks(spark, f"{path}/bm25", queries)
-            sem = probe_frame(
-                spark,
-                batch_df.select(
-                    F.col("doc_id").alias("vec_id"), "embedding"
-                ),
-                corpus_emb,
-                f"{path}/ivf",
-            ).select(
-                "query_id",
-                F.col("neighbor_id").alias("doc_id"),
-                F.col("rank").alias("sem_rank"),
-            )
-            sink(_rrf_fuse(lex, sem), batch_id)
-        finally:
-            batch_df.unpersist()
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        per: dict[int, list] = {}
+        for r in batch_probe_keywords(
+            spark, batch_df.select("doc_id", "text"), ref_docs
+        ):
+            per.setdefault(int(r.doc_id), []).append(r.tok)
+        queries = {q: tuple(sorted(ts)) for q, ts in per.items()}
+        lex = _store_lex_ranks(spark, f"{path}/bm25", queries)
+        sem = probe_frame(
+            spark,
+            batch_df.select(F.col("doc_id").alias("vec_id"), "embedding"),
+            corpus_emb,
+            f"{path}/ivf",
+        ).select(
+            "query_id",
+            F.col("neighbor_id").alias("doc_id"),
+            F.col("rank").alias("sem_rank"),
+        )
+        return _rrf_fuse(lex, sem)
 
-    return probes_stream.writeStream.outputMode("append").foreachBatch(fb)
+    return per_batch(probes_stream, stage, sink)

@@ -26,6 +26,7 @@ from trisk_spark.catalog import local_rows, table
 from trisk_spark.functions import storefs
 from trisk_spark.functions.text import quality_expr, quality_sql
 from trisk_spark.registry import register
+from trisk_spark.streaming.sinks import per_batch
 
 #: split thresholds over a 0-99 hash bucket: [0,80) train, [80,90) val,
 #: [90,100) test — the standard 80/10/10.
@@ -1708,9 +1709,10 @@ def perplexity_buckets(
     the same worst-case posture as ``_quality_budget_filter``. Library
     op, full DuckDB oracle (``ppl_buckets_sql``) — the r11
     capacity-note class."""
-    from trisk_spark.functions.text import _lm_scored
+    from trisk_spark.functions.text import _lm_model, _lm_scored
 
-    scored = _lm_scored(_docs(spark, sf_dir), extra=("lang",))
+    docs = _docs(spark, sf_dir)
+    scored = _lm_scored(docs, _lm_model(docs), extra=("lang",))
     cb = (
         F.greatest(
             F.lit(0),
@@ -2036,7 +2038,7 @@ def _dsir_buckets(spark: SparkSession, sf_dir: str, materialize: bool = True):
     per-(doc, bucket) bigram COUNT frame, the B-row per-bucket count
     table derived from it, its 1-row totals, and the per-bucket
     contribution expression (to be selected against m ⨯ tot). Used by
-    the batch op and the model collector so the arithmetic exists
+    the batch op and the streaming model so the arithmetic exists
     exactly once.
 
     r17 shape (guide §2.3 aggregate-before-shuffle + §5 materialize the
@@ -2051,20 +2053,13 @@ def _dsir_buckets(spark: SparkSession, sf_dir: str, materialize: bool = True):
     Σ c-weighted — value-identical (exact BIGINT counts, exact DECIMAL
     contribs). ``materialize=False`` only to expose the full lineage to
     plan tests (the training_plan convention)."""
-    from trisk_spark.functions.text import LM_REF_MOD, _lm_bigrams
-
-    B = DSIR_BUCKETS
     from trisk_spark.catalog import spread_narrow_scan
+    from trisk_spark.functions.text import LM_REF_MOD, _lm_bigrams
 
     bi = _lm_bigrams(spread_narrow_scan(_docs(spark, sf_dir)))
     bk = bi.select(
         "doc_id",
-        F.pmod(
-            F.conv(
-                F.substring(F.md5(F.concat_ws(" ", "w1", "w2")), 1, 15), 16, 10
-            ).cast("bigint"),
-            F.lit(B),
-        ).alias("b"),
+        _dsir_bucket("w1", "w2").alias("b"),
         (F.pmod(F.col("doc_id"), F.lit(LM_REF_MOD)) == 0).alias("is_target"),
     )
     g = bk.groupBy("doc_id", "b", "is_target").agg(
@@ -2085,6 +2080,18 @@ def _dsir_buckets(spark: SparkSession, sf_dir: str, materialize: bool = True):
         F.col("ct") + F.lit(1), F.col("cr") + F.lit(1)
     )
     return g, m, tot, contrib
+
+
+def _dsir_bucket(w1, w2) -> Column:
+    """The hashed-bigram bucket of (w1, w2): the first 15 hex digits of
+    md5("w1 w2") mod DSIR_BUCKETS — one definition for the batch model
+    and the streaming twin's in-row scoring."""
+    return F.pmod(
+        F.conv(F.substring(F.md5(F.concat_ws(" ", w1, w2)), 1, 15), 16, 10).cast(
+            "bigint"
+        ),
+        F.lit(DSIR_BUCKETS),
+    )
 
 
 def _dsir_contrib(ct_smoothed, cr_smoothed):
@@ -2143,35 +2150,34 @@ def dsir_weights(
     )
 
 
-def dsir_model(spark: SparkSession, sf_dir: str):
-    """Train the DSIR scoring model from a reference corpus and
-    collect it driver-side for the streaming twin: a bucket →
-    contribution map in EXACT 1e-6 integer units, pre-rounded on the
-    JVM (the same ROUND(·,6) the batch op applies) so the stream sums
-    integers and reproduces batch scores bit-for-bit — no Python ln,
-    no cross-runtime rounding at score time. Returns
-    (contrib_micro: dict[int, int], default_micro: int) where the
-    default covers buckets with zero corpus occurrences (an arriving
-    bigram can hash anywhere). Bounded collects: DSIR_BUCKETS rows +
-    one default row."""
+def dsir_model(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Train the DSIR scoring model from a reference corpus for the
+    streaming twin: one materialized (localCheckpoint) row whose
+    ``model`` array holds every bucket's contribution in EXACT 1e-6
+    integer units — element b + 1 for bucket b, pre-rounded by the
+    same ROUND(·,6) the batch op applies, so the twin sums integers and
+    reproduces batch scores bit-for-bit. A bucket with zero corpus
+    occurrences (an arriving bigram can hash anywhere) holds the
+    add-1-smoothed zero-count contribution. Nothing is collected to the
+    driver; the twin cross-joins the row by broadcast."""
     _, m, tot, contrib = _dsir_buckets(spark, sf_dir)
-    # the default (zero-count bucket) contribution rides the SAME job
-    # as the per-bucket rows — tt/tr are already bound there; a second
-    # tot.select().collect() would re-execute the whole corpus bigram
-    # lineage just to produce one derivable value
-    rows = (
+
+    def micro(c):
+        return (c * F.lit(1000000)).cast("bigint")
+
+    seen = (
         m.crossJoin(F.broadcast(tot))
-        .select(
-            "b",
-            (contrib * F.lit(1000000)).cast("bigint").alias("c"),
-            (_dsir_contrib(F.lit(1), F.lit(1)) * F.lit(1000000))
-            .cast("bigint")
-            .alias("dc"),
-        )
-        .collect()
+        .groupBy("tt", "tr")
+        .agg(F.map_from_entries(F.collect_list(F.struct("b", micro(contrib)))).alias("cm"))
     )
-    default = int(rows[0]["dc"]) if rows and rows[0]["dc"] is not None else 0
-    return {int(r["b"]): int(r["c"]) for r in rows}, default
+    dense = F.transform(
+        F.sequence(F.lit(0).cast("bigint"), F.lit(DSIR_BUCKETS - 1).cast("bigint")),
+        lambda b: F.coalesce(
+            F.try_element_at(F.col("cm"), b),
+            micro(_dsir_contrib(F.lit(1), F.lit(1))),
+        ),
+    )
+    return seen.select(dense.alias("model")).localCheckpoint()
 
 
 # -------- quality-weighted sampling without replacement (r15) --------
@@ -2324,7 +2330,7 @@ def weighted_sample_stream(
             f.write(buf.getvalue())
         os.replace(f"{p}/reservoir.csv.tmp", f"{p}/reservoir.csv")
 
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
         if not holder["loaded"]:
             holder["rows"] = _load()
             holder["loaded"] = True
@@ -2349,15 +2355,14 @@ def weighted_sample_stream(
         holder["rows"] = merged
         if reservoir_path is not None:
             _persist(merged)
-        out = local_rows(
+        return local_rows(
             spark,
             [t + (i + 1,) for i, t in enumerate(merged)],
             "doc_id bigint, source string, n_tokens bigint, "
             "weight double, es_key double, rank int",
         )
-        sink(out, batch_id)
 
-    return docs_stream.writeStream.outputMode("append").foreachBatch(fb)
+    return per_batch(docs_stream, stage, sink)
 
 
 WEIGHTED_SAMPLE_SQL = f"""

@@ -51,6 +51,7 @@ from trisk_spark.functions.timeseries import (
     sax_word_col,
     ts_sax_windows_gemm,
 )
+from trisk_spark.streaming.sinks import per_batch
 
 #: Ceiling on the per-micro-batch probe-row collect in
 #: ``probe_store_stream``: each probe row carries a TS_WINDOW-element
@@ -145,7 +146,7 @@ def probe_store_stream(
     (default ``MAX_STREAM_PROBE_ROWS``) and RAISES past it — a flooded
     probe topic fails loud instead of becoming driver memory."""
 
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
         # validity gate for ARRIVING windows (the batch path guarantees
         # size == TS_WINDOW by construction in _ts_raw_windows; a
         # malformed producer row would otherwise z-normalize with the
@@ -168,11 +169,9 @@ def probe_store_stream(
             ),
             max_probe_rows,
         )
-        sink(_probe_rows_over_store(spark, probe_rows, path), batch_id)
+        return _probe_rows_over_store(spark, probe_rows, path)
 
-    return probe_windows_stream.writeStream.outputMode("append").foreachBatch(
-        fb
-    )
+    return per_batch(probe_windows_stream, stage, sink)
 
 
 def store_stats(spark: SparkSession, path: str) -> DataFrame:

@@ -27,6 +27,7 @@ from trisk_spark.catalog import (
 )
 from trisk_spark.registry import register
 from trisk_spark.session import loop_session, partial_agg_fan, rebind
+from trisk_spark.streaming.sinks import per_batch
 
 N_PROBES = 5  # query set: vec_id < N_PROBES
 TOP_K = 10
@@ -2968,16 +2969,10 @@ def margin_mine_stream(
     side_a = n.where(F.pmod(F.col("n_id"), F.lit(2)) == 0).localCheckpoint()
     side_b = n.where(F.pmod(F.col("n_id"), F.lit(2)) == 1).localCheckpoint()
 
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            probes = _with_norm(
-                _valid_embeddings(batch_df), "vec_id", "n"
-            ).where(F.col("n_norm") > 0)
-            sink(
-                margin_mine_frame(spark, probes, side_a, side_b), batch_id
-            )
-        finally:
-            batch_df.unpersist()
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        probes = _with_norm(_valid_embeddings(batch_df), "vec_id", "n").where(
+            F.col("n_norm") > 0
+        )
+        return margin_mine_frame(spark, probes, side_a, side_b)
 
-    return probes_stream.writeStream.outputMode("append").foreachBatch(fb)
+    return per_batch(probes_stream, stage, sink)

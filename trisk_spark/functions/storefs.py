@@ -4,7 +4,9 @@ stores call it with their own table and column names.
 
   * the fail-loud rename-filesystem gate, the atomic small-text records
     beside a store (ingest watermark ``_last_admitted_batch_id``,
-    bucket fan ``_n_buckets``) and the corpus-derived fan rule;
+    bucket fan ``_n_buckets``) and the corpus-derived fan rule; the
+    watermark's replay guard itself runs in ``streaming.sinks.per_batch``,
+    the one micro-batch runner every store stream verb goes through;
   * the md5-prefix ``bucket`` partition column and the writer-task rule
     (one task per partition directory, capped at the session's shuffle
     parallelism);

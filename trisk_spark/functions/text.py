@@ -18,6 +18,7 @@ from trisk_spark.catalog import (
     table,
 )
 from trisk_spark.registry import register
+from trisk_spark.streaming.sinks import per_batch
 
 # ------------------------------------------------------- token count --
 
@@ -810,21 +811,26 @@ def _lm_tokens() -> "F.Column":
     )
 
 
-def _lm_bigrams(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
-    """(doc_id, *extra, w1, w2) per adjacent token pair — map-side: the
-    bigram list is built inside the row by zipping the token array with
-    its own 1-shifted slice, then exploded; no join, no shuffle. Extra
-    per-document key columns (e.g. ``lang``) ride the explode so
-    downstream grouping never needs a corpus-to-corpus join-back."""
-    t = _lm_tokens()
-    pairs = F.zip_with(
+def _lm_pairs(f) -> Column:
+    """``f(w1, w2)`` over each adjacent pair of the token array column
+    ``t``, in-row: the array zipped with its own 1-shifted slice."""
+    return F.zip_with(
         F.expr("slice(t, 1, greatest(size(t) - 1, 0))"),
         F.expr("slice(t, 2, greatest(size(t) - 1, 0))"),
-        lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
+        f,
     )
+
+
+def _lm_bigrams(docs: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
+    """(doc_id, *extra, w1, w2) per adjacent token pair — map-side: the
+    bigram list is built inside the row (``_lm_pairs``), then exploded;
+    no join, no shuffle. Extra per-document key columns (e.g. ``lang``)
+    ride the explode so downstream grouping never needs a
+    corpus-to-corpus join-back."""
+    pairs = _lm_pairs(lambda a, b: F.struct(a.alias("w1"), b.alias("w2")))
     return (
         docs.where(F.col("doc_id").isNotNull())
-        .select("doc_id", *extra, t.alias("t"))
+        .select("doc_id", *extra, _lm_tokens().alias("t"))
         .select("doc_id", *extra, F.explode(pairs).alias("p"))
         .select(
             "doc_id", *extra,
@@ -865,23 +871,34 @@ def bigram_lm_score(
     the LM tables are built once from the reference slice and reused —
     exactly how a KenLM-based filter deploys."""
     docs = table(spark, sf_dir, "documents")
-    return _lm_scored(docs, max_model_rows=max_model_rows)
+    return _lm_scored(docs, _lm_model(docs, max_model_rows))
 
 
-def _lm_scored(
-    docs: DataFrame,
-    extra: tuple[str, ...] = (),
-    max_model_rows: int = LM_MAX_MODEL_ROWS,
-) -> DataFrame:
-    """The bigram-LM scoring kernel, shared by ``bigram_lm_score`` and
-    the perplexity-bucket sampler: (doc_id, *extra, n_bigrams,
-    lm_score) with the exact-decimal-grid mean documented above. Extra
-    key columns ride the bigram explode and the final grouping —
-    matching ``_bigram_lm_sql(extra)`` BY CONSTRUCTION (same grouping
-    on both engines even under duplicate doc_ids), and costing no
-    corpus join-back to re-attach them."""
-    bi = _lm_bigrams(docs, extra)
-    ref = bi.where(F.pmod(F.col("doc_id"), F.lit(LM_REF_MOD)) == 0)
+def _within_ceiling(n_col: str, ceiling: int, holds: str, ship: str) -> Column:
+    """Filter condition of a broadcast-model size guard: ``assert_true``
+    fails the job JVM-side when ``n_col`` (a token count that
+    upper-bounds the model's rows) exceeds ``ceiling``. ``holds`` and
+    ``ship`` complete the fail-loud message."""
+    return F.assert_true(
+        F.col(n_col) <= F.lit(ceiling),
+        F.concat(
+            F.lit(f"{holds} "),
+            F.col(n_col).cast("string"),
+            F.lit(
+                f" tokens > ceiling {ceiling}; ship {ship} as files "
+                "instead of an in-plan broadcast"
+            ),
+        ),
+    ).isNull()
+
+
+def _lm_model(docs: DataFrame, max_model_rows: int = LM_MAX_MODEL_ROWS):
+    """The bigram LM trained on the reference slice of ``docs``: the
+    (w1, w2, c12) and (w1, c1) count tables and the 1-row vocabulary
+    size (v) that ``_lm_scored`` scores against. Shared by
+    ``bigram_lm_score``, the perplexity-bucket sampler and the
+    streaming twins (which build it once and score each micro-batch)."""
+    ref = _lm_bigrams(docs).where(F.pmod(F.col("doc_id"), F.lit(LM_REF_MOD)) == 0)
     c12 = ref.groupBy("w1", "w2").agg(F.count("*").alias("c12"))
     # C(w1) = sum over w2 of C(w1, w2): aggregate the (small) c12 table
     # instead of re-scanning the corpus — one fewer scan, and its
@@ -902,23 +919,27 @@ def _lm_scored(
         .select(F.explode(_lm_tokens()).alias("w"))
         .agg(F.countDistinct("w").alias("v"), F.count("*").alias("n_tok"))
         .where(
-            F.assert_true(
-                F.col("n_tok") <= F.lit(max_model_rows),
-                F.concat(
-                    F.lit(
-                        "bigram LM model too large to broadcast: reference "
-                        "slice holds "
-                    ),
-                    F.col("n_tok").cast("string"),
-                    F.lit(
-                        f" tokens > ceiling {max_model_rows}; ship the LM "
-                        "counts as files instead of an in-plan broadcast"
-                    ),
-                ),
-            ).isNull()
+            _within_ceiling(
+                "n_tok",
+                max_model_rows,
+                "bigram LM model too large to broadcast: reference slice holds",
+                "the LM counts",
+            )
         )
         .select("v")
     )
+    return c12, c1, vocab
+
+
+def _lm_scored(docs: DataFrame, model, extra: tuple[str, ...] = ()) -> DataFrame:
+    """The bigram-LM scoring stage: (doc_id, *extra, n_bigrams,
+    lm_score) for ``docs`` under ``model`` (``_lm_model``), with the
+    exact-decimal-grid mean documented above. Extra key columns ride
+    the bigram explode and the final grouping — matching
+    ``_bigram_lm_sql(extra)`` BY CONSTRUCTION (same grouping on both
+    engines even under duplicate doc_ids), and costing no corpus
+    join-back to re-attach them."""
+    c12, c1, vocab = model
     logp = F.round(
         F.log(
             (F.coalesce(F.col("c12"), F.lit(0)) + 1).cast("double")
@@ -930,7 +951,8 @@ def _lm_scored(
     # emit nothing rather than ln((c+1)/0) = ln(inf), which would
     # crash the decimal cast on both engines
     scored = (
-        bi.join(F.broadcast(c12), ["w1", "w2"], "left")
+        _lm_bigrams(docs, extra)
+        .join(F.broadcast(c12), ["w1", "w2"], "left")
         .join(F.broadcast(c1), ["w1"], "left")
         .crossJoin(F.broadcast(vocab))
         .where(F.col("v") > 0)
@@ -1054,8 +1076,15 @@ def keyword_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     join is BROADCAST (vocabulary-sized); the final per-doc rank
     re-uses the doc_id hash partitioning. At 100 TB the df/idf table is
     a write-once broadcast asset, like the bigram LM."""
-    docs = table(spark, sf_dir, "documents")
-    tf, df, n = _kw_tf_df_n(docs)
+    return _kw_ranked(*_kw_tf_df_n(table(spark, sf_dir, "documents")))
+
+
+def _kw_ranked(tf: DataFrame, df: DataFrame, n: DataFrame) -> DataFrame:
+    """The keyword scoring stage: (doc_id, token, tf, df, score, rank)
+    — the top-KEYWORDS_K tokens of each document in ``tf`` under the
+    corpus document frequencies ``df`` and the 1-row corpus count
+    ``n`` (tokens absent from ``df`` drop out in the inner join).
+    Shared by ``keyword_extract`` and its streaming twin."""
     scored = (
         tf.join(F.broadcast(df), "tok")
         .crossJoin(F.broadcast(n))
@@ -1807,15 +1836,11 @@ def phrase_search_stream(
     deliberately not applied here. ``sink(hits_df, batch_id)``; sink
     contract: fully materialize inside the call."""
     probes = _phrase_probes(spark, ref_sf_dir)
-
-    def fb(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df = batch_df.persist()
-        try:
-            sink(phrase_search_frame(spark, batch_df, probes), batch_id)
-        finally:
-            batch_df.unpersist()
-
-    return docs_stream.writeStream.outputMode("append").foreachBatch(fb)
+    return per_batch(
+        docs_stream,
+        lambda batch_df, _: phrase_search_frame(spark, batch_df, probes),
+        sink,
+    )
 
 
 # ------------- per-source quality calibration (r16) -------------------

@@ -74,103 +74,17 @@ def register(name: str, oracle: str | None = None):
 # regardless of position stay oracle-gated by
 # tests/test_oracle_parity.py every round.
 #
-# r17 window: EXECUTES THE WRITTEN R17 PLAN (r16 VERDICT "next round"
-# #1; arithmetic pre-checked in r16 — the text below is that plan,
-# executed). The r16 sitters rotate back in (policy (a)) MINUS two
-# retired to library-only status via the sanctioned seat-freeing
-# mechanism (the tpch_q7/q10/q14 + tpch_q3/knn_bruteforce +
-# revenue_rollup/customers_without_orders precedent):
-#   minhash_jaccard_estimate RETIRED to library-only (load_library
-#       below): the signature + band kernels are driver-hash-gated by
-#       dedup_minhash_lsh every other round and the composed pair
-#       chain by cross_split_leakage (same phase); the full
-#       signature-agreement oracle keeps running every round in
-#       test_oracle_parity's library pass.
-#   gopher_rules RETIRED likewise: the map-only doc-stats class is
-#       hash-gated by source_quality_rollup (same phase); full oracle
-#       keeps running library-gated every round.
-# So 47 - 2 retired = 45 returning. Must-stays unchanged:
-# stock_matchmaker (no oracle, no hash-gated witness -> never sits),
-# media_decode_checksum (the no-oracle sitter's witness, enforced by
-# test_registry), fraud_alerts (sole BroadcastState / FD megaphone
-# evidence -- no kernel-class sibling, never sits). TWO new
-# registrations take the freed seats, in-window their first round per
-# the new-op policy: margin_pair_mining (LEAD -- the ratio-margin
-# fusion + dual-kNN composition has no registered sibling; its oracle
-# spans both kNN directions, the neighborhood averages, and the
-# fusion + accept decision under one hash) + weighted_sample
-# (exactly-M Efraimidis-Spirakis without-replacement selection -- no
-# registered sibling; the Bernoulli mix family only hits rates in
-# expectation). Both carried full DuckDB oracles through every
-# round's library parity pass since r15.
-# Seat arithmetic: 45 returning + 3 always-in + 2 new = 50.
-# CAPACITY after this round: 106 registered (106 - 2 retired + 2 new)
-# = 3 always-in + 8 permanent composed sitters + 1 no-oracle sitter +
-# 94 alternating over 47 seats/round -- still exactly saturated
-# (policy (a) holds), so every future registration needs a matching
-# flip or retirement from the PHASE THAT RETURNS that round.
-# The two r16-new seats (bm25_incremental, hybrid_retrieval) sit r17
-# on in-window witnesses noted on their rows below -- every witness
-# is in the r17 window (checked).
-# R18 PLAN, FINAL (arithmetic-checked; r16 VERDICT next-round #7):
-# the r18 returning phase is THIS list below (it sits r17).
-# Sanctioned R18 moves from it: retire tpch_q6 (filter + scan-agg,
-# kernels gated by nexmark_q2 (filter pushdown) + tpch_q1 (decimal
-# scan agg) -- both in the r18 window) and retire ngram_counts
-# (explode/shingle count, gated by wordcount + ngram_jaccard, both in
-# the r18 window) -> TWO r18 seats -> register embedding_gram (the
-# exact second-moment table behind PCA whitening: all-BIGINT moments,
-# constant 2,145-key shuffle -- the gram/moment store's only possible
-# independent hash row now that its delete verb exists) +
-# hybrid_store_probe (hybrid more-like-this SERVED FROM BOTH
-# PERSISTED INDEXES -- BM25 postings store + int8 IVF store + the
-# shared RRF fusion; the deployment twin of the r16-seated
-# hybrid_retrieval). Alternates if the r17 verdict prefers:
-# ivf_drift_report, embedding_outliers, source_overlap_matrix,
-# cluster_split, phrase_search. Pool stays 94 - 2 + 2 = 94
-# (saturated); retired rows keep their library oracles as always.
-# R19 SKETCH (arithmetic-check + finalize in r18): the r19 returning
-# phase is THE R17 WINDOW (it sits r18, returns r19). Sanctioned R19
-# moves from it: retire doc_chunk (fixed-stride chunking, kernels
-# gated by token_count + bpe_token_estimate (shared tokenizer) --
-# same phase) and retire length_percentiles (doc-stats percentile
-# class, gated by quality_score + source_quality_rollup -- same
-# phase) -> TWO r19 seats -> register cluster_split (leakage-safe
-# cluster-atomic split -- a first-class capability a real curation
-# user hits every run; its oracle composes the pair kernel +
-# transitive closure + both split CASEs under one hash, stronger
-# evidence than the doc-level train_split row it supersedes; r16
-# VERDICT next-round #6) + phrase_incremental (the r17-built
-# positional postings store's only possible independent hash row --
-# the bm25_incremental precedent: one value-hash covers write ->
-# append -> route -> pruned probe -> position-set counting, oracle =
-# PHRASE_SEARCH_SQL verbatim). Alternates: embedding_outliers,
-# ivf_drift_report, source_overlap_matrix, quality_calibrate. Pool
-# stays 94 - 2 + 2 = 94 (saturated).
-# R17 BUILD (executed this round, as sketched in r16): the persisted
-# POSITIONAL postings store (functions/phrase_store.py) -- (term,
-# doc_id, positions array<int>) bucketed by md5(term) % 64 exactly
-# like the bm25 store, probe = driver-routed pruned read + per-phrase
-# position-set lambdas (n_exact = shift-intersection, n_prox = the
-# greedy exists-formulation, equal to the in-row kernel semantics),
-# full store verb set via the existing storefs staged-partition
-# protocol, takedown wired into admission.takedown_wave, and the
-# phrase_incremental library op whose oracle is PHRASE_SEARCH_SQL
-# verbatim (exact index => probe == batch kernel row for row).
-# Also r17-new to the LIBRARY surface (late session): ts_motif +
-# ts_discord -- matrix-profile discovery (closest non-overlapping
-# same-series pair / farthest-nearest-neighbor window) + ts_motif_sax
-# (motif's SAX-word-bucketed scale path) + event_funnel (strict
-# first-touch conversion funnel over events, with funnel_stream as
-# its live-alerter twin) + user_retention (first-active-day cohorts,
-# day-1/day-7 returns) -- all with full DuckDB oracles, parity-gated
-# every round. Seat candidates for R19+ only if a trade frees a seat
-# in the matching phase; the probe-family ts_subsequence rows do NOT
-# gate the discovery ops (different op class: self-join mining vs
-# probe retrieval), and no registered row gates event_funnel's
-# ordered-stage or user_retention's cohort semantics.
-# Sitting out r17 -- every alternating row hash-green in r16
-# (CORRECTNESS_r16), witness noted ("(in)" = in the r17 window):
+# CURRENT RULE: 106 registered = 3 always-in + 8 permanent composed
+# sitters + 1 no-oracle sitter + 94 alternating over 47 seats per
+# round. Always in: stock_matchmaker (no oracle and no hash-gated
+# witness), media_decode_checksum (the no-oracle sitter's witness,
+# enforced by test_registry) and fraud_alerts (sole BroadcastState /
+# FD megaphone evidence). The pool is saturated, so a new registration
+# needs a matching flip or retirement from the phase that returns that
+# round; a retired row moves to ``load_library`` and keeps its full
+# oracle in test_oracle_parity's library pass.
+# Sitting out this round, each with its witness ("(in)" = in the
+# window):
 DEPRIORITIZED = [
     # ---- r16-green rows sitting one round ----
     "nexmark_q5",              # sliding window agg: tumbling_window_agg + sliding_count_window (in)
@@ -214,7 +128,7 @@ DEPRIORITIZED = [
     "source_mix_sample",       # md5-ppm keep kernel: source_cap_sample (in, md5-order family)
     "pack_plan",               # packing kernel: training_plan_over_store (in, composes the plan chain; store ≡ recompute equality-pinned in test_pq) + curation_funnel (in, same manifest chain)
     "source_divergence",       # per-source KL: wordcount (in, the (source,word) count kernel) + lang_id (in, distribution-model class)
-    "dsir_weights",            # hashed-bigram importance: lang_id (in, hashed n-gram broadcast-model class) + integer-exact stream-twin pytest (test_streaming_extras, every round)
+    "dsir_weights",            # hashed-bigram importance: lang_id (in, hashed n-gram broadcast-model class) + integer-exact stream-twin pytest (test_streaming, every round)
     "ts_subsequence_match",    # ts family: ts_subsequence_sax (in, same z-norm + exact-int distance arithmetic)
     "cross_split_leakage",     # dedup_incremental (in, same signature+band pair kernel through the persisted store) + ngram_jaccard (in, shingle kernel) + decontaminate_flags (in, split-keyed semi-join class)
     "line_dedup",              # repetition_ratio (in, in-row array-expression text stats) + token_count (in, shared in-row tokenizer split)
@@ -296,19 +210,9 @@ def load_all() -> dict[str, QueryDef]:
 
 def load_library() -> dict[str, QueryDef]:
     """The LIBRARY surface: ops with full DuckDB oracles but no
-    driver-window seat (the R17 PLAN above; bm25_incremental and
-    hybrid_retrieval graduated to ``@register`` seats in r16,
-    semantic_incremental and admission_report in r15,
-    cross_split_leakage and line_dedup in r14,
-    dedup_incremental/ann_recall/minhash_jaccard_estimate/
-    embedding_health/gopher_rules in r13,
-    bm25_top_docs/dsir_weights/canonical_by_quality/source_divergence
-    in r12). Also holds rows RETIRED from the registered surface
-    (tpch_q10 in r13; tpch_q7 and tpch_q14 in r14; tpch_q3 and
-    knn_bruteforce in r15; revenue_rollup and customers_without_orders
-    in r16) whose kernels are
-    driver-hash-gated by siblings: retirement only moves the evidence
-    channel, never removes the oracle. Shaped exactly like
+    driver-window seat, and rows RETIRED from the registered surface
+    whose kernels are driver-hash-gated by siblings: retirement only
+    moves the evidence channel, never removes the oracle. Shaped exactly like
     ``load_all()`` entries — same (spark, sf_dir) → DataFrame
     contract, same prepare() wrapping, oracle attached — so
     registering one is moving it into a ``@register`` decorator and a

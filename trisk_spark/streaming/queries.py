@@ -11,13 +11,38 @@ Output-mode mapping (SURVEY.md §7 step 3):
 
 Each function takes the *stream* DataFrame (same schema as the batch
 derived view) so stream≡batch equivalence is testable by construction.
+
+The curation twins run the batch module's own stages, so no scoring
+arithmetic exists twice: a stage the stream can run row by row (DSIR,
+BM25) is applied to the stream directly, against a model built once;
+a stage with a batch-only operator (the LM's per-doc aggregate, the
+keyword rank window) runs per micro-batch through ``sinks.per_batch``,
+and those twins take ``(spark, docs_stream, ref_sf_dir, sink)`` and
+return the ``DataStreamWriter``.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from trisk_spark.catalog import table
+from trisk_spark.functions.text import (
+    BM25_QUERIES,
+    LM_MAX_MODEL_ROWS,
+    _kw_ranked,
+    _kw_tf_df_n,
+    _lm_model,
+    _lm_pairs,
+    _lm_scored,
+    _lm_tokens,
+    _within_ceiling,
+    bm25_contrib,
+    bm25_model,
+    pii_scrub,
+    quality_expr,
+)
 from trisk_spark.sources.nexmark import bids
+from trisk_spark.streaming.sinks import per_batch
 from trisk_spark.streaming.state import keyed_state
 
 
@@ -195,7 +220,6 @@ def curated_stream(docs: DataFrame) -> DataFrame:
         MANIFEST_MIN_TOKENS,
         _split_col,
     )
-    from trisk_spark.functions.text import pii_scrub, quality_expr
 
     d = docs.where(F.col("text").isNotNull() & F.col("doc_id").isNotNull())
     ws = F.filter(F.split("text", " "), lambda w: w != "")
@@ -223,261 +247,68 @@ def curated_stream(docs: DataFrame) -> DataFrame:
     )
 
 
+def _ref_lm(spark, ref_sf_dir: str, max_model_rows: int):
+    """The bigram LM of the reference corpus (``text._lm_model``),
+    materialized once for a stream's life; building it runs the batch
+    query's model-size guard, so an over-ceiling model fails here."""
+    c12, c1, vocab = _lm_model(table(spark, ref_sf_dir, "documents"), max_model_rows)
+    vocab = vocab.localCheckpoint()  # the guard fires first
+    return c12.localCheckpoint(), c1.localCheckpoint(), vocab
+
+
 def bigram_lm_stream(
-    docs: DataFrame,
-    spark,
-    ref_sf_dir: str,
-    max_model_rows: int | None = None,
-    extra: tuple[str, ...] = (),
-) -> DataFrame:
+    spark, docs_stream: DataFrame, ref_sf_dir: str, sink,
+    max_model_rows: int = LM_MAX_MODEL_ROWS,
+):
     """Streaming bigram-LM scoring — the deployment shape of
     ``functions/text.bigram_lm_score``: the LM count tables are built
-    ONCE from the reference slice (batch), shipped to every executor as
-    a SparkContext broadcast (the KenLM "model file on each worker"
-    pattern), and arriving documents are scored statelessly in an
-    Arrow-batched ``mapInPandas`` kernel — append mode, ZERO shuffle,
-    no state. The kernel reproduces the batch arithmetic exactly:
-    per-pair ln rounded to 6 decimals, summed in 1e-6 integer units,
-    mean floored on the grid (stream≡batch pytest-pinned).
-
-    At 100 TB the broadcast is vocabulary-bounded (counts, not corpus)
-    and scoring scales with the ingest scan alone. ``extra`` names
-    string key columns carried through the kernel unchanged (e.g.
-    ``lang`` for the perplexity bucketer) — the streaming mirror of the
-    batch kernel's ``_lm_scored(extra=...)``."""
-    import math
-    from collections.abc import Iterator
-    from decimal import ROUND_HALF_UP, Decimal
-
-    import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
-
-    from trisk_spark.catalog import table
-    from trisk_spark.functions.text import (
-        LM_MAX_MODEL_ROWS,
-        LM_REF_MOD,
-        _lm_bigrams,
-        _lm_tokens,
-    )
-
-    ref_docs = table(spark, ref_sf_dir, "documents").where(
-        F.col("doc_id").isNotNull()
-        & (F.pmod(F.col("doc_id"), F.lit(LM_REF_MOD)) == 0)
-    )
-    # the vocab aggregate runs FIRST and doubles as the model-size
-    # guard: n_tok (total reference tokens, free in the same scan)
-    # upper-bounds the c12 row count, so an over-ceiling model fails
-    # loudly BEFORE .collect() materializes it into the driver — the
-    # batch query's pre-collect pattern (text.py bigram_lm_score); a
-    # post-collect check would OOM the driver before raising
-    ceiling = LM_MAX_MODEL_ROWS if max_model_rows is None else max_model_rows
-    vstats = (
-        ref_docs.select(F.explode(_lm_tokens()).alias("w"))
-        .agg(F.countDistinct("w").alias("v"), F.count("*").alias("n_tok"))
-        .first()
-    )
-    if int(vstats["n_tok"] or 0) > ceiling:
-        raise ValueError(
-            f"bigram LM model too large to broadcast: up to "
-            f"{vstats['n_tok']} bigram rows > ceiling {ceiling}; "
-            "ship the LM counts as files instead of a driver-collected "
-            "broadcast"
-        )
-    v = vstats["v"]
-    c12 = {
-        (r.w1, r.w2): r.c12
-        for r in _lm_bigrams(ref_docs)
-        .groupBy("w1", "w2")
-        .agg(F.count("*").alias("c12"))
-        .collect()
-    }
-    c1: dict = {}
-    for (w1, _w2), c in c12.items():
-        c1[w1] = c1.get(w1, 0) + c
-    model = spark.sparkContext.broadcast((c12, c1, int(v)))
-
-    from pyspark.sql.types import StringType
-
-    out_schema = StructType(
-        [StructField("doc_id", LongType())]
-        + [StructField(c, StringType()) for c in extra]
-        + [
-            StructField("n_bigrams", LongType()),
-            StructField("mu", LongType()),
-        ]
-    )
-
-    def score(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bc12, bc1, bv = model.value
-        for pdf in batches:
-            out: dict = {"doc_id": [], "n_bigrams": [], "mu": []}
-            for c in extra:
-                out[c] = []
-            xcols = [pdf[c] for c in extra]
-            for doc_id, text, *xs in zip(pdf["doc_id"], pdf["text"], *xcols):
-                if doc_id is None or pd.isna(doc_id) or bv <= 0:
-                    continue
-                toks = [w for w in (text or "").lower().split(" ") if w != ""]
-                if len(toks) < 2:
-                    continue
-                mu = 0
-                q6 = Decimal("0.000001")
-                for a, b in zip(toks, toks[1:]):
-                    p = (bc12.get((a, b), 0) + 1) / (bc1.get(a, 0) + bv)
-                    # same grid as the batch decimal: ln rounded to 6
-                    # decimals, accumulated in exact 1e-6 integer units.
-                    # Decimal(repr(x)) quantized ROUND_HALF_UP is Spark
-                    # F.round's exact semantics: Round on doubles goes
-                    # through BigDecimal.valueOf, i.e. Double.toString's
-                    # SHORTEST round-trip repr — which Python's repr()
-                    # also produces — NOT the exact binary expansion
-                    # (Decimal(float) would diverge by 1e-6 when the
-                    # shortest repr lands on a 5 at the 7th decimal
-                    # while the binary value sits just below it).
-                    # Python's round() is half-EVEN and would also
-                    # diverge on exact 0.5e-6 boundaries.
-                    logp6 = Decimal(repr(math.log(p))).quantize(
-                        q6, ROUND_HALF_UP
-                    )
-                    mu += int(logp6.scaleb(6))
-                out["doc_id"].append(int(doc_id))
-                for c, x in zip(extra, xs):
-                    out[c].append(None if (x is None or pd.isna(x)) else str(x))
-                out["n_bigrams"].append(len(toks) - 1)
-                out["mu"].append(mu)
-            yield pd.DataFrame(out)[
-                ["doc_id", *extra, "n_bigrams", "mu"]
-            ]
-
-    scored = docs.select("doc_id", *extra, "text").mapInPandas(score, out_schema)
-    nb = F.col("n_bigrams")
-    r = ((F.col("mu") % nb) + nb) % nb
-    return scored.select(
-        "doc_id",
-        *extra,
-        "n_bigrams",
-        (((F.col("mu") - r) / nb) / F.lit(1000000.0)).alias("lm_score"),
+    ONCE from the reference slice and each micro-batch is scored by the
+    batch query's own stage (``text._lm_scored``) against them, so
+    stream ≡ batch holds by construction (pytest-pinned).
+    ``sink(scored_df, batch_id)`` receives (doc_id, n_bigrams,
+    lm_score) per micro-batch; sink contract: fully materialize inside
+    the call. Returns the ``DataStreamWriter`` ready to ``.start()``."""
+    model = _ref_lm(spark, ref_sf_dir, max_model_rows)
+    return per_batch(
+        docs_stream, lambda batch_df, _: _lm_scored(batch_df, model), sink
     )
 
 
 def keyword_extract_stream(
-    docs: DataFrame,
-    spark,
-    ref_sf_dir: str,
-    max_model_rows: int | None = None,
-) -> DataFrame:
+    spark, docs_stream: DataFrame, ref_sf_dir: str, sink,
+    max_model_rows: int = LM_MAX_MODEL_ROWS,
+):
     """Streaming keyword extraction — the deployment shape of
-    ``functions/text.keyword_extract`` via the broadcast-model pattern
-    the LM scorer established: the df table and corpus doc count N are
-    built ONCE from the reference corpus (batch — the write-once idf
-    asset) and shipped to executors as a SparkContext broadcast;
-    arriving documents get per-doc tf + top-K ranking statelessly in an
-    Arrow-batched ``mapInPandas`` kernel — append mode, ZERO shuffle,
-    no state.
-
-    The kernel reproduces the batch arithmetic exactly: score =
-    float(tf) · float(N) / float(df) (the same two correctly-rounded
-    double ops as the JVM ``tf.cast(double) * n_docs / df``), ranking
-    by (score DESC, token ASC) with Python's codepoint string order ==
-    Spark's UTF-8 binary order (UTF-8 preserves codepoint order), and
-    the 6-decimal ROUND applied JVM-side AFTER ranking, exactly like
-    the batch plan. Tokens absent from the reference df table are
-    skipped — the batch inner tf⋈df join's semantics
-    (stream≡batch pytest-pinned)."""
-    from collections.abc import Iterator
-
-    import pandas as pd
-    from pyspark.sql.types import (
-        DoubleType,
-        IntegerType,
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from trisk_spark.catalog import table
-    from trisk_spark.functions.text import (
-        KEYWORDS_K,
-        LM_MAX_MODEL_ROWS,
-        _lm_tokens,
-    )
-
-    ref_docs = table(spark, ref_sf_dir, "documents").where(
-        F.col("doc_id").isNotNull()
-    )
-    toks = ref_docs.select("doc_id", F.explode(_lm_tokens()).alias("tok"))
-    # pre-collect model-size guard (the LM-stream pattern): total
-    # reference tokens upper-bound the df-table row count (df rows =
-    # distinct tokens ≤ tokens), and the same cheap aggregate yields
-    # n_docs — an over-ceiling vocabulary fails loudly BEFORE the
-    # .collect() materializes it into the driver
-    ceiling = LM_MAX_MODEL_ROWS if max_model_rows is None else max_model_rows
-    tstats = toks.agg(
-        F.countDistinct("doc_id").alias("n"), F.count("*").alias("n_tok")
-    ).first()
-    if int(tstats["n_tok"] or 0) > ceiling:
-        raise ValueError(
-            f"keyword df model too large to broadcast: up to "
-            f"{tstats['n_tok']} token rows > ceiling {ceiling}; "
-            "ship the df table as files instead of a driver-collected "
-            "broadcast"
+    ``functions/text.keyword_extract``: the df table and the corpus
+    doc count are built ONCE from the reference corpus (the write-once
+    idf asset) and each micro-batch's per-doc tf is ranked by the
+    batch query's own stage (``text._kw_ranked``), so stream ≡ batch
+    holds by construction (pytest-pinned). Tokens absent from the
+    reference df drop out, as in the batch inner join. The model build
+    fails loud when the reference's token count (an upper bound on the
+    df rows) exceeds ``max_model_rows``. ``sink(keywords_df,
+    batch_id)``; sink contract: fully materialize inside the call.
+    Returns the ``DataStreamWriter`` ready to ``.start()``."""
+    tf, df, n = _kw_tf_df_n(table(spark, ref_sf_dir, "documents"))
+    n = (
+        n.crossJoin(tf.agg(F.sum("tf").alias("n_tok")))
+        .where(
+            _within_ceiling(
+                "n_tok",
+                max_model_rows,
+                "keyword df model too large to broadcast: reference holds",
+                "the df table",
+            )
         )
-    n_docs = int(tstats["n"] or 0)
-    tf_ref = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
-    df_map = {
-        r.tok: r.df
-        for r in tf_ref.groupBy("tok").agg(F.count("*").alias("df")).collect()
-    }
-    model = spark.sparkContext.broadcast((df_map, n_docs))
-
-    out_schema = StructType(
-        [
-            StructField("doc_id", LongType()),
-            StructField("token", StringType()),
-            StructField("tf", LongType()),
-            StructField("df", LongType()),
-            StructField("raw_score", DoubleType()),
-            StructField("rank", IntegerType()),
-        ]
+        .select("n_docs")
+        .localCheckpoint()
     )
+    df = df.localCheckpoint()
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        bdf, bn = model.value
-        for pdf in batches:
-            out = {
-                "doc_id": [], "token": [], "tf": [], "df": [],
-                "raw_score": [], "rank": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id is None or pd.isna(doc_id) or bn <= 0:
-                    continue
-                counts: dict[str, int] = {}
-                for w in (text or "").lower().split(" "):
-                    if w != "":
-                        counts[w] = counts.get(w, 0) + 1
-                scored = [
-                    (float(tf) * float(bn) / float(bdf[tok]), tok, tf)
-                    for tok, tf in counts.items()
-                    if tok in bdf
-                ]
-                scored.sort(key=lambda s: (-s[0], s[1]))
-                for rank, (score, tok, tf) in enumerate(
-                    scored[:KEYWORDS_K], start=1
-                ):
-                    out["doc_id"].append(int(doc_id))
-                    out["token"].append(tok)
-                    out["tf"].append(tf)
-                    out["df"].append(int(bdf[tok]))
-                    out["raw_score"].append(score)
-                    out["rank"].append(rank)
-            yield pd.DataFrame(out)
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        return _kw_ranked(_kw_tf_df_n(batch_df)[0], df, n)
 
-    scored = docs.select("doc_id", "text").mapInPandas(extract, out_schema)
-    return scored.select(
-        "doc_id", "token", "tf", "df",
-        F.round("raw_score", 6).alias("score"), "rank",
-    )
+    return per_batch(docs_stream, stage, sink)
 
 
 def ivf_assign_stream(emb_stream: DataFrame, spark, ref_sf_dir: str) -> DataFrame:
@@ -497,7 +328,6 @@ def ivf_assign_stream(emb_stream: DataFrame, spark, ref_sf_dir: str) -> DataFram
     ``probe_index`` and ``probe_index_adc`` identically to the
     batch-built one (stream≡batch + probe-over-streamed-store
     pytest-pinned)."""
-    from trisk_spark.catalog import table
     from trisk_spark.functions.pq import (
         _pq_codebook,
         _quantize_assign_pq_gemm,
@@ -526,7 +356,6 @@ def source_mix_stream(docs: DataFrame, spark, ref_sf_dir: str) -> DataFrame:
     sources unseen in the reference corpus have no rate and are
     dropped (the batch inner-join semantics). Stream≡batch
     pytest-pinned."""
-    from trisk_spark.catalog import table
     from trisk_spark.functions.sampling import (
         _docs,
         mix_keep_col,
@@ -575,7 +404,6 @@ def minhash_flag_stream(
     caller takes ownership: pass ``index_out=[]`` and the persisted
     frame is appended for caller-side ``unpersist()`` once the stream
     stops."""
-    from trisk_spark.catalog import table
     from trisk_spark.functions.dedup import (
         minhash_bands,
         minhash_signatures_inrow,
@@ -644,7 +472,6 @@ def semantic_flag_stream(
     expires — the same escape hatch as ``minhash_flag_stream``).
     Append mode. Stream≡batch pytest-pinned against the uncapped
     band∩cosine image."""
-    from trisk_spark.catalog import table
     from trisk_spark.functions.similarity import (
         NEAR_DUP_COS,
         VEC_BUCKET_CAP,
@@ -718,7 +545,6 @@ def source_upsample_stream(docs: DataFrame, spark, ref_sf_dir: str) -> DataFrame
     sources unseen in the reference corpus have no factor and are
     dropped (the batch inner-join semantics). Stream≡batch
     pytest-pinned."""
-    from trisk_spark.catalog import table
     from trisk_spark.functions.sampling import (
         MIX_PPM,
         source_upsample_factors,
@@ -790,7 +616,6 @@ def cluster_cap_stream(
     import pandas as pd
     from pyspark.sql.streaming.state import GroupState
 
-    from trisk_spark.catalog import table
     from trisk_spark.functions.sampling import CLUSTER_CAP
     from trisk_spark.functions.similarity import (
         _int8_centroid_model,
@@ -981,15 +806,19 @@ def ppl_cutoffs(spark, ref_sf_dir: str):
 
 
 def ppl_bucket_stream(
-    docs: DataFrame, spark, ref_sf_dir: str, cutoffs: DataFrame | None = None
-) -> DataFrame:
+    spark, docs_stream: DataFrame, ref_sf_dir: str, sink,
+    cutoffs: DataFrame | None = None,
+):
     """Streaming perplexity bucketing — the deployment shape of
     ``sampling.perplexity_buckets``: per-language tercile CUTOFFS are
     trained once from the reference corpus (``ppl_cutoffs``, the
-    write-once threshold asset), arriving documents are LM-scored by
-    the shared ``bigram_lm_stream`` kernel with ``lang`` riding the
-    batch, and the bucket is a threshold comparison against the
-    broadcast cutoff row — append mode, stateless, zero shuffle.
+    write-once threshold asset), each micro-batch is LM-scored by the
+    batch stage (``text._lm_scored`` with ``lang`` riding it, against
+    the reference LM built once), and the bucket is a threshold
+    comparison against the broadcast cutoff row. ``sink(buckets_df,
+    batch_id)`` receives (doc_id, lang, lm_score, bucket); sink
+    contract: fully materialize inside the call. Returns the
+    ``DataStreamWriter`` ready to ``.start()``.
 
     Semantics vs batch: batch terciles are global RANKS, which a
     stream cannot compute (it never holds the full corpus); the
@@ -1001,26 +830,30 @@ def ppl_bucket_stream(
     'tail'. Both properties stream≡batch pytest-pinned.
 
     Setup cost: the ``cutoffs=None`` convenience path builds the
-    reference LM twice (once distributed inside the batch tercile
-    chain, once as ``bigram_lm_stream``'s driver-collected broadcast
-    dict) — fine for the test rig; a production deployment trains
-    ``ppl_cutoffs`` once, persists the lang-cardinality rows next to
-    the LM counts, and passes them via ``cutoffs`` so query start-up
-    costs one broadcast, not two model builds."""
+    reference LM twice (once inside the batch tercile chain, once for
+    the per-batch stage) — fine for the test rig; a production
+    deployment trains ``ppl_cutoffs`` once, persists the
+    lang-cardinality rows next to the LM counts, and passes them via
+    ``cutoffs``."""
     cuts = ppl_cutoffs(spark, ref_sf_dir) if cutoffs is None else cutoffs
-    scored = bigram_lm_stream(docs, spark, ref_sf_dir, extra=("lang",))
-    c = F.broadcast(
-        cuts.select(
-            F.col("lang").alias("_cl"), "head_min", "middle_min"
-        )
-    )
-    j = scored.join(c, scored["lang"].eqNullSafe(F.col("_cl")), "left")
+    cuts = cuts.select(
+        F.col("lang").alias("_cl"), "head_min", "middle_min"
+    ).localCheckpoint()
+    model = _ref_lm(spark, ref_sf_dir, LM_MAX_MODEL_ROWS)
     bucket = (
         F.when(F.col("lm_score") >= F.col("head_min"), F.lit("head"))
         .when(F.col("lm_score") >= F.col("middle_min"), F.lit("middle"))
         .otherwise(F.lit("tail"))
     )
-    return j.select("doc_id", "lang", "lm_score", bucket.alias("bucket"))
+
+    def stage(batch_df: DataFrame, batch_id: int) -> DataFrame:
+        scored = _lm_scored(batch_df, model, extra=("lang",))
+        j = scored.join(
+            F.broadcast(cuts), scored["lang"].eqNullSafe(F.col("_cl")), "left"
+        )
+        return j.select("doc_id", "lang", "lm_score", bucket.alias("bucket"))
+
+    return per_batch(docs_stream, stage, sink)
 
 
 def bm25_score_stream(
@@ -1052,8 +885,6 @@ def bm25_score_stream(
     its groupBy — stream≡batch therefore assumes id-unique input, the
     ingest invariant ``dedup_exact_stream`` enforces upstream (same
     contract as every id-keyed op, cf. ``_bigram_lm_sql``'s note)."""
-    from trisk_spark.functions.text import BM25_QUERIES, bm25_contrib, bm25_model
-
     if model is None:
         model = bm25_model(spark, ref_sf_dir)
     dfd, n_docs, total_len = model
@@ -1116,67 +947,48 @@ def dsir_score_stream(
     one bigram, the streaming twin of the library
     ``sampling.dsir_weights``.
 
-    Determinism is STRONGER than the bigram-LM twin's: the per-bucket
-    contributions arrive PRE-ROUNDED on the JVM in exact 1e-6 integer
-    units (dsir_model runs the batch ROUND(·,6) expression and
-    collects micro-ints), so the kernel is hashlib-md5 bucketing (hex
-    parity with Spark md5 — the cluster_cap_stream precedent) plus
-    INTEGER addition — no Python ln, no rounding at score time;
-    stream≡batch equality on a same-corpus replay is exact by
-    construction and pytest-pinned. A bigram hashing to a bucket the
-    reference corpus never populated takes the model's default
-    (zero-count) contribution — a case a same-corpus replay never
-    hits, exercised by its own test. Arrow-batched ``mapInPandas``,
-    append mode, ZERO shuffle, zero state; per-row Python cost is
-    O(bigrams) dict lookups (the batch op is the scale path — this is
-    the deployment gate shape). Duplicate-id contract: scores each
-    arriving ROW, where batch ``dsir_weights`` merges duplicate
-    doc_ids in its groupBy — stream≡batch assumes id-unique input,
-    the ``dedup_exact_stream`` ingest invariant (cf.
-    ``bm25_score_stream``)."""
-    import hashlib
-
-    import pandas as pd
-
-    from trisk_spark.functions.sampling import DSIR_BUCKETS, dsir_model
+    The model is one row holding every bucket's contribution
+    pre-rounded on the batch grid in exact 1e-6 integer units; it is
+    cross-joined by broadcast, each row's bigrams are bucketed in-row
+    by the batch's own md5 bucket column (``sampling._dsir_bucket``),
+    and their contributions are summed as integers — no ln and no
+    rounding at score time, so stream≡batch equality on a same-corpus
+    replay is exact (pytest-pinned). A bigram hashing to a bucket the
+    reference corpus never populated takes the zero-count contribution
+    (exercised by its own test). Append mode, zero shuffle, zero
+    state. Duplicate-id contract: scores each arriving ROW, where
+    batch ``dsir_weights`` merges duplicate doc_ids in its groupBy —
+    stream≡batch assumes id-unique input, the ``dedup_exact_stream``
+    ingest invariant (cf. ``bm25_score_stream``)."""
+    from trisk_spark.functions.sampling import _dsir_bucket, dsir_model
 
     if model is None:
         model = dsir_model(spark, ref_sf_dir)
-    contrib_micro, default_micro = model
-    B = DSIR_BUCKETS
-    bc = spark.sparkContext.broadcast((contrib_micro, default_micro))
-
-    out_schema = (
-        "doc_id long, n_bigrams long, dsir_weight double, "
-        "target_leaning boolean"
+    bucketed = (
+        docs.where(F.col("doc_id").isNotNull())
+        .select("doc_id", _lm_tokens().alias("t"))
+        .select("doc_id", _lm_pairs(_dsir_bucket).alias("bk"))
+        .where(F.size("bk") > 0)
     )
-
-    def score(batches):
-        cm, dm = bc.value
-        for pdf in batches:
-            out = {
-                "doc_id": [], "n_bigrams": [],
-                "dsir_weight": [], "target_leaning": [],
-            }
-            for doc_id, text in zip(pdf["doc_id"], pdf["text"]):
-                if doc_id is None or pd.isna(doc_id):
-                    continue
-                toks = [w for w in (text or "").lower().split(" ") if w != ""]
-                if len(toks) < 2:
-                    continue
-                micro = 0
-                for a, b in zip(toks, toks[1:]):
-                    h = hashlib.md5(f"{a} {b}".encode()).hexdigest()
-                    micro += cm.get(int(h[:15], 16) % B, dm)
-                out["doc_id"].append(int(doc_id))
-                out["n_bigrams"].append(len(toks) - 1)
-                out["dsir_weight"].append(micro / 1e6)
-                out["target_leaning"].append(micro > 0)
-            yield pd.DataFrame(out)[
-                ["doc_id", "n_bigrams", "dsir_weight", "target_leaning"]
-            ]
-
-    return docs.select("doc_id", "text").mapInPandas(score, out_schema)
+    micro = F.aggregate(
+        "bk",
+        F.lit(0).cast("bigint"),
+        lambda acc, b: acc + F.element_at("model", (b + 1).cast("int")),
+    )
+    return (
+        bucketed.crossJoin(F.broadcast(model))
+        .select(
+            "doc_id",
+            F.size("bk").cast("bigint").alias("n_bigrams"),
+            micro.alias("micro"),
+        )
+        .select(
+            "doc_id",
+            "n_bigrams",
+            (F.col("micro") / F.lit(1e6)).alias("dsir_weight"),
+            (F.col("micro") > 0).alias("target_leaning"),
+        )
+    )
 
 
 def funnel_stream(events: DataFrame) -> DataFrame:

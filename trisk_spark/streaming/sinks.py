@@ -1,5 +1,5 @@
-"""Sinks, side outputs, and late-data handling (SURVEY.md §2A Sinks +
-split/select + allowedLateness rows).
+"""Sinks, side outputs, late-data handling, and the one micro-batch
+runner (SURVEY.md §2A Sinks + split/select + allowedLateness rows).
 
 Reference surface: addSink/print/writeAsText/Kafka producer/DummySink
 (DataStream.java:1001-1318); side outputs via OutputTag
@@ -8,16 +8,23 @@ Reference surface: addSink/print/writeAsText/Kafka producer/DummySink
 
 Spark image: print, DummySink and the Kafka producer are plain
 ``writeStream.format("console"|"noop"|"kafka")`` calls and need no
-wrapper; the file sink is ``to_files``; one foreachBatch fan-out for side outputs (each batch routed to N sinks by
-predicate — the split/select pattern); late rows captured by an
-anti-join against the watermark *before* Spark drops them (Spark has no
-native late-data side output — documented divergence, closed here)."""
+wrapper; the file sink is ``to_files``. ``per_batch`` runs a batch
+stage over each micro-batch and hands its result to a sink: every
+library stream twin and store stream verb that works per batch goes
+through it, so the batch cache and the store-family replay guard
+exist once. One foreachBatch fan-out serves side outputs (each batch
+routed to N sinks by predicate — the split/select pattern); late rows
+are captured by an anti-join against the watermark *before* Spark
+drops them (Spark has no native late-data side output — documented
+divergence, closed here)."""
 
 from __future__ import annotations
 
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, functions as F
+
+from trisk_spark.functions import storefs
 
 
 def to_files(
@@ -44,6 +51,44 @@ def to_files(
     if partition_by is not None:
         w = w.partitionBy(partition_by)
     return w
+
+
+def per_batch(
+    stream: DataFrame,
+    stage: Callable[[DataFrame, int], DataFrame | None],
+    sink: Callable[[DataFrame, int], None],
+    watermark: str | None = None,
+):
+    """Run ``stage(batch_df, batch_id)`` on each micro-batch and hand
+    its result to ``sink(result_df, batch_id)``; a stage that returns
+    None has nothing to sink. The micro-batch is cached for the call,
+    so a stage with several consumers reads it once; the sink must
+    therefore fully materialize the result inside the call (the cache
+    is dropped when it returns).
+
+    ``watermark`` names a store directory and turns on the
+    store-family replay guard: a batch at or below the store's
+    persisted batch-id watermark is skipped entirely (no stage, no
+    sink); otherwise the stage runs, the watermark is written, and
+    only then is the sink called. Returns the append-mode
+    ``DataStreamWriter`` ready to ``.start()``."""
+
+    def run(batch_df: DataFrame, batch_id: int) -> None:
+        if watermark is not None:
+            wm = storefs.read_ingest_watermark(watermark)
+            if wm is not None and batch_id <= wm:
+                return
+        batch_df = batch_df.persist()
+        try:
+            out = stage(batch_df, batch_id)
+            if watermark is not None:
+                storefs.write_ingest_watermark(watermark, batch_id)
+            if out is not None:
+                sink(out, batch_id)
+        finally:
+            batch_df.unpersist()
+
+    return stream.writeStream.outputMode("append").foreachBatch(run)
 
 
 def side_output_fanout(
