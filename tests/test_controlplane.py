@@ -12,6 +12,8 @@ Scenarios mirror SURVEY.md §2C:
     seed, not the history.
   * Stateless rescale resumes from the SAME checkpoint — no replay, no
     duplicate emission (decided from the checkpoint: no state listed).
+  * A migrated resume with nothing new to read starts no query; a
+    build whose source ignores the cut replays instead.
   * Keyed state with processing-time timeouts still drains and returns.
   * Rules change-of-logic hot-swap — new rules next batch, no restart.
   * Plan primitives: tags, diff kinds, key-group dealing.
@@ -228,6 +230,60 @@ def test_back_to_back_applies_carry_the_pending_seed(spark):
     assert _offset_log_partitions(mq.checkpoint) == {"4"}
     batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
     assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
+
+
+def test_migrated_resume_with_nothing_new_starts_nothing(spark):
+    """A migrate with no input staged beyond the cut: the resume starts
+    no query and the new checkpoint stays unrun; the seed folds in the
+    next drain, and the trades equal batch ``stock_matchmaker``."""
+    staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=2)
+    mq = _matchmaker_query(spark, staged, "mm-lazy")
+    staged.stage(1)
+    mq.run_available()
+    plan = mq.get_plan_copy()
+    plan.assign_workload("main", round_robin(3))
+    entry = mq.apply(plan)
+    assert entry["mode"] == "migrate"
+    mq.run_available()
+    assert mq.query is None
+    assert not os.path.isdir(os.path.join(mq.checkpoint, "offsets"))
+    assert entry["input_rows"] == 0 and "resume_s" in entry
+    staged.stage(2)
+    mq.run_available()
+
+    assert mq.query is not None and entry["input_rows"] == 0
+    assert _offset_log_partitions(mq.checkpoint) == {"3"}
+    batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
+    assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
+
+
+def test_source_ignoring_the_cut_falls_back_to_replay(spark):
+    """A build that reads the live dir itself never reports its pending
+    input, so it would re-read what the seed already holds: the resume
+    replays instead, and the counts equal batch."""
+    from trisk_spark.streaming.state import running_wordcount_stream
+
+    events = table(spark, SF, "events")
+    staged = StagedReplay(events, "ts", n_chunks=2)
+
+    def build(sp, plan):
+        stream = sp.readStream.schema(staged.schema).parquet(staged.live)
+        return running_wordcount_stream(stream.select(F.col("event_type").alias("word")))
+
+    mq = ManagedQuery(spark, "cut-blind", build, parallelism=2)
+    staged.stage(1)
+    mq.run_available()
+    plan = mq.get_plan_copy()
+    plan.assign_workload("main", round_robin(3))
+    assert mq.apply(plan)["mode"] == "migrate"  # the checkpoint's verdict
+    staged.stage(2)
+    mq.run_available()
+    assert mq.reconfig_log[-1]["mode"] == "replay"
+    want = {
+        r.event_type: r.cnt
+        for r in events.groupBy("event_type").agg(F.count("*").alias("cnt")).collect()
+    }
+    assert _final_counts(mq.emitted) == want
 
 
 def test_keyed_state_folds_the_seed_once_before_input(spark, tmp_path):

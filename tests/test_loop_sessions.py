@@ -3,10 +3,14 @@ the components label loop, the PQ Lloyd loop and the IVF refinement loop
 run with AQE off and a derived fan on their own SQLConf, never on the
 caller's. Pins the job count each loop query runs, checks that the
 caller's session keeps AQE while a loop runs, and that every frame a
-loop returns belongs to the caller's session again."""
+loop returns belongs to the caller's session again. Also checks that
+each process ships the package from an archive of its own."""
 
 from __future__ import annotations
 
+import os
+import subprocess
+import sys
 import threading
 
 import pytest
@@ -111,3 +115,26 @@ def test_loop_results_belong_to_callers_session(spark, monkeypatch):
     enc = QUERIES["pq_encode_trained"].fn(spark, SF_DIR)
     assert _is_callers(enc, spark)
     assert _plans_adaptive(enc)
+
+
+def test_each_process_ships_its_own_package_archive():
+    """Two processes zip the package to two paths, so a process started
+    from another checkout never overwrites the archive this process's
+    SparkContext ships; each removes its own archive on exit."""
+    probe = (
+        "import zipfile\n"
+        "from trisk_spark.session import _package_zip\n"
+        "path = _package_zip()\n"
+        "assert 'trisk_spark/session.py' in zipfile.ZipFile(path).namelist()\n"
+        "print(path)\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    paths = [
+        subprocess.run(
+            [sys.executable, "-c", probe], cwd=root, capture_output=True, text=True, check=True
+        ).stdout.strip()
+        for _ in range(2)
+    ]
+    assert len(set(paths)) == 2
+    assert all(os.path.basename(p) == "trisk_spark_pkg.zip" for p in paths)
+    assert not any(os.path.exists(os.path.dirname(p)) for p in paths)

@@ -15,9 +15,12 @@ boundary is a consistent quiesce point. The mapping (SURVEY.md §3.2):
 | assignWorkload (key remap) | shuffle-partition change; keyed state     |
 |                            | migrates by key (barrier snapshot seeds   |
 |                            | the new checkpoint, the source is cut at  |
-|                            | what the old one committed); Spark-owned  |
-|                            | state re-shards by checkpointed replay;   |
-|                            | a stateless query resumes in place        |
+|                            | what the old one committed; the seed      |
+|                            | folds in the first batch with new input,  |
+|                            | so a resume with none starts nothing);    |
+|                            | Spark-owned state re-shards by            |
+|                            | checkpointed replay; a stateless query    |
+|                            | resumes in place                          |
 | assignExecutionLogic       | rules re-read per micro-batch (no restart)|
 |                            | or stop→rebuild→resume for real UDF swaps |
 | assignResources (placement)| documented no-op (Spark scheduler's job)  |

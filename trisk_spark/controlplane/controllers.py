@@ -90,8 +90,8 @@ def run_scripted(
         plan = mq.get_plan_copy()
         if controller.on_stage(stage + 1, plan, mq.operator):
             mq.apply(plan)
-    # A trailing reconfig that moved state needs one more incarnation on
-    # the new layout (the resume half of the protocol; a replay
-    # re-emits there).
+    # A trailing reconfig that moved state gets its resume: a replay
+    # re-emits there; a migrate, with nothing new to read, starts
+    # nothing and leaves its seed pending.
     if mq.reconfig_log and mq.reconfig_log[-1]["mode"] != "resume":
         mq.run_available()

@@ -28,7 +28,13 @@ from the operators the old checkpoint's ``state-metadata`` lists:
   nothing stateful changes layout: the same checkpoint.
 
 "Resume" = the next ``run_available``, which fills in the entry's
-``resume_s`` and ``input_rows``.
+``resume_s`` and ``input_rows``. A migrated checkpoint that has not
+run yet is already a valid restart point (its offset log is empty, its
+seed is on disk), so while the source has no input beyond the cut the
+resume starts nothing (``input_rows`` 0): the seed stays pending and
+folds in the first batch that carries input. A build whose source does
+not report its pending input (``PENDING_CONF``) cannot honour the cut,
+and replays instead.
 
 StagedReplay makes reconfiguration points deterministic for tests: the
 file-stream source sees chunk files appear in stages; each availableNow
@@ -65,6 +71,10 @@ from trisk_spark.streaming.state import SEED_CONF, seed_rows
 #: already consumed; ``StagedReplay.stream`` leaves them out. Set, like
 #: ``SEED_CONF``, only on a ManagedQuery's own sibling session.
 CUT_CONF = "trisk.managed.cut"
+#: Session conf in which ``StagedReplay.stream`` reports how many staged
+#: chunks lie outside the cut. A ManagedQuery sets it empty before each
+#: build; a source that ignores the cut leaves it empty.
+PENDING_CONF = "trisk.managed.pending"
 
 
 class StagedReplay:
@@ -103,10 +113,15 @@ class StagedReplay:
 
     def stream(self, spark: SparkSession) -> DataFrame:
         """The live dir as a file stream, less the chunks the session's
-        source cut (``CUT_CONF``) names as already consumed."""
+        source cut (``CUT_CONF``) names as already consumed. On a
+        session that asks (``PENDING_CONF`` set), the number of staged
+        chunks it leaves in is reported there."""
         reader = spark.readStream.schema(self.schema)
         cut = set(json.loads(spark.conf.get(CUT_CONF, None) or "[]"))
         rest = [c for c in self.chunks if os.path.join(self.live, c) not in cut]
+        if spark.conf.get(PENDING_CONF, None) is not None:
+            staged = set(self.chunks[: self.staged])
+            spark.conf.set(PENDING_CONF, str(sum(c in staged for c in rest)))
         if len(rest) < len(self.chunks):
             # a name no chunk has keeps the filter valid once all are cut
             reader = reader.option("pathGlobFilter", "{%s}" % ",".join(rest or ["-"]))
@@ -216,29 +231,40 @@ class ManagedQuery:
 
     def run_available(self) -> None:
         """One availableNow incarnation: drain whatever the source has,
-        then stop at the batch boundary (quiesced)."""
+        then stop at the batch boundary (quiesced). On a migrated
+        checkpoint that has not run yet, nothing starts while the source
+        has no input beyond the cut; ``self.query`` is then None."""
         t0 = time.time()
         df = self._build()
-        fresh = self.seed and _last_commit(self.checkpoint) is None
-        if fresh and self.seed not in df._jdf.queryExecution().logical().toString():
-            # the build keeps its state outside ``keyed_state`` and never
-            # reads the seed: rebuild the state by replay instead
-            self.seed, self.cut = None, []
-            self.checkpoint = checkpoint_dir(self.name)
-            self.reconfig_log[-1].update(mode="replay", state_rows=0, state_replayed=True)
-            df = self._build()
-        self.query = (
-            df.writeStream.outputMode(self.mode)
-            .foreachBatch(self._sink)
-            .option("checkpointLocation", self.checkpoint)
-            .trigger(availableNow=True)
-            .start()
-        )
-        _await_drained(self.query)
+        if self.seed and _last_commit(self.checkpoint) is None:
+            pending = self.session.conf.get(PENDING_CONF)
+            if pending == "0":
+                df = None  # the seed stays pending for the next input
+            elif not pending or self.seed not in df._jdf.queryExecution().logical().toString():
+                # the build's source ignores the cut (it would re-read
+                # what the seed holds), or the build keeps its state
+                # outside ``keyed_state`` and never reads the seed:
+                # rebuild the state by replay instead
+                self.seed, self.cut = None, []
+                self.checkpoint = checkpoint_dir(self.name)
+                self.reconfig_log[-1].update(mode="replay", state_rows=0, state_replayed=True)
+                df = self._build()
+        self.query = None
+        if df is not None:
+            self.query = (
+                df.writeStream.outputMode(self.mode)
+                .foreachBatch(self._sink)
+                .option("checkpointLocation", self.checkpoint)
+                .trigger(availableNow=True)
+                .start()
+            )
+            _await_drained(self.query)
         entry = self.reconfig_log[-1] if self.reconfig_log else {}
         if entry and "resume_s" not in entry:
             entry["resume_s"] = round(time.time() - t0, 4)
-            entry["input_rows"] = sum(p["numInputRows"] for p in self.query.recentProgress)
+            entry["input_rows"] = (
+                0 if df is None else sum(p["numInputRows"] for p in self.query.recentProgress)
+            )
 
     def _build(self) -> DataFrame:
         """``build`` on the query's session, configured for the current
@@ -252,6 +278,7 @@ class ManagedQuery:
                 sp.conf.set(key, value)
             else:
                 sp.conf.unset(key)
+        sp.conf.set(PENDING_CONF, "")  # the source reports into it
         mine = sp._jsparkSession.streams()
         have = list(mine.listListeners())
         for listener in self.spark._jsparkSession.streams().listListeners():

@@ -16,10 +16,11 @@ payload size — state volume must never change results).
 
 At 100 TB the interesting number is exactly this curve. The payload
 op keeps its state through ``keyed_state``, so the rescale migrates it
-by key: the barrier snapshot is read from the state store, written as
-seed rows under the new checkpoint and folded in by the first batch of
-the new incarnation, which reads no history (ManagedQuery, mode
-``migrate``). Migration cost therefore follows the state moved —
+by key: ``apply`` reads the barrier snapshot from the state store and
+writes it as seed rows under the new checkpoint, and the first batch
+of the new incarnation that carries input folds it in, reading no
+history (ManagedQuery, mode ``migrate``). The per-key cost therefore
+sits in ``apply``'s snapshot (its ``update_s``), not in the resume —
 linear in keys × per-key payload, not in the events drained — the
 reference's state redistribution without its custom migration RPC.
 """
@@ -106,9 +107,9 @@ def state_size_sweep(
     """Run the SD job once per payload size; each run rescales mid-drive.
 
     Returns one record per size: final per-key counts (the invariant),
-    the reconfig log (mode, seed rows, timings) and the total drive
-    wall time (which includes the migrated resume — the cost that
-    scales with per-key state)."""
+    the reconfig log (mode, seed rows, timings; ``update_s`` holds the
+    snapshot, the cost that scales with per-key state) and the total
+    drive wall time."""
     events = table(spark, sf_dir, "events").select("user_id", "ts", "event_id")
     out: list[dict[str, Any]] = []
     for size in sizes:

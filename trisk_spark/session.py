@@ -19,7 +19,11 @@ a generous initial number and let AQE shrink it.
 
 from __future__ import annotations
 
+import atexit
+import functools
 import os
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -56,6 +60,18 @@ RUNTIME_CONFS: dict[str, str] = {
 _PKG_SHIPPED: set[int] = set()
 
 
+@functools.cache
+def _package_zip() -> str:
+    """This process's zip of the package, in a directory only it
+    writes: a process started from another checkout never overwrites
+    the archive this process's SparkContext ships."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    out = tempfile.mkdtemp(prefix="trisk-spark-pkg-")
+    atexit.register(shutil.rmtree, out, True)
+    base = os.path.join(out, "trisk_spark_pkg")
+    return shutil.make_archive(base, "zip", os.path.dirname(pkg_dir), "trisk_spark")
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Make trisk_spark importable on executor Python workers regardless
     of the driver process's cwd: zip the package and addPyFile it.
@@ -64,14 +80,8 @@ def _ship_package(spark: SparkSession) -> None:
     key = id(spark)
     if key in _PKG_SHIPPED:
         return
-    import shutil
-    import tempfile
-
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    base = os.path.join(tempfile.gettempdir(), "trisk_spark_pkg")
-    zip_path = shutil.make_archive(base, "zip", os.path.dirname(pkg_dir), "trisk_spark")
     try:
-        spark.sparkContext.addPyFile(zip_path)
+        spark.sparkContext.addPyFile(_package_zip())
     except Exception:
         pass  # e.g. Spark Connect session without sparkContext
     _PKG_SHIPPED.add(key)
