@@ -12,8 +12,14 @@ Scenarios mirror SURVEY.md §2C:
     seed, not the history.
   * Stateless rescale resumes from the SAME checkpoint — no replay, no
     duplicate emission (decided from the checkpoint: no state listed).
+  * A new key-group deal at an unchanged partition count resumes the
+    same checkpoint: Spark's state layout does not change.
   * A migrated resume with nothing new to read starts no query; a
     build whose source ignores the cut replays instead.
+  * A checkpoint left by a reconfiguration is deleted; a carried seed
+    moves with the checkpoint that reads it.
+  * The query's own session writes checkpoints through the FileSystem
+    manager; the caller's session keeps its conf.
   * Keyed state with processing-time timeouts still drains and returns.
   * Rules change-of-logic hot-swap — new rules next batch, no restart.
   * Plan primitives: tags, diff kinds, key-group dealing.
@@ -40,6 +46,7 @@ from trisk_spark.controlplane import (
     StagedReplay,
     StockController,
     StreamSwitchPolicy,
+    affected_remap,
     round_robin,
     run_scripted,
 )
@@ -96,8 +103,9 @@ def test_stock_controller_schedule_preserves_results(spark):
     # the full schedule ran: rebalance + 2 scale-outs + scale-in
     assert len(mq.reconfig_log) == 4
     assert mq.plan.operators["main"].parallelism == 5  # 4 +1 +1 -1
-    # scale events re-sharded state via replay; every entry quiesced first
-    assert all(e["state_replayed"] for e in mq.reconfig_log)
+    # the rebalance keeps the partition count and resumes in place; the
+    # scale events re-shard the aggregation state via replay
+    assert [e["mode"] for e in mq.reconfig_log] == ["resume", "replay", "replay", "replay"]
 
 
 @pytest.mark.slow
@@ -181,11 +189,19 @@ def _trades(emitted) -> Counter:
     return Counter(tuple(r) for _inc, _bid, r in emitted)
 
 
-def test_matchmaker_rescale_migrates_keyed_state(spark):
+def _checkpoints(base) -> list[str]:
+    """The checkpoint directories left under ``base``."""
+    return sorted(os.path.join(base, d) for d in os.listdir(base) if d.startswith("trisk-ckpt-"))
+
+
+def test_matchmaker_rescale_migrates_keyed_state(spark, tmp_path, monkeypatch):
     """StockController over the keyed-state matchmaker, drained and
-    resumed stage by stage: each reconfiguration moves the books by key
-    (no replay), each resume reads only the seed, and the trades equal
-    batch ``stock_matchmaker`` as a multiset — nothing re-emitted."""
+    resumed stage by stage: the rebalance keeps the partition count and
+    resumes the same checkpoint; each rescale moves the books by key (no
+    replay), each resume reads only the seed, and the trades equal batch
+    ``stock_matchmaker`` as a multiset — nothing re-emitted. Every
+    checkpoint left behind is deleted: only the current one remains."""
+    monkeypatch.setenv("TRISK_CHECKPOINT_BASE", str(tmp_path))
     staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=5)
     mq = _matchmaker_query(spark, staged, "mm-migrate")
     controller = StockController()
@@ -202,17 +218,64 @@ def test_matchmaker_rescale_migrates_keyed_state(spark):
     batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
     assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
     assert len(mq.reconfig_log) == 4
-    for entry, n_keys in zip(mq.reconfig_log, keys):
+    rebalance, *rescales = mq.reconfig_log
+    assert rebalance["mode"] == "resume" and rebalance["state_rows"] == 0
+    for entry, n_keys in zip(rescales, keys[1:]):
         assert entry["mode"] == "migrate" and not entry["state_replayed"]
         assert entry["state_rows"] == n_keys
         assert entry["input_rows"] <= entry["state_rows"]
     assert _offset_log_partitions(mq.checkpoint) == {"3"}  # 2, 2, 3, 4, 3
+    assert _checkpoints(tmp_path) == [mq.checkpoint]
 
 
-def test_back_to_back_applies_carry_the_pending_seed(spark):
+def test_key_group_deal_at_same_parallelism_resumes_in_place(spark):
+    """A new key-group deal over an unchanged partition count leaves
+    Spark's state layout (hash(key) mod partitions) as it was: the
+    matchmaker resumes the same checkpoint with nothing snapshotted, and
+    the trades equal batch ``stock_matchmaker``."""
+    staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=2)
+    mq = _matchmaker_query(spark, staged, "mm-deal")
+    staged.stage(1)
+    mq.run_available()
+    ckpt = mq.checkpoint
+    plan = mq.get_plan_copy()
+    plan.assign_workload("main", affected_remap(plan.operators["main"].key_groups, 2))
+    entry = mq.apply(plan)
+    assert entry["kinds"] == [KEY_STATE_ALLOCATION]
+    assert entry["mode"] == "resume" and entry["state_rows"] == 0
+    assert mq.checkpoint == ckpt and mq.seed is None
+    assert not os.path.exists(os.path.join(ckpt, "seed"))
+    staged.stage(2)
+    mq.run_available()
+
+    assert _offset_log_partitions(mq.checkpoint) == {"2"}
+    batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
+    assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
+
+
+def test_managed_query_session_renames_checkpoints_without_forking(spark):
+    """The query's own session writes checkpoints through Spark's
+    FileSystem-based manager (``File.renameTo``); the caller's session
+    never gets that conf."""
+    key = "spark.sql.streaming.checkpointFileManagerClass"
+    cls = (
+        "org.apache.spark.sql.execution.streaming.checkpointing."
+        "FileSystemBasedCheckpointFileManager"
+    )
+    callers = spark.conf.get(key, None)
+    mq = ManagedQuery(spark, "fs-manager", lambda sp, plan: None)
+    assert mq.session.conf.get(key, None) == cls
+    assert spark.conf.get(key, None) == callers != cls
+    spark._jvm.java.lang.Class.forName(cls)  # the installed jar has it
+
+
+def test_back_to_back_applies_carry_the_pending_seed(spark, tmp_path, monkeypatch):
     """Two reconfigurations with no batch between them: the second
     carries the first's seed and cut forward, so every key keeps its
-    books."""
+    books. The seed moves with the checkpoint that reads it, which
+    stays the only one left through the drain that folds the seed and
+    the restarts after it."""
+    monkeypatch.setenv("TRISK_CHECKPOINT_BASE", str(tmp_path))
     staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=3)
     mq = _matchmaker_query(spark, staged, "mm-carry")
     staged.stage(1)
@@ -224,8 +287,12 @@ def test_back_to_back_applies_carry_the_pending_seed(spark):
     first, second = mq.reconfig_log
     assert first["mode"] == second["mode"] == "migrate"
     assert second["state_rows"] == first["state_rows"] == _staged_keys(spark, staged)
-    staged.stage(3)
-    mq.run_available()
+    assert _checkpoints(tmp_path) == [mq.checkpoint]
+    assert mq.seed == os.path.join(mq.checkpoint, "seed") and os.path.isdir(mq.seed)
+    for stage in (2, 3):  # the drain that folds the seed, then a restart
+        staged.stage(stage)
+        mq.run_available()
+        assert _checkpoints(tmp_path) == [mq.checkpoint]
 
     assert _offset_log_partitions(mq.checkpoint) == {"4"}
     batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
@@ -257,12 +324,14 @@ def test_migrated_resume_with_nothing_new_starts_nothing(spark):
     assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
 
 
-def test_source_ignoring_the_cut_falls_back_to_replay(spark):
+def test_source_ignoring_the_cut_falls_back_to_replay(spark, tmp_path, monkeypatch):
     """A build that reads the live dir itself never reports its pending
     input, so it would re-read what the seed already holds: the resume
-    replays instead, and the counts equal batch."""
+    replays instead, the checkpoint holding the dropped seed is deleted,
+    and the counts equal batch."""
     from trisk_spark.streaming.state import running_wordcount_stream
 
+    monkeypatch.setenv("TRISK_CHECKPOINT_BASE", str(tmp_path))
     events = table(spark, SF, "events")
     staged = StagedReplay(events, "ts", n_chunks=2)
 
@@ -279,6 +348,7 @@ def test_source_ignoring_the_cut_falls_back_to_replay(spark):
     staged.stage(2)
     mq.run_available()
     assert mq.reconfig_log[-1]["mode"] == "replay"
+    assert _checkpoints(tmp_path) == [mq.checkpoint]
     want = {
         r.event_type: r.cnt
         for r in events.groupBy("event_type").agg(F.count("*").alias("cnt")).collect()
@@ -497,8 +567,6 @@ def test_affected_remap_bounds_blast_radius():
     """trisk.reconfig.affected_tasks: a remap touching N tasks must
     leave every other task's key groups untouched and still move state
     (BASELINE.md 'affected tasks per reconfig' row, sweep 2→10)."""
-    from trisk_spark.controlplane import affected_remap
-
     plan = ExecutionPlan.single("op", 10)
     before = plan.operators["op"].key_groups
     for n in (2, 4, 6, 8, 10):

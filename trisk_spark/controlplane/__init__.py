@@ -19,8 +19,10 @@ boundary is a consistent quiesce point. The mapping (SURVEY.md §3.2):
 |                            | folds in the first batch with new input,  |
 |                            | so a resume with none starts nothing);    |
 |                            | Spark-owned state re-shards by            |
-|                            | checkpointed replay; a stateless query    |
-|                            | resumes in place                          |
+|                            | checkpointed replay; the old checkpoint   |
+|                            | is deleted. A stateless query, or a new   |
+|                            | key-group deal at the same partition      |
+|                            | count, resumes in place                   |
 | assignExecutionLogic       | rules re-read per micro-batch (no restart)|
 |                            | or stop→rebuild→resume for real UDF swaps |
 | assignResources (placement)| documented no-op (Spark scheduler's job)  |

@@ -34,8 +34,9 @@ class StockController:
 
     def on_stage(self, stage: int, plan: ExecutionPlan, op: str) -> bool:
         p = plan.operators[op].parallelism
-        if stage == 1:  # load-balance: rotate the key-group deal (a real
-            # move — same parallelism, different task←key-group map)
+        if stage == 1:  # load-balance: rotate the key-group deal (same
+            # parallelism, different task←key-group map; Spark's state
+            # layout is hash mod partitions, so the query resumes in place)
             dist = {t: [] for t in range(p)}
             for kg in range(128):
                 dist[(kg + 1) % p].append(kg)

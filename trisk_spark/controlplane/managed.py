@@ -5,11 +5,14 @@ prepareExecutionPlan (diff) → synchronizeTasks (pause at a consistent
 barrier) → update{KeyMapping,State,TaskResources,Function} → resumeTasks.
 
 Spark image: every micro-batch boundary is the barrier. "Pause" =
-stop the StreamingQuery (Spark quiesces at the batch edge). Structured
-Streaming pins the state-store partition count at a checkpoint's first
-run, so a layout change on a stateful query starts a fresh checkpoint,
-and ``apply`` picks how the state reaches it (the entry's ``mode``)
-from the operators the old checkpoint's ``state-metadata`` lists:
+stop the StreamingQuery (Spark quiesces at the batch edge). Spark lays
+state out by hash(key) mod the partition count, which Structured
+Streaming pins at a checkpoint's first run: a new key-group deal at an
+unchanged partition count has nothing to move, so only a partition
+count change (``KEY_MAPPING``) or a state-shaping UDF swap on a stateful
+query starts a fresh checkpoint, and ``apply`` picks how the state
+reaches it (the entry's ``mode``) from the operators the old
+checkpoint's ``state-metadata`` lists:
 
 * ``migrate`` — the query's only stateful operator is the library's
   keyed state (``streaming.state.keyed_state``, no timeouts): the
@@ -25,7 +28,15 @@ from the operators the old checkpoint's ``state-metadata`` lists:
   its start; the deterministic replayable source makes that
   exactly-once correct (SURVEY.md §7.6).
 * ``resume`` — the checkpoint holds no state (a stateless query), or
-  nothing stateful changes layout: the same checkpoint.
+  nothing stateful changes layout (the partition count and the state
+  shape stay; a key-group deal alone is one): the same checkpoint,
+  with no ``state-metadata`` read and no snapshot.
+
+A checkpoint that ``apply`` leaves is deleted once its incarnation has
+stopped. A seed always lives in the checkpoint whose plan reads it (a
+back-to-back ``apply`` renames the pending seed into the new one), as
+the seed is one of that query's file sources: Spark checks its path at
+every restart.
 
 "Resume" = the next ``run_available``, which fills in the entry's
 ``resume_s`` and ``input_rows``. A migrated checkpoint that has not
@@ -56,12 +67,7 @@ from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
-from trisk_spark.controlplane.plan import (
-    KEY_MAPPING,
-    KEY_STATE_ALLOCATION,
-    UDF,
-    ExecutionPlan,
-)
+from trisk_spark.controlplane.plan import KEY_MAPPING, UDF, ExecutionPlan
 from trisk_spark.session import sibling_session
 from trisk_spark.streaming.queryable import read_keyed_state
 from trisk_spark.streaming.sources import checkpoint_dir
@@ -75,6 +81,14 @@ CUT_CONF = "trisk.managed.cut"
 #: chunks lie outside the cut. A ManagedQuery sets it empty before each
 #: build; a source that ignores the cut leaves it empty.
 PENDING_CONF = "trisk.managed.pending"
+#: The query session's checkpoint file manager: Spark's default
+#: (FileContext) one forks a ``readlink`` per renamed file and this one
+#: renames with ``File.renameTo`` (PERF_NOTES.md, "Checkpoint I/O forks
+#: a process per file"). Spark 4.1's name: a wrong one fails at start.
+FILE_MANAGER = {
+    "spark.sql.streaming.checkpointFileManagerClass": "org.apache.spark.sql.execution."
+    "streaming.checkpointing.FileSystemBasedCheckpointFileManager"
+}
 
 
 class StagedReplay:
@@ -197,7 +211,7 @@ class ManagedQuery:
         parallelism: int = 4,
     ):
         self.spark = spark
-        self.session = sibling_session(spark, {})
+        self.session = sibling_session(spark, FILE_MANAGER)
         self.name = name
         self.build = build
         self.operator = operator
@@ -246,6 +260,7 @@ class ManagedQuery:
                 # outside ``keyed_state`` and never reads the seed:
                 # rebuild the state by replay instead
                 self.seed, self.cut = None, []
+                shutil.rmtree(self.checkpoint)  # unrun; holds the dropped seed
                 self.checkpoint = checkpoint_dir(self.name)
                 self.reconfig_log[-1].update(mode="replay", state_rows=0, state_replayed=True)
                 df = self._build()
@@ -303,9 +318,8 @@ class ManagedQuery:
             self.query.awaitTermination()
         t_sync = time.time()
         mode, state_rows = "resume", 0
-        relayout = bool(kinds & {KEY_STATE_ALLOCATION, KEY_MAPPING})
         reshape = UDF in kinds and self._logic_changes_state_shape(new_plan)
-        if relayout or reshape:
+        if KEY_MAPPING in kinds or reshape:  # a key-group deal alone keeps the layout
             # the stateful operators the old checkpoint lists; none (a
             # stateless query): resume the same checkpoint
             last, ops = _last_commit(self.checkpoint), None
@@ -318,6 +332,7 @@ class ManagedQuery:
                     mode, state_rows = "migrate", self.state_rows
                 else:
                     mode, self.seed, self.cut = "replay", None, []
+                shutil.rmtree(old)
         self.plan = new_plan
         self.incarnation += 1
         entry = {
@@ -338,9 +353,12 @@ class ManagedQuery:
         ``old`` committed. False: the state cannot move by key, so the
         caller replays."""
         if last is None:
-            # ``old`` never committed a batch: its pending seed and cut
-            # (if any) carry forward unchanged
-            return self.seed is not None
+            # ``old`` never committed a batch: its pending seed (if any)
+            # moves into the new checkpoint, the cut carries unchanged
+            if self.seed is None:
+                return False
+            self.seed = shutil.move(self.seed, os.path.join(self.checkpoint, "seed"))
+            return True
         if ops != ["applyInPandasWithState"]:
             return False
         state = read_keyed_state(self.session, old, batch_id=last)

@@ -13,11 +13,13 @@ hard-codes 128 — KeyGroupRangeAssignment.java:31); parallelism =
 spark.sql.shuffle.partitions of the sibling session each managed-query
 incarnation is built on (the caller's session keeps its own value), and
 the stream's offset log records it at first run. The distribution
-map is intent: Spark's HashPartitioning realizes it, and a *custom*
-distribution (non-uniform deal) is realized by restarting with the new
-partition count and letting the state land on the new layout — keyed
-state as migrated seed rows, Spark-owned state by replay
-(controlplane/managed.py).
+map is intent: Spark's HashPartitioning lays state out by hash(key)
+mod the partition count, so a new deal at the same parallelism
+(``KEY_STATE_ALLOCATION`` alone) leaves the layout as it is and the
+query resumes its checkpoint; only a parallelism change
+(``KEY_MAPPING``) restarts with the new partition count and lets the
+state land on the new layout — keyed state as migrated seed rows,
+Spark-owned state by replay (controlplane/managed.py).
 """
 
 from __future__ import annotations
