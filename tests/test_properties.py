@@ -38,50 +38,49 @@ _order = st.tuples(
     st.integers(0, 49),                 # order_no/seq source (made unique below)
     st.sampled_from(["S0", "S1"]),      # sec_code
     st.sampled_from(["B", "S"]),        # direction
-    st.integers(95, 105),               # price_cents (narrow → many crosses)
+    st.sampled_from([*range(95, 106), None]),  # price_cents (narrow → many crosses; None = no price)
     st.integers(1, 5).map(lambda v: v * 100),   # volume
     st.sampled_from(["A", "A", "A", "D"]),      # occasional cancel
 )
+_cuts = st.lists(st.integers(0, 40), max_size=6)
 
 
 @settings(max_examples=100, deadline=None)
-@given(st.lists(_order, min_size=1, max_size=40))
-def test_match_orders_equals_list_scan_oracle(raw):
+@given(st.lists(_order, min_size=1, max_size=40), _cuts, _cuts)
+def test_match_fold_equals_list_scan_oracle(raw, arrow_cuts, micro_cuts):
     """Engine heap fold vs the structurally different list-scan oracle
     (tests/test_stateful._oracle_match) on random order streams —
-    partial fills, cancels, price ties, and multi-key interleaving."""
-    from trisk_spark.operators.stateful import match_orders
+    partial fills, cancels, orders without a price, price ties and
+    multi-key interleaving — through both drivers: the batch kernel
+    with the partition cut into Arrow batches at drawn points, and the
+    stream's keyed-state function with the stream cut into micro-batches
+    at drawn points."""
+    from trisk_spark.operators.stateful import (
+        TRADE_SCHEMA,
+        key_runs,
+        match_fold,
+        order_cols,
+    )
+    from trisk_spark.streaming.state import _matchmaker_fn
 
-    from .test_stateful import _oracle_match
+    from .test_stateful import _oracle_match, batch_run, stream_run
 
     rows = [
-        {
-            "order_no": i,
-            "sec_code": sec,
-            "trade_dir": d,
-            "price_cents": p,
-            "order_vol": v,
-            "tran_maint_code": code,
-            "seq": i,
-        }
+        (i, sec, d, p, v, code, i)
         for i, (_, sec, d, p, v, code) in enumerate(raw)
     ]
-    # engine folds per key in seq order (the shuffle guarantees this)
-    engine = []
-    for sec in sorted({r["sec_code"] for r in rows}):
-        engine.extend(
-            (t["sec_code"], t["buy_no"], t["sell_no"], t["trade_price"],
-             t["trade_vol"], t["match_seq"])
-            for t in match_orders([r for r in rows if r["sec_code"] == sec])
-        )
-    oracle = _oracle_match(
-        [
-            (r["order_no"], r["sec_code"], r["trade_dir"], r["price_cents"],
-             r["order_vol"], r["tran_maint_code"], r["seq"])
-            for r in rows
-        ]
+    oracle = _oracle_match(rows)
+    orders = pd.DataFrame(
+        rows,
+        columns=["order_no", "sec_code", "trade_dir", "price_cents",
+                 "order_vol", "tran_maint_code", "seq"],
     )
-    assert sorted(engine) == oracle
+    # the batch partition arrives sorted by (sec_code, seq); the stream
+    # in seq order
+    part = orders.sort_values(["sec_code", "seq"]).reset_index(drop=True)
+    kernel = key_runs(match_fold, order_cols, TRADE_SCHEMA)
+    assert batch_run(kernel, part, arrow_cuts) == oracle
+    assert stream_run(_matchmaker_fn, "sec_code", orders, micro_cuts) == oracle
 
 
 # ------------------------------------------- winnowing guarantee ----

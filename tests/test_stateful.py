@@ -3,12 +3,15 @@ Python folds over the ordered input, compared row-for-row").
 
 The oracle implementations here are deliberately *structurally
 different* from the engine's (list-scan vs heap; dict-vs-buffer) so a
-shared bug can't self-confirm.
+shared bug can't self-confirm. Each engine fold runs through both of its
+drivers — the batch ``key_runs`` kernel and the stream's ``keyed_state``
+function — on the same rows (``batch_run`` and ``stream_run``).
 """
 
 from __future__ import annotations
 
 import duckdb
+import pandas as pd
 
 from trisk_spark.registry import load_all
 
@@ -26,7 +29,8 @@ def _stock_orders_rows(sf_dir: str):
         SELECT event_id AS order_no,
                'SEC' || CAST(user_id % 50 AS VARCHAR) AS sec_code,
                CASE WHEN event_id % 2 = 0 THEN 'B' ELSE 'S' END AS trade_dir,
-               CAST(ROUND(value * 100) AS BIGINT) AS price_cents,
+               CASE WHEN isnan(value) OR isinf(value) THEN NULL
+                    ELSE CAST(ROUND(value * 100) AS BIGINT) END AS price_cents,
                (event_id % 10 + 1) * 100 AS order_vol,
                CASE WHEN event_id % 20 = 19 THEN 'D' ELSE 'A' END AS tran_maint_code,
                event_id AS seq
@@ -38,11 +42,12 @@ def _stock_orders_rows(sf_dir: str):
 
 def _oracle_match(rows):
     """List-scan order matching: same semantics as the engine's heap
-    implementation, different data structure."""
+    implementation, different data structure. Cancels and orders without
+    a price never reach the books."""
     books: dict[str, dict[str, list]] = {}
     trades = []
     for order_no, sec, side, price, vol, code, seq in rows:
-        if code in ("D", "X", ""):
+        if code in ("D", "X", "") or price is None:
             continue
         b = books.setdefault(sec, {"B": [], "S": []})
         if side == "B":
@@ -75,6 +80,41 @@ def _oracle_match(rows):
             if vol > 0:
                 b["S"].append([price, seq, vol, order_no])
     return sorted(trades)
+
+
+class GroupStateStub:
+    """The part of ``GroupState`` a ``keyed_state`` function reads."""
+
+    exists, get = False, None
+
+    def update(self, value):
+        self.exists, self.get = True, value
+
+
+def _pieces(pdf: pd.DataFrame, cuts) -> list[pd.DataFrame]:
+    bounds = [0, *sorted(min(c, len(pdf)) for c in cuts), len(pdf)]
+    return [pdf.iloc[lo:hi].reset_index(drop=True) for lo, hi in zip(bounds, bounds[1:])]
+
+
+def batch_run(kernel, pdf: pd.DataFrame, cuts=()) -> list[tuple]:
+    """A ``key_runs`` kernel over ``pdf`` (sorted by key, then order)
+    cut into Arrow batches at ``cuts``."""
+    out = pd.concat(list(kernel(iter(_pieces(pdf, cuts)))), ignore_index=True)
+    return sorted(map(tuple, out.astype(object).values.tolist()))
+
+
+def stream_run(fn, key: str, pdf: pd.DataFrame, cuts=()) -> list[tuple]:
+    """A ``keyed_state`` function over ``pdf`` (in arrival order) cut
+    into micro-batches at ``cuts``: per micro-batch, one call per key
+    with that key's rows and state."""
+    states: dict = {}
+    out = []
+    for batch in _pieces(pdf, cuts):
+        for k, rows in batch.groupby(key, sort=False):
+            out.extend(fn((k,), iter([rows]), states.setdefault(k, GroupStateStub())))
+    if not out:
+        return []
+    return sorted(map(tuple, pd.concat(out).astype(object).values.tolist()))
 
 
 def test_matchmaker_matches_replay_oracle(spark):
@@ -130,10 +170,19 @@ def test_emit_once_join(spark):
 
 def test_delta_trigger_matches_replay_fold(spark):
     """Independent oracle: itertools.groupby fold over DuckDB-ordered
-    rows (engine uses a pandas per-key walk)."""
+    rows (engine: ``delta_fold``). The same rows also run through both
+    of the fold's drivers in pure pandas, cut into Arrow batches mid-key
+    and into micro-batches."""
     from itertools import groupby
 
-    from trisk_spark.operators.multistream import DELTA_THRESHOLD
+    from trisk_spark.operators.multistream import (
+        DELTA_SCHEMA,
+        DELTA_THRESHOLD,
+        delta_cols,
+        delta_fold,
+    )
+    from trisk_spark.operators.stateful import key_runs
+    from trisk_spark.streaming.state import _delta_trigger_stream_fn
 
     con = duckdb.connect()
     rows = con.execute(
@@ -158,6 +207,19 @@ def test_delta_trigger_matches_replay_fold(spark):
     assert got == want
     assert len(want) < len(rows), "trigger never suppressed — vacuous"
 
+    events = con.execute(
+        f"""
+        SELECT user_id, ts, event_id, value FROM read_parquet('{SF_DIR}/events.parquet')
+        WHERE ts IS NOT NULL AND value IS NOT NULL AND user_id IS NOT NULL
+        """
+    ).df()
+    by_key = events.sort_values(["user_id", "ts", "event_id"]).reset_index(drop=True)
+    cuts = range(7, len(events), 97)
+    kernel = key_runs(delta_fold, delta_cols, DELTA_SCHEMA)
+    assert batch_run(kernel, by_key, cuts) == sorted(want)
+    arrival = events.sort_values(["ts", "event_id"]).reset_index(drop=True)
+    assert stream_run(_delta_trigger_stream_fn, "user_id", arrival, cuts) == sorted(want)
+
 
 def test_matchmaker_hot_key_is_chunked(spark):
     """Bounded-memory property: one hot sec_code at ~10x the others must
@@ -167,7 +229,12 @@ def test_matchmaker_hot_key_is_chunked(spark):
     so the hot key cannot fit one batch — if the kernel ever regresses
     to whole-group materialization this test stops exercising the
     carry-over path and the value compare breaks."""
-    from trisk_spark.operators.stateful import TRADE_SCHEMA, _match_partition
+    from trisk_spark.operators.stateful import (
+        TRADE_SCHEMA,
+        key_runs,
+        match_fold,
+        order_cols,
+    )
 
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     old = spark.conf.get(key)
@@ -187,7 +254,10 @@ def test_matchmaker_hot_key_is_chunked(spark):
         )
         part = df.repartition("sec_code").sortWithinPartitions("sec_code", "seq")
         engine = sorted(
-            tuple(r) for r in part.mapInPandas(_match_partition, TRADE_SCHEMA).collect()
+            tuple(r)
+            for r in part.mapInPandas(
+                key_runs(match_fold, order_cols, TRADE_SCHEMA), TRADE_SCHEMA
+            ).collect()
         )
         oracle = _oracle_match(
             [(r[0], r[1], r[2], r[3], r[4], r[5], r[6]) for r in sorted(rows)]
@@ -198,21 +268,24 @@ def test_matchmaker_hot_key_is_chunked(spark):
         spark.conf.set(key, old)
 
 
-def test_emit_once_fold_handles_multi_person_sequences(spark):
+def test_emit_once_fold_handles_multi_person_sequences():
     """The corpus derivation keeps one person per key (which is what
-    makes the closed-form SQL oracle valid); the folds must also handle
+    makes the closed-form SQL oracle valid); the fold must also handle
     the general reference sequence — repeated person rows where only
     the FIRST flushes the buffer and later ones are ignored. Both
-    kernels run: the reference per-group fold AND the production
-    bounded-memory partition kernel (which ships in the registered
-    query), the latter across a mid-key Arrow-batch split and a key
-    boundary to exercise its carry/reset state."""
-    import pandas as pd
-
+    drivers run it: the batch kernel that ships in the registered
+    query, across a mid-key Arrow-batch split and a key boundary to
+    exercise its carry/reset state, and the stream's keyed-state
+    function, across micro-batches."""
     from trisk_spark.operators.stateful import (
-        _emit_once_group,
-        _emit_once_partition,
+        EMIT_ONCE_SCHEMA,
+        emit_cols,
+        emit_once_fold,
+        key_runs,
     )
+    from trisk_spark.streaming.state import _emit_once_fn
+
+    kernel = key_runs(emit_once_fold, emit_cols, EMIT_ONCE_SCHEMA)
 
     rows = pd.DataFrame(
         {
@@ -222,9 +295,9 @@ def test_emit_once_fold_handles_multi_person_sequences(spark):
             "seq": [1, 2, 3, 4, 5, 6],
         }
     )
-    want = [(100, 2), (101, 3), (102, 5)]
-    out = _emit_once_group(rows)
-    assert sorted(zip(out["auction_id"], out["emit_seq"])) == want
+    want = [(7, 100, 2), (7, 101, 3), (7, 102, 5)]
+    assert batch_run(kernel, rows) == want
+    assert stream_run(_emit_once_fn, "key", rows, [1, 3]) == want
 
     # second key whose auctions all precede its person — flushed at the
     # person row even though the key starts mid-stream
@@ -238,8 +311,28 @@ def test_emit_once_fold_handles_multi_person_sequences(spark):
     )
     part = pd.concat([rows, rows2], ignore_index=True)
     # split mid-key-7 AND mid-key-9: state must carry across batches
-    batches = [part.iloc[:3], part.iloc[3:8], part.iloc[8:]]
-    got = pd.concat(list(_emit_once_partition(iter(batches))), ignore_index=True)
-    got_pairs = sorted(zip(got["seller"], got["auction_id"], got["emit_seq"]))
-    assert got_pairs == [(7, 100, 2), (7, 101, 3), (7, 102, 5),
-                         (9, 200, 3), (9, 201, 3)]
+    want = [(7, 100, 2), (7, 101, 3), (7, 102, 5), (9, 200, 3), (9, 201, 3)]
+    assert batch_run(kernel, part, [3, 8]) == want
+    arrival = part.sort_values("seq", kind="stable").reset_index(drop=True)
+    assert stream_run(_emit_once_fn, "key", arrival, [2, 5]) == want
+
+
+def test_matchmaker_skips_orders_without_a_price(spark, tmp_path):
+    """``stock_orders`` maps a NULL, NaN or ±Inf value to a NULL
+    ``price_cents``; such an order never reaches the books, like a
+    cancel (the fold used to raise on ``int(nan)``)."""
+    from .test_parity_edges import _write_events
+
+    rows = [
+        (i, i, i % 3, "view", 100.0 + (i * 7) % 11 / 10)
+        for i in range(40)
+    ]
+    rows += [(40, 40, 1, "view", None), (41, 41, 1, "view", float("nan")),
+             (42, 42, 2, "view", float("inf")), (43, 43, 1, "view", 100.5)]
+    _write_events(tmp_path, rows)
+    got = sorted(
+        tuple(r) for r in QUERIES["stock_matchmaker"].fn(spark, str(tmp_path)).collect()
+    )
+    want = _oracle_match(_stock_orders_rows(str(tmp_path)))
+    assert want, "corpus produced no trades — vacuous"
+    assert got == want

@@ -121,7 +121,7 @@ def test_wordcount_stream_running_counts(spark):
     assert final == batch
 
 
-# ------------------------- custom stateful (transformWithState) ------
+# --------------------- custom keyed state (applyInPandasWithState) ---
 
 
 @pytest.mark.slow
@@ -136,7 +136,7 @@ def test_matchmaker_stream_equals_batch(spark, events_stream):
     assert stream_trades == batch_trades
 
 
-def test_running_wordcount_tws(spark):
+def test_running_wordcount_keyed_state(spark):
     st.stateful_session_confs(spark)
     from pyspark.sql import functions as F
 

@@ -84,11 +84,11 @@ def test_queryable_state_reads_running_counts(spark):
 def test_queryable_state_exposes_matchmaker_books(spark):
     """asQueryableState over CUSTOM keyed state (not just engine aggs):
     the matchmaker's order books read back from the checkpoint must
-    equal the pure-Python fold's books for every sec_code."""
+    equal the books ``match_fold`` leaves for every sec_code."""
     from trisk_spark.sources.stock import stock_orders
     from trisk_spark.streaming.queryable import lookup_key, read_keyed_state
-    from trisk_spark.operators.stateful import match_orders
-    from trisk_spark.streaming.state import _book_rows, matchmaker_stream
+    from trisk_spark.operators.stateful import match_fold, order_cols
+    from trisk_spark.streaming.state import matchmaker_stream
 
     stream = replay_stream(spark, SF, "events", n_chunks=2)
     orders = stock_orders(stream.select("event_id", "user_id", "ts", "value"))
@@ -107,19 +107,15 @@ def test_queryable_state_exposes_matchmaker_books(spark):
     from trisk_spark.catalog import table as _table
 
     batch_orders = (
-        stock_orders(_table(spark, SF, "events"))
-        .orderBy("seq")
-        .collect()
+        stock_orders(_table(spark, SF, "events")).toPandas().sort_values("seq")
     )
-    by_key: dict[str, list] = {}
-    for r in batch_orders:
-        by_key.setdefault(r.sec_code, []).append(r.asDict())
     want: dict[str, tuple] = {}
-    for sec, records in by_key.items():
-        buys, sells = [], []
-        list(match_orders(records, buys, sells))
-        b_out, s_out = _book_rows(buys, sells)
-        want[sec] = (sorted(b_out), sorted(s_out))
+    for sec, records in batch_orders.groupby("sec_code"):
+        (buys, sells), _ = match_fold(None, order_cols(records)[1])
+        want[sec] = (
+            sorted((-p, s, v, n) for p, s, v, n in buys),
+            sorted(tuple(e) for e in sells),
+        )
 
     st = read_keyed_state(spark, ckpt)
     got = {}

@@ -14,8 +14,7 @@ All on the ``events`` table: clicks joined/cogrouped with purchases.
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-
+import numpy as np
 import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -23,6 +22,7 @@ from pyspark.sql.types import LongType, StructField, StructType
 
 from trisk_spark.catalog import table
 from trisk_spark.numeric import cents as _cents
+from trisk_spark.operators.stateful import key_runs
 from trisk_spark.registry import register
 
 # ---------------------------------------------------- interval join --
@@ -335,7 +335,7 @@ def time_evictor_window(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 DELTA_THRESHOLD = 30.0  # fire when |value - last_fired_value| > threshold
 
-_DELTA_SCHEMA = StructType(
+DELTA_SCHEMA = StructType(
     [
         StructField("user_id", LongType()),
         StructField("event_id", LongType()),
@@ -343,43 +343,26 @@ _DELTA_SCHEMA = StructType(
 )
 
 
-def _delta_trigger_partition(
-    batches: "Iterator[pd.DataFrame]",
-) -> "Iterator[pd.DataFrame]":
-    """DeltaTrigger replay (api/windowing/triggers/DeltaTrigger; SURVEY
-    §2A 'Triggers'): walk each key's events in (ts, event_id) order and
-    fire whenever the value deviates from the last *fired* value by more
-    than DELTA_THRESHOLD; the first element always fires. Inherently
-    sequential per key; streaming twin keeps last_fired in value state
-    (streaming/state.delta_trigger_stream).
+def delta_cols(pdf: pd.DataFrame) -> tuple[np.ndarray, list[list]]:
+    """Events → ``delta_fold``'s columns: event_id and the value in
+    integer cents (exact, so the fold and its stream state agree)."""
+    return pdf["user_id"].to_numpy(), [pdf["event_id"].tolist(), _cents(pdf["value"]).tolist()]
 
-    Bounded-memory kernel (the stock_matchmaker pattern): the partition
-    arrives sorted by (user_id, ts, event_id) with each key contiguous,
-    so last_fired carries across Arrow batch boundaries and resets on
-    key change. Peak memory is O(one Arrow batch), NOT O(hottest key's
-    full event history)."""
-    thresh_cents = int(round(DELTA_THRESHOLD * 100))
-    key = None
-    last: int | None = None  # integer cents: exact, stream-state safe
-    for pdf in batches:
-        out_uid: list[int] = []
-        out_eid: list[int] = []
-        for uid, eid, cents in zip(
-            pdf["user_id"], pdf["event_id"], _cents(pdf["value"])
-        ):
-            if uid != key:
-                key = uid
-                last = None
-            if last is None or abs(int(cents) - last) > thresh_cents:
-                out_uid.append(int(uid))
-                out_eid.append(int(eid))
-                last = int(cents)
-        yield pd.DataFrame(
-            {
-                "user_id": pd.Series(out_uid, dtype="int64"),
-                "event_id": pd.Series(out_eid, dtype="int64"),
-            }
-        )
+
+def delta_fold(last: int | None, cols: list[list]):
+    """DeltaTrigger (api/windowing/triggers/DeltaTrigger; SURVEY §2A
+    'Triggers') for one user_id's events in (ts, event_id) order: fire
+    whenever the value deviates from the last *fired* value by more than
+    DELTA_THRESHOLD; a fresh key's first element always fires. ``last``
+    is the last fired value in cents, or ``None``; the output column is
+    the fired event_ids."""
+    thresh = int(round(DELTA_THRESHOLD * 100))
+    fired = []
+    for eid, cents in zip(*cols):
+        if last is None or abs(cents - last) > thresh:
+            fired.append(eid)
+            last = cents
+    return last, (fired,)
 
 
 DELTA_TRIGGER_SQL = f"""
@@ -415,10 +398,11 @@ def delta_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one shuffle on user_id (hash repartition), a spillable
     sortWithinPartitions on (user_id, ts, event_id) — no second
-    exchange — then an Arrow-batched mapInPandas fold that streams
-    batches through a per-key last-fired register. A hot user_id at any
-    skew costs sort spill, not executor OOM (the pre-r6 applyInPandas
-    variant materialized the hottest key's whole history in pandas)."""
+    exchange — then ``delta_fold`` through the ``key_runs`` mapInPandas
+    driver, which carries the last-fired value across Arrow batches. A
+    hot user_id at any skew costs sort spill, not executor OOM.
+    Streaming variant, on the same fold:
+    trisk_spark.streaming.state.delta_trigger_stream."""
     ev = (
         table(spark, sf_dir, "events")
         .where(
@@ -431,7 +415,7 @@ def delta_trigger(spark: SparkSession, sf_dir: str) -> DataFrame:
     part = ev.repartition("user_id").sortWithinPartitions(
         "user_id", "ts", "event_id"
     )
-    return part.mapInPandas(_delta_trigger_partition, _DELTA_SCHEMA)
+    return part.mapInPandas(key_runs(delta_fold, delta_cols, DELTA_SCHEMA), DELTA_SCHEMA)
 
 
 # ------------------------------------------------------ delta evictor --

@@ -1,25 +1,35 @@
 """Custom stateful operators — the reference's heart (SURVEY.md §2B SE,
 Q3-emit-once, SD): semantics Spark's built-in operators can't express,
-implemented as Arrow-batched ``applyInPandas`` over a keyed group, with
-the fold order fixed by an explicit ``seq`` column.
+each written once as a columnar fold over one key's run in order.
 
-Scale notes: ``applyInPandas`` keeps the data partitioned by key — each
-group is processed on its executor, nothing is collected to the driver.
-The per-key fold is O(n log n) in orders per key (heap-based books);
-with sec_code cardinality ≈ 50-5000 and AQE skew handling the shuffle is
-balanced. At 100 TB one would bound per-key history (the streaming
-variant in trisk_spark.streaming.state holds only open books, not
-history).
+A fold is ``fold(state, cols) -> (state, out_cols)``: ``cols`` are one
+key's rows, already sorted, as plain Python column lists; ``state`` is
+what the key carried in (``None`` for a fresh key); ``out_cols`` are the
+output columns after the key. Two drivers call the same fold:
 
-These register ``oracle=None`` (not SQL-expressible); correctness is a
-pure-Python replay-fold oracle in tests/test_stateful.py.
+  * batch: ``key_runs``, the ``mapInPandas`` partition driver over a
+    partition hash-shuffled on the key and sorted by (key, order), so
+    state carries across Arrow batch boundaries and resets on a key
+    change. Peak memory is one Arrow batch plus one key's open state,
+    not the hottest key's history; a hot key costs sort spill.
+  * stream: the ``keyed_state`` functions in
+    ``trisk_spark.streaming.state``, which turn the ``GroupState`` value
+    into fold state and write the result back every micro-batch.
+
+The folds here are the matchmaker (``match_fold``) and emit-once
+(``emit_once_fold``); the delta trigger's (``delta_fold``) lives beside
+its batch query in ``operators/multistream.py``. The batch queries
+register ``oracle=None`` or a closed-form SQL oracle; the matchmaker's
+reference is the structurally different list-scan in
+tests/test_stateful.py.
 """
 
 from __future__ import annotations
 
 import heapq
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql.types import (
@@ -33,6 +43,55 @@ from trisk_spark.catalog import table
 from trisk_spark.registry import register
 from trisk_spark.sources.stock import stock_orders
 
+#: a fold's column prep: an Arrow batch → (key array, fold column lists)
+Cols = Callable[[pd.DataFrame], "tuple[np.ndarray, list[list]]"]
+
+
+def frame(schema: StructType, cols: list[list]) -> pd.DataFrame:
+    """Output column lists → a frame typed for ``schema`` (also when
+    empty)."""
+    return pd.DataFrame(
+        {
+            f.name: np.array(c, dtype=np.int64 if isinstance(f.dataType, LongType) else object)
+            for f, c in zip(schema.fields, cols)
+        }
+    )
+
+
+_NO_KEY = object()
+
+
+def key_runs(fold, cols: Cols, schema: StructType):
+    """The batch driver: a ``mapInPandas`` function over a partition
+    sorted by (key, order) with each key contiguous. Per Arrow batch it
+    takes the columns once (``cols``), cuts the batch where the key
+    changes and folds each run, carrying the state into the next batch
+    while the key continues. ``schema``'s first column is the key."""
+
+    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        last, state = _NO_KEY, None
+        for pdf in batches:
+            keys, data = cols(pdf)
+            out: list[list] = [[] for _ in schema.fields]
+            n = len(keys)
+            starts = [0, *(np.flatnonzero(keys[1:] != keys[:-1]) + 1).tolist()] if n else []
+            for lo, hi in zip(starts, [*starts[1:], n]):
+                k = keys[lo]
+                if k != last:
+                    last, state = k, None
+                state, got = fold(state, [c[lo:hi] for c in data])
+                if got[0]:
+                    out[0].extend([k] * len(got[0]))
+                    for acc, c in zip(out[1:], got):
+                        acc.extend(c)
+            yield frame(schema, out)
+
+    run.__name__ = fold.__name__  # the name Spark's plan and UI show
+    return run
+
+
+# -------------------------------------------------------- matchmaker --
+
 TRADE_SCHEMA = StructType(
     [
         StructField("sec_code", StringType()),
@@ -44,183 +103,84 @@ TRADE_SCHEMA = StructType(
     ]
 )
 
+_CANCELS = ("D", "X", "")
 
-def match_orders(
-    rows: Iterator[dict],
-    buy_book: list | None = None,
-    sell_book: list | None = None,
-) -> Iterator[dict]:
-    """Pure-Python order-book fold for ONE sec_code, in seq order.
-    Pass ``buy_book``/``sell_book`` to carry open books across chunks
-    of the same key: the streaming matchmaker
-    (``streaming.state._matchmaker_fn``) seeds them from its keyed
-    state every micro-batch and writes them back. With the defaults
-    the fold is self-contained. The bounded-memory batch path
-    (``_match_partition``) inlines this fold columnar; tests hold the
-    two equal.
+
+def order_cols(pdf: pd.DataFrame) -> tuple[np.ndarray, list[list]]:
+    """Stock orders → ``match_fold``'s columns. Cancels (tran_maint_code
+    in {'D','X',''}, StatefulStockExchange.java:37-39, :131-133) and
+    orders without a price (``stock_orders`` maps a NULL, NaN or ±Inf
+    value to a NULL ``price_cents``) are dropped here, once per batch:
+    they never touch the books, and a key whose rows are all dropped has
+    empty books, so dropping them cannot change a reset. Plain numpy,
+    not pandas indexing: the stream calls this once per key and
+    micro-batch, on a few rows."""
+    code, price = pdf["tran_maint_code"].to_numpy(), pdf["price_cents"].to_numpy()
+    live = ~pd.isna(price)
+    for c in _CANCELS:
+        live &= code != c
+    return pdf["sec_code"].to_numpy()[live], [
+        pdf["trade_dir"].to_numpy()[live].tolist(),
+        *(
+            pdf[c].to_numpy()[live].astype(np.int64).tolist()
+            for c in ("price_cents", "order_vol", "seq", "order_no")
+        ),
+    ]
+
+
+def match_fold(books, cols: list[list]):
+    """The order-book fold for one sec_code's orders in seq order.
+    ``books`` is (buy heap of [-price, seq, vol, order_no], sell heap of
+    [price, seq, vol, order_no]), or ``None`` for empty books; the
+    output columns are TRADE_SCHEMA's after ``sec_code``.
 
     Semantics per StatefulStockExchange.java:125-215 /
     InAppStatefulStockExchange.java:76-122:
-      * rows with tran_maint_code in {'D','X',''} are dropped (cancels;
-        :37-39, :131-133);
-      * buy order: match against sell book while best sell price <=
-        buy price; sell order: match against buy book while best buy
-        price >= sell price;
+      * buy order: match against the sell book while the best sell price
+        <= buy price; sell order: match against the buy book while the
+        best buy price >= sell price;
       * partial fills leave the residual volume on the larger side
         (:226-244); full fills remove both;
-      * trade executes at the resting order's price.
+      * a trade executes at the resting order's price.
 
     Matching priority is price-time (best price, then lowest seq) — the
     reference iterates a Java HashMap whose order is unspecified; we fix
     the deterministic, economically-standard order and document the
-    divergence.
-    """
-    if buy_book is None:
-        buy_book = []  # (-price, seq, [vol, order_no])
-    if sell_book is None:
-        sell_book = []  # (price, seq, [vol, order_no])
-    for r in rows:
-        code = r["tran_maint_code"]
-        if code in ("D", "X", ""):
-            continue
-        price, vol, seq, no = (
-            int(r["price_cents"]),
-            int(r["order_vol"]),
-            int(r["seq"]),
-            int(r["order_no"]),
-        )
-        if r["trade_dir"] == "B":
-            while vol > 0 and sell_book and sell_book[0][0] <= price:
-                s_price, s_seq, s_rest = sell_book[0]
-                traded = min(vol, s_rest[0])
-                yield {
-                    "sec_code": r["sec_code"],
-                    "buy_no": no,
-                    "sell_no": s_rest[1],
-                    "trade_price": s_price,
-                    "trade_vol": traded,
-                    "match_seq": seq,
-                }
-                vol -= traded
-                s_rest[0] -= traded
-                if s_rest[0] == 0:
-                    heapq.heappop(sell_book)
+    divergence."""
+    buys, sells = books or ([], [])
+    out = o_bno, o_sno, o_price, o_vol, o_seq = [], [], [], [], []
+    for tdir, price, vol, seq, no in zip(*cols):
+        if tdir == "B":
+            while vol > 0 and sells and sells[0][0] <= price:
+                best = sells[0]
+                t = best[2] if best[2] < vol else vol
+                o_bno.append(no)
+                o_sno.append(best[3])
+                o_price.append(best[0])
+                o_vol.append(t)
+                o_seq.append(seq)
+                vol -= t
+                best[2] -= t
+                if best[2] == 0:
+                    heapq.heappop(sells)
             if vol > 0:
-                heapq.heappush(buy_book, (-price, seq, [vol, no]))
+                heapq.heappush(buys, [-price, seq, vol, no])
         else:
-            while vol > 0 and buy_book and -buy_book[0][0] >= price:
-                b_neg_price, b_seq, b_rest = buy_book[0]
-                traded = min(vol, b_rest[0])
-                yield {
-                    "sec_code": r["sec_code"],
-                    "buy_no": b_rest[1],
-                    "sell_no": no,
-                    "trade_price": -b_neg_price,
-                    "trade_vol": traded,
-                    "match_seq": seq,
-                }
-                vol -= traded
-                b_rest[0] -= traded
-                if b_rest[0] == 0:
-                    heapq.heappop(buy_book)
+            while vol > 0 and buys and -buys[0][0] >= price:
+                best = buys[0]
+                t = best[2] if best[2] < vol else vol
+                o_bno.append(best[3])
+                o_sno.append(no)
+                o_price.append(-best[0])
+                o_vol.append(t)
+                o_seq.append(seq)
+                vol -= t
+                best[2] -= t
+                if best[2] == 0:
+                    heapq.heappop(buys)
             if vol > 0:
-                heapq.heappush(sell_book, (price, seq, [vol, no]))
-
-
-_EMPTY_TRADES = {
-    "sec_code": "str", "buy_no": "int64", "sell_no": "int64",
-    "trade_price": "int64", "trade_vol": "int64", "match_seq": "int64",
-}
-
-
-def _match_partition(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    """Bounded-memory matchmaker kernel: the partition arrives sorted by
-    (sec_code, seq) with every sec_code's rows contiguous (hash
-    repartition on sec_code), so open books carry across Arrow batch
-    boundaries and reset on key change. Peak memory is O(one Arrow
-    batch + open books), NOT O(hottest key's full order history) — the
-    pre-r5 applyInPandas variant materialized the whole group.
-
-    The fold is ``match_orders``'s exact semantics INLINED columnar
-    (r8): cancels drop in one vectorized mask (they never touch books,
-    and a key whose rows are all cancels has empty books, so skipping
-    them cannot change a reset), rows stream through ``zip`` over the
-    column arrays instead of per-row dicts, and trades accumulate into
-    column lists — 3.2 s → 0.70 s at sf0.1, ~140k orders/s
-    (PERF_NOTES r8), giving the reference's 60k orders/s design point
-    >2× margin under suite load. Equivalence with ``match_orders`` is gated by the
-    replay-fold oracle (tests/test_stateful.py) and the hypothesis
-    property suite."""
-    key = None
-    buy_book: list = []
-    sell_book: list = []
-    for pdf in batches:
-        live = pdf[~pdf["tran_maint_code"].isin(("D", "X", ""))]
-        o_sec: list = []
-        o_bno: list = []
-        o_sno: list = []
-        o_price: list = []
-        o_vol: list = []
-        o_seq: list = []
-        for sec, price, vol, seq, no, tdir in zip(
-            live["sec_code"].to_numpy(),
-            live["price_cents"].to_numpy(),
-            live["order_vol"].to_numpy(),
-            live["seq"].to_numpy(),
-            live["order_no"].to_numpy(),
-            live["trade_dir"].to_numpy(),
-        ):
-            if sec != key:
-                key = sec
-                buy_book, sell_book = [], []
-            price, vol, seq, no = int(price), int(vol), int(seq), int(no)
-            if tdir == "B":
-                while vol > 0 and sell_book and sell_book[0][0] <= price:
-                    s_price, _s_seq, s_rest = sell_book[0]
-                    t = s_rest[0] if s_rest[0] < vol else vol
-                    o_sec.append(sec)
-                    o_bno.append(no)
-                    o_sno.append(s_rest[1])
-                    o_price.append(s_price)
-                    o_vol.append(t)
-                    o_seq.append(seq)
-                    vol -= t
-                    s_rest[0] -= t
-                    if s_rest[0] == 0:
-                        heapq.heappop(sell_book)
-                if vol > 0:
-                    heapq.heappush(buy_book, (-price, seq, [vol, no]))
-            else:
-                while vol > 0 and buy_book and -buy_book[0][0] >= price:
-                    b_neg, _b_seq, b_rest = buy_book[0]
-                    t = b_rest[0] if b_rest[0] < vol else vol
-                    o_sec.append(sec)
-                    o_bno.append(b_rest[1])
-                    o_sno.append(no)
-                    o_price.append(-b_neg)
-                    o_vol.append(t)
-                    o_seq.append(seq)
-                    vol -= t
-                    b_rest[0] -= t
-                    if b_rest[0] == 0:
-                        heapq.heappop(buy_book)
-                if vol > 0:
-                    heapq.heappush(sell_book, (price, seq, [vol, no]))
-        if o_sec:
-            yield pd.DataFrame(
-                {
-                    "sec_code": o_sec,
-                    "buy_no": o_bno,
-                    "sell_no": o_sno,
-                    "trade_price": o_price,
-                    "trade_vol": o_vol,
-                    "match_seq": o_seq,
-                }
-            )
-        else:
-            yield pd.DataFrame(
-                {c: pd.Series(dtype=t) for c, t in _EMPTY_TRADES.items()}
-            )
+                heapq.heappush(sells, [price, seq, vol, no])
+    return (buys, sells), out
 
 
 @register("stock_matchmaker", oracle=None)
@@ -230,18 +190,17 @@ def stock_matchmaker(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Plan: one shuffle on sec_code (hash repartition — all rows of a key
     land in one partition), a spillable sortWithinPartitions on
-    (sec_code, seq) (no second exchange), then an Arrow-batched
-    mapInPandas fold that streams batches through per-key open books —
-    the batch image of the keyed MapState operator
-    (StatefulStockExchange.java:104-121). A hot sec_code at any skew
-    costs sort spill, not executor OOM: the Python worker never holds
-    more than one Arrow batch (spark.sql.execution.arrow.
-    maxRecordsPerBatch) plus the open-book residue. Streaming variant:
-    trisk_spark.streaming.state.matchmaker_stream.
+    (sec_code, seq) (no second exchange), then ``match_fold`` through
+    the ``key_runs`` mapInPandas driver, which carries each key's open
+    books across Arrow batches — the batch image of the keyed MapState
+    operator (StatefulStockExchange.java:104-121). The Python worker
+    never holds more than one Arrow batch (spark.sql.execution.arrow.
+    maxRecordsPerBatch) plus the open books. Streaming variant, on the
+    same fold: trisk_spark.streaming.state.matchmaker_stream.
     """
     orders = stock_orders(table(spark, sf_dir, "events"))
     part = orders.repartition("sec_code").sortWithinPartitions("sec_code", "seq")
-    return part.mapInPandas(_match_partition, TRADE_SCHEMA)
+    return part.mapInPandas(key_runs(match_fold, order_cols, TRADE_SCHEMA), TRADE_SCHEMA)
 
 
 # ------------------------------------------------ Q3 emit-once join --
@@ -255,73 +214,37 @@ EMIT_ONCE_SCHEMA = StructType(
 )
 
 
-def _emit_once_group(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Replay the asymmetric incremental join of Query3.java:99-155 for
-    one seller key: person stored forever; an auction arriving after its
-    person emits immediately; auctions arriving before buffer and flush
-    exactly once when the person arrives."""
-    pdf = pdf.sort_values("seq")
-    person_seen = False
-    buffered: list[tuple[int, int]] = []
-    out = []
-    for r in pdf.itertuples(index=False):
-        if r.side == "P":
-            if not person_seen:
-                person_seen = True
-                for auction_id, _ in buffered:
-                    out.append((r.key, auction_id, r.seq))
-                buffered.clear()
+def emit_cols(pdf: pd.DataFrame) -> tuple[np.ndarray, list[list]]:
+    """Tagged (key, side, auction_id, seq) rows → ``emit_once_fold``'s
+    columns."""
+    return pdf["key"].to_numpy(), [pdf[c].tolist() for c in ("side", "auction_id", "seq")]
+
+
+def emit_once_fold(state, cols: list[list]):
+    """The asymmetric incremental join of Query3.java:99-155 for one
+    seller key in seq order: the person is stored forever; an auction
+    arriving after its person emits at once; auctions arriving before
+    it buffer and flush exactly once, at the person's seq, when the
+    first person row arrives. ``state`` is (person seen, buffered
+    (auction_id, seq) pairs), or ``None`` for a fresh key; the output
+    columns are (auction_id, emit_seq). The buffer is the semantics'
+    inherent state, not the key's history: once the person arrives the
+    key streams with O(1) state."""
+    seen, buf = state or (False, [])
+    out = aids, seqs = [], []
+    for side, aid, seq in zip(*cols):
+        if side == "P":
+            if not seen:
+                seen = True
+                aids.extend(a for a, _ in buf)
+                seqs.extend([seq] * len(buf))
+                buf = []
+        elif seen:
+            aids.append(int(aid))
+            seqs.append(seq)
         else:
-            if person_seen:
-                out.append((r.key, r.auction_id, r.seq))
-            else:
-                buffered.append((r.auction_id, r.seq))
-    return pd.DataFrame(out, columns=["seller", "auction_id", "emit_seq"]).astype(
-        "int64"
-    )
-
-
-def _emit_once_partition(
-    batches: Iterator[pd.DataFrame],
-) -> Iterator[pd.DataFrame]:
-    """Bounded-memory emit-once kernel (the stock_matchmaker pattern):
-    the partition arrives sorted by (key, seq) with each key contiguous,
-    so (person_seen, buffered-auctions) carries across Arrow batch
-    boundaries and resets on key change. Peak memory is O(one Arrow
-    batch + one key's PRE-PERSON auction buffer) — the buffer is the
-    semantics' inherent state (auctions that must wait for their
-    person), not the key's full history; once the person arrives the
-    key streams with O(1) state. Same fold as ``_emit_once_group``
-    (the pytest replay oracle runs both against each other)."""
-    key = None
-    person_seen = False
-    pseq = 0
-    buffered: list[int] = []
-    for pdf in batches:
-        out: list[tuple[int, int, int]] = []
-        for k, side, aid, seq in zip(
-            pdf["key"], pdf["side"], pdf["auction_id"], pdf["seq"]
-        ):
-            if k != key:
-                key = k
-                person_seen = False
-                buffered = []
-            if side == "P":
-                if not person_seen:
-                    person_seen = True
-                    pseq = int(seq)
-                    out.extend((int(k), a, pseq) for a in buffered)
-                    buffered = []
-            else:
-                if person_seen:
-                    out.append((int(k), int(aid), int(seq)))
-                else:
-                    buffered.append(int(aid))
-        yield pd.DataFrame(
-            out, columns=["seller", "auction_id", "emit_seq"]
-        ).astype("int64")
-
-
+            buf.append((int(aid), seq))
+    return (seen, buf), out
 EMIT_ONCE_SQL = """
 WITH p AS (
   SELECT user_id AS key, MIN(event_id) AS pseq
@@ -347,19 +270,22 @@ def q3_emit_once_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (Query3.java:99-155) replayed in batch as a tagged-union fold.
 
     Built as: tag person/auction rows, union, shuffle once on the join
-    key, partition-local sort, streaming ordered fold in mapInPandas
-    (bounded memory — see ``_emit_once_partition``). The SQL-joinable image
-    of Q3 is `nexmark_q3`; this operator checks the *emit* semantics
-    (each auction emitted at most once, at the right point in the
-    sequence).
+    key, partition-local sort, then ``emit_once_fold`` through the
+    ``key_runs`` mapInPandas driver (bounded memory: one Arrow batch
+    plus one key's pre-person buffer). Streaming variant, on the same
+    fold: trisk_spark.streaming.state.emit_once_join_stream. The
+    SQL-joinable image of Q3 is `nexmark_q3`; this operator checks the
+    *emit* semantics (each auction emitted at most once, at the right
+    point in the sequence).
 
     Oracle: because the derivation keeps exactly ONE person row per key
     (first signup), the fold's emit rule has a closed form — an auction
     emits iff its key has a person, at emit_seq = max(auction seq,
     first-person seq) — which the SQL states directly. The engine runs
     the general sequential fold (the structural difference is what
-    keeps the oracle from self-confirming); the replay-fold pytest
-    covers multi-person sequences the corpus derivation can't produce.
+    keeps the oracle from self-confirming); a pure-pandas test runs the
+    fold through both drivers on multi-person sequences the corpus
+    derivation can't produce.
     """
     # NULL hardening (matches the oracle CTEs): Spark's groupBy co-groups
     # NULL keys, so a NULL-user signup + NULL-user auction would emit a
@@ -384,9 +310,8 @@ def q3_emit_once_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     tagged = persons.unionByName(aucts)
-    # Bounded-memory fold (stock_matchmaker pattern): one shuffle on
-    # key, spillable partition-local sort on (key, seq), streaming
-    # mapInPandas — a hot seller costs sort spill, not a whole-group
-    # pandas materialization.
+    # one shuffle on key, spillable partition-local sort on (key, seq):
+    # a hot seller costs sort spill, not a whole-group materialization
     part = tagged.repartition("key").sortWithinPartitions("key", "seq")
-    return part.mapInPandas(_emit_once_partition, EMIT_ONCE_SCHEMA)
+    fold = key_runs(emit_once_fold, emit_cols, EMIT_ONCE_SCHEMA)
+    return part.mapInPandas(fold, EMIT_ONCE_SCHEMA)

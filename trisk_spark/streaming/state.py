@@ -15,11 +15,15 @@ lacks, so no operator here uses it.
 
 All processors are deterministic given per-key seq order; bounded-replay
 equivalence against the batch operators is tested in
-tests/test_streaming.py.
+tests/test_streaming.py. The matchmaker, emit-once join and delta
+trigger run the very folds their batch queries run (operators/
+stateful.py, operators/multistream.py): here each micro-batch of a key
+is sorted and folded from its GroupState value (``_fold``).
 """
 
 from __future__ import annotations
 
+import heapq
 from collections.abc import Iterator
 
 import numpy as np
@@ -40,7 +44,23 @@ from pyspark.sql.types import (
 )
 
 from trisk_spark.numeric import cents as _cents
-from trisk_spark.operators.stateful import TRADE_SCHEMA, match_orders
+from trisk_spark.operators.multistream import (
+    COUNT_WINDOW_N,
+    DELTA_EVICT_THRESHOLD,
+    DELTA_SCHEMA,
+    EVICT_N,
+    delta_cols,
+    delta_fold,
+)
+from trisk_spark.operators.stateful import (
+    EMIT_ONCE_SCHEMA,
+    TRADE_SCHEMA,
+    emit_cols,
+    emit_once_fold,
+    frame,
+    match_fold,
+    order_cols,
+)
 
 #: Session conf naming a parquet directory of ``seed_rows``: migrated
 #: keyed state. ManagedQuery sets it on the sibling session it builds an
@@ -124,6 +144,20 @@ def _seeded(fn, state_type: StructType):
     return run
 
 
+def _fold(fold, cols, by, pdfs: Iterator[pd.DataFrame], state):
+    """One key's micro-batch through its operator fold (operators/
+    stateful.py): the chunks concatenated and sorted by ``by``, then
+    folded from ``state``. Returns the fold's (state, output columns)."""
+    _, data = cols(pd.concat(list(pdfs)).sort_values(by))
+    return fold(state, data)
+
+
+def _emitted(schema: StructType, key, out: list[list]) -> Iterator[pd.DataFrame]:
+    """A fold's output columns as ``key``'s rows: one frame, or none."""
+    if out[0]:
+        yield frame(schema, [[key[0]] * len(out[0]), *out])
+
+
 def _state_value(v, t: DataType):
     """A seed value as Arrow hands it to pandas (structs as dicts, arrays
     as ndarrays, numpy scalars, nulls as None) → the value a GroupState
@@ -159,33 +193,20 @@ MATCH_STATE = StructType(
 )
 
 
-def _book_rows(buy_book: list, sell_book: list) -> tuple[list, list]:
-    """``match_orders`` heaps → (buys, sells) state rows of (price, seq,
-    vol, order_no)."""
-    buys = [(-np, s, r[0], r[1]) for np, s, r in buy_book]
-    sells = [(p, s, r[0], r[1]) for p, s, r in sell_book]
-    return buys, sells
-
-
 def _matchmaker_fn(
     key, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    import heapq
-
-    if state.exists:
-        buys, sells = state.get
-    else:
-        buys, sells = [], []
-    buy_book = [(-p, s, [v, n]) for p, s, v, n in (tuple(r) for r in buys or [])]
-    sell_book = [(p, s, [v, n]) for p, s, v, n in (tuple(r) for r in sells or [])]
-    heapq.heapify(buy_book)
-    heapq.heapify(sell_book)
-
-    batch = pd.concat(list(pdfs)).sort_values("seq")
-    trades = list(match_orders(batch.to_dict("records"), buy_book, sell_book))
-    state.update(_book_rows(buy_book, sell_book))
-    if trades:
-        yield pd.DataFrame(trades)
+    """``operators/stateful.match_fold`` on keyed state: the open books
+    are MATCH_STATE rows of (price, seq, vol, order_no) between
+    micro-batches and heaps inside the fold (the buy heap keys on
+    -price)."""
+    buys, sells = state.get if state.exists else ([], [])
+    books = ([[-p, s, v, n] for p, s, v, n in buys or []], [list(e) for e in sells or []])
+    for book in books:
+        heapq.heapify(book)
+    (buys, sells), trades = _fold(match_fold, order_cols, "seq", pdfs, books)
+    state.update(([(-p, s, v, n) for p, s, v, n in buys], [tuple(e) for e in sells]))
+    yield from _emitted(TRADE_SCHEMA, key, trades)
 
 
 def _matchmaker_ttl_fn(ttl_ms: int):
@@ -252,13 +273,6 @@ def running_wordcount_stream(words: DataFrame) -> DataFrame:
 
 # ------------------------------------------------- emit-once join ----
 
-_EMIT_OUT = StructType(
-    [
-        StructField("seller", LongType()),
-        StructField("auction_id", LongType()),
-        StructField("emit_seq", LongType()),
-    ]
-)
 _BUF_ENTRY = StructType(
     [StructField("auction_id", LongType()), StructField("seq", LongType())]
 )
@@ -273,44 +287,25 @@ _EMIT_STATE = StructType(
 def _emit_once_fn(
     key, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """Nexmark Q3's incremental join (Query3.java:99-155): person stored
-    forever (seen flag); auctions before the person buffer and flush
-    exactly once on person arrival; auctions after emit immediately."""
-    if state.exists:
-        seen, buf = state.get
-        seen = bool(seen)
-        buf = [tuple(b) for b in (buf or [])]
-    else:
-        seen, buf = False, []
-    out: list[tuple[int, int, int]] = []
-    seller = key[0]
-    batch = pd.concat(list(pdfs)).sort_values("seq")
-    for r in batch.itertuples(index=False):
-        if r.side == "P":
-            if not seen:
-                seen = True
-                out.extend((seller, a, int(r.seq)) for a, _ in buf)
-                buf = []
-        else:
-            if seen:
-                out.append((seller, int(r.auction_id), int(r.seq)))
-            else:
-                buf.append((int(r.auction_id), int(r.seq)))
-    state.update((1 if seen else 0, buf))
-    if out:
-        yield pd.DataFrame(out, columns=["seller", "auction_id", "emit_seq"])
+    """``operators/stateful.emit_once_fold`` on keyed state: (person
+    seen as 0/1, buffered (auction_id, seq) pairs)."""
+    seen, buf = state.get if state.exists else (0, [])
+    fresh = (bool(seen), [tuple(b) for b in buf or []])
+    (seen, buf), out = _fold(emit_once_fold, emit_cols, "seq", pdfs, fresh)
+    state.update((int(seen), buf))
+    yield from _emitted(EMIT_ONCE_SCHEMA, key, out)
 
 
 def emit_once_join_stream(tagged: DataFrame) -> DataFrame:
     """`tagged`: streaming DF (key, side, auction_id, seq) — the
     union-tagged two-input stream (ConnectedStreams/CoFlatMap
     equivalent, SURVEY §2A 'connect')."""
-    return keyed_state(tagged, "key", _emit_once_fn, _EMIT_OUT, _EMIT_STATE, "append")
+    return keyed_state(tagged, "key", _emit_once_fn, EMIT_ONCE_SCHEMA, _EMIT_STATE, "append")
 
 
 def stateful_session_confs(spark) -> None:
-    """RocksDB state store: required by transformWithState, beneficial
-    for large keyed state with applyInPandasWithState too."""
+    """RocksDB state store, for large keyed state kept with
+    ``applyInPandasWithState``."""
     spark.conf.set(
         "spark.sql.streaming.stateStore.providerClass",
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
@@ -335,8 +330,6 @@ _CW_STATE = StructType(
         StructField("sum_cents", LongType()),
     ]
 )
-
-COUNT_WINDOW_N = 5
 
 
 def _count_window_fn(
@@ -377,8 +370,6 @@ def count_window_stream(events: DataFrame) -> DataFrame:
 
 
 # ------------------------------------- evictor (last-N) sliding avg --
-
-EVICT_N = 5
 
 _SLIDE_OUT = StructType(
     [
@@ -426,14 +417,6 @@ def sliding_count_avg_stream(events: DataFrame) -> DataFrame:
 
 # ------------------------------------------------------ delta trigger --
 
-DELTA_THRESHOLD = 30.0
-
-_DELTA_OUT = StructType(
-    [
-        StructField("user_id", LongType()),
-        StructField("event_id", LongType()),
-    ]
-)
 # last fired value in integer hundredths so state round-trips exactly
 _DELTA_STATE = StructType([StructField("last_cents", LongType())])
 
@@ -441,24 +424,13 @@ _DELTA_STATE = StructType([StructField("last_cents", LongType())])
 def _delta_trigger_stream_fn(
     key, pdfs: Iterator[pd.DataFrame], state: GroupState
 ) -> Iterator[pd.DataFrame]:
-    """DeltaTrigger as keyed value state: fire when |value - last fired|
-    exceeds the threshold; first element per key always fires. Batch
-    twin: operators/multistream._delta_trigger_partition (same fold)."""
-    last: int | None = state.get[0] if state.exists else None
-    batch = pd.concat(list(pdfs)).sort_values(["ts", "event_id"])
-    thresh_cents = int(round(DELTA_THRESHOLD * 100))
-    fired: list[int] = []
-    for eid, cents in zip(
-        batch["event_id"], _cents(batch["value"])
-    ):
-        if last is None or abs(int(cents) - last) > thresh_cents:
-            fired.append(int(eid))
-            last = int(cents)
+    """``operators/multistream.delta_fold`` on keyed value state: the
+    last fired value in cents."""
+    last = state.get[0] if state.exists else None
+    last, out = _fold(delta_fold, delta_cols, ["ts", "event_id"], pdfs, last)
     if last is not None:
         state.update((last,))
-    yield pd.DataFrame(
-        {"user_id": [key[0]] * len(fired), "event_id": fired}
-    )
+    yield from _emitted(DELTA_SCHEMA, key, out)
 
 
 def delta_trigger_stream(events: DataFrame) -> DataFrame:
@@ -468,7 +440,7 @@ def delta_trigger_stream(events: DataFrame) -> DataFrame:
         events,
         "user_id",
         _delta_trigger_stream_fn,
-        _DELTA_OUT,
+        DELTA_SCHEMA,
         _DELTA_STATE,
         "append",
     )
@@ -650,11 +622,6 @@ def _delta_evictor_fn(
     integer-cent delta from the window's LAST element reaches the
     threshold, emit the survivors' aggregate, purge. Batch twin:
     operators/multistream.delta_evictor_window (same fold)."""
-    from trisk_spark.operators.multistream import (
-        COUNT_WINDOW_N,
-        DELTA_EVICT_THRESHOLD,
-    )
-
     thresh = int(round(DELTA_EVICT_THRESHOLD * 100))
     win, buf = (state.get[0], list(state.get[1] or [])) if state.exists else (0, [])
     out: list[tuple[int, int, int, float]] = []
