@@ -3,6 +3,7 @@
 from __future__ import annotations
 
 import os
+import tempfile
 
 import duckdb
 import pytest
@@ -16,6 +17,18 @@ TABLES = [
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings",
 ]
+
+
+@pytest.fixture(scope="session", autouse=True)
+def _temp_dirs(tmp_path_factory):
+    """Checkpoints, staged sources and the other temp directories the
+    library makes go under pytest's base temp, which pytest prunes,
+    not into the host's temp dir."""
+    base = tmp_path_factory.mktemp("trisk")
+    with pytest.MonkeyPatch.context() as mp:
+        mp.setenv("TRISK_CHECKPOINT_BASE", str(base))
+        mp.setattr(tempfile, "tempdir", str(base))
+        yield base
 
 
 @pytest.fixture(scope="session")

@@ -14,8 +14,8 @@ Scenarios mirror SURVEY.md §2C:
     duplicate emission (decided from the checkpoint: no state listed).
   * A new key-group deal at an unchanged partition count resumes the
     same checkpoint: Spark's state layout does not change.
-  * A migrated resume with nothing new to read starts no query; a
-    build whose source ignores the cut replays instead.
+  * A resume with nothing new to read, migrated or in place, starts
+    no query; a build whose source ignores the cut replays instead.
   * A checkpoint left by a reconfiguration is deleted; a carried seed
     moves with the checkpoint that reads it.
   * The query's own session writes checkpoints through the FileSystem
@@ -198,14 +198,15 @@ def test_matchmaker_rescale_migrates_keyed_state(spark, tmp_path, monkeypatch):
     """StockController over the keyed-state matchmaker, drained and
     resumed stage by stage: the rebalance keeps the partition count and
     resumes the same checkpoint; each rescale moves the books by key (no
-    replay), each resume reads only the seed, and the trades equal batch
+    replay); a resume with nothing new staged starts no query, the seed
+    folds in the next drain, and the trades equal batch
     ``stock_matchmaker`` as a multiset — nothing re-emitted. Every
     checkpoint left behind is deleted: only the current one remains."""
     monkeypatch.setenv("TRISK_CHECKPOINT_BASE", str(tmp_path))
     staged = StagedReplay(table(spark, SF, "events"), "ts", n_chunks=5)
     mq = _matchmaker_query(spark, staged, "mm-migrate")
     controller = StockController()
-    keys = []
+    keys, started = [], []
     for stage in range(1, 6):
         staged.stage(stage)
         mq.run_available()
@@ -214,12 +215,15 @@ def test_matchmaker_rescale_migrates_keyed_state(spark, tmp_path, monkeypatch):
             keys.append(_staged_keys(spark, staged))
             mq.apply(plan)
             mq.run_available()  # resume, nothing new staged
+            started.append(mq.query is not None)
 
     batch = load_all()["stock_matchmaker"].fn(spark, SF).collect()
     assert _trades(mq.emitted) == Counter(tuple(r) for r in batch)
     assert len(mq.reconfig_log) == 4
+    assert started == [False] * 4  # no resume had anything to read
     rebalance, *rescales = mq.reconfig_log
     assert rebalance["mode"] == "resume" and rebalance["state_rows"] == 0
+    assert rebalance["input_rows"] == 0
     for entry, n_keys in zip(rescales, keys[1:]):
         assert entry["mode"] == "migrate" and not entry["state_replayed"]
         assert entry["state_rows"] == n_keys

@@ -43,9 +43,13 @@ every restart.
 run yet is already a valid restart point (its offset log is empty, its
 seed is on disk), so while the source has no input beyond the cut the
 resume starts nothing (``input_rows`` 0): the seed stays pending and
-folds in the first batch that carries input. A build whose source does
-not report its pending input (``PENDING_CONF``) cannot honour the cut,
-and replays instead.
+folds in the first batch that carries input. A ``resume`` likewise
+starts nothing while the source has no input beyond the cut and the
+files the checkpoint's ``sources`` log already committed; a
+processing-time timer due then fires in the next incarnation. A build
+whose source does not report its pending input (``PENDING_CONF``)
+cannot honour the cut: a migrated one replays instead, a resumed one
+starts as before.
 
 StagedReplay makes reconfiguration points deterministic for tests: the
 file-stream source sees chunk files appear in stages; each availableNow
@@ -62,7 +66,7 @@ import os
 import shutil
 import tempfile
 import time
-from typing import Any, Callable
+from typing import Any, Callable, Iterable
 from urllib.parse import unquote, urlparse
 
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
@@ -245,25 +249,34 @@ class ManagedQuery:
 
     def run_available(self) -> None:
         """One availableNow incarnation: drain whatever the source has,
-        then stop at the batch boundary (quiesced). On a migrated
-        checkpoint that has not run yet, nothing starts while the source
-        has no input beyond the cut; ``self.query`` is then None."""
+        then stop at the batch boundary (quiesced). Nothing starts while
+        the source has no input beyond the cut on a migrated checkpoint
+        that has not run yet, or beyond the cut and what the checkpoint
+        already committed on the first run after a ``resume``;
+        ``self.query`` is then None. A processing-time timer due at that
+        moment fires in the next incarnation instead."""
         t0 = time.time()
-        df = self._build()
-        if self.seed and _last_commit(self.checkpoint) is None:
-            pending = self.session.conf.get(PENDING_CONF)
-            if pending == "0":
-                df = None  # the seed stays pending for the next input
-            elif not pending or self.seed not in df._jdf.queryExecution().logical().toString():
-                # the build's source ignores the cut (it would re-read
-                # what the seed holds), or the build keeps its state
-                # outside ``keyed_state`` and never reads the seed:
-                # rebuild the state by replay instead
-                self.seed, self.cut = None, []
-                shutil.rmtree(self.checkpoint)  # unrun; holds the dropped seed
-                self.checkpoint = checkpoint_dir(self.name)
-                self.reconfig_log[-1].update(mode="replay", state_rows=0, state_replayed=True)
-                df = self._build()
+        entry = self.reconfig_log[-1] if self.reconfig_log else {}
+        resumed = entry.get("mode") == "resume" and "resume_s" not in entry
+        last = _last_commit(self.checkpoint)
+        seen = _committed_files(self.checkpoint, last) if resumed and last is not None else set()
+        df = self._build(seen)
+        unrun_seed = self.seed and last is None
+        pending = self.session.conf.get(PENDING_CONF)
+        if pending == "0" and (unrun_seed or resumed):
+            df = None  # a valid restart point; a seed stays pending for the next input
+        elif unrun_seed and (
+            not pending or self.seed not in df._jdf.queryExecution().logical().toString()
+        ):
+            # the build's source ignores the cut (it would re-read what
+            # the seed holds), or the build keeps its state outside
+            # ``keyed_state`` and never reads the seed: rebuild the state
+            # by replay instead
+            self.seed, self.cut = None, []
+            shutil.rmtree(self.checkpoint)  # unrun; holds the dropped seed
+            self.checkpoint = checkpoint_dir(self.name)
+            entry.update(mode="replay", state_rows=0, state_replayed=True)
+            df = self._build()
         self.query = None
         if df is not None:
             self.query = (
@@ -274,21 +287,24 @@ class ManagedQuery:
                 .start()
             )
             _await_drained(self.query)
-        entry = self.reconfig_log[-1] if self.reconfig_log else {}
         if entry and "resume_s" not in entry:
             entry["resume_s"] = round(time.time() - t0, 4)
             entry["input_rows"] = (
                 0 if df is None else sum(p["numInputRows"] for p in self.query.recentProgress)
             )
 
-    def _build(self) -> DataFrame:
+    def _build(self, seen: Iterable[str] = ()) -> DataFrame:
         """``build`` on the query's session, configured for the current
-        checkpoint; the caller's streaming listeners see the query."""
+        checkpoint, its source cut widened by the ``seen`` files the
+        checkpoint already committed (Spark skips those itself, so they
+        only change the pending count); the caller's streaming listeners
+        see the query."""
         sp = self.session
         sp.conf.set(
             "spark.sql.shuffle.partitions", str(self.plan.operators[self.operator].parallelism)
         )
-        for key, value in ((SEED_CONF, self.seed), (CUT_CONF, self.cut and json.dumps(self.cut))):
+        cut = sorted(set(self.cut).union(seen))
+        for key, value in ((SEED_CONF, self.seed), (CUT_CONF, cut and json.dumps(cut))):
             if value:
                 sp.conf.set(key, value)
             else:

@@ -27,6 +27,15 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
+ICU_CASE_CONF = "spark.sql.icu.caseMappings.enabled"
+#: Default-locale languages under which ICU's case mapping differs from
+#: the JVM's on more than the letters newer than JDK 17's Unicode 13
+#: (ICU's upper() drops Greek accents under el and spells U+0587 as ԵՎ
+#: under hy); on such a JVM ``prepare`` keeps ICU case mappings on. Both
+#: mappings follow the default locale, and under tr, az and lt they
+#: agree (PERF_NOTES.md).
+ICU_CASE_LANGUAGES = frozenset({"el", "hy"})
+
 #: Confs that can be changed on a live session (runtime-settable).
 RUNTIME_CONFS: dict[str, str] = {
     # Deterministic timestamp arithmetic: all epoch math assumes UTC so
@@ -54,6 +63,14 @@ RUNTIME_CONFS: dict[str, str] = {
     # treats naive timestamps as UTC. catalog.table() additionally casts
     # any residual NTZ column for sessions where this conf can't be set.
     "spark.sql.parquet.inferTimestampNTZ.enabled": "false",
+    # lower()/upper() through the JVM's case mapping, not ICU's: the
+    # first ICU case mapping in a JVM title-cases all 1,114,112 code
+    # points to fill a lookup table, about 2.5 s of CPU even on ASCII
+    # input (PERF_NOTES.md, "ICU case mapping"). The two differ only on
+    # letters newer than JDK 17's Unicode 13, which the JVM leaves as
+    # they are, two final-sigma contexts, and under the
+    # ``ICU_CASE_LANGUAGES`` locales, where ``prepare`` keeps ICU.
+    ICU_CASE_CONF: "false",
 }
 
 
@@ -87,9 +104,24 @@ def _ship_package(spark: SparkSession) -> None:
     _PKG_SHIPPED.add(key)
 
 
+def _jvm_case_mapping(spark: SparkSession) -> bool:
+    """Whether the JVM's case mapping may stand in for ICU's: not under
+    a default locale where the two differ, nor where the locale cannot
+    be read (no JVM in this process). The driver's locale stands for the
+    executors' (one JVM in local mode)."""
+    try:
+        lang = spark.sparkContext._jvm.java.util.Locale.getDefault().getLanguage()
+    except Exception:
+        return False
+    return lang not in ICU_CASE_LANGUAGES
+
+
 def prepare(spark: SparkSession) -> SparkSession:
     """Apply runtime-settable confs to an externally-built session."""
-    for k, v in RUNTIME_CONFS.items():
+    confs = RUNTIME_CONFS
+    if not _jvm_case_mapping(spark):
+        confs = {**confs, ICU_CASE_CONF: "true"}
+    for k, v in confs.items():
         try:
             spark.conf.set(k, v)
         except Exception:
